@@ -4,6 +4,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.Integrity
+
 /** Merge-on-read deletes — equality-delete tombstones, the
   * Iceberg/Delta "deletion vector" trade re-expressed at the parquet
   * layout level. [[Ops.deleteWhere]] is copy-on-write: each delete
@@ -29,14 +31,12 @@ import org.apache.spark.sql.functions._
   * Layout:
   * {{{
   * root/data/...parquet        immutable base rows
-  * root/data/_checksums        per-file (bytes, XXH64) sidecar
   * root/deletes/d<uuid>/...    one dir per delete batch: key tombstones
-  *                             (each dir carries its own _checksums)
   * }}}
   *
-  * CONTENT INTEGRITY: every written dir gets a `_checksums` sidecar
-  * (the graftsink/Transaction discipline at this layout), [[fsck]] is
-  * the probe (deep = cluster-fanned content re-hash), and both
+  * CONTENT INTEGRITY: every written dir gets an
+  * [[graft.sources.Integrity]] sidecar, [[fsck]] is the probe
+  * (deep = cluster-fanned content re-hash), and both
   * compaction paths VERIFY every input byte against the sidecars
   * before folding — a fold re-lands rows under a fresh sidecar, so an
   * unverified fold would launder bit rot into "verified" base forever.
@@ -56,137 +56,58 @@ object MergeOnRead {
   private def dataDir(root: String) = s"$root/data"
   private def deletesDir(root: String) = s"$root/deletes"
 
-  // ---- content integrity — the `_checksums` sidecar discipline the
-  // ---- graftsink manifest and the Transaction layer already run
-  // ---- under, at the MOR layout. Base and tombstone dirs are plain
-  // ---- parquet, so without this the declared 100 TB CDC shape
-  // ---- (st_cdc_apply_mor) could rot silently between compactions,
-  // ---- and compaction — which re-writes the fold under fresh bytes —
-  // ---- would launder the damage into a clean-looking base forever.
-
-  private val ChecksumSidecar = "_checksums"
-
-  /** Write one dir's `_checksums` sidecar: a line per payload file,
-    * `name<TAB>bytes<TAB>xxh64`, hashed cluster-fanned (one task per
-    * file). Called right after every dir write; replays overwrite the
-    * dir and re-stamp the sidecar with it. A crash between the data
-    * write and the sidecar leaves the dir sidecar-less = UNVERIFIED —
-    * [[fsck]] and the compaction pre-verify count such dirs LOUDLY,
-    * never silently pass them.
+  /** The sidecar-listed files of `dirs` as check entries (content
+    * re-hashed when `deep`), plus the count of payload files no sidecar
+    * vouches for — dirs without one, or files a sidecar does not list.
+    * The unvouched files are readable by the views, so they are warned
+    * about loudly, never passed as verified.
     */
-  private def writeSidecar(spark: SparkSession, dir: String): Unit = {
-    val p = new Path(dir)
-    val fs = fsOf(spark, p)
-    if (!fs.exists(p)) return
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
-    val payload = fs.listStatus(p).filter(_.isFile)
-      .map(_.getPath.getName)
-      .filterNot(n => n.startsWith("_") || n.startsWith("."))
-      .sorted.toSeq
-    val lines =
-      if (payload.isEmpty) Seq.empty[String]
-      else spark.sparkContext
-        .parallelize(payload.map(n => s"$dir/$n"),
-          math.min(payload.size,
-            math.max(8, spark.sparkContext.defaultParallelism)))
-        .map { s =>
-          val fp = new Path(s)
-          val f = fp.getFileSystem(conf.value)
-          s"${fp.getName}\t${f.getFileStatus(fp).getLen}\t" +
-            graft.sources.GraftSink.hashFileContent(f, fp)
-        }.collect().toSeq.sorted
-    val out = fs.create(new Path(p, ChecksumSidecar), true)
-    try out.write((lines.mkString("\n") + "\n").getBytes("UTF-8"))
-    finally out.close()
-  }
-
-  /** One dir's sidecar: file name → (bytes, xxh64); None for a legacy
-    * (pre-sidecar / crash-window) dir — callers treat that as
-    * UNVERIFIABLE, loudly.
-    */
-  private def sidecarOf(spark: SparkSession,
-      dir: String): Option[Map[String, (Long, String)]] = {
-    val p = new Path(dir, ChecksumSidecar)
-    val fs = fsOf(spark, p)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val bytes = try {
-        val o = new java.io.ByteArrayOutputStream()
-        org.apache.hadoop.io.IOUtils.copyBytes(in, o, 4096, false)
-        o.toByteArray
-      } finally in.close()
-      Some(new String(bytes, "UTF-8").split("\n").iterator
-        .filter(_.nonEmpty).map { l =>
-          val a = l.split("\t", -1)
-          a(0) -> ((a(1).toLong, a(2)))
-        }.toMap)
+  private def sidecarEntries(spark: SparkSession, dirs: Seq[String],
+      deep: Boolean, op: String): (Seq[Integrity.Entry], Int) = {
+    var unverified = 0
+    val entries = dirs.flatMap { d =>
+      val p = new Path(d)
+      val fs = fsOf(spark, p)
+      if (!fs.exists(p)) Seq.empty
+      else {
+        val names = Integrity.payload(fs, p)
+        val side = Integrity.readSidecar(fs, p)
+        val unlisted = names.filterNot(n => side.exists(_.contains(n)))
+        if (unlisted.nonEmpty) {
+          unverified += unlisted.size
+          Integrity.warnUnverified(s"merge-on-read $op: " +
+            s"${unlisted.size} file(s) of $d " +
+            (if (side.isEmpty) "(no checksum sidecar)"
+            else "outside its checksum sidecar") +
+            " are UNVERIFIED (legacy write or crashed sidecar stamp); " +
+            "re-write the batch to regain content integrity")
+        }
+        // the sidecar is the reference: a listed file that vanished
+        // is damage
+        side.getOrElse(Map.empty).toSeq.sortBy(_._1).map {
+          case (n, (b, sum)) => Integrity.Entry(s"$d/$n", b, sum, deep)
+        }
+      }
     }
+    (entries, unverified)
   }
 
   /** VERIFY BEFORE FOLD — the verify-before-retire rule compaction
     * must run under: the fold reads its inputs through the parquet
     * parser and re-lands them as a FRESH base with a fresh sidecar,
     * so corrupt input bytes would be re-blessed as verified forever.
-    * Re-hash every sidecar-listed payload file of `dirs`
-    * cluster-fanned and refuse loudly on any mismatch; sidecar-less
-    * legacy dirs fold with a LOUD unverified count (returned), never
-    * silently.
+    * Re-hash every sidecar-listed file of `dirs` cluster-fanned and
+    * refuse loudly on any damage; unvouched files fold with a LOUD
+    * unverified count (returned), never silently.
     */
   private def verifyFolding(spark: SparkSession, dirs: Seq[String],
       op: String): Int = {
-    var unverified = 0
-    val jobs = Seq.newBuilder[(String, Long, String)]
-    dirs.foreach { d =>
-      val p = new Path(d)
-      val fs = fsOf(spark, p)
-      if (fs.exists(p)) {
-        val names = fs.listStatus(p).filter(_.isFile)
-          .map(_.getPath.getName)
-          .filterNot(n => n.startsWith("_") || n.startsWith(".")).toSeq
-        sidecarOf(spark, d) match {
-          case None =>
-            if (names.nonEmpty) {
-              unverified += names.size
-              System.err.println(s"merge-on-read $op: $d has no " +
-                s"checksum sidecar — ${names.size} file(s) fold " +
-                "UNVERIFIED (legacy write or crashed sidecar stamp); " +
-                "re-write the batch or accept existence-only integrity")
-            }
-          case Some(side) => names.foreach { n =>
-            side.get(n) match {
-              case Some((b, sum)) => jobs += ((s"$d/$n", b, sum))
-              case None =>
-                unverified += 1
-                System.err.println(s"merge-on-read $op: $d/$n is not " +
-                  "in the dir's checksum sidecar — folds UNVERIFIED")
-            }
-          }
-        }
-      }
-    }
-    val entries = jobs.result()
-    if (entries.nonEmpty) {
-      val conf = new org.apache.spark.util.SerializableConfiguration(
-        spark.sparkContext.hadoopConfiguration)
-      spark.sparkContext.parallelize(entries,
-        math.min(entries.size,
-          math.max(8, spark.sparkContext.defaultParallelism)))
-        .foreach { case (path, bytes, sum) =>
-          val fp = new Path(path)
-          val f = fp.getFileSystem(conf.value)
-          val len = f.getFileStatus(fp).getLen
-          if (len != bytes) sys.error(s"merge-on-read $op: $path has " +
-            s"size $len but the sidecar records $bytes — refusing to " +
-            "fold (and re-bless) damaged input; restore it first")
-          val actual = graft.sources.GraftSink.hashFileContent(f, fp)
-          if (actual != sum) sys.error(s"merge-on-read $op: $path " +
-            s"reads xxh64 $actual but the sidecar records $sum — " +
-            "refusing to fold (and re-bless) corrupt input; restore " +
-            "it from a replica or backup first")
-        }
-    }
+    val (entries, unverified) =
+      sidecarEntries(spark, dirs, deep = true, op)
+    val bad = Integrity.check(spark, entries)
+    if (bad.nonEmpty) sys.error(s"merge-on-read $op: " +
+      s"${Integrity.describe(bad)} — refusing to fold (and re-bless) " +
+      "corrupt input; restore it from a replica or backup first")
     unverified
   }
 
@@ -230,62 +151,10 @@ object MergeOnRead {
     val dirs = Seq(dataDir(root)).filter(d =>
       fs.exists(new Path(d))) ++
       children(deletesDir(root)) ++ children(updatesDir(root))
-    var unverified = 0
-    val jobs = Seq.newBuilder[(String, Long, String)]
-    dirs.foreach { d =>
-      val p = new Path(d)
-      val names = fs.listStatus(p).filter(_.isFile)
-        .map(_.getPath.getName)
-        .filterNot(n => n.startsWith("_") || n.startsWith(".")).toSeq
-      sidecarOf(spark, d) match {
-        case None =>
-          if (names.nonEmpty) {
-            unverified += names.size
-            System.err.println(s"merge-on-read fsck: cannot verify " +
-              s"$d — no checksum sidecar (${names.size} file(s)); " +
-              "re-write the batch to regain content integrity")
-          }
-        case Some(side) =>
-          // the sidecar is the reference: a listed file that vanished
-          // is damage; an unlisted extra (crashed task attempt) is
-          // debris the readers never resolve — not counted here
-          side.foreach { case (n, (b, sum)) =>
-            jobs += ((s"$d/$n", b, sum)) }
-      }
-    }
-    val entries = jobs.result()
-    val bad: Seq[(String, String, String)] =
-      if (entries.isEmpty) Seq.empty
-      else {
-        val conf = new org.apache.spark.util.SerializableConfiguration(
-          spark.sparkContext.hadoopConfiguration)
-        val deepRun = deep
-        spark.sparkContext.parallelize(entries,
-          math.min(entries.size,
-            math.max(8, spark.sparkContext.defaultParallelism)))
-          .flatMap { case (path, bytes, sum) =>
-            val fp = new Path(path)
-            try {
-              val f = fp.getFileSystem(conf.value)
-              val len = f.getFileStatus(fp).getLen
-              if (len != bytes)
-                Some((path, "size", s"size $len != sidecar $bytes"))
-              else if (deepRun) {
-                val actual = graft.sources.GraftSink.hashFileContent(f, fp)
-                if (actual != sum)
-                  Some((path, "checksum",
-                    s"content xxh64 $actual != sidecar $sum"))
-                else None
-              } else None
-            } catch { case _: java.io.FileNotFoundException =>
-              Some((path, "missing", "missing"))
-            }
-          }.collect().toSeq
-      }
-    MorFsckReport(dirs.size, entries.size,
-      bad.collect { case (n, "missing", _) => n },
-      bad.collect { case (n, "size", d) => s"$n ($d)" },
-      bad.collect { case (n, "checksum", d) => s"$n ($d)" },
+    val (entries, unverified) = sidecarEntries(spark, dirs, deep, "fsck")
+    val (missing, size, checksum) =
+      Integrity.byKind(Integrity.check(spark, entries), identity)
+    MorFsckReport(dirs.size, entries.size, missing, size, checksum,
       unverified, deep)
   }
 
@@ -305,7 +174,7 @@ object MergeOnRead {
   def init(df: DataFrame, root: String): Unit = {
     requireNoSeqColumn(df, "init")
     df.write.mode("overwrite").parquet(dataDir(root))
-    writeSidecar(df.sparkSession, dataDir(root))
+    Integrity.stamp(df.sparkSession, dataDir(root))
   }
 
   /** Append a tombstone batch: the keys of CURRENT rows matching
@@ -331,7 +200,7 @@ object MergeOnRead {
     victims.observe(obs, count(lit(1)).as("n"))
       .write.mode("errorifexists").parquet(dest)
     val n = obs.get("n").asInstanceOf[Long]
-    if (n > 0) writeSidecar(spark, dest)
+    if (n > 0) Integrity.stamp(spark, dest)
     else {
       val p = new Path(dest)
       fsOf(spark, p).delete(p, true)
@@ -356,7 +225,7 @@ object MergeOnRead {
     val dest = s"${deletesDir(root)}/d" +
       java.util.UUID.randomUUID().toString.take(8)
     keys.distinct().write.mode("errorifexists").parquet(dest)
-    writeSidecar(spark, dest)
+    Integrity.stamp(spark, dest)
   }
 
   /** The live view: base rows minus tombstoned keys. One LEFT ANTI
@@ -367,13 +236,23 @@ object MergeOnRead {
       keyCol: String): DataFrame = {
     requireSingleMode(spark, root, seqMode = false)
     val base = spark.read.parquet(dataDir(root))
-    val del = new Path(deletesDir(root))
-    if (!fsOf(spark, del).exists(del)) base
-    else {
-      val tombstones = spark.read
-        .parquet(s"${deletesDir(root)}/d*").distinct()
-      base.join(tombstones, Seq(keyCol), "left_anti")
+    batches(spark, deletesDir(root), "d").fold(base) { glob =>
+      base.join(spark.read.parquet(glob).distinct(), Seq(keyCol),
+        "left_anti")
     }
+  }
+
+  /** The glob over `dir`'s `<prefix>*` batch dirs, or None when there
+    * is none — an empty `deletes/` (a first delete that matched
+    * nothing, or a crash before its batch landed) must read as "no
+    * tombstones", not fail the glob read with PATH_NOT_FOUND.
+    */
+  private def batches(spark: SparkSession, dir: String,
+      prefix: String): Option[String] = {
+    val glob = s"$dir/$prefix*"
+    val p = new Path(glob)
+    Option(fsOf(spark, p).globStatus(p))
+      .filter(_.exists(_.isDirectory)).map(_ => glob)
   }
 
   // ------------------------------------------------------------------
@@ -413,7 +292,7 @@ object MergeOnRead {
     requireSingleMode(spark, root, seqMode = true)
     rows.withColumn("__seq", lit(seq))
       .write.mode("overwrite").parquet(s"${updatesDir(root)}/u$seq")
-    writeSidecar(spark, s"${updatesDir(root)}/u$seq")
+    Integrity.stamp(spark, s"${updatesDir(root)}/u$seq")
   }
 
   /** Append one apply batch's equality tombstones at sequence `seq`:
@@ -428,7 +307,7 @@ object MergeOnRead {
     requireSingleMode(spark, root, seqMode = true)
     keys.distinct().withColumn("__seq", lit(seq))
       .write.mode("overwrite").parquet(s"${deletesDir(root)}/t$seq")
-    writeSidecar(spark, s"${deletesDir(root)}/t$seq")
+    Integrity.stamp(spark, s"${deletesDir(root)}/t$seq")
   }
 
   /** The sequence-aware live view: base (seq 0) ∪ appended versions,
@@ -447,16 +326,12 @@ object MergeOnRead {
     requireSingleMode(spark, root, seqMode = true)
     val base = spark.read.parquet(dataDir(root))
       .withColumn("__seq", lit(0L))
-    val up = new Path(updatesDir(root))
-    val all = if (fsOf(spark, up).exists(up))
-      base.unionByName(
-        spark.read.parquet(s"${updatesDir(root)}/u*")
-          .withColumn("__seq", col("__seq").cast("long")))
-    else base
-    val del = new Path(deletesDir(root))
-    val view = if (!fsOf(spark, del).exists(del)) all
-    else {
-      val tomb = spark.read.parquet(s"${deletesDir(root)}/t*")
+    val all = batches(spark, updatesDir(root), "u").fold(base) { glob =>
+      base.unionByName(spark.read.parquet(glob)
+        .withColumn("__seq", col("__seq").cast("long")))
+    }
+    val view = batches(spark, deletesDir(root), "t").fold(all) { glob =>
+      val tomb = spark.read.parquet(glob)
         .groupBy(keyCol).agg(max("__seq").as("__tseq"))
       all.join(tomb, Seq(keyCol), "left")
         .filter(col("__tseq").isNull || col("__seq") >= col("__tseq"))
@@ -526,7 +401,7 @@ object MergeOnRead {
     // the folded base is the new integrity reference — stamp it before
     // the inputs drop (a crash between the two leaves BOTH the new
     // sidecar and the old dirs: re-running the fold is idempotent)
-    writeSidecar(spark, dataDir(root))
+    Integrity.stamp(spark, dataDir(root))
     // delete ONLY the folded dirs; anything past the horizon (an
     // uncommitted trigger's rewrite-idempotent dirs) stays for its
     // replay to overwrite
@@ -652,7 +527,7 @@ object MergeOnRead {
       dataDir(root) +: fs.listStatus(del).filter(_.isDirectory)
         .map(_.getPath.toString).toSeq, "compact",
       () => readCurrent(spark, root, keyCol), dataDir(root))
-    writeSidecar(spark, dataDir(root))
+    Integrity.stamp(spark, dataDir(root))
     fs.delete(del, true)
     batches
   }

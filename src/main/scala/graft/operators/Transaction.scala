@@ -5,7 +5,7 @@ import java.nio.charset.StandardCharsets
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.sources.GraftSink
+import graft.sources.{GraftSink, Integrity}
 
 /** Multi-table atomic publish — the cross-table half of
   * [[Ops.snapshotWrite]]'s single-table versioning, the Iceberg-lite
@@ -17,7 +17,7 @@ import graft.sources.GraftSink
   * Layout:
   * {{{
   * root/<table>/t<txId>/...parquet     data, immutable once committed
-  * root/<table>/t<txId>/_checksums     per-file (bytes, XXH64) sidecar
+  * root/<table>/t<txId>/_checksums     the [[Integrity]] sidecar
   * root/_commits/tx<txId>.json         manifest: table -> txId written
   * root/_promoted                      failover fence (see [[promote]])
   * }}}
@@ -40,10 +40,10 @@ import graft.sources.GraftSink
   * every staged swap in [[ParquetIO]] — a real deployment puts a lock
   * (or a CAS-capable store) under `_commits/`.
   *
-  * CONTENT INTEGRITY: every version dir carries a `_checksums` sidecar
-  * — one line per data file, `name<TAB>bytes<TAB>xxh64` — written into
-  * the staging dir BEFORE the rename, so the sidecar is atomic with
-  * the data it describes and immutable with it. [[syncTo]] verifies
+  * CONTENT INTEGRITY: every version dir carries an [[Integrity]]
+  * sidecar, written into the staging dir BEFORE the rename, so the
+  * sidecar is atomic with the data it describes and immutable with
+  * it. [[syncTo]] verifies
   * every byte it copies against the sidecar in-stream (the copy
   * already touches every byte — verification is free) and REFUSES to
   * propagate corruption; [[fsck]] re-walks committed members against
@@ -65,13 +65,6 @@ object Transaction {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   private def commitsDir(root: String) = new Path(root, "_commits")
-
-  /** The per-version-dir content sidecar: `name<TAB>bytes<TAB>xxh64`
-    * per data file, written atomically WITH the data (inside the
-    * staged dir, before its rename). Hadoop-bookkeeping names (`_*`,
-    * `.*`) are never listed — the sidecar describes payload only.
-    */
-  private val ChecksumSidecar = "_checksums"
 
   /** Committed transaction ids, ascending; empty before first publish. */
   def committedTxs(spark: SparkSession, root: String): Seq[Long] = {
@@ -139,22 +132,6 @@ object Transaction {
     parsed
   }
 
-  /** The `_checksums` sidecar of one member version dir: file name →
-    * (bytes, xxh64), or None for a legacy dir written before sidecars
-    * existed (callers must treat that as UNVERIFIABLE, loudly — never
-    * as verified).
-    */
-  private[graft] def sidecarOf(spark: SparkSession, root: String,
-      table: String, v: Long): Option[Map[String, (Long, String)]] = {
-    val p = new Path(root, s"$table/t$v/$ChecksumSidecar")
-    if (!fsOf(spark, p).exists(p)) None
-    else Some(new String(readSmall(spark, p), StandardCharsets.UTF_8)
-      .split("\n").iterator.filter(_.nonEmpty).map { l =>
-        val a = l.split("\t", -1)
-        a(0) -> (a(1).toLong, a(2))
-      }.toMap)
-  }
-
   /** Version-floor markers in `_commits/` — the anti-recycling
     * discipline the sink's vacuum floor pins (`floorMarkerName`):
     * deleting a committed manifest VACATES its txId, and the next
@@ -191,10 +168,9 @@ object Transaction {
 
   /** Atomically publish `tables` as one transaction; any table NOT in
     * the map carries forward from the previous transaction. Returns
-    * the committed txId. Every staged version dir gets a
-    * [[ChecksumSidecar]] (per-file bytes + XXH64, hashed cluster-
-    * fanned) before its rename, so replication and [[fsck]] can
-    * verify the member's content forever after.
+    * the committed txId. Every staged version dir is stamped with its
+    * [[Integrity]] sidecar before its rename, so replication and
+    * [[fsck]] can verify the member's content forever after.
     */
   def publish(spark: SparkSession, root: String,
       tables: Map[String, DataFrame]): Long = {
@@ -206,8 +182,6 @@ object Transaction {
       .map(manifest(spark, root, _)).getOrElse(Map.empty[String, Long])
     val rootP = new Path(root)
     val fs = fsOf(spark, rootP)
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
     // data first, invisible until the manifest commits
     tables.foreach { case (name, df) =>
       val dest = new Path(new Path(rootP, name), s"t$txId")
@@ -218,28 +192,8 @@ object Transaction {
         "__staging_" + java.util.UUID.randomUUID().toString.take(8))
       try {
         df.write.mode("overwrite").parquet(tmp.toString)
-        // content sidecar, hashed cluster-fanned (one task per file)
-        // and written INTO the staged dir — atomic with the data
-        val payload = fs.listStatus(tmp).filter(_.isFile)
-          .map(_.getPath.getName)
-          .filterNot(n => n.startsWith("_") || n.startsWith("."))
-          .sorted.toSeq
-        val lines =
-          if (payload.isEmpty) Seq.empty[String]
-          else spark.sparkContext
-            .parallelize(payload.map(n => s"$tmp/$n"),
-              math.min(payload.size,
-                math.max(8, spark.sparkContext.defaultParallelism)))
-            .map { p =>
-              val fp = new Path(p)
-              val f = fp.getFileSystem(conf.value)
-              val len = f.getFileStatus(fp).getLen
-              s"${fp.getName}\t$len\t${GraftSink.hashFileContent(f, fp)}"
-            }.collect().toSeq.sorted
-        val out = fs.create(new Path(tmp, ChecksumSidecar), false)
-        try out.write((lines.mkString("\n") + "\n")
-          .getBytes(StandardCharsets.UTF_8))
-        finally out.close()
+        // the sidecar lands INSIDE the staged dir — atomic with the data
+        Integrity.stamp(spark, tmp.toString)
       } catch { case e: Throwable => fs.delete(tmp, true); throw e }
       fs.mkdirs(dest.getParent)
       if (!fs.rename(tmp, dest)) {
@@ -348,7 +302,7 @@ object Transaction {
   private[graft] var syncBarrier: () => Unit = () => ()
 
   /** Per-dir count of data files syncTo copied WITHOUT content
-    * verification (legacy source dirs lacking [[ChecksumSidecar]]) on
+    * verification (legacy source dirs lacking a sidecar) on
     * the most recent call — reported loudly on stderr as well; the
     * spec gates the count (a TEST SEAM only: the watermark decision
     * inside [[syncTo]] reads its own call-local count, so two
@@ -371,7 +325,8 @@ object Transaction {
     *
     * VERIFIED BYTES: each copied data file folds XXH64 over the same
     * buffers the copy streams and is checked against the source dir's
-    * [[ChecksumSidecar]] — a mismatch FAILS the copy loudly
+    * sidecar ([[Integrity.copyVerified]]) — a mismatch FAILS the copy
+    * loudly
     * (replication must never propagate silent source-side corruption;
     * deep-fsck and restore the source object first). Legacy source
     * dirs without a sidecar copy UNVERIFIED, counted in
@@ -472,9 +427,13 @@ object Transaction {
     // dir wearing a synced (table, version) name must hold the synced
     // bytes. Both-sides-legacy (no sidecars anywhere) trusts the name,
     // the pre-sidecar behavior.
+    def sidecar(r: String, t: String, v: Long) = {
+      val d = new Path(r, s"$t/t$v")
+      Integrity.readSidecar(fsOf(spark, d), d)
+    }
     val divergentDirs = m.toSeq.sortBy(_._1).filter { case (t, v) =>
       fs.exists(new Path(dstRoot, s"$t/t$v")) &&
-        sidecarOf(spark, srcRoot, t, v) != sidecarOf(spark, dstRoot, t, v)
+        sidecar(srcRoot, t, v) != sidecar(dstRoot, t, v)
     }
     if (divergentDirs.nonEmpty) {
       if (!force) sys.error(
@@ -518,7 +477,7 @@ object Transaction {
         case (t, v) =>
           val from = new Path(srcRoot, s"$t/t$v")
           val sfs = fsOf(spark, from)
-          val side = sidecarOf(spark, srcRoot, t, v)
+          val side = sidecar(srcRoot, t, v)
           val names = sfs.listStatus(from).filter(_.isFile)
             .map(_.getPath.getName).toSeq
           val unverified = names.count(n =>
@@ -527,7 +486,7 @@ object Transaction {
           if (unverified > 0) {
             syncUnverified += unverified
             lastSyncUnverified += unverified
-            System.err.println(s"transaction: $t/t$v at $srcRoot has " +
+            Integrity.warnUnverified(s"transaction: $t/t$v at $srcRoot has " +
               s"no ${if (side.isEmpty) "checksum sidecar" else
                 s"checksums for $unverified file(s)"} (legacy publish) " +
               s"— $unverified file(s) replicate UNVERIFIED; republish " +
@@ -539,11 +498,11 @@ object Transaction {
               side.flatMap(_.get(n)).map(_._2).getOrElse(""))
           }
       }
-      val slices = math.min(files.size,
-        math.max(64, spark.sparkContext.defaultParallelism * 2)).max(1)
-      spark.sparkContext.parallelize(files, slices)
+      spark.sparkContext
+        .parallelize(files, Integrity.slices(spark, files.size))
         .foreach { case (from, to, expect) =>
-          copyChecked(conf.value, new Path(from), new Path(to), expect)
+          Integrity.copyVerified(conf.value, new Path(from), new Path(to),
+            expect, "transaction")
         }
       needed.foreach { case (t, v) =>
         val dest = new Path(dstRoot, s"$t/t$v")
@@ -644,67 +603,6 @@ object Transaction {
       writeDeepVerifiedThrough(spark, dstRoot, id)
     carryRefs(spark, srcRoot, dstRoot)
     needed.size
-  }
-
-  /** Executor-side verified byte copy (the sink's `copyVerified`
-    * discipline): streams src→dst folding XXH64 over the same
-    * buffers; a recorded-checksum mismatch FAILS loudly — replication
-    * must never propagate silent source corruption. The staging name
-    * is UNIQUE PER ATTEMPT (speculative or retried tasks never share
-    * a tmp file, so one attempt's create can never truncate
-    * another's in-progress bytes out from under its verification);
-    * losing the final rename to a racing attempt of the same
-    * immutable file is benign when the destination exists.
-    */
-  private def copyChecked(conf: org.apache.hadoop.conf.Configuration,
-      from: Path, to: Path, expect: String): Unit = {
-    val sf = from.getFileSystem(conf)
-    val df = to.getFileSystem(conf)
-    val h = GraftSink.newXxh64()
-    df.mkdirs(to.getParent)
-    val tmp = new Path(to.getParent, s".${to.getName}.inflight-" +
-      java.util.UUID.randomUUID().toString.take(8))
-    val in = sf.open(from)
-    try {
-      val out = df.create(tmp, false)
-      try {
-        val buf = new Array[Byte](1 << 16)
-        var n = in.read(buf)
-        while (n >= 0) {
-          if (n > 0) { out.write(buf, 0, n); h.update(buf, 0, n) }
-          n = in.read(buf)
-        }
-      } finally out.close()
-    } finally in.close()
-    val actual = GraftSink.xxh64Hex(h.getValue)
-    if (expect.nonEmpty && actual != expect) {
-      df.delete(tmp, false)
-      sys.error(s"transaction: replication copy of $from reads xxh64 " +
-        s"$actual but the sidecar records $expect — refusing to " +
-        "propagate corruption (deep-fsck and restore the source " +
-        "object first)")
-    }
-    // true end-to-end: re-hash the LANDED bytes (one extra read of
-    // page-cache-warm data) so a corrupting destination write path
-    // can never produce a replica member its own deep fsck would
-    // fail — the read that lets syncTo feed the replica's
-    // deep-verification watermark
-    if (expect.nonEmpty) {
-      val landed = GraftSink.hashFileContent(df, tmp)
-      if (landed != expect) {
-        df.delete(tmp, false)
-        sys.error(s"transaction: replication copy to $to LANDED with " +
-          s"xxh64 $landed but the sidecar records $expect — the " +
-          "destination storage corrupted the write; retry, and check " +
-          "the destination volume")
-      }
-    }
-    if (df.exists(to)) df.delete(to, false) // re-copy: overwrite
-    if (!df.rename(tmp, to)) {
-      df.delete(tmp, false)
-      if (!df.exists(to))
-        sys.error(s"transaction: replication copy rename to $to failed")
-    }
   }
 
   /** Replicate source REFS (the vacuum-exempt GC roots) onto the
@@ -865,7 +763,7 @@ object Transaction {
   /** @param deep whether member CONTENT was re-hashed (vs existence +
     *             size only).
     * @param unverifiedMembers committed member version dirs with no
-    *             [[ChecksumSidecar]] (legacy publishes) — DECLINED,
+    *             sidecar (legacy publishes) — DECLINED,
     *             loudly, never silently passed: [[TxFsckReport.clean]]
     *             can hold while [[TxFsckReport.deepVerified]] does not.
     * @param orphanVersionDirs `t<id>` dirs no committed manifest
@@ -873,8 +771,7 @@ object Transaction {
     *             leftovers, vacuumed history); [[vacuum]] owns them.
     * @param staleStaging `__staging*` leftovers under the root and
     *             `_commits/` — crashed publishes/syncs awaiting GC.
-    */
-  /** @param contentHashed deep only: sidecar entries this run
+    * @param contentHashed deep only: sidecar entries this run
     *             actually re-hashed (the incremental pass's work
     *             list; a full pass hashes everything).
     * @param skippedVerified deep + `sinceVerified` only: entries the
@@ -955,89 +852,45 @@ object Transaction {
     val conf = new org.apache.spark.util.SerializableConfiguration(
       spark.sparkContext.hadoopConfiguration)
     val rootStr = root
-    val sidecarName = ChecksumSidecar
     // MEMBER METADATA PASS, cluster-fanned (one task per member dir:
     // existence probe + one tiny sidecar read): the per-file checks
     // below already fan out, and at decade scale (64 tables × deep
     // history on a scheduled cadence) a driver-sequential sidecar
-    // walk is O(members) blocking round-trips for no reason. Codes:
-    // 0 = member dir missing, 1 = no sidecar (legacy publish),
-    // 2 = sidecar entries follow.
+    // walk is O(members) blocking round-trips for no reason.
     val memberSeq = members.toSeq
-    val sides: Seq[(String, Boolean, Int, Seq[(String, Long, String)])] =
+    // (member, covered by the watermark, dir exists, its sidecar)
+    val sides: Seq[(String, Boolean, Boolean,
+        Option[Map[String, (Long, String)]])] =
       if (memberSeq.isEmpty) Seq.empty
       else spark.sparkContext
-        .parallelize(memberSeq, math.min(memberSeq.size,
-          math.max(8, spark.sparkContext.defaultParallelism)).max(1))
+        .parallelize(memberSeq, Integrity.slices(spark, memberSeq.size))
         .map { case ((t, v), covered) =>
           val dir = new Path(rootStr, s"$t/t$v")
           val f = dir.getFileSystem(conf.value)
-          val member = s"$t/t$v"
-          if (!f.exists(dir)) (member, covered, 0,
-            Seq.empty[(String, Long, String)])
-          else {
-            val sp = new Path(dir, sidecarName)
-            if (!f.exists(sp)) (member, covered, 1,
-              Seq.empty[(String, Long, String)])
-            else {
-              val in = f.open(sp)
-              val bytes = try {
-                val o = new java.io.ByteArrayOutputStream()
-                org.apache.hadoop.io.IOUtils.copyBytes(in, o, 4096, false)
-                o.toByteArray
-              } finally in.close()
-              val es = new String(bytes, StandardCharsets.UTF_8)
-                .split("\n").toSeq.filter(_.nonEmpty).map { l =>
-                  val a = l.split("\t", -1)
-                  (a(0), a(1).toLong, a(2))
-                }
-              (member, covered, 2, es)
-            }
-          }
+          val exists = f.exists(dir)
+          (s"$t/t$v", covered, exists,
+            if (exists) Integrity.readSidecar(f, dir) else None)
         }.collect().toSeq
-    val missingMembers = Seq.newBuilder[String]
     var unverifiedMembers = 0
-    // jobs: (member, fileName, bytes, sum, hashContent) —
     // existence+size always, content re-hash when deep and uncovered
-    val jobs = Seq.newBuilder[(String, String, Long, String, Boolean)]
-    sides.foreach {
-      case (member, _, 0, _) => missingMembers += member
-      case (member, covered, 1, _) =>
+    val entries = sides.flatMap {
+      case (_, _, false, _) => Nil
+      case (member, covered, _, None) =>
         if (!covered) {
           unverifiedMembers += 1
-          System.err.println(s"transaction: fsck cannot verify " +
+          Integrity.warnUnverified(s"transaction: fsck cannot verify " +
             s"$member under $root — no checksum sidecar (legacy " +
             "publish); republish to regain content integrity")
         }
-      case (member, covered, _, es) =>
-        es.foreach { case (n, b, s) =>
-          jobs += ((member, n, b, s, deep && !covered)) }
+        Nil
+      case (member, covered, _, Some(side)) =>
+        side.toSeq.sortBy(_._1).map { case (n, (b, sum)) =>
+          Integrity.Entry(s"$rootStr/$member/$n", b, sum, deep && !covered)
+        }
     }
-    val entries = jobs.result()
-    val bad: Seq[(String, String, String)] = // (member/file, kind, detail)
-      if (entries.isEmpty) Seq.empty
-      else spark.sparkContext
-        .parallelize(entries, math.min(entries.size,
-          math.max(64, spark.sparkContext.defaultParallelism * 2)).max(1))
-        .flatMap { case (member, name, bytes, sum, hashContent) =>
-          val p = new Path(s"$rootStr/$member/$name")
-          try {
-            val fsx = p.getFileSystem(conf.value)
-            val st = fsx.getFileStatus(p)
-            if (st.getLen != bytes)
-              Some((s"$member/$name", "size",
-                s"size ${st.getLen} != sidecar $bytes"))
-            else if (hashContent) {
-              val actual = GraftSink.hashFileContent(fsx, p)
-              if (actual != sum)
-                Some((s"$member/$name", "checksum",
-                  s"content xxh64 $actual != sidecar $sum"))
-              else None
-            } else None
-          } catch { case _: java.io.FileNotFoundException =>
-            Some((s"$member/$name", "missing", "missing"))
-          }
-        }.collect().toSeq
+    val (missingFiles, sizeMismatches, checksumMismatches) =
+      Integrity.byKind(Integrity.check(spark, entries),
+        _.stripPrefix(s"$rootStr/"))
     // orphan member dirs (no committed manifest references them) and
     // stale staging leftovers — benign GC debris, tallied not flagged
     var orphans = 0
@@ -1064,13 +917,11 @@ object Transaction {
         if (it.next().getPath.getName.startsWith("__staging")) staging += 1
     }
     val report = TxFsckReport(committed.size, unreadable.result(),
-      members.size, missingMembers.result(), entries.size,
-      bad.collect { case (n, "missing", _) => n },
-      bad.collect { case (n, "size", d) => s"$n ($d)" },
-      bad.collect { case (n, "checksum", d) => s"$n ($d)" },
+      members.size, sides.collect { case (m, _, false, _) => m },
+      entries.size, missingFiles, sizeMismatches, checksumMismatches,
       unverifiedMembers, orphans, staging, deep,
-      contentHashed = entries.count(_._5),
-      skippedVerified = if (deep) entries.count(!_._5) else 0)
+      contentHashed = entries.count(_.hashContent),
+      skippedVerified = if (deep) entries.count(!_.hashContent) else 0)
     val advanced =
       if (report.deepVerified && committed.nonEmpty &&
           committed.last > watermark) {
@@ -1086,27 +937,14 @@ object Transaction {
     */
   private def deepVerifiedThrough(spark: SparkSession,
       root: String): Long = {
-    val p = new Path(root, "_deep_verified")
-    val fs = fsOf(spark, p)
-    if (!fs.exists(p)) -1L
-    else try new String(readSmall(spark, p), StandardCharsets.UTF_8)
-      .split("\n").collectFirst {
-        case l if l.startsWith("tx=") => l.stripPrefix("tx=").trim.toLong
-      }.getOrElse(-1L)
-    catch { case scala.util.control.NonFatal(_) => -1L }
+    val r = new Path(root)
+    Integrity.readWatermark(fsOf(spark, r), r, "tx")
   }
 
   private def writeDeepVerifiedThrough(spark: SparkSession,
       root: String, tx: Long): Unit = {
-    val fs = fsOf(spark, new Path(root))
-    val tmp = new Path(root,
-      "__staging_" + java.util.UUID.randomUUID().toString.take(8))
-    val out = fs.create(tmp, true)
-    try out.write((s"tx=$tx\natMs=${System.currentTimeMillis()}\n")
-      .getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    val dst = new Path(root, "_deep_verified")
-    fs.delete(dst, false) // re-stamp: move the name
-    if (!fs.rename(tmp, dst)) fs.delete(tmp, false) // raced: fine
+    val r = new Path(root)
+    Integrity.writeWatermark(fsOf(spark, r), r, new Path(r,
+      "__staging_" + java.util.UUID.randomUUID().toString.take(8)), "tx", tx)
   }
 }

@@ -127,7 +127,7 @@ object GraftSink {
     *                them, change-feed diffs and the streaming tail
     *                EXCLUDE them (their rows were consumed from the
     *                files they replaced).
-    * @param checksum 16-hex-char XXH64 of the file's full content,
+    * @param checksum the file's [[Integrity]] content checksum,
     *                folded stream-wise AS THE WRITER STREAMS the bytes
     *                (near-free: zero extra reads) — what
     *                `fsck(deep = true)` re-hashes against, catching
@@ -237,7 +237,7 @@ object GraftSink {
     *               reading it. Empty = unknown (legacy ref), always
     *               kept.
     */
-  /** @param checksum 16-hex-char XXH64 of the SEGMENT FILE's bytes,
+  /** @param checksum the [[Integrity]] checksum of the SEGMENT FILE,
     *               recorded when the segment is written (the payload
     *               is in hand — hashing is free). `fsck(deep)`
     *               re-hashes against it: a same-size bit flip inside
@@ -327,32 +327,6 @@ object GraftSink {
 
   private def fs(spark: SparkSession, dir: String): FileSystem =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** Streaming XXH64 (lz4-java, already on Spark's own classpath) —
-    * the per-file content checksum. The streaming form is
-    * chunk-boundary-invariant, so the writer folding row payloads as
-    * it streams and fsck(deep) folding 64 KB read buffers produce the
-    * SAME value for the same bytes.
-    */
-  private[graft] def newXxh64(): net.jpountz.xxhash.StreamingXXHash64 =
-    net.jpountz.xxhash.XXHashFactory.fastestInstance()
-      .newStreamingHash64(0L)
-
-  private[graft] def xxh64Hex(v: Long): String = f"$v%016x"
-
-  /** Chunked whole-file XXH64, executor-side (fsck's deep re-hash and
-    * the compact concat share the fold).
-    */
-  private[graft] def hashFileContent(f: FileSystem, p: Path): String = {
-    val h = newXxh64()
-    val in = f.open(p)
-    try {
-      val buf = new Array[Byte](1 << 16)
-      var n = in.read(buf)
-      while (n >= 0) { if (n > 0) h.update(buf, 0, n); n = in.read(buf) }
-    } finally in.close()
-    xxh64Hex(h.getValue)
-  }
 
   private[sources] def manifestName(v: Int) = f"manifest-v$v%06d"
 
@@ -482,9 +456,9 @@ object GraftSink {
     // that names it (the payload is in hand — hashing costs nothing);
     // fsck(deep) re-hashes to catch in-place stats/bounds corruption
     val sum = {
-      val h = newXxh64()
+      val h = Integrity.newHash()
       h.update(payload, 0, payload.length)
-      xxh64Hex(h.getValue)
+      Integrity.hex(h.getValue)
     }
     val f = new Path(dir).getFileSystem(conf.value)
     val out = f.create(segmentPath(dir, name), false)
@@ -2020,7 +1994,7 @@ object GraftSink {
         val f = dst.getFileSystem(conf.value)
         // checksum folds over the SAME buffers the concat streams —
         // the merged file's content hash costs no extra read
-        val h = newXxh64()
+        val h = Integrity.newHash()
         var legacy = 0
         val out = f.create(dst, false)
         try group.foreach { mf =>
@@ -2035,7 +2009,7 @@ object GraftSink {
           // propagates it. Refuse loudly instead; checksum-less legacy
           // members compact with a LOUD unverified count, never
           // silently (the copyVerified message discipline).
-          val hf = newXxh64()
+          val hf = Integrity.newHash()
           val in = f.open(new Path(dir, s"data/${mf.name}"))
           try {
             val buf = new Array[Byte](1 << 16)
@@ -2049,7 +2023,7 @@ object GraftSink {
             }
           } finally in.close()
           if (mf.checksum.nonEmpty) {
-            val actual = xxh64Hex(hf.getValue)
+            val actual = Integrity.hex(hf.getValue)
             if (actual != mf.checksum) {
               out.close()
               f.delete(dst, false)
@@ -2060,13 +2034,13 @@ object GraftSink {
             }
           } else legacy += 1
         } finally out.close()
-        (gi, (name, xxh64Hex(h.getValue), legacy))
+        (gi, (name, Integrity.hex(h.getValue), legacy))
       }.collect()
     val merged = mergedRaw.map { case (gi, (n, sum, _)) =>
       gi -> ((n, sum)) }.toMap
     val legacyCompacted = mergedRaw.map(_._2._3).sum
     if (legacyCompacted > 0)
-      System.err.println(s"graftsink: compaction at $dir retired " +
+      Integrity.warnUnverified(s"graftsink: compaction at $dir retired " +
         s"$legacyCompacted checksum-less legacy file(s) UNVERIFIED " +
         "(pre-checksum manifest) — their bytes fold into checksummed " +
         "merged files without content proof; deep-fsck cannot vouch " +
@@ -2336,27 +2310,18 @@ object GraftSink {
     */
   private[sources] def verifyRetiring(spark: SparkSession, dir: String,
       files: Seq[ManifestFile], op: String): Unit = {
-    val checked = files.filter(_.checksum.nonEmpty)
-    val legacy = files.size - checked.size
+    val legacy = files.count(_.checksum.isEmpty)
     if (legacy > 0)
-      System.err.println(s"graftsink: $op at $dir rewrites $legacy " +
+      Integrity.warnUnverified(s"graftsink: $op at $dir rewrites $legacy " +
         "checksum-less legacy file(s) UNVERIFIED (pre-checksum " +
         "manifest) — their rows re-land under fresh checksums with no " +
         "content proof for the originals")
-    if (checked.isEmpty) return
-    val conf = new SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
-    spark.sparkContext
-      .parallelize(checked.map(f => (f.name, f.checksum)),
-        copySlices(spark, checked.size))
-      .foreach { case (name, sum) =>
-        val p = new Path(dir, s"data/$name")
-        val actual = hashFileContent(p.getFileSystem(conf.value), p)
-        if (actual != sum) sys.error(s"graftsink: $op would retire " +
-          s"$name whose content reads xxh64 $actual but the manifest " +
-          s"records $sum — refusing to launder corruption into a " +
-          "fresh checksum; deep-fsck and restore the object first")
-      }
+    val bad = Integrity.check(spark, files.filter(_.checksum.nonEmpty)
+      .map(f => Integrity.Entry(s"$dir/data/${f.name}",
+        if (f.bytes > 0) f.bytes else -1L, f.checksum, hashContent = true)))
+    if (bad.nonEmpty) sys.error(s"graftsink: $op would retire " +
+      s"${Integrity.describe(bad)} — refusing to launder corruption " +
+      "into a fresh checksum; deep-fsck and restore the object first")
   }
 
   final case class ClusterStats(filesBefore: Int, filesAfter: Int,
@@ -2774,91 +2739,6 @@ object GraftSink {
       "sync loop and re-run")
   }
 
-  /** Slice count for the distributed clone byte-copy: one file per
-    * task up to the CLUSTER's width (`defaultParallelism * 2` so
-    * uneven file sizes rebalance), floored at 64 so a small-cluster
-    * copy of a many-file table still fans out. Scales with the
-    * cluster, not a constant — at 100 TB on 1000 executors the copy
-    * uses the aggregate fabric, not 64 lanes (judge ask r10; the
-    * CloneDecade row pins near-linear task scaling in file count).
-    */
-  private def copySlices(spark: SparkSession, nFiles: Int): Int =
-    math.min(nFiles,
-      math.max(64, spark.sparkContext.defaultParallelism * 2)).max(1)
-
-  /** Executor-side VERIFIED byte copy for replication: streams
-    * src→dst folding XXH64 over the same buffers, and when the
-    * manifest being replicated records a checksum, a mismatch FAILS
-    * the copy loudly — replication must never propagate silent
-    * source-side corruption (bit rot the source's own deep fsck
-    * hasn't run yet would otherwise arrive at the DR site stamped as
-    * healthy). Verification is free: the copy already touches every
-    * byte. The copy stages beside the destination and renames, so a
-    * crashed task never leaves a half-file under the final name
-    * (losing the rename to a racing copy of the same immutable file
-    * is benign when the destination exists).
-    */
-  private[sources] def copyVerified(conf: org.apache.hadoop.conf
-      .Configuration, from: Path, to: Path, expect: String): Unit = {
-    val sf = from.getFileSystem(conf)
-    val df = to.getFileSystem(conf)
-    val h = newXxh64()
-    df.mkdirs(to.getParent)
-    // staging name UNIQUE PER ATTEMPT: a speculative or retried
-    // attempt of the same file must never truncate another attempt's
-    // in-progress tmp out from under its verification (a shared tmp
-    // with overwrite=true let attempt B's create zero attempt A's
-    // bytes while A's hash — folded over what A READ, not what landed
-    // — still passed, publishing an interleaved file under the final
-    // name). Loser tmps are `.`-hidden and aged out by vacuum's sweep.
-    val tmp = new Path(to.getParent, s".${to.getName}.inflight-" +
-      java.util.UUID.randomUUID().toString.take(8))
-    val in = sf.open(from)
-    try {
-      val out = df.create(tmp, false)
-      try {
-        val buf = new Array[Byte](1 << 16)
-        var n = in.read(buf)
-        while (n >= 0) {
-          if (n > 0) { out.write(buf, 0, n); h.update(buf, 0, n) }
-          n = in.read(buf)
-        }
-      } finally out.close()
-    } finally in.close()
-    val actual = xxh64Hex(h.getValue)
-    if (expect.nonEmpty && actual != expect) {
-      df.delete(tmp, false)
-      sys.error(s"graftsink: replication copy of $from reads xxh64 " +
-        s"$actual but the manifest records $expect — refusing to " +
-        "propagate corruption (deep-fsck and restore the source " +
-        "object first)")
-    }
-    // TRUE END-TO-END: the stream hash above proved what was READ;
-    // re-hash the LANDED bytes before publishing the name, so a write
-    // path that corrupted them (torn flush, bad disk, a filesystem
-    // lying about durability) can never produce a replica file whose
-    // recorded checksum its own deep fsck would fail. This is the
-    // read that lets replication FEED the deep-verification watermark
-    // (the replica is proven-verified at birth, no full drill owed) —
-    // one extra read of just-written, page-cache-warm bytes.
-    if (expect.nonEmpty) {
-      val landed = hashFileContent(df, tmp)
-      if (landed != expect) {
-        df.delete(tmp, false)
-        sys.error(s"graftsink: replication copy to $to LANDED with " +
-          s"xxh64 $landed but the manifest records $expect — the " +
-          "destination storage corrupted the write; retry, and check " +
-          "the destination volume")
-      }
-    }
-    if (df.exists(to)) df.delete(to, false) // re-copy: overwrite
-    if (!df.rename(tmp, to)) {
-      df.delete(tmp, false)
-      if (!df.exists(to))
-        sys.error(s"graftsink: replication copy rename to $to failed")
-    }
-  }
-
   /** SNAPSHOT EXPORT — deep clone of one table VERSION into a fresh
     * table directory. Data files copy byte-for-byte through a
     * DISTRIBUTED copy job (one Spark task per file — at 100 TB the
@@ -2904,10 +2784,10 @@ object GraftSink {
     if (files.nonEmpty) {
       val jobs = files.map(f => (f.name, f.checksum))
       spark.sparkContext
-        .parallelize(jobs, copySlices(spark, jobs.size))
+        .parallelize(jobs, Integrity.slices(spark, jobs.size))
         .foreach { case (name, sum) =>
-          copyVerified(conf.value, new Path(s"$src/data/$name"),
-            new Path(s"$dst/data/$name"), sum)
+          Integrity.copyVerified(conf.value, new Path(s"$src/data/$name"),
+            new Path(s"$dst/data/$name"), sum, "graftsink")
         }
     }
     // the source's commit stamp carries VERBATIM: the replica's
@@ -2918,7 +2798,7 @@ object GraftSink {
       epochWriter = Some(ReplicaWriter),
       committedAtMs = m.committedAtMs)
     // PROVEN-VERIFIED AT BIRTH: every data byte was end-to-end
-    // verified in flight ([[copyVerified]] hashes what it reads AND
+    // verified in flight ([[Integrity.copyVerified]] hashes what it reads AND
     // what it lands), so the clone starts with the deep-verification
     // watermark at its head — a DR replica owes no full drill for
     // bytes replication already proved. Declined when any source
@@ -3024,10 +2904,10 @@ object GraftSink {
     if (delta.nonEmpty) {
       val jobs = delta.map(f => (f.name, f.checksum))
       spark.sparkContext
-        .parallelize(jobs, copySlices(spark, jobs.size))
+        .parallelize(jobs, Integrity.slices(spark, jobs.size))
         .foreach { case (name, sum) =>
-          copyVerified(conf.value, new Path(s"$src/data/$name"),
-            new Path(s"$dst/data/$name"), sum)
+          Integrity.copyVerified(conf.value, new Path(s"$src/data/$name"),
+            new Path(s"$dst/data/$name"), sum, "graftsink")
         }
     }
     // strictly above the head's replication epoch (the publish-level
@@ -3450,8 +3330,7 @@ object GraftSink {
     *              DECLINED, loudly, never silently passed: a deep run
     *              that could not verify everything reports it here,
     *              and [[deepVerified]] is false.
-    */
-  /** @param contentHashed deep only: entries whose content this run
+    * @param contentHashed deep only: entries whose content this run
     *              actually re-hashed (the incremental pass's work
     *              list; a full pass hashes every checksummed entry).
     * @param skippedVerified deep + `sinceVerified` only: entries
@@ -3511,7 +3390,7 @@ object GraftSink {
     * Scale: manifest resolution is the same O(versions) driver
     * metadata walk vacuum performs (manifest envelope decade-pinned
     * to 10^6-10^7 entries); the existence+size check fans out
-    * cluster-wide via [[copySlices]] — one `getFileStatus` per
+    * cluster-wide via [[Integrity.check]] — one `getFileStatus` per
     * referenced file, only violations return to the driver, so the
     * collect is O(damage), not O(files). Read-only: fsck never
     * repairs (a missing referenced file has no safe automatic fix —
@@ -3574,8 +3453,6 @@ object GraftSink {
         }
       } catch { case scala.util.control.NonFatal(_) => unreadable += v }
     }
-    val conf = new SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
     // one cluster-fanned pass over DATA files and (deep only)
     // SEGMENT files: existence + size always; content re-hash when
     // deep, a checksum is recorded, and the verification watermark
@@ -3584,47 +3461,26 @@ object GraftSink {
     // existence + content only — and a corrupt segment is worse than
     // a corrupt data file: its stats drive file skipping, so the
     // damage is silently wrong ANSWERS, not a read error.
-    val entries: Seq[(String, String, Long, String, Boolean)] =
-      // (kind, name, bytes, sum, hashContent)
-      referenced.toSeq.map { case (n, (b, s)) =>
-        ("data", n, b, s, deep && !coveredFiles(n)) } ++
-        (if (deep) liveSegs.toSeq.map { case (n, s) =>
-          ("segment", n, -1L, s, !coveredSegs(n)) } else Seq.empty)
-    val bad: Seq[(String, String, String)] = // (name, kind, detail)
-      if (entries.isEmpty) Seq.empty
-      else spark.sparkContext
-        .parallelize(entries, copySlices(spark, entries.size))
-        .flatMap { case (kind, name, bytes, sum, hashContent) =>
-          val p = if (kind == "data") new Path(s"$dir/data/$name")
-            else new Path(s"$dir/_segments/$name")
-          try {
-            val fsx = p.getFileSystem(conf.value)
-            val st = fsx.getFileStatus(p)
-            if (bytes > 0 && st.getLen != bytes)
-              Some((name, "size", s"size ${st.getLen} != manifest $bytes"))
-            else if (hashContent && sum.nonEmpty) {
-              val actual = hashFileContent(fsx, p)
-              if (actual != sum)
-                Some((name, "checksum",
-                  s"$kind content xxh64 $actual != manifest $sum"))
-              else None
-            } else None
-          } catch { case _: java.io.FileNotFoundException =>
-            // a missing SEGMENT surfaces through unreadable-manifest
-            // resolution too, but name it here as damage regardless
-            Some((name, "missing", "missing"))
-          }
-        }.collect().toSeq
-    val missing = bad.collect { case (n, "missing", _) => n }
-    val mismatch = bad.collect { case (n, "size", d) => s"$n ($d)" }
-    val badSum = bad.collect { case (n, "checksum", d) => s"$n ($d)" }
+    val entries: Seq[Integrity.Entry] =
+      referenced.toSeq.map { case (n, (b, sum)) =>
+        Integrity.Entry(s"$dir/data/$n", if (b > 0) b else -1L, sum,
+          deep && !coveredFiles(n)) } ++
+        (if (deep) liveSegs.toSeq.map { case (n, sum) =>
+          Integrity.Entry(s"$dir/_segments/$n", -1L, sum, !coveredSegs(n))
+        } else Seq.empty)
+    val bad = Integrity.check(spark, entries).map(d =>
+      if (d.path.startsWith(s"$dir/_segments/"))
+        d.copy(detail = s"segment ${d.detail}")
+      else d)
+    val (missing, mismatch, badSum) =
+      Integrity.byKind(bad, new Path(_).getName)
     // unverified = checksum-less entries IN THE WORK LIST: a
     // watermark-covered entry was verified (a pass that declined
     // anything never wrote the watermark), never silently passed
     val unverified =
-      if (deep) entries.count(e => e._5 && e._4.isEmpty) else 0
-    val hashed = entries.count(e => e._5 && e._4.nonEmpty)
-    val skipped = if (deep) entries.count(e => !e._5) else 0
+      if (deep) entries.count(e => e.hashContent && e.sum.isEmpty) else 0
+    val hashed = entries.count(e => e.hashContent && e.sum.nonEmpty)
+    val skipped = if (deep) entries.count(!_.hashContent) else 0
     // orphan tallies STREAM the listing (listStatusIterator): the
     // driver holds one counter, never an O(table files) FileStatus
     // array — at the 10^6-10^7-entry decade scale the probe's driver
@@ -3663,35 +3519,14 @@ object GraftSink {
     * staged + rename; monotone (only [[fsck]] advances it).
     */
   private[sources] def deepVerifiedThrough(spark: SparkSession,
-      dir: String): Int = {
-    val p = new Path(dir, "_deep_verified")
-    val f = fs(spark, dir)
-    if (!f.exists(p)) -1
-    else try {
-      val in = f.open(p)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        .split("\n").collectFirst {
-          case l if l.startsWith("version=") =>
-            l.stripPrefix("version=").trim.toInt
-        }.getOrElse(-1)
-      finally in.close()
-    } catch { case scala.util.control.NonFatal(_) => -1 }
-  }
+      dir: String): Int =
+    Integrity.readWatermark(fs(spark, dir), new Path(dir), "version").toInt
 
   private def writeDeepVerifiedThrough(spark: SparkSession, dir: String,
-      v: Int): Unit = {
-    val f = fs(spark, dir)
-    val tmp = new Path(dir, s"_staging/deep-verified-tmp-" +
-      java.util.UUID.randomUUID().toString.take(12))
-    f.mkdirs(tmp.getParent)
-    val out = f.create(tmp, true)
-    try out.write((s"version=$v\n" +
-      s"atMs=${System.currentTimeMillis()}\n").getBytes("UTF-8"))
-    finally out.close()
-    val dst = new Path(dir, "_deep_verified")
-    f.delete(dst, false) // re-stamp: move the name
-    if (!f.rename(tmp, dst)) f.delete(tmp, false) // racing stamp: fine
-  }
+      v: Int): Unit =
+    Integrity.writeWatermark(fs(spark, dir), new Path(dir),
+      new Path(dir, "_staging/deep-verified-tmp-" +
+        java.util.UUID.randomUUID().toString.take(12)), "version", v)
 
   private[sources] def checkSupported(schema: StructType): Unit =
     schema.fields.foreach { fld =>
@@ -4101,7 +3936,7 @@ private class GraftDataWriter(schema: StructType, path: String,
   private var bytes = 0L
   // content checksum folded AS the bytes stream — recording it is
   // near-free (no re-read); fsck(deep) re-hashes against it
-  private val contentHash = GraftSink.newXxh64()
+  private val contentHash = Integrity.newHash()
   // per-field [lo, hi] for the numeric-internal types (long-backed,
   // int-backed, double) and TRUNCATED string prefixes — nulls skipped
   // but counted exactly; folded into the manifest line at commit so
@@ -4250,7 +4085,7 @@ private class GraftDataWriter(schema: StructType, path: String,
   override def commit(): WriterCommitMessage = {
     out.close()
     GraftCommitMessage(fileName, rows, bytes, statsJson,
-      GraftSink.xxh64Hex(contentHash.getValue))
+      Integrity.hex(contentHash.getValue))
   }
 
   override def abort(): Unit = {

@@ -9,8 +9,8 @@ import graft.sources.GraftSink
   * (round 11, judge ask #1). Round 10 shipped `cloneSnapshot` /
   * `cloneSync` with the byte copy capped at 64 slices — correct but
   * an artificial parallelism ceiling at exactly the scale the
-  * scaladoc promised cluster-wide fabric. The cap is now
-  * `min(files, max(64, defaultParallelism * 2))`; this harness pins
+  * scaladoc promised cluster-wide fabric. The cap is now the shared
+  * fan-out rule `Integrity.slices`; this harness pins
   * the claim that copy wall-time tracks TOTAL BYTES, not file count:
   * the same ~fixed byte volume sliced into 16, 100, and 1000 files
   * must clone in near-constant wall time (tasks absorb the file-count
@@ -59,8 +59,7 @@ object CloneDecade {
         .write.format("graftsink").mode("append").save(src)
       val m = GraftSink.latestManifest(spark, src).get
       val mb = m.files.map(_.bytes).sum / 1e6
-      val slices = math.min(files,
-        math.max(64, spark.sparkContext.defaultParallelism * 2))
+      val slices = graft.sources.Integrity.slices(spark, files)
       val wall = time { GraftSink.cloneSnapshot(spark, src, dst) }
       val ok = spark.read.format("graftsink").load(dst).count() == rows
       println(f"| $files | $slices | $mb%.0f | $wall%.2f | " +

@@ -359,4 +359,139 @@ class FsckSpec extends SparkSpec {
     assert(healed.verifiedThrough ==
       GraftSink.latestManifest(spark, dir).get.version, s"$healed")
   }
+
+  // ---- the shared integrity kernel: one sidecar format, one damage
+  // ---- vocabulary across graftsink, Transaction and MergeOnRead
+
+  private def hfs = new Path("/")
+    .getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  private def put(p: Path, bytes: Array[Byte]): Unit = {
+    val out = hfs.create(p, true)
+    try out.write(bytes) finally out.close()
+  }
+
+  private def slurp(p: Path): Array[Byte] = {
+    val buf = new Array[Byte](hfs.getFileStatus(p).getLen.toInt)
+    val in = hfs.open(p)
+    try in.readFully(buf) finally in.close()
+    buf
+  }
+
+  private def firstPayload(dir: Path): Path =
+    hfs.listStatus(dir).map(_.getPath)
+      .filter(q => !q.getName.startsWith("_") && !q.getName.startsWith("."))
+      .minBy(_.getName)
+
+  /** One layer under test: `plant` builds a fresh healthy root and
+    * returns it with the payload file to damage, `unvouch` drops the
+    * record that vouches for that file's content, `kinds` runs the
+    * layer's deep fsck and names the damage kinds it reports.
+    */
+  private case class Layer(name: String, plant: String => (String, Path),
+      unvouch: (String, Path) => Unit, kinds: String => Set[String])
+
+  private def kindsOf(missing: Seq[String], size: Seq[String],
+      sum: Seq[String], unverified: Int): Set[String] =
+    Map("missing" -> missing.nonEmpty, "size" -> size.nonEmpty,
+      "checksum" -> sum.nonEmpty, "unverified" -> (unverified > 0))
+      .collect { case (k, true) => k }.toSet
+
+  private val layers = Seq(
+    Layer("transaction member",
+      tag => {
+        val root = tmpDir(s"graft_integrity_tx_$tag")
+        graft.operators.Transaction.publish(spark, root, Map("a" ->
+          Seq((1L, "alpha"), (2L, "beta")).toDF("k", "s").coalesce(1)))
+        (root, firstPayload(new Path(root, "a/t0")))
+      },
+      (_, victim) => { hfs.delete(new Path(victim.getParent, "_checksums"),
+        false); () },
+      root => {
+        val r = graft.operators.Transaction.fsck(spark, root, deep = true)
+        kindsOf(r.missingFiles, r.sizeMismatches, r.checksumMismatches,
+          r.unverifiedMembers)
+      }),
+    Layer("merge-on-read tombstone dir",
+      tag => {
+        val root = tmpDir(s"graft_integrity_mor_$tag")
+        graft.operators.MergeOnRead.init(
+          Seq((1L, "alpha"), (2L, "beta")).toDF("k", "s"), root)
+        graft.operators.MergeOnRead.deleteKeys(spark, root,
+          Seq(1L).toDF("k").coalesce(1))
+        val batch = hfs.listStatus(new Path(root, "deletes")).head.getPath
+        (root, firstPayload(batch))
+      },
+      (_, victim) => { hfs.delete(new Path(victim.getParent, "_checksums"),
+        false); () },
+      root => {
+        val r = graft.operators.MergeOnRead.fsck(spark, root, deep = true)
+        kindsOf(r.missingFiles, r.sizeMismatches, r.checksumMismatches,
+          r.unverifiedFiles)
+      }),
+    Layer("graftsink table",
+      tag => {
+        val dir = freshDir(s"integrity_$tag")
+        Seq((1L, "alpha"), (2L, "beta")).toDF("k", "s").coalesce(1)
+          .write.format("graftsink").mode("append").save(dir)
+        (dir, firstPayload(new Path(dir, "data")))
+      },
+      (dir, _) => {
+        // the pre-checksum manifest shape: re-publish the head with the
+        // trailing checksum field stripped from every file line
+        val hv = GraftSink.latestManifest(spark, dir).get.version
+        val lines = new String(slurp(new Path(dir, f"manifest-v$hv%06d")),
+          "UTF-8").split("\n").toSeq.filter(_.nonEmpty)
+        val stripped = lines.map { l =>
+          if (l == lines.head || l.startsWith("#")) l
+          else l.split("\t", -1).dropRight(1).mkString("\t")
+        }
+        put(new Path(dir, f"manifest-v${hv + 1}%06d"),
+          stripped.mkString("\n").getBytes("UTF-8"))
+      },
+      dir => {
+        val r = GraftSink.fsck(spark, dir, deep = true)
+        kindsOf(r.missingFiles, r.sizeMismatches, r.checksumMismatches,
+          r.unverifiedFiles)
+      }))
+
+  test("Integrity.stamp writes the pinned _checksums bytes, and every " +
+      "layer's deep fsck reports the same planted damage with the same " +
+      "kind: missing, size, checksum or unverified") {
+    // FORMAT PIN: sorted `name<TAB>bytes<TAB>xxh64` lines, each ending
+    // in a newline; bookkeeping names never listed; an empty payload
+    // is a lone newline. (XXH64 seed 0: "" = ef46db3751d8e999,
+    // "abc" = 44bc2cf5ad770999.)
+    val dir = new Path(tmpDir("graft_integrity_pin"))
+    put(new Path(dir, "b.parquet"), "abc".getBytes("UTF-8"))
+    put(new Path(dir, "a.parquet"), Array.emptyByteArray)
+    put(new Path(dir, "_SUCCESS"), Array.emptyByteArray)
+    graft.sources.Integrity.stamp(spark, dir.toString)
+    assert(new String(slurp(new Path(dir, "_checksums")), "UTF-8") ==
+      "a.parquet\t0\tef46db3751d8e999\nb.parquet\t3\t44bc2cf5ad770999\n")
+    val empty = new Path(tmpDir("graft_integrity_pin_empty"))
+    put(new Path(empty, "_SUCCESS"), Array.emptyByteArray)
+    graft.sources.Integrity.stamp(spark, empty.toString)
+    assert(new String(slurp(new Path(empty, "_checksums")), "UTF-8") == "\n")
+
+    // DAMAGE AGREEMENT: the same four plants, one fresh root each
+    val damages: Seq[(String, (Layer, String, Path) => Unit)] = Seq(
+      "missing" -> ((_, _, v) => { hfs.delete(v, false); () }),
+      "size" -> ((_, _, v) => put(v, "short".getBytes("UTF-8"))),
+      "checksum" -> ((_, _, v) => {
+        val buf = slurp(v)
+        buf(buf.length / 2) = (buf(buf.length / 2) ^ 0x01).toByte
+        put(v, buf)
+      }),
+      "unverified" -> ((layer, root, v) => layer.unvouch(root, v)))
+    for (layer <- layers; (kind, plantDamage) <- damages) {
+      val (root, victim) = layer.plant(kind)
+      assert(layer.kinds(root).isEmpty, s"${layer.name}: healthy root " +
+        "must deep-verify before the plant")
+      plantDamage(layer, root, victim)
+      assert(layer.kinds(root) == Set(kind),
+        s"${layer.name}: planted $kind damage reported as " +
+          s"${layer.kinds(root)}")
+    }
+  }
 }

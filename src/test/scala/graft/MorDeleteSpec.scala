@@ -31,6 +31,20 @@ class MorDeleteSpec extends SparkSpec {
     assert(got == Seq((1, "a"), (3, "d")))
   }
 
+  test("a first-ever delete that matches nothing leaves the root " +
+      "readable: every row reads, compact folds nothing, deep fsck is " +
+      "clean") {
+    val root = tmpDir("graft_mor_nomatch")
+    MergeOnRead.init(Seq((1, "a"), (2, "b"), (3, "c")).toDF("k", "v"), root)
+    assert(MergeOnRead.deleteWhere(spark, root, "k", col("k") === 99) == 0)
+    assert(MergeOnRead.readCurrent(spark, root, "k")
+      .orderBy("k").as[(Int, String)].collect().toSeq ==
+      Seq((1, "a"), (2, "b"), (3, "c")))
+    assert(MergeOnRead.compact(spark, root, "k") == 0)
+    val f = MergeOnRead.fsck(spark, root, deep = true)
+    assert(f.deepVerified, s"a no-match delete is not damage: $f")
+  }
+
   test("re-deleting already-tombstoned keys is a no-op (idempotent)") {
     val root = tmpDir("graft_mor")
     MergeOnRead.init(Seq((7, "x"), (2, "y")).toDF("k", "v"), root)

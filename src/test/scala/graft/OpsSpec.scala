@@ -188,27 +188,31 @@ class OpsSpec extends SparkSpec {
 
   test("spreadNarrow widens a narrow input data-proportionally, " +
       "capped at the session shuffle width") {
-    val narrow = Seq.tabulate(100)(i => (i.toLong, s"doc$i"))
-      .toDF("id", "text").coalesce(1)
-    val spread = Ops.spreadNarrow(narrow)
-    val session = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val n = spread.rdd.getNumPartitions
-    // a KB-scale input spreads to a FEW partitions (>= the floor of 4,
-    // data-proportional at ~64 KiB/task), never the whole session
-    // width — r15, the inverse-scaling fix for allocation-heavy
-    // kernels over tiny corpora
-    assert(n >= 4 && n <= session, s"width $n outside [4, $session]")
-    assert(spread.count() == 100)
-    // a large-estimate input still spreads to the full session cap:
-    // the width is min(session, bytes/64KiB)
-    val big = Seq.tabulate(100)(i => (i.toLong, "x" * 40000))
-      .toDF("id", "text").coalesce(1)
-    assert(Ops.spreadNarrow(big).rdd.getNumPartitions == session,
-      "MB-scale input must saturate the session width")
-    // a wide input passes through untouched (no gratuitous shuffle)
-    val wide = narrow.repartition(8)
-    assert(Ops.spreadNarrow(wide).queryExecution.optimizedPlan ==
-      wide.queryExecution.optimizedPlan)
+    // a session wide enough that "below the cap" and "at the cap" are
+    // different widths (the suite's default of 4 equals the floor)
+    val prior = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "64")
+    try {
+      val narrow = Seq.tabulate(100)(i => (i.toLong, s"doc$i"))
+        .toDF("id", "text").coalesce(1)
+      val spread = Ops.spreadNarrow(narrow)
+      val n = spread.rdd.getNumPartitions
+      // a KB-scale input spreads to a FEW partitions (>= the floor of
+      // 4, data-proportional at ~64 KiB/task), never the whole session
+      // width — r15, the inverse-scaling fix for allocation-heavy
+      // kernels over tiny corpora
+      assert(n >= 4 && n < 64, s"width $n outside [4, 64)")
+      assert(spread.count() == 100)
+      // a large-estimate input still spreads to the full session cap:
+      // the width is min(session, bytes/64KiB)
+      val big = spark.range(0, 1L << 20, 1, 1).toDF("id")
+      assert(Ops.spreadNarrow(big).rdd.getNumPartitions == 64,
+        "MB-scale input must saturate the session width")
+      // a wide input passes through untouched (no gratuitous shuffle)
+      val wide = narrow.repartition(8)
+      assert(Ops.spreadNarrow(wide).queryExecution.optimizedPlan ==
+        wide.queryExecution.optimizedPlan)
+    } finally spark.conf.set("spark.sql.shuffle.partitions", prior)
   }
 
   test("spreadNarrow blocks filter pushdown below the repartition") {

@@ -7,13 +7,14 @@
 # sf0.01 (parquet dumps + oracle_sql.json + tolerance bounds), (3) the
 # DuckDB oracle compare (driver-side tooling; skipped with a note when
 # duckdb isn't installed), (4) graft.Bench at sf0.1 with the contention
-# canary. Everything lands in one committed-able JSON summary,
+# canary, (5) the pipeline benchmark's own tests (perfbench
+# --selftest). Everything lands in one committed-able JSON summary,
 # ROUNDCHECK.json, so the repo's claims and the driver's artifacts
 # can't silently diverge (round 5's 243-vs-242, round 6's 74.8 s clean
 # vs 128.96 s contended). Exit code is nonzero when any hard gate
-# (tests, verify run, oracle compare) fails; a contended bench is
-# ANNOTATED, not failed — the canary field says whether the numbers
-# are trustworthy.
+# (tests, verify run, oracle compare, perfbench selftest) fails; a
+# contended bench is ANNOTATED, not failed — the canary field says
+# whether the numbers are trustworthy.
 #
 # Env overrides: SF_VERIFY (default /root/testdata/sf0.01),
 # SF_BENCH (default /root/testdata/sf0.1), OUT (scratch dir).
@@ -130,10 +131,17 @@ python3 tools/bench_coverage_check.py --selftest \
        "$OUT/bench_detail.json" "$OUT/verify" >>"$OUT/benchcov.log" 2>&1
 BENCHCOV_RC=$?
 
-python3 - "$OUT" "$TEST_RC" "$VERIFY_RC" "$ORACLE_RC" "$BENCH_RC" "$PLANDIFF_RC" "$SPLANDIFF_RC" "$BENCHCOV_RC" <<'EOF'
+echo "[roundcheck] 5/5 perfbench selftest"
+# perfbench compiles src/main in its OWN sbt build, which the root
+# `sbt test` above never builds — so a src/main change can break the
+# pipeline benchmark without any other step noticing. Hard gate.
+python3 perfbench/run.py --selftest >"$OUT/perfbench_selftest.log" 2>&1
+PERFBENCH_RC=$?
+
+python3 - "$OUT" "$TEST_RC" "$VERIFY_RC" "$ORACLE_RC" "$BENCH_RC" "$PLANDIFF_RC" "$SPLANDIFF_RC" "$BENCHCOV_RC" "$PERFBENCH_RC" <<'EOF'
 import json, re, sys
 out, test_rc, verify_rc, oracle_rc, bench_rc, plandiff_rc, splandiff_rc, \
-    benchcov_rc = (sys.argv[1], *map(int, sys.argv[2:9]))
+    benchcov_rc, perfbench_rc = (sys.argv[1], *map(int, sys.argv[2:10]))
 
 summary = {"gate": None}
 
@@ -317,9 +325,21 @@ try:
 except Exception:
     pass
 
+# perfbench selftest: its sbt test epilogue
+summary["perfbench_selftest"] = {"rc": perfbench_rc}
+try:
+    ptxt = open(f"{out}/perfbench_selftest.log", errors="replace").read()
+    pm = re.findall(r"Tests: succeeded (\d+), failed (\d+)", ptxt)
+    if pm:
+        summary["perfbench_selftest"].update(
+            succeeded=int(pm[-1][0]), failed=int(pm[-1][1]))
+except Exception:
+    pass
+
 hard_fail = (
     test_rc != 0 or verify_rc != 0 or oracle_rc > 0 or bench_rc != 0
     or plandiff_rc != 0 or splandiff_rc != 0 or benchcov_rc != 0
+    or perfbench_rc != 0
     or (summary["tests"]["failed"] or 0) > 0
     # a clean verify must have produced a NON-EMPTY tolerance set;
     # missing file and empty {} both mean no check actually ran

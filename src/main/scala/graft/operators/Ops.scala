@@ -157,16 +157,18 @@ object Ops {
     df.toDF(df.columns.map(_.toLowerCase): _*)
 
   /** A1 — watermark read: MAX(col) of the target, None when the target
-    * doesn't exist yet (→ caller falls back to full refresh).
-    * Reference: `pg_loader.py:296-318`, fallback `__main__.py:104-112`.
+    * doesn't exist yet or is empty (→ caller falls back to full
+    * refresh). An empty table needs no probe of its own: its max is
+    * null, and so is its max partition, whose filter then matches
+    * nothing. Reference: `pg_loader.py:296-318`, fallback
+    * `__main__.py:104-112`.
     */
   def maxWatermark(spark: SparkSession, targetPath: String,
       column: String, partitionCol: Option[String] = None): Option[Any] = {
     if (!ParquetIO.exists(spark, targetPath)) None
     else {
       val table = spark.read.parquet(targetPath)
-      if (table.isEmpty) None
-      else partitionCol match {
+      partitionCol match {
         // On a hive layout whose partition value is derived from (and
         // monotone with) the watermark column, the max watermark lives
         // in the max partition: filter to it so partition pruning reads

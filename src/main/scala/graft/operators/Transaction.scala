@@ -3,7 +3,7 @@ package graft.operators
 import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlInternal, SparkSession}
 
 import graft.sources.{GraftSink, Integrity}
 
@@ -227,6 +227,16 @@ object Transaction {
   /** Read `table` at transaction `tx` (latest committed when None) —
     * always through a committed manifest, so concurrent publishes and
     * torn crashes are invisible.
+    *
+    * SCHEMA: taken from the footer of the member dir's first payload
+    * file (by name, the [[Integrity.payload]] listing), read on the
+    * calling thread through Spark's own footer→schema conversion —
+    * the schema parquet inference would derive, nullability included,
+    * without the Spark job inference launches. Every file of a member
+    * comes from one write, so any one footer speaks for all. The
+    * footer is read on every call; nothing is cached in the JVM. A
+    * member dir with no payload file (or no dir at all) falls through
+    * to Spark's inference, which fails loudly.
     */
   def read(spark: SparkSession, root: String, table: String,
       tx: Option[Long] = None): DataFrame = {
@@ -236,7 +246,16 @@ object Transaction {
     val m = manifest(spark, root, id)
     require(m.contains(table),
       s"table '$table' not in transaction $id (${m.keys.mkString(", ")})")
-    spark.read.parquet(s"$root/$table/t${m(table)}")
+    val dir = new Path(s"$root/$table/t${m(table)}")
+    val first =
+      try Integrity.payload(fsOf(spark, dir), dir).headOption
+      catch { case _: java.io.FileNotFoundException => None }
+    first match {
+      case Some(f) => spark.read
+        .schema(GraftSqlInternal.parquetFooterSchema(spark, new Path(dir, f)))
+        .parquet(dir.toString)
+      case None => spark.read.parquet(dir.toString)
+    }
   }
 
   // ---- failover fencing (the sink's promote/cloneSync contract, at

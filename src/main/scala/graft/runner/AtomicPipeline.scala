@@ -2,10 +2,10 @@ package graft.runner
 
 import scala.util.{Failure, Success, Try}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.model.{EtlJob, FullRefresh, Incremental, TableSpec}
+import graft.model.{EtlJob, FullRefresh, TableSpec}
 import graft.operators.{Ops, Transaction}
 import graft.sources.Source
 
@@ -46,6 +46,14 @@ import graft.sources.Source
   * adds one manifest rename per job and carries unchanged tables
   * forward by reference, so a 100-table warehouse pays O(1) metadata
   * per job commit.
+  *
+  * Spark jobs: only the watermark max, the fetch, the writes and the
+  * stamp of a multi-file data dir launch any. Every
+  * [[Transaction.read]] (the `etl_job` state, the current table) takes
+  * its schema from a parquet footer on this thread; a full refresh
+  * never reads the current table; the committed row count is an
+  * `Observation` on the data write; and the one-partition `etl_job`
+  * write is stamped inline ([[graft.sources.Integrity.stamp]]).
   */
 class AtomicPipeline(spark: SparkSession, source: Source, root: String) {
   import spark.implicits._
@@ -53,7 +61,8 @@ class AtomicPipeline(spark: SparkSession, source: Source, root: String) {
   val StateTable = "etl_job"
 
   def seed(jobs: Seq[EtlJob]): Unit =
-    Transaction.publish(spark, root, Map(StateTable -> jobs.toDS.toDF))
+    Transaction.publish(spark, root,
+      Map(StateTable -> jobs.toDS.toDF.coalesce(1)))
 
   def state: DataFrame = Transaction.read(spark, root, StateTable)
 
@@ -62,7 +71,8 @@ class AtomicPipeline(spark: SparkSession, source: Source, root: String) {
 
   /** The state relation with one job's row transformed — the
     * [[graft.meta.JobStateStore]] update shape, minus the write (the
-    * caller owns the commit).
+    * caller owns the commit). One partition, so the control table
+    * lands as one file and its stamp hashes inline.
     */
   private def stateWith(jobName: String,
       set: DataFrame => DataFrame): DataFrame = {
@@ -70,6 +80,7 @@ class AtomicPipeline(spark: SparkSession, source: Source, root: String) {
     set(cur.filter($"job_name" === jobName))
       .unionByName(cur.filter($"job_name" =!= jobName ||
         $"job_name".isNull))
+      .coalesce(1)
   }
 
   private def tableNames: Set[String] =
@@ -92,19 +103,20 @@ class AtomicPipeline(spark: SparkSession, source: Source, root: String) {
         .withColumn("last_updated_ts", current_timestamp()))))
     val attempt = Try {
       val table = targetTable(spec)
+      val forcedFull = opts.fullRefresh || spec.strategy == FullRefresh
+      // a full refresh never looks at the current table
       val existing =
-        if (tableNames.contains(table))
+        if (!forcedFull && tableNames.contains(table))
           Some(Transaction.read(spark, root, table))
         else None
-      val watermark = (spec.strategy, spec.watermarkCol) match {
-        case _ if opts.fullRefresh => None
-        case (Incremental, Some(c)) => opts.incrementalValue.orElse(
-          existing.flatMap(t =>
-            if (t.isEmpty) None else Option(t.agg(max(col(c))).head.get(0))))
+      // the max over an empty table is null, so an empty target reads
+      // as no watermark — a full refresh
+      val watermark = spec.watermarkCol match {
+        case Some(c) if !forcedFull => opts.incrementalValue.orElse(
+          existing.flatMap(t => Option(t.agg(max(col(c))).head.get(0))))
         case _ => None
       }
-      val doFull = opts.fullRefresh ||
-        spec.strategy == FullRefresh || watermark.isEmpty
+      val doFull = forcedFull || watermark.isEmpty
       val fetched = source.fetch(spark, spec, watermark)
       val shaped = Ops.auditStamp(
         Ops.applyDerived(
@@ -112,24 +124,26 @@ class AtomicPipeline(spark: SparkSession, source: Source, root: String) {
       val merged =
         if (doFull) shaped
         else Ops.mergeUpsertDf(existing, shaped, spec.pKeys)
+      // the committed row count rides the data write itself
+      val rows = new Observation()
       val done = stateWith(spec.jobName, _
         .withColumn("status", lit(EtlJob.Done))
         .withColumn("end_ts", current_timestamp())
         .withColumn("last_updated_ts", current_timestamp()))
       // THE commit: data and job state flip in one manifest rename
-      Transaction.publish(spark, root, Map(table -> merged,
+      Transaction.publish(spark, root, Map(
+        table -> merged.observe(rows, count(lit(1)).as("rows")),
         StateTable -> done))
-      (table, doFull)
+      (rows, doFull)
     }
     attempt match {
-      case Success((table, doFull)) =>
-        // the verification count runs AFTER the commit point, outside
-        // the failure branch: a post-commit read error must surface to
-        // the caller, never publish status=Failed over data that DID
-        // land (the (failed, new-data) pair this class exists to
-        // make impossible)
-        JobResult(spec.jobName,
-          Transaction.read(spark, root, table).count(), doFull, None)
+      case Success((rows, doFull)) =>
+        // no read follows the commit point: the count was observed on
+        // the write that landed, so nothing after the commit can fail
+        // and publish status=Failed over data that DID land (the
+        // (failed, new-data) pair this class exists to make impossible)
+        JobResult(spec.jobName, rows.get("rows").asInstanceOf[Long],
+          doFull, None)
       case Failure(e) =>
         // error isolation: the failure record commits alone — the data
         // never did, so (failed, old data) is the truthful pair

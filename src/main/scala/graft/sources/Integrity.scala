@@ -73,34 +73,39 @@ private[graft] object Integrity {
     math.min(n, math.max(64, spark.sparkContext.defaultParallelism * 2))
       .max(1)
 
-  /** Write `dir`'s sidecar: the payload is hashed by one cluster-fanned
-    * job (one task per file); a dir with no payload runs no job and
-    * gets `\n`. Overwrites an existing sidecar, so a replayed dir write
+  /** Write `dir`'s sidecar: a payload of several files is hashed by one
+    * cluster-fanned job (one task per file); a payload of exactly one
+    * file is hashed on the calling thread — one slice either way, and
+    * the same [[hashFile]], so the bytes are identical and a one-file
+    * dir launches no job. A dir with no payload runs no job and gets
+    * `\n`. Overwrites an existing sidecar, so a replayed dir write
     * re-stamps. A missing dir is left alone.
     */
   def stamp(spark: SparkSession, dir: String): Unit = {
     val p = new Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) return
-    val names = payload(fs, p)
-    val lines =
-      if (names.isEmpty) Seq.empty[String]
-      else {
+    val lines = payload(fs, p) match {
+      case Seq() => Seq.empty[String]
+      case Seq(one) => Seq(sidecarLine(fs, new Path(p, one)))
+      case names =>
         val conf = new SerializableConfiguration(
           spark.sparkContext.hadoopConfiguration)
         spark.sparkContext
           .parallelize(names.map(n => s"$dir/$n"), slices(spark, names.size))
           .map { s =>
             val fp = new Path(s)
-            val f = fp.getFileSystem(conf.value)
-            s"${fp.getName}\t${f.getFileStatus(fp).getLen}\t${hashFile(f, fp)}"
+            sidecarLine(fp.getFileSystem(conf.value), fp)
           }.collect().toSeq.sorted
-      }
+    }
     val out = fs.create(new Path(p, Sidecar), true)
     try out.write((lines.mkString("\n") + "\n")
       .getBytes(StandardCharsets.UTF_8))
     finally out.close()
   }
+
+  private def sidecarLine(fs: FileSystem, p: Path): String =
+    s"${p.getName}\t${fs.getFileStatus(p).getLen}\t${hashFile(fs, p)}"
 
   /** `dir`'s sidecar as file name → (bytes, xxh64), or None when the
     * dir has none. Plain FileSystem IO: runs on the driver and inside

@@ -469,6 +469,16 @@ class FsckSpec extends SparkSpec {
     graft.sources.Integrity.stamp(spark, dir.toString)
     assert(new String(slurp(new Path(dir, "_checksums")), "UTF-8") ==
       "a.parquet\t0\tef46db3751d8e999\nb.parquet\t3\t44bc2cf5ad770999\n")
+    // one payload file is hashed on the calling thread, with no Spark
+    // job, into the same line the fan-out wrote for it
+    val one = new Path(tmpDir("graft_integrity_pin_one"))
+    put(new Path(one, "b.parquet"), "abc".getBytes("UTF-8"))
+    put(new Path(one, "_SUCCESS"), Array.emptyByteArray)
+    val (_, jobs) = org.apache.spark.graft.SparkJobs.count(
+      spark.sparkContext)(graft.sources.Integrity.stamp(spark, one.toString))
+    assert(jobs === 0, "a one-file dir is stamped without a Spark job")
+    assert(new String(slurp(new Path(one, "_checksums")), "UTF-8") ==
+      "b.parquet\t3\t44bc2cf5ad770999\n")
     val empty = new Path(tmpDir("graft_integrity_pin_empty"))
     put(new Path(empty, "_SUCCESS"), Array.emptyByteArray)
     graft.sources.Integrity.stamp(spark, empty.toString)

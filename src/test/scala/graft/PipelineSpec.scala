@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import graft.meta.JobStateStore
 import graft.model._
-import graft.runner.Pipeline
+import graft.runner.{AtomicPipeline, Pipeline}
 import graft.sources.FixtureSource
 
 /** End-to-end pipeline test over synthesized bitcoin-shaped JSON fixtures
@@ -23,6 +23,15 @@ class PipelineSpec extends SparkSpec {
     meta.seed(specs.map(s => EtlJob(s.jobName, s.queryId, s.targetTable,
       s.pKeys.mkString(","), None, if (activeNames(s.jobName)) 1 else 0,
       None, None, None, None)))
+
+  /** An atomic pipeline over `fixtures` with `spec` seeded active. */
+  private def atomicPipe(fixtures: String, root: String,
+      spec: TableSpec): AtomicPipeline = {
+    val pipe = new AtomicPipeline(spark, new FixtureSource(fixtures), root)
+    pipe.seed(Seq(EtlJob(spec.jobName, spec.queryId, spec.targetTable,
+      spec.pKeys.mkString(","), None, 1, None, None, None, None)))
+    pipe
+  }
 
   test("full + incremental run over prices_usd fixture") {
     val base = tmpDir("pipe")
@@ -200,24 +209,9 @@ class PipelineSpec extends SparkSpec {
       "job's (data, done-state) pair commits as one transaction, and " +
       "every table of the same tx id reads consistently") {
     import graft.operators.Transaction
-    import graft.runner.AtomicPipeline
     val base = tmpDir("atomic5")
     val fixtures = s"$base/fixtures"
-    Files.createDirectories(Paths.get(fixtures))
-    writeFixture(fixtures, 2177353L, Seq(
-      """{"address":"bc1qa", "tx_id":"t1", "value":0.5}"""))
-    writeFixture(fixtures, 2177447L, Seq(
-      """{"address":"bc1qc", "tx_id":"t1", "value":0.49}"""))
-    writeFixture(fixtures, 5816212L, Seq(
-      """{"date":"2025-01-01", "price":95000.0}"""))
-    writeFixture(fixtures, 2177280L, Seq(
-      """{"block_time":"2025-01-01T00:01:00", "fee":0.01, "id":"t1", """ +
-        """"input_value":0.5, "output_value":0.49}"""))
-    writeFixture(fixtures, 2177266L, Seq(
-      """{"coinbase":"cb", "difficulty":1.0, "hash":"h1", "height":1, """ +
-        """"mint_reward":3.125, "nonce":42, "previous_block_hash":"h0", """ +
-        """"size":100, "total_fees":0.01, "total_reward":3.135, """ +
-        """"transaction_count":1, "weight":400}"""))
+    BitcoinFixtures.write(fixtures)
     val specs = BitcoinWarehouse.all
     val root = s"$base/tx"
     val pipe = new AtomicPipeline(spark, new FixtureSource(fixtures), root)
@@ -248,7 +242,6 @@ class PipelineSpec extends SparkSpec {
   test("atomic (data + job-state) publish: a crash at the commit " +
       "point can never leave state and table contents disagreeing") {
     import graft.operators.Transaction
-    import graft.runner.AtomicPipeline
     val base = tmpDir("atomic")
     val fixtures = s"$base/fixtures"
     Files.createDirectories(Paths.get(fixtures))
@@ -257,9 +250,7 @@ class PipelineSpec extends SparkSpec {
       """{"date": "2025-01-01", "price": 95000.0}""",
       """{"date": "2025-01-02", "price": 96000.0}"""))
     val root = s"$base/tx"
-    val pipe = new AtomicPipeline(spark, new FixtureSource(fixtures), root)
-    pipe.seed(Seq(EtlJob(spec.jobName, spec.queryId, spec.targetTable,
-      spec.pKeys.mkString(","), None, 1, None, None, None, None)))
+    val pipe = atomicPipe(fixtures, root, spec)
 
     // baseline: one job = one atomic commit of (table, done-state)
     val r1 = pipe.runJob(spec)
@@ -289,6 +280,9 @@ class PipelineSpec extends SparkSpec {
     val crashed =
       try pipe.runJob(spec)
       finally Transaction.commitBarrier = () => ()
+    // the numbering holds: marker, crashed commit, failure record — no
+    // other publish rides a job
+    assert(calls === 3)
     // runner-level recovery view: the failure record committed ALONE,
     // the data never did — (failed, old contents) is a truthful pair
     assert(crashed.error.exists(_.contains("injected crash")))
@@ -318,5 +312,73 @@ class PipelineSpec extends SparkSpec {
     assert(status() === EtlJob.Done)
     assert(tableRows() === Seq(("2025-01-01", 95000.0),
       ("2025-01-02", 96000.0), ("2025-01-03", 97000.0)))
+  }
+
+  test("Spark job budget of one runJob on the prices_usd fixture: a " +
+      "full refresh takes at most 5 jobs, an incremental job at most 10") {
+    import org.apache.spark.graft.SparkJobs
+    val base = tmpDir("jobs")
+    val fixtures = s"$base/fixtures"
+    Files.createDirectories(Paths.get(fixtures))
+    val spec = BitcoinWarehouse.pricesUsd
+    writeFixture(fixtures, spec.queryId, Seq(
+      """{"date": "2025-01-01", "price": 95000.0}""",
+      """{"date": "2025-01-02", "price": 96000.0}"""))
+    val pipe = atomicPipe(fixtures, s"$base/tx", spec)
+    val sc = spark.sparkContext
+    val (first, firstJobs) = SparkJobs.count(sc)(pipe.runJob(spec))
+    assert(first.error.isEmpty && first.fullRefresh && first.rows === 2L)
+    assert(firstJobs <= 5, s"first (full) load took $firstJobs Spark jobs")
+    writeFixture(fixtures, spec.queryId, Seq(
+      """{"date": "2025-01-02", "price": 1.0}""",
+      """{"date": "2025-01-03", "price": 97000.0}"""))
+    val (incr, incrJobs) = SparkJobs.count(sc)(pipe.runJob(spec))
+    assert(incr.error.isEmpty && !incr.fullRefresh && incr.rows === 3L)
+    assert(incrJobs <= 10, s"incremental job took $incrJobs Spark jobs")
+    val (full, fullJobs) = SparkJobs.count(sc)(
+      pipe.runJob(spec, graft.runner.RunOptions(fullRefresh = true)))
+    assert(full.error.isEmpty && full.fullRefresh && full.rows === 2L)
+    assert(fullJobs <= 5, s"forced full refresh took $fullJobs Spark jobs")
+  }
+
+  test("degenerate inputs through the atomic runner: a zero-row delta, " +
+      "a zero-row full refresh, and an incremental spec over an empty " +
+      "target") {
+    import graft.operators.Transaction
+    val base = tmpDir("degenerate")
+    val fixtures = s"$base/fixtures"
+    Files.createDirectories(Paths.get(fixtures))
+    val spec = BitcoinWarehouse.pricesUsd
+    val root = s"$base/tx"
+    def rows() = Transaction.read(spark, root, spec.targetTable).count()
+
+    // a full refresh that fetches zero rows: rows = 0, the empty table
+    // reads back with its schema, and deep fsck is clean
+    Seq.empty[(String, Double)].toDF("date", "price")
+      .write.parquet(s"$fixtures/${spec.queryId}.parquet")
+    val pipe = atomicPipe(fixtures, root, spec)
+    val empty = pipe.runJob(spec)
+    assert(empty.error.isEmpty && empty.fullRefresh && empty.rows === 0L)
+    val t = Transaction.read(spark, root, spec.targetTable)
+    assert(t.columns.sorted.toSeq ===
+      Seq("date", "etl_updated_ts", "price_in_dollar"))
+    assert(rows() === 0L)
+    val fsck = Transaction.fsck(spark, root, deep = true)
+    assert(fsck.deepVerified, s"zero-row table must deep-verify: $fsck")
+
+    // an incremental spec whose target exists but is empty has no
+    // watermark, so it runs a full refresh
+    writeFixture(fixtures, spec.queryId, Seq(
+      """{"date": "2025-01-01", "price": 95000.0}""",
+      """{"date": "2025-01-02", "price": 96000.0}"""))
+    val seeded = pipe.runJob(spec)
+    assert(seeded.error.isEmpty && seeded.fullRefresh && seeded.rows === 2L)
+
+    // a zero-row delta: everything fetched is at or below the
+    // watermark, the merge adds nothing, and the observed count still
+    // equals the committed table's
+    val none = pipe.runJob(spec)
+    assert(none.error.isEmpty && !none.fullRefresh)
+    assert(none.rows === rows() && none.rows === 2L)
   }
 }

@@ -151,6 +151,53 @@ class TransactionSpec extends SparkSpec {
     assert(e.getMessage.contains("missing"))
   }
 
+  test("read takes its schema from a member footer: the pipeline's six " +
+      "tables, a zero-row member and a multi-file member read exactly " +
+      "as Spark's inference reads them, with no Spark job; a member " +
+      "with no payload file still fails loudly") {
+    import org.apache.spark.graft.SparkJobs
+    import graft.model.{BitcoinWarehouse, EtlJob}
+    val base = freshRoot()
+    val fixtures = s"$base/fixtures"
+    BitcoinFixtures.write(fixtures)
+    val root = s"$base/tx"
+    val specs = BitcoinWarehouse.all
+    val pipe = new graft.runner.AtomicPipeline(spark,
+      new graft.sources.FixtureSource(fixtures), root)
+    pipe.seed(specs.map(s => EtlJob(s.jobName, s.queryId, s.targetTable,
+      s.pKeys.mkString(","), None, 1, None, None, None, None)))
+    assert(pipe.run(specs).forall(_.error.isEmpty))
+    Transaction.publish(spark, root, Map(
+      "empty" -> Seq.empty[(Long, String)].toDF("k", "s"),
+      "multi" -> (1 to 30).map(i => (i.toLong, s"r$i")).toDF("k", "s")
+        .repartition(3)))
+    val m = Transaction.manifest(spark, root,
+      Transaction.committedTxs(spark, root).last)
+    val dirOf = (t: String) => s"$root/$t/t${m(t)}"
+    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(graft.sources.Integrity.payload(fs, new Path(dirOf("multi")))
+      .size === 3)
+    def rowsOf(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toString).sorted.toSeq
+    (specs.map(_.targetTable) ++ Seq(pipe.StateTable, "empty", "multi"))
+      .foreach { t =>
+        val (got, jobs) = SparkJobs.count(spark.sparkContext)(
+          Transaction.read(spark, root, t))
+        assert(jobs === 0, s"$t: resolving the read launched $jobs jobs")
+        val inferred = spark.read.parquet(dirOf(t))
+        assert(got.schema === inferred.schema, s"$t: schema differs")
+        assert(rowsOf(got) === rowsOf(inferred), s"$t: rows differ")
+      }
+    assert(Transaction.read(spark, root, "empty").count() === 0L)
+    // no payload file: Spark's inference has nothing to read and says so
+    graft.sources.Integrity.payload(fs, new Path(dirOf("multi")))
+      .foreach(n => fs.delete(new Path(dirOf("multi"), n), false))
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      Transaction.read(spark, root, "multi")
+    }
+    assert(e.getMessage.toLowerCase.contains("infer schema"), e.getMessage)
+  }
+
   test("syncTo replicates a WHOLE transaction atomically: a replica " +
       "reader racing the per-table copies resolves only same-tx " +
       "(facts, summary) pairs — mid-sync it still serves the previous " +

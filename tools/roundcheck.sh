@@ -6,9 +6,10 @@
 # Runs, in order: (1) the full ScalaTest suite, (2) graft.Verify at
 # sf0.01 (parquet dumps + oracle_sql.json + tolerance bounds), (3) the
 # DuckDB oracle compare (driver-side tooling; skipped with a note when
-# duckdb isn't installed), (4) graft.Bench at sf0.1 with the contention
-# canary, (5) the pipeline benchmark's own tests (perfbench
-# --selftest). Everything lands in one committed-able JSON summary,
+# duckdb isn't installed), (3b) the PLANS.lock diff gate, (3c) the
+# STREAMPLANS.lock diff gate, (4) graft.Bench at sf0.1 with the
+# contention canary, (4b) the bench-coverage gate, (5) the pipeline
+# benchmark's own tests (perfbench --selftest). Everything lands in one committed-able JSON summary,
 # ROUNDCHECK.json, so the repo's claims and the driver's artifacts
 # can't silently diverge (round 5's 243-vs-242, round 6's 74.8 s clean
 # vs 128.96 s contended). Exit code is nonzero when any hard gate
@@ -27,16 +28,16 @@ OUT=${OUT:-/tmp/graft_roundcheck_$$}
 mkdir -p "$OUT"
 echo "[roundcheck] scratch: $OUT"
 
-echo "[roundcheck] 1/4 sbt test"
+echo "[roundcheck] 1/5 sbt test"
 sbt -batch test >"$OUT/sbt_test.log" 2>&1
 TEST_RC=$?
 
-echo "[roundcheck] 2/4 graft.Verify $SF_VERIFY"
+echo "[roundcheck] 2/5 graft.Verify $SF_VERIFY"
 sbt -batch "runMain graft.Verify $SF_VERIFY $OUT/verify" \
   >"$OUT/verify.log" 2>&1
 VERIFY_RC=$?
 
-echo "[roundcheck] 3/4 DuckDB oracle compare"
+echo "[roundcheck] 3/5 DuckDB oracle compare"
 if python3 -c "import duckdb" 2>/dev/null; then
   python3 tools/oracle_check.py "$SF_VERIFY" "$OUT/verify" \
     >"$OUT/oracle.log" 2>&1
@@ -47,7 +48,7 @@ else
   ORACLE_RC=-1
 fi
 
-echo "[roundcheck] 3b/4 PLANS.lock diff gate"
+echo "[roundcheck] 3b/5 PLANS.lock diff gate"
 # Regenerate the canonical plan fingerprints and diff against the
 # committed lock: a plan-shape change (an Exchange appearing, a join
 # strategy flipping) outside the PlanSpec-gated subset is a HARD FAIL
@@ -65,7 +66,7 @@ else
   PLANDIFF_RC=2
 fi
 
-echo "[roundcheck] 3c/4 STREAMPLANS.lock diff gate"
+echo "[roundcheck] 3c/5 STREAMPLANS.lock diff gate"
 # Same contract as PLANS.lock, for the RUNTIME stateful streaming
 # plans (state-store chains, watermark placement/delay, output modes,
 # stream-stream join types) — see graft.tools.StreamPlanLock.
@@ -83,7 +84,7 @@ else
   SPLANDIFF_RC=2
 fi
 
-echo "[roundcheck] 4/4 graft.Bench $SF_BENCH"
+echo "[roundcheck] 4/5 graft.Bench $SF_BENCH"
 # The bench is only evidence when it ran on the contract's core count
 # AND the contention canary stayed quiet — round 7 shipped a 4-CPU,
 # contended artifact as the round number. Bench itself retries a
@@ -118,7 +119,7 @@ PYEOF
   [ "$attempt" -lt "$BENCH_RETRIES" ] && sleep "$BENCH_BACKOFF"
 done
 
-echo "[roundcheck] 4b/4 bench-coverage gate"
+echo "[roundcheck] 4b/5 bench-coverage gate"
 # Machine-check the bench exclusion list (round 11): every declared
 # batch query must be benched or excluded, every concrete exclusion
 # must name a benched scale twin, every declared st_ query must appear

@@ -56,13 +56,6 @@ case object Incremental extends LoadStrategy
   * @param watermarkCol target-side column whose MAX drives the
   *                     incremental fetch parameter (reference
   *                     `pull_raw/__main__.py:102`).
-  * @param partitionCol target layout column (hive-style dirs): loads
-  *                     route through the partition-scoped write paths —
-  *                     full refresh writes `partitionBy`, incremental
-  *                     merges only the partitions the batch touches
-  *                     (SURVEY §4 layout rules: transactions by
-  *                     date(block_time), block by height bucket). Must
-  *                     be present post-rename/derive and non-null.
   * @param sourceSchema declared SOURCE-side schema (pre-rename column
   *                     names). When set, schema-aware sources skip
   *                     their O(payload) inference pre-pass — the
@@ -80,7 +73,6 @@ case class TableSpec(
     derived: Seq[DerivedColumn] = Nil,
     watermarkCol: Option[String] = None,
     strategy: LoadStrategy = Incremental,
-    partitionCol: Option[String] = None,
     sourceSchema: Option[StructType] = None)
 
 /** The five-table Bitcoin warehouse the reference syncs
@@ -124,12 +116,11 @@ object BitcoinWarehouse {
     watermarkCol = Some("date"),
     sourceSchema = declared("date" -> StringType, "price" -> DoubleType))
 
-  /** Partitioning by date(block_time) relies on the domain invariant
-    * that a confirmed transaction's block_time is immutable (the
-    * partition-scoped merge contract: partition value functionally
-    * dependent on the key). A chain reorg that moves transactions
-    * between blocks is a correction event outside incremental
-    * semantics — reload the affected range with a full refresh.
+  /** The block_time watermark relies on the domain invariant that a
+    * confirmed transaction's block_time is immutable. A chain reorg
+    * that moves transactions between blocks is a correction event
+    * outside incremental semantics — reload the affected range with a
+    * full refresh.
     */
   val transactions = TableSpec(
     jobName = "bitcoin_transactions", queryId = 2177280L,
@@ -139,7 +130,6 @@ object BitcoinWarehouse {
       "input_value" -> "input_value", "output_value" -> "output_value"),
     derived = Seq(DerivedColumn("block_date", "date(block_time)")),
     watermarkCol = Some("block_time"),
-    partitionCol = Some("block_date"),
     sourceSchema = declared("block_time" -> StringType, "fee" -> DoubleType,
       "id" -> StringType, "input_value" -> DoubleType,
       "output_value" -> DoubleType))
@@ -151,7 +141,6 @@ object BitcoinWarehouse {
       "nonce", "previous_block_hash", "size", "total_fees", "total_reward",
       "transaction_count", "weight").map(c => c -> c),
     derived = Seq(DerivedColumn("height_bucket", "floor(height / 1000)")),
-    partitionCol = Some("height_bucket"),
     sourceSchema = declared("coinbase" -> StringType,
       "difficulty" -> DoubleType, "hash" -> StringType,
       "height" -> LongType, "mint_reward" -> DoubleType,

@@ -156,38 +156,13 @@ object Ops {
   def normalizeNames(df: DataFrame): DataFrame =
     df.toDF(df.columns.map(_.toLowerCase): _*)
 
-  /** A1 — watermark read: MAX(col) of the target, None when the target
-    * doesn't exist yet or is empty (→ caller falls back to full
-    * refresh). An empty table needs no probe of its own: its max is
-    * null, and so is its max partition, whose filter then matches
-    * nothing. Reference: `pg_loader.py:296-318`, fallback
+  /** A1 — watermark read: MAX(col) of the target, None when the
+    * target is empty (its max is null → caller falls back to full
+    * refresh). Reference: `pg_loader.py:296-318`, fallback
     * `__main__.py:104-112`.
     */
-  def maxWatermark(spark: SparkSession, targetPath: String,
-      column: String, partitionCol: Option[String] = None): Option[Any] = {
-    if (!ParquetIO.exists(spark, targetPath)) None
-    else {
-      val table = spark.read.parquet(targetPath)
-      partitionCol match {
-        // On a hive layout whose partition value is derived from (and
-        // monotone with) the watermark column, the max watermark lives
-        // in the max partition: filter to it so partition pruning reads
-        // ONE directory instead of scanning the column table-wide.
-        case Some(pc)
-            if ParquetIO.isPartitionedOn(spark, targetPath, pc) =>
-          val maxPart = table.agg(max(col(pc))).head.get(0)
-          Option(table.filter(col(pc) === lit(maxPart))
-            .agg(max(col(column))).head.get(0))
-        case _ =>
-          Option(table.agg(max(col(column))).head.get(0))
-      }
-    }
-  }
-
-  /** A2 — verification row count. Reference: `pg_loader.py:320-339`. */
-  def recordCount(spark: SparkSession, targetPath: String): Long =
-    if (!ParquetIO.exists(spark, targetPath)) 0L
-    else spark.read.parquet(targetPath).count()
+  def maxWatermark(df: DataFrame, column: String): Option[Any] =
+    Option(df.agg(max(col(column))).head.get(0))
 
   /** S6 — full refresh: truncate+reload collapses into one atomic(ish)
     * overwrite. Reference: `pg_loader.py:126-163`.
@@ -544,77 +519,6 @@ object Ops {
         .join(keys, Seq(keyCol), "left_anti")
       ParquetIO.overwriteSafe(kept, targetPath)
     }
-  }
-
-  /** Snapshot versioning — time travel over immutable version
-    * directories, the missing half of the staged-overwrite story:
-    * `overwriteSafe` makes a single rewrite atomic, but the superseded
-    * state is gone the moment the swap lands. A snapshot table is a
-    * root holding `v0, v1, …`; writers only ADD a new version (staged
-    * write + one rename, so a version is either absent or complete —
-    * a reader can never observe partial data), readers resolve
-    * "latest" by listing — so a long-running job that opened v3 keeps
-    * reading v3 bit-for-bit while v4 lands (snapshot isolation without
-    * a transaction log), and yesterday's state stays queryable for
-    * audits/diffs until [[snapshotPrune]] drops it. Single-writer per
-    * root (the reference's job model); retention is an explicit prune,
-    * not a side effect of writing.
-    */
-  def snapshotVersions(spark: SparkSession, root: String): Seq[Int] = {
-    val p = new Path(root)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.matches("v\\d+")
-        && fs.exists(new Path(s.getPath, "_SUCCESS")))
-      .map(_.getPath.getName.drop(1).toInt).sorted
-  }
-
-  /** Write `df` as the next version under `root`; returns the version
-    * number. Staged: a crash before the final rename leaves only a
-    * `__staging_*` orphan, never a half-written `v{k}`.
-    */
-  def snapshotWrite(df: DataFrame, root: String): Int = {
-    val spark = df.sparkSession
-    val next = snapshotVersions(spark, root).lastOption.fold(0)(_ + 1)
-    val rootP = new Path(root)
-    val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(root,
-      "__staging_" + java.util.UUID.randomUUID().toString.take(8))
-    try df.write.mode("overwrite").parquet(tmp.toString)
-    catch { case e: Throwable => fs.delete(tmp, true); throw e }
-    val dest = new Path(rootP, s"v$next")
-    if (!fs.rename(tmp, dest)) {
-      fs.delete(tmp, true)
-      throw new java.io.IOException(
-        s"snapshotWrite: rename $tmp -> $dest failed (concurrent writer?)")
-    }
-    next
-  }
-
-  /** Read a specific version, or latest when `version` is None. */
-  def snapshotRead(spark: SparkSession, root: String,
-      version: Option[Int] = None): DataFrame = {
-    val vs = snapshotVersions(spark, root)
-    require(vs.nonEmpty, s"snapshotRead: no versions under $root")
-    val v = version.getOrElse(vs.last)
-    require(vs.contains(v),
-      s"snapshotRead: version $v not in ${vs.mkString(",")}")
-    spark.read.parquet(s"$root/v$v")
-  }
-
-  /** Drop all but the newest `keep` versions; returns the dropped
-    * version numbers. Never drops the latest.
-    */
-  def snapshotPrune(spark: SparkSession, root: String,
-      keep: Int): Seq[Int] = {
-    require(keep >= 1, "snapshotPrune: keep must be >= 1")
-    val vs = snapshotVersions(spark, root)
-    val drop = vs.dropRight(keep)
-    val rootP = new Path(root)
-    val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    drop.foreach(v => fs.delete(new Path(rootP, s"v$v"), true))
-    drop
   }
 
   /** Spread a narrow input across the session's shuffle width before

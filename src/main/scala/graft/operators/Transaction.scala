@@ -7,12 +7,13 @@ import org.apache.spark.sql.{DataFrame, GraftSqlInternal, SparkSession}
 
 import graft.sources.{GraftSink, Integrity}
 
-/** Multi-table atomic publish — the cross-table half of
-  * [[Ops.snapshotWrite]]'s single-table versioning, the Iceberg-lite
-  * commit protocol every warehouse needs once two tables must move
-  * together (facts + their dimension, a table + its index, orders +
-  * lineitem): readers either see ALL tables at transaction N or all at
-  * N−1, never a torn mix.
+/** Versioned tables with a multi-table atomic publish — the
+  * Iceberg-lite commit protocol every warehouse needs once two tables
+  * must move together (facts + their dimension, a table + its index,
+  * orders + lineitem): readers either see ALL tables at transaction N
+  * or all at N−1, never a torn mix. A one-table root is plain
+  * whole-table versioning: every publish is a new immutable version,
+  * and [[read]] with `tx` is time travel.
   *
   * Layout:
   * {{{
@@ -171,10 +172,18 @@ object Transaction {
     * the committed txId. Every staged version dir is stamped with its
     * [[Integrity]] sidecar before its rename, so replication and
     * [[fsck]] can verify the member's content forever after.
+    *
+    * A table name is a directory under the root and a manifest key, so
+    * a name that is empty, contains `/`, `"` or `\`, or starts with
+    * `_` (the root's own `_commits`, `_refs`, `_promoted` and
+    * `__staging*`) or `.` is refused before anything is staged.
     */
   def publish(spark: SparkSession, root: String,
       tables: Map[String, DataFrame]): Long = {
     require(tables.nonEmpty, "publish: no tables")
+    tables.keys.foreach(n => require(n.nonEmpty &&
+      !n.exists("/\"\\".contains(_)) && !n.startsWith("_") &&
+      !n.startsWith("."), s"publish: bad table name '$n'"))
     val committed = committedTxs(spark, root)
     val last = committed.lastOption.getOrElse(-1L)
     val txId = math.max(last, floorOf(spark, root, last)) + 1L

@@ -1041,10 +1041,10 @@ object Relational {
       |    SELECT c_custkey FROM keptc)) FROM kepto
       |ORDER BY tbl""".stripMargin
 
-  /** Time travel over snapshot versions
-    * ([[graft.operators.Ops.snapshotWrite]]/`snapshotRead`): seed the
-    * merge target as snapshot v0, land the merge batch as v1 (same
-    * update set as `q_merge_upsert`), then read BOTH versions — the
+  /** Time travel over whole-table versions (a one-table
+    * [[graft.operators.Transaction]] root): seed the merge target as
+    * tx 0, land the merge batch as tx 1 (same update set as
+    * `q_merge_upsert`), then read BOTH versions — the
     * superseded pre-merge state stays byte-for-byte queryable after
     * the merge, which a plain overwrite destroys. The gated result is
     * the per-version audit (rows + total), i.e. the before/after the
@@ -1053,15 +1053,16 @@ object Relational {
     * per (JVM, sf dir) — r14 seed/timed split (the q_tx_fsck
     * precedent): the timed body prices the TIME-TRAVEL READ of both
     * versions (the steady-state cost the query is named for), not
-    * re-publishing the same two snapshots per rep. Snapshot-write cost
-    * stays benched where writing is the namesake (`q_delete_where`'s
-    * staged overwrite, `q_tx_read`'s publish). The seed wipes the root
-    * first, so the versions are always exactly v0/v1.
+    * re-publishing the same two versions per rep. Write cost stays
+    * benched where writing is the namesake (`q_delete_where`'s staged
+    * overwrite, `q_tx_read`'s publish). The seed wipes the root first,
+    * so the versions are always exactly tx 0 and tx 1.
     */
   private val snapSeeds =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   private def timeTravelQ(spark: SparkSession, dir: String): DataFrame = {
+    import graft.operators.Transaction
     val root = seedOrRebuild(snapSeeds, spark, dir) { d =>
       val r = s"${System.getProperty("java.io.tmpdir")}/graft_snap_" +
         java.lang.Long.toHexString(graft.expressions.Kernels.fnv1a64(
@@ -1072,19 +1073,19 @@ object Relational {
       val v0 = Tables(spark, d, "orders")
         .filter(col("o_orderkey") % 3 =!= 0)
         .select("o_orderkey", "o_totalprice")
-      graft.operators.Ops.snapshotWrite(v0, r)
+      Transaction.publish(spark, r, Map("orders" -> v0))
       val batch = Tables(spark, d, "orders")
         .filter(col("o_orderkey") % 2 === 0)
         .select(col("o_orderkey"),
           (col("o_totalprice") * 2).as("o_totalprice"))
-      val merged = graft.operators.Ops.snapshotRead(spark, r)
+      val merged = Transaction.read(spark, r, "orders")
         .join(batch.select("o_orderkey"), Seq("o_orderkey"), "left_anti")
         .unionByName(batch)
-      graft.operators.Ops.snapshotWrite(merged, r)
+      Transaction.publish(spark, r, Map("orders" -> merged))
       r
     }
     def audit(v: Int): DataFrame =
-      graft.operators.Ops.snapshotRead(spark, root, Some(v))
+      Transaction.read(spark, root, "orders", Some(v.toLong))
         .agg(count(lit(1)).as("n_rows"),
           round(sum("o_totalprice"), 2).as("total"))
         .select(lit(v.toLong).as("version"), col("n_rows"), col("total"))

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Joins, Ops}
+import graft.operators.{Joins, Ops, Transaction}
 
 /** Scale-path variants: operators whose point is behavior at 100 TB,
   * declared as queries so the driver exercises them. Where the result is
@@ -1695,19 +1695,19 @@ object Scale {
 
   /** Bitemporal read — BOTH time axes at once, composed from two
     * operators this library already ships: transaction time from
-    * [[Ops.snapshotWrite]] (immutable `v=N` table versions, one per
-    * load) and valid time from [[Ops.scd2Merge]] (row-level validity
-    * intervals inside each version). The seeded history: merge 1
-    * (seed) → snapshot v0, merge 2 (delta doubling even keys) →
-    * snapshot v1. The declared 3-row matrix reads
+    * [[Transaction]] (immutable whole-table versions on a one-table
+    * root, one per load) and valid time from [[Ops.scd2Merge]]
+    * (row-level validity intervals inside each version). The seeded
+    * history: merge 1 (seed) → tx 0, merge 2 (delta doubling even
+    * keys) → tx 1. The declared 3-row matrix reads
     * (tx=0, valid=1), (tx=1, valid=1), (tx=1, valid=2) — and the law
     * that makes bitemporal storage trustworthy is visible IN the
     * result: the (0,1) and (1,1) rows are identical, i.e. a later
     * merge never rewrites what an earlier version believed about an
     * earlier valid time (auditors reconstruct past reports
     * bit-for-bit). Sums are BIGINT cents per the module discipline.
-    * At 100 TB: snapshots are directory renames (O(1) commit,
-    * `q_time_travel`), the SCD2 merge is partition-scoped
+    * At 100 TB: a version commits with one manifest rename (O(1)
+    * commit, `q_time_travel`), the SCD2 merge is partition-scoped
     * (`q_scd2_merge`) — the bitemporal READ costs one version's scan
     * plus an interval filter, nothing new.
     */
@@ -1725,18 +1725,20 @@ object Scale {
         .select(col("o_orderkey"), col("o_totalprice"))
         .withColumn("etl_updated_ts", lit(1L))
       Ops.scd2Merge(spark, work, seed, Seq("o_orderkey"))
-      Ops.snapshotWrite(spark.read.parquet(work), snaps) // v0
+      Transaction.publish(spark, snaps,
+        Map("orders" -> spark.read.parquet(work))) // tx 0
       val delta = Tables(spark, d, "orders")
         .filter(col("o_orderkey") % 2 === 0)
         .select(col("o_orderkey"),
           (col("o_totalprice") * 2).as("o_totalprice"))
         .withColumn("etl_updated_ts", lit(2L))
       Ops.scd2Merge(spark, work, delta, Seq("o_orderkey"))
-      Ops.snapshotWrite(spark.read.parquet(work), snaps) // v1
+      Transaction.publish(spark, snaps,
+        Map("orders" -> spark.read.parquet(work))) // tx 1
       snaps
     })
     def cell(tx: Int, t: Int): DataFrame =
-      Ops.snapshotRead(spark, root, Some(tx))
+      Transaction.read(spark, root, "orders", Some(tx.toLong))
         .filter(col("valid_from") <= t &&
           (col("valid_to").isNull || col("valid_to") > t))
         .agg(count(lit(1)).as("n_rows"),

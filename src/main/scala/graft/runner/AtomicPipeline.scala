@@ -2,21 +2,37 @@ package graft.runner
 
 import scala.util.{Failure, Success, Try}
 
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model.{EtlJob, FullRefresh, TableSpec}
 import graft.operators.{Ops, Transaction}
 import graft.sources.Source
 
-/** The E2 pipeline loop with an ATOMIC (data + job-state) commit —
-  * closing the torn window [[Pipeline]] inherits from the reference:
-  * there the target table lands and the `etl_job` status update is a
-  * SECOND write (reference `pull_raw/utils.py:120-125` runs after the
-  * loader returns; our `JobStateStore` overwrite is the same shape), so
-  * a crash between the two leaves status=-1 with data already landed —
-  * an operator reading the control table cannot tell a dead run from a
-  * live one, and cannot tell whether the data is old or new.
+/** One job's outcome — per-job error isolation is a semantic requirement
+  * (the reference continues the loop on failure,
+  * `pull_raw/__main__.py:173-177`).
+  */
+case class JobResult(jobName: String, rows: Long, fullRefresh: Boolean,
+    error: Option[String])
+
+/** The E2 pipeline loop (reference `pull_raw/__main__.py:132-184`),
+  * Spark-native, with an ATOMIC (data + job-state) commit:
+  *
+  *  - metadata scan → active specs (S3/P5)
+  *  - per job: start → fetch (watermark pushed to the source, P7) →
+  *    rename/project (P1/P2) → derived transforms (F1) → audit stamp
+  *    (P3) → load (S6 full refresh | S7 merge-upsert) → end
+  *  - incremental decision tree: missing target or no watermark value ⇒
+  *    full refresh (reference `__main__.py:102-115`)
+  *  - any failure: record and continue with the next job.
+  *
+  * The reference has a torn window: the target table lands, and the
+  * `etl_job` status update is a SECOND write (`pull_raw/utils.py:120-125`
+  * runs after the loader returns), so a crash between the two leaves
+  * status=-1 with data already landed — an operator reading the
+  * control table cannot tell a dead run from a live one, and cannot
+  * tell whether the data is old or new.
   *
   * Here both tables live under ONE [[Transaction]] root and each job's
   * completion is ONE cross-table publish:
@@ -41,11 +57,10 @@ import graft.sources.Source
   * isolation (failed job recorded, loop continues) needs the failure
   * to commit even though the data never did.
   *
-  * Scale: identical plans to [[Pipeline]] (the merge relation is
-  * [[Ops.mergeUpsertDf]], the same anti-join+union); the transaction
-  * adds one manifest rename per job and carries unchanged tables
-  * forward by reference, so a 100-table warehouse pays O(1) metadata
-  * per job commit.
+  * Scale: the merge relation is [[Ops.mergeUpsertDf]] (anti-join +
+  * union); the transaction adds one manifest rename per job and
+  * carries unchanged tables forward by reference, so a 100-table
+  * warehouse pays O(1) metadata per job commit.
   *
   * Spark jobs: only the watermark max, the fetch, the writes and the
   * stamp of a multi-file data dir launch any. Every
@@ -64,15 +79,29 @@ class AtomicPipeline(spark: SparkSession, source: Source, root: String) {
     Transaction.publish(spark, root,
       Map(StateTable -> jobs.toDS.toDF.coalesce(1)))
 
+  /** Seed from a CSV shaped like the reference's
+    * `etl_system/etl_job.csv` (S4): header names are lowercased
+    * (reference `load_metadata.ipynb:66-84`), each column is cast to
+    * its [[EtlJob]] type, and `last_updated_ts` is the load time.
+    */
+  def seedFromCsv(csvPath: String): Unit = {
+    val raw = Ops.normalizeNames(
+      spark.read.option("header", "true").csv(csvPath))
+      .withColumn("last_updated_ts", current_timestamp())
+    seed(raw.select(Encoders.product[EtlJob].schema.map(f =>
+      col(f.name).cast(f.dataType)): _*).as[EtlJob].collect().toSeq)
+  }
+
   def state: DataFrame = Transaction.read(spark, root, StateTable)
 
   def activeJobs: Seq[EtlJob] =
     state.filter($"active" === 1).as[EtlJob].collect().toSeq
 
   /** The state relation with one job's row transformed — the
-    * [[graft.meta.JobStateStore]] update shape, minus the write (the
-    * caller owns the commit). One partition, so the control table
-    * lands as one file and its stamp hashes inline.
+    * reference's single-row `UPDATE ... WHERE job_name = %s`
+    * (`pull_raw/utils.py:80-85`), minus the write (the caller owns the
+    * commit). One partition, so the control table lands as one file
+    * and its stamp hashes inline.
     */
   private def stateWith(jobName: String,
       set: DataFrame => DataFrame): DataFrame = {
@@ -88,8 +117,6 @@ class AtomicPipeline(spark: SparkSession, source: Source, root: String) {
       .map(Transaction.manifest(spark, root, _).keySet)
       .getOrElse(Set.empty)
 
-  def targetTable(spec: TableSpec): String = spec.targetTable
-
   def runJob(spec: TableSpec): JobResult = runJob(spec, RunOptions())
 
   def runJob(spec: TableSpec, opts: RunOptions): JobResult = {
@@ -102,7 +129,7 @@ class AtomicPipeline(spark: SparkSession, source: Source, root: String) {
         .withColumn("error_message", lit(null).cast("string"))
         .withColumn("last_updated_ts", current_timestamp()))))
     val attempt = Try {
-      val table = targetTable(spec)
+      val table = spec.targetTable
       val forcedFull = opts.fullRefresh || spec.strategy == FullRefresh
       // a full refresh never looks at the current table
       val existing =
@@ -113,7 +140,7 @@ class AtomicPipeline(spark: SparkSession, source: Source, root: String) {
       // as no watermark — a full refresh
       val watermark = spec.watermarkCol match {
         case Some(c) if !forcedFull => opts.incrementalValue.orElse(
-          existing.flatMap(t => Option(t.agg(max(col(c))).head.get(0))))
+          existing.flatMap(Ops.maxWatermark(_, c)))
         case _ => None
       }
       val doFull = forcedFull || watermark.isEmpty
@@ -158,7 +185,12 @@ class AtomicPipeline(spark: SparkSession, source: Source, root: String) {
     }
   }
 
-  /** The metadata-driven loop, same semantics as [[Pipeline.run]]. */
+  /** Run every spec whose job is active in the control table, in order,
+    * isolating failures per job. `--select` narrows to the named jobs
+    * but never overrides the control table's active flag: an operator
+    * can point a run at one table, not resurrect a disabled job from
+    * the command line (reference CLI surface `arguments.py:26-33`).
+    */
   def run(specs: Seq[TableSpec],
       opts: RunOptions = RunOptions()): Seq[JobResult] = {
     val active = activeJobs.map(_.job_name).toSet

@@ -31,8 +31,8 @@ import org.apache.spark.util.SerializableConfiguration
   *    `data/` and then publishes ONE manifest (`manifest-v{k}`) via
   *    staged-write + atomic rename — the manifest is the commit
   *    point: a version is absent or complete, never partial (the
-  *    `Ops.snapshotWrite` / `operators.Transaction` discipline, here
-  *    reached through the engine's own write path);
+  *    `operators.Transaction` discipline, here reached through the
+  *    engine's own write path);
   *  - `abort` deletes the staging directory — a failed job leaves the
   *    table at its previous version;
   *  - reads resolve the LATEST manifest and scan only its files, so

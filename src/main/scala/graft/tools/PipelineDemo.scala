@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
 
 import graft.model.{BitcoinWarehouse, EtlJob}
 import graft.operators.Transaction
-import graft.runner.{AtomicPipeline, Pipeline}
+import graft.runner.AtomicPipeline
 import graft.sources.FixtureSource
 
 /** Smoke entry: runs the full metadata-driven pipeline over synthesized
@@ -16,16 +16,10 @@ import graft.sources.FixtureSource
   * (data + job-state) publish.
   * `sbt "runMain graft.tools.PipelineDemo [workDir] [options]"`
   *
-  * THE runner is [[graft.runner.AtomicPipeline]]: every round below
-  * runs on it, and each job's merged table and its done-state row
-  * flip in ONE manifest rename — no observable (new data, stale
-  * state) or (done state, old data) pair exists at any crash point.
-  * The plain-Parquet [[graft.runner.Pipeline]] appears only in the
-  * clearly-labelled legacy round at the end: it writes the target
-  * table and the `etl_job` row as two separate writes (the
-  * reference's torn window), which is acceptable ONLY for
-  * single-writer smoke runs where nothing reads the control table
-  * concurrently. New call sites should use AtomicPipeline.
+  * Every round runs on [[graft.runner.AtomicPipeline]]: each job's
+  * merged table and its done-state row flip in ONE manifest rename —
+  * no observable (new data, stale state) or (done state, old data)
+  * pair exists at any crash point.
   *
   * Options mirror the reference CLI (`arguments.py:1-41`): when any of
   * `--select job...` / `--full-refresh` / `--incremental-value v` is
@@ -124,23 +118,6 @@ object PipelineDemo {
     println("   recovered table:")
     Transaction.read(spark, s"$base/warehouse", pspec.targetTable)
       .orderBy("date").show(false)
-
-    // ---- legacy fallback: plain-Parquet Pipeline (single-writer
-    // smoke ONLY — target table and etl_job row are two separate
-    // writes, so a crash between them leaves the reference's torn
-    // window; kept for environments without the transaction root) ----
-    println("== legacy round: plain-Parquet Pipeline (non-atomic " +
-      "fallback; single-writer smoke only)")
-    fix(5816212L,
-      """{"date":"2025-01-01", "price":95000.0}""",
-      """{"date":"2025-01-02", "price":96000.0}""")
-    val legacyMeta = new graft.meta.JobStateStore(spark, s"$base/legacy_etl")
-    legacyMeta.seed(Seq(EtlJob(pspec.jobName, pspec.queryId,
-      pspec.targetTable, pspec.pKeys.mkString(","), None, 1, None, None,
-      None, None)))
-    val legacy = new Pipeline(spark, new FixtureSource(fixtures),
-      legacyMeta, s"$base/legacy_warehouse")
-    legacy.run(Seq(pspec)).foreach(r => println(s"   $r"))
     spark.stop()
   }
 }

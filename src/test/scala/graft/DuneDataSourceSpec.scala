@@ -98,9 +98,9 @@ class DuneDataSourceSpec extends SparkSpec {
   }
 
   test("pipeline runs end-to-end on the v2 source, incremental included") {
-    import graft.meta.JobStateStore
     import graft.model.{BitcoinWarehouse, EtlJob}
-    import graft.runner.Pipeline
+    import graft.operators.Transaction
+    import graft.runner.AtomicPipeline
     import graft.sources.DuneV2Source
     val base = tmpDir("dune_pipe")
     val spec = BitcoinWarehouse.pricesUsd
@@ -108,11 +108,10 @@ class DuneDataSourceSpec extends SparkSpec {
       Seq("""{"date": "2025-01-01", "price": 95000.0}""",
         """{"date": "2025-01-02", "price": 96000.0}""")
         .mkString("\n").getBytes("UTF-8"))
-    val meta = new JobStateStore(spark, s"$base/etl_job")
-    meta.seed(Seq(EtlJob(spec.jobName, spec.queryId, spec.targetTable,
+    val root = s"$base/tx"
+    val pipe = new AtomicPipeline(spark, new DuneV2Source(base), root)
+    pipe.seed(Seq(EtlJob(spec.jobName, spec.queryId, spec.targetTable,
       spec.pKeys.mkString(","), None, 1, None, None, None, None)))
-    val pipe = new Pipeline(spark, new DuneV2Source(base), meta,
-      s"$base/warehouse")
     assert(pipe.run(Seq(spec)).head.rows == 2L)
     // delta round: stale repeat + one new date; watermark keeps the stale out
     Files.write(Paths.get(s"$base/${spec.queryId}.json"),
@@ -121,7 +120,7 @@ class DuneDataSourceSpec extends SparkSpec {
         .mkString("\n").getBytes("UTF-8"))
     val r2 = pipe.run(Seq(spec)).head
     assert(!r2.fullRefresh && r2.rows == 3L)
-    val prices = spark.read.parquet(pipe.targetPath(spec))
+    val prices = Transaction.read(spark, root, spec.targetTable)
       .select("date", "price_in_dollar").as[(String, Double)]
       .collect().sortBy(_._1).toSeq
     assert(prices == Seq(("2025-01-01", 95000.0), ("2025-01-02", 96000.0),

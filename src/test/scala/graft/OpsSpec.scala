@@ -43,17 +43,15 @@ class OpsSpec extends SparkSpec {
     assert(out.columns.toSeq == Seq("job_name", "query_id"))
   }
 
-  test("maxWatermark: None for missing target, Some(max) otherwise") {
-    val dir = tmpDir("wm") + "/t"
-    assert(Ops.maxWatermark(spark, dir, "v").isEmpty)
-    Seq(1, 5, 3).toDF("v").write.parquet(dir)
-    assert(Ops.maxWatermark(spark, dir, "v").contains(5))
+  test("maxWatermark: None for an empty table, Some(max) otherwise") {
+    assert(Ops.maxWatermark(Seq.empty[Int].toDF("v"), "v").isEmpty)
+    assert(Ops.maxWatermark(Seq(1, 5, 3).toDF("v"), "v").contains(5))
   }
 
   test("fullRefresh overwrites (truncate+reload semantics)") {
     val dir = tmpDir("fr") + "/t"
     Ops.fullRefresh(Seq(1, 2, 3).toDF("v"), dir)
-    assert(Ops.recordCount(spark, dir) == 3)
+    assert(spark.read.parquet(dir).count() == 3)
     Ops.fullRefresh(Seq(9).toDF("v"), dir)
     assert(spark.read.parquet(dir).as[Int].collect().toSeq == Seq(9))
   }
@@ -264,31 +262,5 @@ class OpsSpec extends SparkSpec {
       Ops.deleteMatching(spark, path,
         Seq((1L, "x")).toDF("k", "extra"), "k")
     }
-  }
-
-  test("snapshots: versions are immutable, latest resolves, prune " +
-      "keeps the newest") {
-    import spark.implicits._
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_snap_spec").toString + "/t"
-    assert(Ops.snapshotVersions(spark, root).isEmpty)
-    val v0 = Ops.snapshotWrite(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), root)
-    val v1 = Ops.snapshotWrite(Seq((1L, "a2"), (3L, "c")).toDF("k", "v"), root)
-    assert((v0, v1) == (0, 1))
-    assert(Ops.snapshotVersions(spark, root) == Seq(0, 1))
-    // time travel: the superseded version reads back unchanged
-    assert(Ops.snapshotRead(spark, root, Some(0))
-      .orderBy("k").as[(Long, String)].collect().toSeq ==
-      Seq((1L, "a"), (2L, "b")))
-    // latest resolves to the newest version
-    assert(Ops.snapshotRead(spark, root)
-      .orderBy("k").as[(Long, String)].collect().toSeq ==
-      Seq((1L, "a2"), (3L, "c")))
-    // prune drops only the oldest, never the latest
-    assert(Ops.snapshotPrune(spark, root, keep = 1) == Seq(0))
-    assert(Ops.snapshotVersions(spark, root) == Seq(1))
-    assert(Ops.snapshotPrune(spark, root, keep = 1).isEmpty)
-    // version numbers keep ascending after a prune (no reuse)
-    assert(Ops.snapshotWrite(Seq((9L, "z")).toDF("k", "v"), root) == 2)
   }
 }

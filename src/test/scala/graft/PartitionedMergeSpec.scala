@@ -138,15 +138,6 @@ class PartitionedMergeSpec extends SparkSpec {
     assert(readBack(path).isEmpty)
   }
 
-  test("maxWatermark prunes to the max partition when told the layout") {
-    val path = tmpDir("pmerge_wm") + "/t"
-    val init = Seq((1L, "a", "2024-01-01"), (2L, "b", "2024-01-02"))
-      .toDF("id", "v", "dt").withColumn("etl_updated_ts", lit(5L))
-    Ops.mergeUpsertPartitioned(spark, path, init, Seq("id"), "dt")
-    assert(Ops.maxWatermark(spark, path, "dt", Some("dt"))
-      .map(_.toString).contains("2024-01-02"))
-  }
-
   test("compactPartitions collapses small-file dirs, contents identical") {
     val path = tmpDir("pmerge_compact") + "/t"
     // 8-way repartition before a partitionBy write → multiple part

@@ -2,9 +2,9 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import graft.meta.JobStateStore
 import graft.model._
-import graft.runner.{AtomicPipeline, Pipeline}
+import graft.operators.Transaction
+import graft.runner.AtomicPipeline
 import graft.sources.FixtureSource
 
 /** End-to-end pipeline test over synthesized bitcoin-shaped JSON fixtures
@@ -18,20 +18,22 @@ class PipelineSpec extends SparkSpec {
     Files.write(Paths.get(s"$dir/$queryId.json"),
       lines.mkString("\n").getBytes("UTF-8"))
 
-  private def seedJobs(meta: JobStateStore, specs: Seq[TableSpec],
-      activeNames: Set[String]): Unit =
-    meta.seed(specs.map(s => EtlJob(s.jobName, s.queryId, s.targetTable,
-      s.pKeys.mkString(","), None, if (activeNames(s.jobName)) 1 else 0,
+  /** An atomic pipeline over `fixtures` with `specs` seeded, the ones
+    * named in `active` active.
+    */
+  private def pipeOf(fixtures: String, root: String, specs: Seq[TableSpec],
+      active: Set[String]): AtomicPipeline = {
+    val pipe = new AtomicPipeline(spark, new FixtureSource(fixtures), root)
+    pipe.seed(specs.map(s => EtlJob(s.jobName, s.queryId, s.targetTable,
+      s.pKeys.mkString(","), None, if (active(s.jobName)) 1 else 0,
       None, None, None, None)))
+    pipe
+  }
 
   /** An atomic pipeline over `fixtures` with `spec` seeded active. */
   private def atomicPipe(fixtures: String, root: String,
-      spec: TableSpec): AtomicPipeline = {
-    val pipe = new AtomicPipeline(spark, new FixtureSource(fixtures), root)
-    pipe.seed(Seq(EtlJob(spec.jobName, spec.queryId, spec.targetTable,
-      spec.pKeys.mkString(","), None, 1, None, None, None, None)))
-    pipe
-  }
+      spec: TableSpec): AtomicPipeline =
+    pipeOf(fixtures, root, Seq(spec), Set(spec.jobName))
 
   test("full + incremental run over prices_usd fixture") {
     val base = tmpDir("pipe")
@@ -40,21 +42,18 @@ class PipelineSpec extends SparkSpec {
     writeFixture(fixtures, spec.queryId, Seq(
       """{"date": "2025-01-01", "price": 95000.0}""",
       """{"date": "2025-01-02", "price": 96000.0}"""))
-
-    val meta = new JobStateStore(spark, s"$base/etl_job")
-    seedJobs(meta, Seq(spec), Set(spec.jobName))
-    val pipe = new Pipeline(spark, new FixtureSource(fixtures), meta,
-      s"$base/warehouse")
+    val root = s"$base/tx"
+    val pipe = atomicPipe(fixtures, root, spec)
 
     val r1 = pipe.run(Seq(spec))
     assert(r1.map(r => (r.jobName, r.rows, r.fullRefresh, r.error)) ==
       Seq((spec.jobName, 2L, true, None)))
-    val t1 = spark.read.parquet(pipe.targetPath(spec))
+    val t1 = Transaction.read(spark, root, spec.targetTable)
     assert(t1.columns.sorted.toSeq ==
       Seq("date", "etl_updated_ts", "price_in_dollar"))
 
     // job state: done
-    val job = meta.all.filter($"job_name" === spec.jobName).head
+    val job = pipe.state.filter($"job_name" === spec.jobName).head
     assert(job.getAs[Int]("status") == EtlJob.Done)
     assert(job.getAs[java.sql.Timestamp]("end_ts") != null)
 
@@ -66,11 +65,39 @@ class PipelineSpec extends SparkSpec {
     val r2 = pipe.run(Seq(spec))
     assert(r2.head.fullRefresh == false)
     assert(r2.head.rows == 3)
-    val prices = spark.read.parquet(pipe.targetPath(spec))
+    val prices = Transaction.read(spark, root, spec.targetTable)
       .select("date", "price_in_dollar").as[(String, Double)]
       .collect().sortBy(_._1).toSeq
     assert(prices == Seq(("2025-01-01", 95000.0), ("2025-01-02", 96000.0),
       ("2025-01-03", 97000.0)))
+  }
+
+  test("bitcoin_transactions: the block_time watermark keeps a stale " +
+      "repeat out, and block_date lands as a derived column") {
+    val base = tmpDir("pipe_tx")
+    val fixtures = s"$base/fixtures"; Files.createDirectories(Paths.get(fixtures))
+    val spec = BitcoinWarehouse.transactions
+    writeFixture(fixtures, spec.queryId, Seq(
+      """{"block_time":"2025-01-01T00:01:00","fee":0.01,"id":"t1","input_value":0.5,"output_value":0.49}""",
+      """{"block_time":"2025-01-02T00:01:00","fee":0.02,"id":"t2","input_value":1.0,"output_value":0.98}"""))
+    val root = s"$base/tx"
+    val pipe = atomicPipe(fixtures, root, spec)
+    val r1 = pipe.run(Seq(spec)).head
+    assert(r1.error.isEmpty && r1.fullRefresh && r1.rows == 2L)
+    // delta: a restated t1 at its old block_time and t3 on a new day;
+    // the timestamp watermark keeps the t1 repeat out
+    writeFixture(fixtures, spec.queryId, Seq(
+      """{"block_time":"2025-01-01T00:01:00","fee":9.9,"id":"t1","input_value":9.9,"output_value":9.9}""",
+      """{"block_time":"2025-01-03T00:01:00","fee":0.03,"id":"t3","input_value":2.0,"output_value":1.96}"""))
+    val r2 = pipe.run(Seq(spec)).head
+    assert(r2.error.isEmpty && !r2.fullRefresh && r2.rows == 3L)
+    val got = Transaction.read(spark, root, spec.targetTable)
+      .select($"transaction_id", $"dimension_attribute_record_id",
+        $"block_date".cast("string"))
+      .as[(String, Double, String)].collect().sortBy(_._1).toSeq
+    assert(got == Seq(("t1", 0.01, "2025-01-01"), ("t2", 0.02, "2025-01-02"),
+      ("t3", 0.03, "2025-01-03")),
+      "stale pre-watermark repeat must not apply")
   }
 
   test("per-job error isolation: a broken job does not stop the loop") {
@@ -80,60 +107,23 @@ class PipelineSpec extends SparkSpec {
     val bad = BitcoinWarehouse.outputs // no fixture written → fetch fails
     writeFixture(fixtures, good.queryId, Seq(
       """{"address": "addr1", "tx_id": "t1", "value": 0.5}"""))
-
-    val meta = new JobStateStore(spark, s"$base/etl_job")
-    seedJobs(meta, Seq(bad, good), Set(bad.jobName, good.jobName))
-    val pipe = new Pipeline(spark, new FixtureSource(fixtures), meta,
-      s"$base/warehouse")
+    val root = s"$base/tx"
+    val pipe = pipeOf(fixtures, root, Seq(bad, good),
+      Set(bad.jobName, good.jobName))
 
     val results = pipe.run(Seq(bad, good))
     assert(results.find(_.jobName == bad.jobName).get.error.isDefined)
     val goodResult = results.find(_.jobName == good.jobName).get
     assert(goodResult.error.isEmpty && goodResult.rows == 1)
 
-    val statuses = meta.all.select("job_name", "status")
+    val statuses = pipe.state.select("job_name", "status")
       .as[(String, Option[Int])].collect().toMap
     assert(statuses(bad.jobName).contains(EtlJob.Failed))
     assert(statuses(good.jobName).contains(EtlJob.Done))
 
     // derived UPPER transform landed
-    val row = spark.read.parquet(pipe.targetPath(good)).head
+    val row = Transaction.read(spark, root, good.targetTable).head
     assert(row.getAs[String]("dimension_attribute_name") == "ADDR1")
-  }
-
-  test("partitioned table: full sync lays out hive dirs; delta touches " +
-      "only its partition") {
-    val base = tmpDir("pipe_part")
-    val fixtures = s"$base/fixtures"; Files.createDirectories(Paths.get(fixtures))
-    val spec = BitcoinWarehouse.transactions
-    writeFixture(fixtures, spec.queryId, Seq(
-      """{"block_time":"2025-01-01T00:01:00","fee":0.01,"id":"t1","input_value":0.5,"output_value":0.49}""",
-      """{"block_time":"2025-01-02T00:01:00","fee":0.02,"id":"t2","input_value":1.0,"output_value":0.98}"""))
-    val meta = new JobStateStore(spark, s"$base/etl_job")
-    seedJobs(meta, Seq(spec), Set(spec.jobName))
-    val pipe = new Pipeline(spark, new FixtureSource(fixtures), meta,
-      s"$base/warehouse")
-    assert(pipe.run(Seq(spec)).head.rows == 2L)
-    val root = new java.io.File(pipe.targetPath(spec))
-    assert(root.listFiles().map(_.getName).toSet
-      .contains("block_date=2025-01-01"))
-    def day1Files = new java.io.File(root, "block_date=2025-01-01")
-      .listFiles().filter(_.getName.endsWith(".parquet"))
-      .map(f => f.getName -> f.lastModified()).toMap
-    val before = day1Files
-    Thread.sleep(1100)
-    // delta: one new tx on a NEW day; watermark keeps t1/t2 out
-    writeFixture(fixtures, spec.queryId, Seq(
-      """{"block_time":"2025-01-01T00:01:00","fee":9.9,"id":"t1","input_value":9.9,"output_value":9.9}""",
-      """{"block_time":"2025-01-03T00:01:00","fee":0.03,"id":"t3","input_value":2.0,"output_value":1.96}"""))
-    val r2 = pipe.run(Seq(spec)).head
-    assert(!r2.fullRefresh && r2.rows == 3L)
-    assert(day1Files == before,
-      "untouched day-1 partition was rewritten by the delta merge")
-    val t1fee = spark.read.parquet(pipe.targetPath(spec))
-      .filter($"transaction_id" === "t1")
-      .select("dimension_attribute_record_id").as[Double].head()
-    assert(t1fee == 0.01, "stale pre-watermark repeat must not apply")
   }
 
   test("CLI options: --select narrows the run, --full-refresh forces a " +
@@ -145,10 +135,10 @@ class PipelineSpec extends SparkSpec {
     writeFixture(fixtures, prices.queryId, Seq(
       """{"date": "2025-01-01", "price": 95000.0}""",
       """{"date": "2025-01-02", "price": 96000.0}"""))
-    val meta = new JobStateStore(spark, s"$base/etl_job")
-    seedJobs(meta, Seq(prices, block), Set(prices.jobName, block.jobName))
-    val pipe = new Pipeline(spark, new FixtureSource(fixtures), meta,
-      s"$base/warehouse")
+    val root = s"$base/tx"
+    val pipe = pipeOf(fixtures, root, Seq(prices, block),
+      Set(prices.jobName, block.jobName))
+    def pricesTable = Transaction.read(spark, root, prices.targetTable)
 
     // --select: only prices runs even though block is active (and its
     // missing fixture would otherwise record a failure)
@@ -167,7 +157,7 @@ class PipelineSpec extends SparkSpec {
     val r2 = pipe.run(Seq(prices), graft.runner.RunOptions.parse(
       Seq("--select", prices.jobName, "--incremental-value", "2024-12-31")))
     assert(!r2.head.fullRefresh && r2.head.rows == 2L)
-    val p0102 = spark.read.parquet(pipe.targetPath(prices))
+    val p0102 = pricesTable
       .filter($"date" === "2025-01-02")
       .select("price_in_dollar").as[Double].head()
     assert(p0102 == 1.0,
@@ -180,7 +170,7 @@ class PipelineSpec extends SparkSpec {
     val r3 = pipe.run(Seq(prices), graft.runner.RunOptions.parse(
       Seq("--full-refresh")))
     assert(r3.head.fullRefresh && r3.head.rows == 1L)
-    assert(spark.read.parquet(pipe.targetPath(prices)).count() == 1L)
+    assert(pricesTable.count() == 1L)
 
     // parse errors are loud
     intercept[RuntimeException] {
@@ -198,17 +188,57 @@ class PipelineSpec extends SparkSpec {
     val base = tmpDir("inact")
     val fixtures = s"$base/fixtures"; Files.createDirectories(Paths.get(fixtures))
     val spec = BitcoinWarehouse.block
-    val meta = new JobStateStore(spark, s"$base/etl_job")
-    seedJobs(meta, Seq(spec), Set.empty)
-    val pipe = new Pipeline(spark, new FixtureSource(fixtures), meta,
-      s"$base/warehouse")
+    val root = s"$base/tx"
+    val pipe = pipeOf(fixtures, root, Seq(spec), Set.empty)
     assert(pipe.run(Seq(spec)).isEmpty)
+    // not even a running marker: the seed is the only commit
+    assert(Transaction.committedTxs(spark, root) == Seq(0L))
+  }
+
+  test("seedFromCsv: an etl_job.csv-shaped file seeds the control table " +
+      "with the seed schema, and only its active job runs") {
+    val base = tmpDir("csv")
+    val fixtures = s"$base/fixtures"; Files.createDirectories(Paths.get(fixtures))
+    val prices = BitcoinWarehouse.pricesUsd
+    val block = BitcoinWarehouse.block // inactive, and has no fixture
+    writeFixture(fixtures, prices.queryId, Seq(
+      """{"date": "2025-01-01", "price": 95000.0}""",
+      """{"date": "2025-01-02", "price": 96000.0}"""))
+    // the reference's header shape, in mixed case, with empty cells
+    val csv = s"$base/etl_job.csv"
+    Files.write(Paths.get(csv), Seq(
+      "Job_Name,QUERY_ID,Target_Table,P_KEY,Status,ACTIVE,Start_TS,END_TS," +
+        "Error_Message,LAST_UPDATED_TS",
+      "prices_usd,5816212,bitcoin.price_usd,date,,1,,,,",
+      "bitcoin_block,2177266,bitcoin.block,hash,,0,,,,")
+      .mkString("\n").getBytes("UTF-8"))
+    val root = s"$base/tx"
+    val pipe = new AtomicPipeline(spark, new FixtureSource(fixtures), root)
+    pipe.seedFromCsv(csv)
+
+    val active = pipe.activeJobs
+    assert(active.map(_.copy(last_updated_ts = None)) == Seq(EtlJob(
+      prices.jobName, prices.queryId, prices.targetTable, "date", None, 1,
+      None, None, None, None)))
+    assert(active.head.last_updated_ts.isDefined)
+    assert(pipe.state.count() == 2L)
+    // the same etl_job schema `seed` writes
+    val seeded = pipeOf(fixtures, s"$base/tx2", Seq(prices), Set.empty)
+    assert(pipe.state.schema == seeded.state.schema)
+
+    val results = pipe.run(Seq(prices, block))
+    assert(results.map(r => (r.jobName, r.rows, r.error)) ==
+      Seq((prices.jobName, 2L, None)))
+    val statuses = pipe.state.select("job_name", "status")
+      .as[(String, Option[Int])].collect().toMap
+    assert(statuses == Map(prices.jobName -> Some(EtlJob.Done),
+      block.jobName -> None))
+    assert(pipe.state.schema == seeded.state.schema)
   }
 
   test("the FIVE-table warehouse runs atomically end-to-end: every " +
       "job's (data, done-state) pair commits as one transaction, and " +
       "every table of the same tx id reads consistently") {
-    import graft.operators.Transaction
     val base = tmpDir("atomic5")
     val fixtures = s"$base/fixtures"
     BitcoinFixtures.write(fixtures)
@@ -241,7 +271,6 @@ class PipelineSpec extends SparkSpec {
 
   test("atomic (data + job-state) publish: a crash at the commit " +
       "point can never leave state and table contents disagreeing") {
-    import graft.operators.Transaction
     val base = tmpDir("atomic")
     val fixtures = s"$base/fixtures"
     Files.createDirectories(Paths.get(fixtures))
@@ -274,7 +303,7 @@ class PipelineSpec extends SparkSpec {
     Transaction.commitBarrier = () => {
       calls += 1
       // call 1 = the running marker; call 2 = the atomic data+state
-      // commit — the exact window the non-atomic runner tears in
+      // commit — the exact window the reference tears in
       if (calls == 2) sys.error("injected crash at the commit point")
     }
     val crashed =
@@ -305,8 +334,7 @@ class PipelineSpec extends SparkSpec {
     assert(status() === EtlJob.Failed)
 
     // recovery: a plain re-run flips data and state TOGETHER; the
-    // watermark keeps the stale 01-02 repeat out, like the non-atomic
-    // pipeline
+    // watermark keeps the stale 01-02 repeat out
     val r2 = pipe.runJob(spec)
     assert(r2.error.isEmpty && r2.rows === 3L)
     assert(status() === EtlJob.Done)
@@ -344,7 +372,6 @@ class PipelineSpec extends SparkSpec {
   test("degenerate inputs through the atomic runner: a zero-row delta, " +
       "a zero-row full refresh, and an incremental spec over an empty " +
       "target") {
-    import graft.operators.Transaction
     val base = tmpDir("degenerate")
     val fixtures = s"$base/fixtures"
     Files.createDirectories(Paths.get(fixtures))

@@ -88,10 +88,10 @@ class PropertySpec extends SparkSpec {
       val b2 = sample(i + 5000).map { case (k, v, ts) => (k, v, ts + 100) }
       val path = tmpDir("prop_wm") + "/t"
       Ops.mergeUpsert(spark, path, df(b1), Seq("k"))
-      val w1 = Ops.maxWatermark(spark, path, "etl_updated_ts")
+      val w1 = Ops.maxWatermark(spark.read.parquet(path), "etl_updated_ts")
         .map(_.toString.toLong)
       Ops.mergeUpsert(spark, path, df(b2), Seq("k"))
-      val w2 = Ops.maxWatermark(spark, path, "etl_updated_ts")
+      val w2 = Ops.maxWatermark(spark.read.parquet(path), "etl_updated_ts")
         .map(_.toString.toLong)
       assert(w1.nonEmpty && w2.nonEmpty && w2.get >= w1.get,
         s"trial $i watermark went backward: $w1 -> $w2")

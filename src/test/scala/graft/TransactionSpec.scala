@@ -104,6 +104,45 @@ class TransactionSpec extends SparkSpec {
     val aVersions = fs.listStatus(new Path(root, "a"))
       .map(_.getPath.getName).toSet
     assert(aVersions == Set("t1", "t3"))
+    // nothing left to drop: a second vacuum drops nothing
+    assert(Transaction.vacuum(spark, root, keep = 1).isEmpty)
+    assert(Transaction.committedTxs(spark, root) == Seq(1L, 3L))
+    // ids keep ascending past a vacuum: never a vacated id
+    assert(Transaction.publish(spark, root,
+      Map("a" -> Seq((1, 4)).toDF("k", "n"))) == 4L)
+  }
+
+  test("publish refuses a table name the root or its manifest cannot " +
+      "hold, before anything is staged") {
+    val root = freshRoot()
+    Transaction.publish(spark, root, Map("a" -> Seq(1).toDF("k")))
+    val fs = new Path(root).getFileSystem(
+      spark.sparkContext.hadoopConfiguration)
+    def listing(p: Path = new Path(root)): Seq[String] =
+      fs.listStatus(p).toSeq.flatMap(st =>
+        st.getPath.toString +: (if (st.isDirectory) listing(st.getPath)
+          else Nil))
+    val before = listing()
+    // `_promoted` would fence the root, `_refs` would break vacuum's
+    // ref walk, `__staging_x` is swept by vacuum, and a `"` mis-parses
+    // in the manifest
+    for (bad <- Seq("", "_promoted", "_refs", "_commits", "__staging_x",
+        ".hidden", "a/b", "x\"y", "x\\y")) {
+      val e = intercept[IllegalArgumentException] {
+        Transaction.publish(spark, root,
+          Map("a" -> Seq(2).toDF("k"), bad -> Seq(3).toDF("k")))
+      }
+      assert(e.getMessage.contains("bad table name"), s"'$bad': $e")
+      assert(Transaction.committedTxs(spark, root) == Seq(0L), bad)
+      assert(listing() == before, s"'$bad' staged something")
+    }
+    assert(!Transaction.isPromoted(spark, root))
+    // the names in use pass
+    assert(Transaction.publish(spark, root, Map("b" -> Seq(1).toDF("k"),
+      "orders" -> Seq(1).toDF("k"), "etl_job" -> Seq(1).toDF("k"),
+      "bitcoin.price_usd" -> Seq(1).toDF("k"))) == 1L)
+    assert(Transaction.manifest(spark, root, 1L).keySet ==
+      Set("a", "b", "orders", "etl_job", "bitcoin.price_usd"))
   }
 
   test("re-tagging moves the name; tagging uncommitted tx fails") {

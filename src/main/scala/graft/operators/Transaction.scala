@@ -5,7 +5,7 @@ import java.nio.charset.StandardCharsets
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, GraftSqlInternal, SparkSession}
 
-import graft.sources.{GraftSink, Integrity}
+import graft.sources.{Commit, GraftSink, Integrity}
 
 /** Versioned tables with a multi-table atomic publish — the
   * Iceberg-lite commit protocol every warehouse needs once two tables
@@ -20,14 +20,15 @@ import graft.sources.{GraftSink, Integrity}
   * root/<table>/t<txId>/...parquet     data, immutable once committed
   * root/<table>/t<txId>/_checksums     the [[Integrity]] sidecar
   * root/_commits/tx<txId>.json         manifest: table -> txId written
-  * root/_promoted                      failover fence (see [[promote]])
+  * root/_commits/<floor marker>       highest burned txId ([[Commit.Tx]])
   * }}}
+  * plus the root's promote fence marker (see [[promote]]).
   *
-  * The ONLY atomic primitive used is single-path filesystem rename, on
-  * the manifest file: data dirs stage under `__staging_*` and rename
+  * The commit point is the manifest's exclusive publish
+  * ([[Commit.place]]): data dirs stage under `__staging_*` and rename
   * into place FIRST (invisible to readers — readers resolve paths only
   * through committed manifests), then the manifest itself stages and
-  * renames into `_commits/` — that rename IS the commit point. A crash
+  * is placed in `_commits/` only if its id is free. A crash
   * anywhere before it leaves orphan `t<txId>` dirs that no manifest
   * references; the next publish at the same txId deletes and re-stages
   * them (they are uncommitted by construction — their txId is absent
@@ -133,38 +134,16 @@ object Transaction {
     parsed
   }
 
-  /** Version-floor markers in `_commits/` — the anti-recycling
-    * discipline the sink's vacuum floor pins (`floorMarkerName`):
-    * deleting a committed manifest VACATES its txId, and the next
-    * publish computes `last + 1`, which would re-mint the vacated
-    * number for DIFFERENT content — a reader or version-keyed cache
-    * that resolved the retracted id in the race window would conflate
-    * the two. A marker `__floor_tx<N>` (value in the NAME, exclusive
-    * create, zero reads) burns ids ≤ N; [[publish]] claims
+  /** The highest burned txId ([[Commit]] version floors in
+    * `_commits/`): a marker names the highest id burned — only ever a
+    * retracted id at most `last + 1` — so [[publish]] claims
     * `max(last, floor) + 1`.
-    */
-  private def floorMarker(root: String, tx: Long) =
-    new Path(commitsDir(root), s"__floor_tx$tx")
-
-  /** Highest PLAUSIBLE burned txId (the sink's claimFloor
-    * discipline): a floor is only ever burned for a retracted id that
-    * was ≤ the then-newest committed tx, so a marker above
-    * `lastCommitted + 1` is corrupt or crafted — honoring it would
-    * permanently renumber every future publish off one bogus file.
-    * Non-numeric suffixes (`__floor_txabc`) are listing noise, not
-    * law — ignored, never a crash that wedges publish and vacuum.
     */
   private def floorOf(spark: SparkSession, root: String,
       lastCommitted: Long): Long = {
     val dir = commitsDir(root)
-    val fs = fsOf(spark, dir)
-    if (!fs.exists(dir)) -1L
-    else fs.listStatus(dir).map(_.getPath.getName)
-      .collect { case n if n.startsWith("__floor_tx") =>
-        n.stripPrefix("__floor_tx").toLongOption }
-      .flatten
-      .filter(_ <= lastCommitted + 1L)
-      .foldLeft(-1L)(math.max)
+    Commit.floor(Commit.floors(fsOf(spark, dir), Commit.Tx, dir),
+      lastCommitted + 1L)
   }
 
   /** Atomically publish `tables` as one transaction; any table NOT in
@@ -175,7 +154,7 @@ object Transaction {
     *
     * A table name is a directory under the root and a manifest key, so
     * a name that is empty, contains `/`, `"` or `\`, or starts with
-    * `_` (the root's own `_commits`, `_refs`, `_promoted` and
+    * `_` (the root's own `_commits`, `_refs`, fence marker and
     * `__staging*`) or `.` is refused before anything is staged.
     */
   def publish(spark: SparkSession, root: String,
@@ -194,16 +173,18 @@ object Transaction {
     // data first, invisible until the manifest commits
     tables.foreach { case (name, df) =>
       val dest = new Path(new Path(rootP, name), s"t$txId")
-      // leftover from a crashed publish at this txId is uncommitted by
-      // construction (txId is not in _commits) — safe to drop
-      if (fs.exists(dest)) fs.delete(dest, true)
-      val tmp = new Path(rootP,
-        "__staging_" + java.util.UUID.randomUUID().toString.take(8))
+      val tmp = Commit.Tx.staging(rootP)
       try {
         df.write.mode("overwrite").parquet(tmp.toString)
         // the sidecar lands INSIDE the staged dir — atomic with the data
         Integrity.stamp(spark, tmp.toString)
       } catch { case e: Throwable => fs.delete(tmp, true); throw e }
+      // leftover from a crashed publish (or a fenced sync) at this txId
+      // is uncommitted by construction (txId is not in _commits) — safe
+      // to drop. Dropped right before the rename: a dir renamed onto an
+      // existing one lands INSIDE it, so a leftover that appeared while
+      // this member was written would hide it.
+      if (fs.exists(dest)) fs.delete(dest, true)
       fs.mkdirs(dest.getParent)
       if (!fs.rename(tmp, dest)) {
         fs.delete(tmp, true)
@@ -211,25 +192,19 @@ object Transaction {
           s"publish: rename $tmp -> $dest failed")
       }
     }
-    // commit point: one manifest rename
+    // commit point: the manifest's exclusive publish
     val entries = prev ++ tables.keys.map(_ -> txId)
     val json = entries.toSeq.sortBy(_._1)
       .map { case (t, v) => s"${graft.Json.quote(t)}: $v" }
       .mkString("{", ", ", "}")
-    val dir = commitsDir(root)
-    fs.mkdirs(dir)
-    val mTmp = new Path(dir,
-      "__staging_" + java.util.UUID.randomUUID().toString.take(8))
-    val out = fs.create(mTmp, false)
-    try out.write(json.getBytes(StandardCharsets.UTF_8)) finally out.close()
+    val mDest = new Path(commitsDir(root), s"tx$txId.json")
+    val mTmp = Commit.stage(fs, Commit.Tx, mDest,
+      json.getBytes(StandardCharsets.UTF_8))
     commitBarrier()
-    val mDest = new Path(dir, s"tx$txId.json")
-    if (!fs.rename(mTmp, mDest)) {
-      fs.delete(mTmp, false)
+    if (!Commit.place(fs, mTmp, mDest))
       throw new java.io.IOException(
         s"publish: commit rename $mTmp -> $mDest failed " +
           "(concurrent committer?)")
-    }
     txId
   }
 
@@ -270,34 +245,24 @@ object Transaction {
   // ---- failover fencing (the sink's promote/cloneSync contract, at
   // ---- the transaction root) --------------------------------------
 
-  private def promotedMarker(root: String) = new Path(root, "_promoted")
-
   /** Whether `root` is a PROMOTED former replica — [[syncTo]] refuses
     * such targets (see [[promote]]).
     */
   def isPromoted(spark: SparkSession, root: String): Boolean =
-    fsOf(spark, promotedMarker(root)).exists(promotedMarker(root))
+    Commit.raised(fsOf(spark, new Path(root)), new Path(root))
 
   /** FAILOVER — make a multi-table replica root a first-class
-    * warehouse after source loss. Drops the `_promoted` fence marker
-    * (exclusive create: two racing promotes get one winner), after
-    * which every [[syncTo]] from the resurrected old source REFUSES
-    * loudly instead of silently clobbering post-failover transactions
-    * — the same resurrected-old-source hazard [[GraftSink.promote]]
-    * closes per table, closed for the whole root. Local
-    * [[publish]]es may take the root the moment promote returns
-    * (txIds continue above the synced history).
-    *
-    * FENCING CONTRACT: [[syncTo]] checks the marker at entry,
-    * immediately before its manifest rename, and — the commit-time
-    * conviction — immediately AFTER it: a sync PAUSED between its
-    * last advisory check and its rename for the whole promotion (the
-    * classic gap of marker-based protocols) finds the fence after
-    * linking, retracts its own manifest while it is provably still
-    * the newest committed tx (burning the vacated id with a floor
-    * marker so a local publish can never re-mint it for different
-    * content), and fails naming the promotion — it can never
-    * silently ack.
+    * warehouse after source loss. Raises the root's [[Commit]] promote
+    * fence (two racing promotes get one winner; the loser errors),
+    * after which every [[syncTo]] from the resurrected old source
+    * REFUSES loudly instead of silently clobbering post-failover
+    * transactions — the same resurrected-old-source hazard
+    * [[GraftSink.promote]] closes per table, closed for the whole
+    * root. Local [[publish]]es may take the root the moment promote
+    * returns (txIds continue above the synced history). [[syncTo]]
+    * checks the fence at entry, before placing the member dirs it
+    * copied, and after its manifest publish (the commit-time
+    * conviction: the burned id is the retracted txId itself).
     *
     * Re-replication of a promoted root is deliberately NOT a sync:
     * take fresh [[syncTo]]s to a NEW directory. `force = true` on
@@ -308,16 +273,10 @@ object Transaction {
   def promote(spark: SparkSession, root: String): Unit = {
     require(committedTxs(spark, root).nonEmpty,
       s"transaction: nothing to promote at $root — no committed txs")
-    val marker = promotedMarker(root)
-    val fs = fsOf(spark, marker)
-    val out =
-      try fs.create(marker, false)
-      catch { case _: java.io.IOException =>
-        sys.error(s"transaction: $root is already promoted")
-      }
-    try out.write(s"promotedAtMs=${System.currentTimeMillis()}\n"
-      .getBytes(StandardCharsets.UTF_8))
-    finally out.close()
+    val r = new Path(root)
+    if (!Commit.raise(fsOf(spark, r), Commit.Tx, r,
+        s"promotedAtMs=${System.currentTimeMillis()}\n"))
+      sys.error(s"transaction: $root is already promoted")
   }
 
   /** Test seam: runs immediately before [[syncTo]]'s manifest rename —
@@ -398,13 +357,10 @@ object Transaction {
           "syncTo calls to a NEW directory, or pass force=true to " +
           "re-subjugate (discards the promoted root's local commits)")
     if (force) {
-      if (isPromoted(spark, dstRoot)) {
-        fsOf(spark, promotedMarker(dstRoot))
-          .delete(promotedMarker(dstRoot), false)
+      if (Commit.lower(fsOf(spark, new Path(dstRoot)), new Path(dstRoot)))
         System.err.println("transaction: force sync re-subjugates " +
           s"promoted root $dstRoot — its post-failover commits leave " +
           "the commit set (data dirs remain until vacuum)")
-      }
     } else fenceCheck()
     val committed = committedTxs(spark, srcRoot)
     require(committed.nonEmpty, s"no committed transactions under $srcRoot")
@@ -495,9 +451,9 @@ object Transaction {
       carryRefs(spark, srcRoot, dstRoot)
       return 0
     }
+    val stagingRoot = new Path(dstRoot,
+      "__staging_sync_" + java.util.UUID.randomUUID().toString.take(8))
     if (needed.nonEmpty) {
-      val stagingRoot = new Path(dstRoot,
-        "__staging_sync_" + java.util.UUID.randomUUID().toString.take(8))
       // one job per file: (from, to, expected xxh64 or "" = legacy
       // unverified). The sidecar itself and other bookkeeping files
       // copy with no expectation — their integrity is re-derivable.
@@ -532,38 +488,38 @@ object Transaction {
           Integrity.copyVerified(conf.value, new Path(from), new Path(to),
             expect, "transaction")
         }
-      needed.foreach { case (t, v) =>
-        val dest = new Path(dstRoot, s"$t/t$v")
-        fs.mkdirs(dest.getParent)
-        if (!fs.rename(new Path(stagingRoot, s"$t/t$v"), dest) &&
-            !fs.exists(dest)) {
-          // a racing sync of the same/later tx placing the SAME
-          // immutable (table, version) content loses the rename
-          // benignly — only a rename that leaves the dest ABSENT is
-          // a real failure
-          fs.delete(stagingRoot, true)
-          throw new java.io.IOException(
-            s"syncTo: rename of $t/t$v into $dstRoot failed")
-        }
-      }
-      fs.delete(stagingRoot, true)
     }
-    // fence AGAIN at the last step before the commit rename: shrinks
-    // the promote-races-an-in-flight-sync window from the whole copy
-    // duration to the rename itself
-    if (!force) fenceCheck()
-    // commit point: the tx manifest lands LAST, atomically — the same
-    // staged-rename discipline as publish()
-    val dir = commitsDir(dstRoot)
-    fs.mkdirs(dir)
-    val mTmp = new Path(dir,
-      "__staging_" + java.util.UUID.randomUUID().toString.take(8))
+    // fence AGAIN once the copy is done, before anything lands under
+    // the replica's own names: shrinks the promote-races-an-in-flight-
+    // sync window from the whole copy duration to the renames, and a
+    // sync fenced here leaves no member dir behind for a local publish
+    // at the same id to meet
+    if (!force && isPromoted(spark, dstRoot)) {
+      fs.delete(stagingRoot, true)
+      fenceCheck()
+    }
+    needed.foreach { case (t, v) =>
+      val dest = new Path(dstRoot, s"$t/t$v")
+      fs.mkdirs(dest.getParent)
+      if (!fs.rename(new Path(stagingRoot, s"$t/t$v"), dest) &&
+          !fs.exists(dest)) {
+        // a racing sync of the same/later tx placing the SAME
+        // immutable (table, version) content loses the rename
+        // benignly — only a rename that leaves the dest ABSENT is
+        // a real failure
+        fs.delete(stagingRoot, true)
+        throw new java.io.IOException(
+          s"syncTo: rename of $t/t$v into $dstRoot failed")
+      }
+    }
+    fs.delete(stagingRoot, true)
+    // commit point: the tx manifest lands LAST, through the same
+    // exclusive publish as publish()
     val bytes = manifestBytes(spark, srcRoot, id)
-    val out = fs.create(mTmp, false)
-    try out.write(bytes) finally out.close()
+    val mTmp = Commit.stage(fs, Commit.Tx, already, bytes)
     syncBarrier()
-    if (!fs.rename(mTmp, already)) {
-      fs.delete(mTmp, false)
+    val placed = Commit.place(fs, mTmp, already)
+    if (!placed) {
       // two syncs of the same tx write byte-identical manifests, so
       // losing the commit rename to a racer is success — but ONLY
       // when what landed is byte-identical: a local publish at a
@@ -578,38 +534,19 @@ object Transaction {
               " (a DIFFERENT tx manifest holds the id — promoted root?)"
             else ""))
     }
-    // COMMIT-TIME CONVICTION — the residual the two advisory checks
-    // leave open is a sync PAUSED between its last fence check and
-    // its manifest rename while the whole promotion (and possibly a
-    // post-failover local publish) completes. Re-check AFTER the
-    // rename: if the fence landed, this sync's commit must not stand.
-    // Retract it while it is provably still the newest committed tx
-    // (nothing can have built on it), burning the vacated id with a
-    // floor marker FIRST so a local publish can never re-mint the
-    // number for different content; if something already committed
-    // above, the tx stays in history (deleting it would tear
-    // carry-forward resolution for the stacker's readers). Either way
-    // the sync FAILS loudly naming the promotion — never a silent ack.
+    // COMMIT-TIME CONVICTION ([[Commit.convict]]): if the fence
+    // landed while this sync was paused past its last check, its
+    // commit must not stand — retracted while it is still the newest
+    // tx (the burned floor is the id itself), else it stays in
+    // history. Only a manifest THIS sync placed is retracted: one it
+    // lost to may be a post-failover local publish that forged the
+    // same bytes. Either way the sync FAILS loudly naming the
+    // promotion.
     if (!force && isPromoted(spark, dstRoot)) {
-      val stillNewest =
-        try committedTxs(spark, dstRoot).lastOption.contains(id)
-        catch { case scala.util.control.NonFatal(_) => false }
-      var retracted = false
-      if (stillNewest) {
-        // floor FIRST (durable before any retraction is visible), then
-        // RE-VERIFY newest immediately before the delete: between the
-        // listing above and here a post-failover local publish can
-        // commit id+1 on top of id, and deleting id then would tear a
-        // hole in committed history (time-travel of id fails while
-        // newer manifests carry its members forward). If anything
-        // stacked, the tx stays in history — the documented branch.
-        try fs.create(floorMarker(dstRoot, id), false).close()
-        catch { case _: java.io.IOException => () } // raced: theirs is fine
-        val stillNewestNow =
-          try committedTxs(spark, dstRoot).lastOption.contains(id)
-          catch { case scala.util.control.NonFatal(_) => false }
-        if (stillNewestNow) { fs.delete(already, false); retracted = true }
-      }
+      val retracted = placed && Commit.convict(
+        () => committedTxs(spark, dstRoot).lastOption.contains(id),
+        () => Commit.burn(fs, Commit.Tx, commitsDir(dstRoot), id),
+        () => fs.delete(already, false))
       sys.error(s"transaction: replica root $dstRoot was PROMOTED " +
         s"while this sync was in flight — the sync's tx $id was " +
         (if (retracted) "retracted"
@@ -680,15 +617,10 @@ object Transaction {
       s"bad ref name '$name'")
     require(committedTxs(spark, root).contains(tx),
       s"cannot tag uncommitted transaction $tx")
-    val dir = refsDir(root)
-    val fs = fsOf(spark, dir)
-    fs.mkdirs(dir)
-    val tmp = new Path(dir,
-      "__staging_" + java.util.UUID.randomUUID().toString.take(8))
-    val out = fs.create(tmp, false)
-    try out.write(tx.toString.getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    val dest = new Path(dir, name)
+    val dest = new Path(refsDir(root), name)
+    val fs = fsOf(spark, dest)
+    val tmp = Commit.stage(fs, Commit.Tx, dest,
+      tx.toString.getBytes(StandardCharsets.UTF_8))
     fs.delete(dest, false) // re-tag: move the name
     if (!fs.rename(tmp, dest)) {
       fs.delete(tmp, false)
@@ -748,17 +680,8 @@ object Transaction {
     }
     sweepStaging(new Path(root))
     sweepStaging(commitsDir(root))
-    val cd = commitsDir(root)
-    if (fs.exists(cd)) {
-      // parse-guarded like floorOf: a corrupt non-numeric marker must
-      // not crash vacuum (it is ignored noise, left for manual GC)
-      val floors = fs.listStatus(cd).map(_.getPath.getName)
-        .filter(_.startsWith("__floor_tx"))
-        .flatMap(n => n.stripPrefix("__floor_tx").toLongOption)
-      if (floors.nonEmpty)
-        floors.filter(_ < floors.max).foreach(v =>
-          fs.delete(new Path(cd, s"__floor_tx$v"), false))
-    }
+    Commit.sweep(fs, Commit.Tx, commitsDir(root),
+      committed.lastOption.getOrElse(-1L) + 1L)
     val pinned: Set[Long] =
       if (!fs.exists(refDir)) Set.empty
       else fs.listStatus(refDir).map(_.getPath.getName).toSeq
@@ -972,7 +895,6 @@ object Transaction {
   private def writeDeepVerifiedThrough(spark: SparkSession,
       root: String, tx: Long): Unit = {
     val r = new Path(root)
-    Integrity.writeWatermark(fsOf(spark, r), r, new Path(r,
-      "__staging_" + java.util.UUID.randomUUID().toString.take(8)), "tx", tx)
+    Integrity.writeWatermark(fsOf(spark, r), r, Commit.Tx.staging(r), "tx", tx)
   }
 }

@@ -1,0 +1,184 @@
+package graft.sources
+
+import java.nio.charset.StandardCharsets
+import java.nio.file.{FileAlreadyExistsException, Files, Paths, StandardCopyOption}
+
+import org.apache.hadoop.fs.{FileSystem, Path}
+
+/** The commit kernel shared by the two versioned layers with a commit
+  * point of their own — graftsink ([[GraftSink]], one manifest per
+  * table version) and `operators.Transaction` (one manifest per
+  * multi-table transaction). Each layer keeps its own layout, its
+  * claim arithmetic and its refusal texts; the exclusive publish of a
+  * small file, the version-floor markers and the promote fence live
+  * here once.
+  *
+  * EXCLUSIVE PUBLISH ([[stage]] then [[place]]): the bytes are written
+  * whole to a staging file in the layer's staging spot, then placed
+  * at the final name only if that name does not exist — a hard link
+  * on `file:` (kernel EEXIST: exactly one winner, and the content is
+  * complete the instant the name exists) and a no-overwrite rename
+  * elsewhere. Neither `create(overwrite = false)` (exists-check then
+  * open on a local filesystem: two racers can both win) nor a local
+  * `rename` (Hadoop's `LocalFileSystem` replaces an existing target)
+  * is exclusive. A Hadoop `.crc` written beside the staging file
+  * follows it to the final name, so a checksummed filesystem keeps
+  * checking every later read. A crashed publisher leaves only a
+  * staging file for the layer's vacuum.
+  *
+  * VERSION FLOORS: deleting a committed manifest vacates its id, and
+  * the next claim computed from the remaining head would re-mint it
+  * for different content — a reader or version-keyed cache that
+  * resolved the vacated id in the race window would conflate the two.
+  * A floor marker burns ids: its value rides in its NAME (exclusive
+  * create, zero reads). What the value means is the layer's (graftsink:
+  * the lowest version a commit may claim; Transaction: the highest
+  * burned id). A marker is only ever burned at or below the newest
+  * committed id + 1 in the layer's own terms, so the governing floor
+  * is the max over the markers that parse and lie at or below the
+  * layer's plausibility `limit`: a corrupt or crafted marker above it,
+  * or a name that does not parse, is ignored — it can neither renumber
+  * the table nor wedge a commit or a vacuum.
+  *
+  * PROMOTE FENCE: a marker at the root makes a replica's old source
+  * refuse to sync ([[raised]], [[raise]], [[lower]]). A sync checks it
+  * at entry and again once its copy is done, and re-checks it AFTER
+  * its commit point — the commit-time [[convict]]ion: a sync paused
+  * past its last check for the whole promotion finds the fence after
+  * committing and retracts its own commit while it is provably still
+  * the newest, burning the vacated id first.
+  */
+private[graft] object Commit {
+
+  /** One layer's commit-file names: the floor-marker prefix and
+    * rendering, and a fresh staging file in a directory (each layer's
+    * vacuum sweeps its own staging spot).
+    */
+  final case class Layer(floorPrefix: String, floorName: Long => String,
+      staging: Path => Path)
+
+  private def uuid(n: Int) = java.util.UUID.randomUUID().toString.take(n)
+
+  /** graftsink: `_floor-v%06d` in the table dir, staging under
+    * `_staging/`.
+    */
+  val Sink = Layer("_floor-v", v => f"_floor-v$v%06d",
+    dir => new Path(dir, s"_staging/tmp-${uuid(12)}"))
+
+  /** Transaction: `__floor_tx<N>` in `_commits/`, `__staging_*`
+    * siblings.
+    */
+  val Tx = Layer("__floor_tx", v => s"__floor_tx$v",
+    dir => new Path(dir, s"__staging_${uuid(8)}"))
+
+  // ---- exclusive publish --------------------------------------------
+
+  /** Write `bytes` whole to a fresh staging file beside `dst`; returns
+    * it for [[place]].
+    */
+  def stage(fs: FileSystem, layer: Layer, dst: Path,
+      bytes: Array[Byte]): Path = {
+    val tmp = layer.staging(dst.getParent)
+    val out = fs.create(tmp, false)
+    try out.write(bytes) finally out.close()
+    tmp
+  }
+
+  /** Give staged `tmp` the name `dst` unless `dst` exists. True: this
+    * call placed it; false: `dst` was already there. `tmp` is gone
+    * either way.
+    */
+  def place(fs: FileSystem, tmp: Path, dst: Path): Boolean = {
+    val won =
+      if ("file".equalsIgnoreCase(fs.getUri.getScheme)) {
+        def local(p: Path) = Paths.get(fs.makeQualified(p).toUri.getPath)
+        def crc(p: Path) = local(new Path(p.getParent, s".${p.getName}.crc"))
+        try {
+          Files.createLink(local(dst), local(tmp))
+          if (Files.exists(crc(tmp)))
+            Files.move(crc(tmp), crc(dst), StandardCopyOption.REPLACE_EXISTING)
+          true
+        } catch { case _: FileAlreadyExistsException => false }
+      } else
+        try fs.rename(tmp, dst)
+        catch { case _: java.io.IOException => false }
+    fs.delete(tmp, false)
+    won
+  }
+
+  /** [[stage]] then [[place]]. */
+  private def create(fs: FileSystem, layer: Layer, dst: Path,
+      bytes: Array[Byte]): Boolean =
+    place(fs, stage(fs, layer, dst, bytes), dst)
+
+  // ---- version floors -----------------------------------------------
+
+  /** Every floor marker value in `dir`; names that do not parse are
+    * skipped, and a missing dir has none.
+    */
+  def floors(fs: FileSystem, layer: Layer, dir: Path): Seq[Long] =
+    try fs.listStatus(dir).toSeq.map(_.getPath.getName)
+      .filter(_.startsWith(layer.floorPrefix))
+      .flatMap(_.stripPrefix(layer.floorPrefix).toLongOption)
+    catch { case _: java.io.FileNotFoundException => Seq.empty }
+
+  /** The governing floor: the max of `floors` at or below `limit`;
+    * −1 when none is.
+    */
+  def floor(floors: Seq[Long], limit: Long): Long =
+    floors.filter(_ <= limit).foldLeft(-1L)(math.max)
+
+  /** Burn `value` with an exclusive create; losing to a racing burn of
+    * the same value is fine.
+    */
+  def burn(fs: FileSystem, layer: Layer, dir: Path, value: Long): Unit =
+    create(fs, layer, new Path(dir, layer.floorName(value)), Array.empty)
+
+  /** Delete the markers below the governing floor at `limit` (the max
+    * governs, lower ones are listing noise); markers above `limit` are
+    * left as they are.
+    */
+  def sweep(fs: FileSystem, layer: Layer, dir: Path, limit: Long): Unit = {
+    val all = floors(fs, layer, dir)
+    val keep = floor(all, limit)
+    all.filter(_ < keep).foreach(v =>
+      fs.delete(new Path(dir, layer.floorName(v)), false))
+  }
+
+  // ---- promote fence ------------------------------------------------
+
+  private def fenceMarker(root: Path): Path = new Path(root, "_promoted")
+
+  /** Whether `root`'s fence is up. */
+  def raised(fs: FileSystem, root: Path): Boolean =
+    fs.exists(fenceMarker(root))
+
+  /** Raise the fence with `body` as the marker's content; true when
+    * this call raised it, false when it was already up.
+    */
+  def raise(fs: FileSystem, layer: Layer, root: Path,
+      body: String): Boolean =
+    create(fs, layer, fenceMarker(root),
+      body.getBytes(StandardCharsets.UTF_8))
+
+  /** Take the fence down (a force sync re-subjugating a promoted
+    * replica); true when it was up.
+    */
+  def lower(fs: FileSystem, root: Path): Boolean =
+    fs.delete(fenceMarker(root), false)
+
+  /** The commit-time conviction of a commit that landed under a raised
+    * fence: when `newest` holds, `burn` the commit's id, check `newest`
+    * AGAIN — a post-failover commit may have stacked on it in between,
+    * and deleting it then would tear a hole in the history the
+    * stacker builds on — and only then `retract` it. Returns whether
+    * the commit was retracted; a failing `newest` reads as false, so
+    * the commit stays in history.
+    */
+  def convict(newest: () => Boolean, burn: () => Unit,
+      retract: () => Unit): Boolean = {
+    def isNewest =
+      try newest() catch { case scala.util.control.NonFatal(_) => false }
+    isNewest && { burn(); isNewest && { retract(); true } }
+  }
+}

@@ -1142,69 +1142,40 @@ object GraftSink {
     None
   }
 
-  /** VERSION-FLOOR markers — the anti-zombie half of the commit
-    * protocol. Vacuum VACATES manifest names (it deletes expired
-    * version files), and an exclusive-create into a vacated name
-    * SUCCEEDS: a writer that resolved the head, spent a while
-    * composing segments, and linked its manifest only after vacuum
-    * expired that very version number would "win" a version BELOW the
-    * real head — a zombie commit no reader ever resolves (latest
-    * takes the max), silently losing the write (caught by the
-    * round-8 racing-writers spec: two publishes both returned v35).
-    *
-    * The floor closes the hole exactly:
-    *  - vacuum, BEFORE deleting any manifest, exclusive-creates
-    *    `_floor-v%06d` with value = (max doomed version + 1) — the
-    *    name IS the value, so the marker is atomic and needs no read;
-    *  - a publisher, AFTER its exclusive-create succeeds at `v`,
-    *    lists the floor markers; `v < floor` proves the name was
-    *    vacated (vacuum wrote the floor before vacating), so the
-    *    publisher deletes its own zombie and retries from the fresh
-    *    head. Nothing can have built on the zombie: resolution always
-    *    takes the MAX version, and the zombie sits below the live
-    *    window by construction.
+  /** VERSION FLOORS ([[Commit]], layer [[Commit.Sink]]) — the
+    * anti-zombie half of the commit protocol. A graftsink marker names
+    * the LOWEST version a commit may claim. Vacuum VACATES manifest
+    * names, and an exclusive publish into a vacated name SUCCEEDS: a
+    * writer that resolved the head, spent a while composing segments,
+    * and linked its manifest only after vacuum expired that very
+    * version number would "win" a version BELOW the real head — a
+    * zombie commit no reader ever resolves (latest takes the max),
+    * silently losing the write. So:
+    *  - vacuum, BEFORE deleting any manifest, burns (max doomed
+    *    version + 1) <= head; cloneSync's conviction burns (retracted
+    *    head + 1) <= head + 2 — the plausibility limit;
+    *  - [[commitLoop]] claims at or above the governing floor, and
+    *    AFTER its link [[zombieFloor]] lists the markers: a claim below
+    *    one proves the name was vacated, so the zombie is deleted and
+    *    the loop retries from the fresh head;
     *  - a GENUINE head claim can never trip the check: with
     *    keepVersions >= 1, floor <= (some past head) - keep + 1 <=
     *    current head < claimed head+1.
     * Cost: one extra directory listing per SUCCESSFUL commit, zero
-    * reads (the value rides in the file name). Concurrent vacuums
-    * both exclusive-create markers; the max of all markers governs,
-    * so a loser's lower marker only under-protects names the winner
-    * already covered.
+    * reads.
     */
-  private[sources] def floorMarkerName(v: Int) = f"_floor-v$v%06d"
+  private def floorsOnDisk(spark: SparkSession, dir: String): Seq[Long] =
+    Commit.floors(fs(spark, dir), Commit.Sink, new Path(dir))
 
-  /** The on-disk floor a FRESH claim should respect, bounded by
-    * plausibility: legitimate markers never exceed headNext + 1
-    * (vacuum floors sit at a vacated-below-head name + 1 <= head;
-    * a retracted-head conviction floor is exactly old-head + 1 =
-    * headNext + 1 after the retraction). Anything higher is a
-    * corrupt/orphaned/crafted marker: ignored at claim time — the
-    * table must not renumber itself around vandalism — and defused
-    * post-link by [[zombieFloor]]'s provablyHead branch.
-    */
-  private def claimFloor(diskFloor: Int, headNext: Int): Int =
-    if (diskFloor <= headNext + 1) diskFloor else 0
-
-  private[sources] def floorOnDisk(f: FileSystem, dir: String): Int = {
-    val p = new Path(dir)
-    try f.listStatus(p).map(_.getPath.getName)
-      .filter(_.startsWith("_floor-v"))
-      .map(_.stripPrefix("_floor-v").toInt)
-      .foldLeft(0)(math.max)
-    catch { case _: java.io.FileNotFoundException => 0 }
-  }
-
-  /** Post-link zombie gate shared by EVERY commit loop (publish,
-    * schema rewrite, compact, cluster, restore): None = the commit
+  /** Post-link zombie gate of [[commitLoop]]: None = the commit
     * stands; Some(floor) = the claimed version sits below the vacuum
     * floor (its name had been vacated mid-compose), the zombie
     * manifest has been deleted here, and the caller must treat the
     * attempt as a collision and retry from a fresh head.
     */
   private def zombieFloor(spark: SparkSession, dir: String,
-      version: Int): Option[Int] = {
-    val fl = floorOnDisk(fs(spark, dir), dir)
+      version: Int): Option[Long] = {
+    val fl = floorsOnDisk(spark, dir).foldLeft(-1L)(math.max)
     if (version >= fl) None
     else {
       // DEFENSE IN DEPTH (round 9): a TRUE zombie is never the max —
@@ -1245,7 +1216,7 @@ object GraftSink {
     }
   }
 
-  /** Collision handling shared by every publish retry loop: a
+  /** Collision handling of [[commitLoop]]: a
     * collision with a COMPLETE manifest needs only a head re-read (the
     * next iteration carries it); a collision with a TORN one is a
     * corpse — a crashed pre-atomic-publish writer or a crafted legacy
@@ -1258,6 +1229,85 @@ object GraftSink {
       e: ManifestCollisionException): Int =
     if (manifestIsComplete(spark, dir, e.version)) 0
     else e.version + 1
+
+  /** [[publish]]'s default retry budget, and every other
+    * [[commitLoop]] caller's.
+    */
+  private val CommitRetries = 20
+
+  /** One commit attempt's manifest — everything but its version, which
+    * [[commitLoop]] claims; `done` turns the version into the caller's
+    * result.
+    */
+  private final case class Draft[A](ddl: String, refs: Seq[SegmentRef],
+      inline: Seq[ManifestFile], epoch: Option[Long],
+      epochWriter: Option[String], committedAtMs: Option[Long],
+      done: Int => A)
+
+  /** THE commit loop behind [[publish]], [[publishSchemaRewrite]],
+    * [[compact]], [[cluster]] and [[restore]]. Each attempt resolves
+    * the head and asks `attempt` for an early result (Left: a replayed
+    * epoch, a rewrite conflict) or a [[Draft]], links the draft at the
+    * claimed version, runs the [[zombieFloor]] gate, and on a collision
+    * or a conviction retries from a fresh head — at most `maxRetries`
+    * times.
+    *
+    * The claim is the resolved head + 1, NEVER a separate listing:
+    * reading the head and the version counter in two steps lets a
+    * racer number itself PAST a commit it did not carry (observed as a
+    * lost append in the threaded spec), while deriving the number from
+    * the carried manifest makes a missed commit a guaranteed
+    * COLLISION, which the retry re-reads. Claims must also start ABOVE
+    * any PLAUSIBLY-burned number: vacuum floors convict zombies
+    * post-link, but a RETRACTED HEAD's number (cloneSync's commit-time
+    * conviction) has nothing above it, so the provablyHead defense
+    * would let a re-mint stand — skipping burned names at claim time
+    * closes that recycle. The markers are listed once per op, and only
+    * those at or below head + 2 govern the claim ([[Commit.floor]]): a
+    * higher one is corrupt or crafted — the table must not renumber
+    * itself around vandalism — and is defused post-link by the
+    * provablyHead branch.
+    */
+  private def commitLoop[A](spark: SparkSession,
+      conf: SerializableConfiguration, dir: String, maxRetries: Int)(
+      attempt: Option[Manifest] => Either[A, Draft[A]]): A = {
+    val burned = floorsOnDisk(spark, dir)
+    @scala.annotation.tailrec
+    def go(floor: Long, failures: Int): A = {
+      val latest = latestManifest(spark, dir)
+      attempt(latest) match {
+        case Left(early) => early
+        case Right(d) =>
+          val headNext = latest.fold(0)(_.version + 1)
+          val claim = Seq(headNext.toLong, floor,
+            Commit.floor(burned, headNext + 1L)).max
+          require(claim <= Int.MaxValue,
+            s"graftsink: a floor marker at $dir puts the next claim at " +
+              s"v$claim, past the version range")
+          val version = claim.toInt
+          // the zombie gate runs AFTER the link on purpose: a pre-link
+          // check would race the very vacuum it guards against
+          val retry =
+            try {
+              writeManifest(conf, dir, version, d.ddl, d.refs, d.inline,
+                d.epoch, d.epochWriter, d.committedAtMs)
+              zombieFloor(spark, dir, version).map(fl =>
+                (new ManifestCollisionException(version,
+                  new java.io.IOException(
+                    s"claimed v$version below vacuum floor $fl")), fl))
+            } catch { case e: ManifestCollisionException =>
+              Some((e, collisionFloor(spark, dir, e).toLong))
+            }
+          retry match {
+            case None => d.done(version)
+            case Some((e, next)) =>
+              if (failures >= maxRetries) throw e
+              go(math.max(floor, next), failures + 1)
+          }
+      }
+    }
+    go(-1L, 0)
+  }
 
   /** The manifest is plain text: line 1 = the TABLE schema DDL, every
     * further line = one committed data file as `name<TAB>fileDdl`
@@ -1448,13 +1498,12 @@ object GraftSink {
       .sorted(Ordering.Int.reverse).toSeq
   }
 
-  /** Publish one version: exclusive-create the manifest file
-    * (`create(overwrite = false)`) so a version collision between two
-    * concurrent committers surfaces as [[ManifestCollisionException]]
-    * instead of one writer's rename silently replacing the other's
-    * manifest (POSIX/LocalFileSystem rename overwrites — the round-4
-    * lost-update hazard). Content ends with [[EofMarker]]; readers
-    * treat a marker-less file as torn and skip it.
+  /** Publish one version: the [[Commit]] exclusive publish of the
+    * manifest file, so a version collision between two concurrent
+    * committers surfaces as [[ManifestCollisionException]] instead of
+    * one writer's rename silently replacing the other's manifest.
+    * Content ends with [[EofMarker]]; readers treat a marker-less file
+    * as torn and skip it.
     */
   private[sources] def writeManifest(conf: SerializableConfiguration,
       dir: String, version: Int, schemaDdl: String,
@@ -1493,47 +1542,16 @@ object GraftSink {
         (s"$EpochMarker\t$e" +: epochWriter.toSeq).mkString("\t"))
     val payload = ((header ++ segLines ++ fileLines) :+ EofMarker)
       .mkString("\n").getBytes("UTF-8")
-    // The publish must be EXCLUSIVE and ALL-OR-NOTHING in one
-    // primitive. Writing into the final name (even create-exclusive)
-    // leaves a window where the manifest is LISTED but not yet
-    // complete — a racing committer then counts it for version
-    // numbering while latest-resolution skips it as torn, and its
-    // content is orphaned by the successor (observed: the threaded
-    // appenders spec lost 2/20 commits that way; plain
-    // create(overwrite=false) on the LOCAL filesystem is additionally
-    // exists-check-then-open, losing 10/20). So: write the full
-    // payload to a staging-scoped temp, then publish atomically —
-    // hard-link into place on file: schemes (kernel EEXIST = exactly
-    // one winner, content complete the instant the name exists) and
-    // no-overwrite rename on HDFS-contract filesystems. A crashed
-    // publisher leaves only a temp under _staging for vacuum's GC;
-    // a listed manifest is complete BY CONSTRUCTION.
-    val tmpName = s"_staging/manifest-tmp-" +
-      java.util.UUID.randomUUID().toString.take(12)
-    val tmp = new Path(dir, tmpName)
-    if ("file".equalsIgnoreCase(f.getUri.getScheme)) {
-      val tmpLocal = java.nio.file.Paths.get(tmp.toUri.getPath)
-      val dstLocal = java.nio.file.Paths.get(dst.toUri.getPath)
-      java.nio.file.Files.createDirectories(tmpLocal.getParent)
-      java.nio.file.Files.write(tmpLocal, payload)
-      try java.nio.file.Files.createLink(dstLocal, tmpLocal)
-      catch { case e: java.nio.file.FileAlreadyExistsException =>
-        java.nio.file.Files.deleteIfExists(tmpLocal)
-        throw new ManifestCollisionException(version, e)
-      }
-      java.nio.file.Files.deleteIfExists(tmpLocal)
-    } else {
-      val out = f.create(tmp, true)
-      try out.write(payload) finally out.close()
-      val renamed =
-        try f.rename(tmp, dst)
-        catch { case _: java.io.IOException => false }
-      if (!renamed) {
-        f.delete(tmp, false)
-        throw new ManifestCollisionException(version,
-          new java.io.IOException(s"$dst already exists"))
-      }
-    }
+    // EXCLUSIVE and ALL-OR-NOTHING in one primitive
+    // ([[Commit.place]]): writing into the final name leaves a window
+    // where the manifest is LISTED but not yet complete — a racing
+    // committer then counts it for version numbering while
+    // latest-resolution skips it as torn (observed: the threaded
+    // appenders spec lost 2/20 commits that way). A listed manifest is
+    // complete BY CONSTRUCTION.
+    if (!Commit.place(f, Commit.stage(f, Commit.Sink, dst, payload), dst))
+      throw new ManifestCollisionException(version,
+        new java.io.IOException(s"$dst already exists"))
   }
 
   /** The published table schema for an append: unchanged when the
@@ -1595,21 +1613,10 @@ object GraftSink {
       newFiles: Seq[ManifestFile], truncate: Boolean,
       evolve: Boolean = false, epoch: Option[Long] = None,
       replace: Option[Set[String]] = None,
-      maxRetries: Int = 20, epochWriter: Option[String] = None,
+      maxRetries: Int = CommitRetries, epochWriter: Option[String] = None,
       replayScan: Boolean = false,
-      committedAtMs: Option[Long] = None): Int = {
-    var attempt = 0
-    var floor = 0
-    // claims must start ABOVE any PLAUSIBLY-burned number: vacuum
-    // floors convict zombies post-link, but a RETRACTED HEAD's number
-    // (cloneSync's commit-time conviction) has nothing above it, so
-    // the provablyHead defense would let a re-mint stand — skipping
-    // burned names at claim time closes that recycle. Read once per
-    // op; claimFloor() ignores implausible (corrupt/crafted) markers,
-    // keeping the bogus-marker immunity the provablyHead branch pins.
-    val diskFloor = floorOnDisk(fs(spark, dir), dir)
-    while (true) {
-      val latest = latestManifest(spark, dir)
+      committedAtMs: Option[Long] = None): Int =
+    commitLoop(spark, conf, dir, maxRetries) { latest =>
       // streaming exactly-once: a recovery-replayed epoch finds its id
       // already published and publishes nothing. Spark replays at most
       // the last un-checkpointed batch PER STREAM, but other commits
@@ -1621,98 +1628,58 @@ object GraftSink {
       // commits check only the head (the in-process publishedThrough
       // watermark in GraftStreamingWrite already proves the prior
       // epoch landed this run, so the walk would find nothing new).
-      epoch.foreach { e =>
-        val frontier = epochFrontier(spark, dir, latest, epochWriter,
-          if (replayScan) EpochScanDepth else 1)
-        if (frontier.exists(_ >= e))
-          return latest.map(_.version).getOrElse(0)
+      val replayed = epoch.exists { e =>
+        epochFrontier(spark, dir, latest, epochWriter,
+          if (replayScan) EpochScanDepth else 1).exists(_ >= e)
       }
-      val prev = if (truncate) None else latest
-      val tableDdl = prev.fold(schemaDdl)(m =>
-        evolvedDdl(m.schemaDdl, schemaDdl, evolve))
-      // evolution can only add GENUINELY new names: a column dropped
-      // earlier whose bytes still live in a file would be resurrected
-      // by the by-name reconciliation (the same gate guards catalog
-      // ADD COLUMN)
-      if (evolve) prev.foreach { pm =>
-        val before = StructType.fromDDL(pm.schemaDdl).fieldNames.toSet
-        val fresh = StructType.fromDDL(tableDdl).fieldNames.toSeq
-          .filterNot(before)
-        if (fresh.nonEmpty) assertNotHaunted(pm, fresh)
-      }
-      // row-level rewrite: the scanned files leave the manifest, their
-      // replacement rows arrive as newFiles; untouched files carry.
-      // CONFLICT GATE: every file this rewrite scanned must still be
-      // listed at the head. If a concurrent compact/cluster/DELETE
-      // replaced one, carrying ITS replacement alongside our newFiles
-      // would duplicate (or resurrect) that file's rows — the classic
-      // rewrite-vs-rewrite conflict; the losing writer must abort
-      // (Delta's ConcurrentDeleteReadException discipline), not merge.
-      // O(delta) metadata: untouched segments carry by reference;
-      // only segments holding a `replace`d file and the loose pool
-      // (previous inline + newFiles) are (re)written
-      val (refs, inline, foundReplace) = composeSegments(conf, dir, prev,
-        replace.getOrElse(Set.empty), newFiles)
-      // row-level rewrite CONFLICT GATE, fed by the compose itself:
-      // every file this rewrite scanned must still be listed at the
-      // head. If a concurrent compact/cluster/DELETE replaced one,
-      // carrying ITS replacement alongside our newFiles would
-      // duplicate (or resurrect) that file's rows — the classic
-      // rewrite-vs-rewrite conflict; the losing writer must abort
-      // (Delta's ConcurrentDeleteReadException discipline), not merge.
-      // composeSegments reports exactly which names it found (blooms
-      // have no false negatives, so a live name is always found), so
-      // the gate costs no extra segment resolution; segments a doomed
-      // attempt already wrote are vacuum-collectable orphans.
-      replace.foreach { r =>
-        val gone = r.diff(foundReplace)
-        if (gone.nonEmpty) throw new ConcurrentRewriteException(
-          s"graftsink: row-level rewrite at $dir scanned file(s) " +
-            s"${gone.toSeq.sorted.take(3).mkString(", ")}" +
-            s"${if (gone.size > 3) ", …" else ""} that a concurrent " +
-            "commit has since rewritten or removed; re-run the " +
-            "operation against the new table state")
-      }
-      // version = carry-source version + 1, NEVER a separate listing:
-      // reading the head and the version counter in two steps lets a
-      // racer number itself PAST a commit it did not carry (observed
-      // as a lost append in the threaded spec — A lands v4, B carries
-      // v3 but lists v4 and writes v5 collision-free, orphaning A's
-      // file). Deriving the number from the carried manifest makes a
-      // missed commit a guaranteed COLLISION, which the retry re-reads.
-      // `latest` (not `prev`): a truncate still stacks on the head.
-      val headNext = latest.map(_.version + 1).getOrElse(0)
-      val version = math.max(headNext,
-        math.max(floor, claimFloor(diskFloor, headNext)))
-      try {
-        writeManifest(conf, dir, version, tableDdl,
-          refs, inline, epoch, epochWriter, committedAtMs)
-        // zombie gate: if vacuum vacated this version number while we
-        // were composing (slow segment merges, stale head), our link
-        // landed BELOW the real head and no reader will ever resolve
-        // it — delete it and retry from the fresh head (see the
-        // floor-marker contract above). The floor listing happens
-        // AFTER the link on purpose: a pre-link check would race the
-        // very vacuum it guards against.
-        zombieFloor(spark, dir, version) match {
-          case None => return version
-          case Some(fl) =>
-            attempt += 1
-            if (attempt > maxRetries)
-              throw new ManifestCollisionException(version,
-                new java.io.IOException(
-                  s"claimed v$version below vacuum floor $fl"))
-            floor = math.max(floor, fl)
+      if (replayed) Left(latest.map(_.version).getOrElse(0))
+      else {
+        // a truncate still stacks on the head: the loop claims above
+        // `latest`, not `prev`
+        val prev = if (truncate) None else latest
+        val tableDdl = prev.fold(schemaDdl)(m =>
+          evolvedDdl(m.schemaDdl, schemaDdl, evolve))
+        // evolution can only add GENUINELY new names: a column dropped
+        // earlier whose bytes still live in a file would be resurrected
+        // by the by-name reconciliation (the same gate guards catalog
+        // ADD COLUMN)
+        if (evolve) prev.foreach { pm =>
+          val before = StructType.fromDDL(pm.schemaDdl).fieldNames.toSet
+          val fresh = StructType.fromDDL(tableDdl).fieldNames.toSeq
+            .filterNot(before)
+          if (fresh.nonEmpty) assertNotHaunted(pm, fresh)
         }
-      } catch {
-        case e: ManifestCollisionException =>
-          attempt += 1
-          if (attempt > maxRetries) throw e
-          floor = math.max(floor, collisionFloor(spark, dir, e))
+        // row-level rewrite: the scanned files leave the manifest, their
+        // replacement rows arrive as newFiles; untouched files carry.
+        // O(delta) metadata: untouched segments carry by reference;
+        // only segments holding a `replace`d file and the loose pool
+        // (previous inline + newFiles) are (re)written
+        val (refs, inline, foundReplace) = composeSegments(conf, dir,
+          prev, replace.getOrElse(Set.empty), newFiles)
+        // row-level rewrite CONFLICT GATE, fed by the compose itself:
+        // every file this rewrite scanned must still be listed at the
+        // head. If a concurrent compact/cluster/DELETE replaced one,
+        // carrying ITS replacement alongside our newFiles would
+        // duplicate (or resurrect) that file's rows — the classic
+        // rewrite-vs-rewrite conflict; the losing writer must abort
+        // (Delta's ConcurrentDeleteReadException discipline), not merge.
+        // composeSegments reports exactly which names it found (blooms
+        // have no false negatives, so a live name is always found), so
+        // the gate costs no extra segment resolution; segments a doomed
+        // attempt already wrote are vacuum-collectable orphans.
+        replace.foreach { r =>
+          val gone = r.diff(foundReplace)
+          if (gone.nonEmpty) throw new ConcurrentRewriteException(
+            s"graftsink: row-level rewrite at $dir scanned file(s) " +
+              s"${gone.toSeq.sorted.take(3).mkString(", ")}" +
+              s"${if (gone.size > 3) ", …" else ""} that a concurrent " +
+              "commit has since rewritten or removed; re-run the " +
+              "operation against the new table state")
+        }
+        Right(Draft(tableDdl, refs, inline, epoch, epochWriter,
+          committedAtMs, identity))
       }
     }
-    -1 // unreachable
-  }
 
   /** Newest version with a COMPLETE manifest (torn tails skipped)
     * WITHOUT parsing any manifest: per candidate name, read only the
@@ -1778,47 +1745,17 @@ object GraftSink {
     */
   private def publishSchemaRewrite(spark: SparkSession,
       conf: SerializableConfiguration, dir: String)(
-      change: Manifest => (String, Option[Seq[ManifestFile]])): Int = {
-    var attempt = 0
-    var floor = 0
-    // claims must start ABOVE any PLAUSIBLY-burned number: vacuum
-    // floors convict zombies post-link, but a RETRACTED HEAD's number
-    // (cloneSync's commit-time conviction) has nothing above it, so
-    // the provablyHead defense would let a re-mint stand — skipping
-    // burned names at claim time closes that recycle. Read once per
-    // op; claimFloor() ignores implausible (corrupt/crafted) markers,
-    // keeping the bogus-marker immunity the provablyHead branch pins.
-    val diskFloor = floorOnDisk(fs(spark, dir), dir)
-    while (true) {
-      val head = latestManifest(spark, dir).getOrElse(
+      change: Manifest => (String, Option[Seq[ManifestFile]])): Int =
+    commitLoop(spark, conf, dir, CommitRetries) { latest =>
+      val head = latest.getOrElse(
         sys.error(s"graftsink: no committed manifest at $dir"))
       val (ddl, changed) = change(head)
       val (refs, inline) = changed match {
         case None => (head.refs, head.inline)
         case Some(files) => freshEntries(conf, dir, files)
       }
-      val version = math.max(head.version + 1,
-        math.max(floor, claimFloor(diskFloor, head.version + 1)))
-      try {
-        writeManifest(conf, dir, version, ddl, refs, inline, None, None,
-          None)
-        zombieFloor(spark, dir, version) match { // anti-recycling gate
-          case None => return version
-          case Some(fl) =>
-            attempt += 1
-            if (attempt > 20)
-              throw new ManifestCollisionException(version,
-                new java.io.IOException(
-                  s"claimed v$version below vacuum floor $fl"))
-            floor = math.max(floor, fl)
-        }
-      } catch { case e: ManifestCollisionException =>
-        attempt += 1; if (attempt > 20) throw e
-        floor = math.max(floor, collisionFloor(spark, dir, e))
-      }
+      Right(Draft(ddl, refs, inline, None, None, None, identity))
     }
-    -1 // unreachable
-  }
 
   /** RENAME COLUMN without touching a byte of data. The line parser
     * identifies fields POSITIONALLY by each file's recorded schema
@@ -2053,22 +1990,12 @@ object GraftSink {
     }
     val compacted = Set(groups.flatten.map(_.name): _*)
     maintenanceBarrier()
-    var attempt = 0
-    var floor = 0
-    // claims must start ABOVE any PLAUSIBLY-burned number: vacuum
-    // floors convict zombies post-link, but a RETRACTED HEAD's number
-    // (cloneSync's commit-time conviction) has nothing above it, so
-    // the provablyHead defense would let a re-mint stand — skipping
-    // burned names at claim time closes that recycle. Read once per
-    // op; claimFloor() ignores implausible (corrupt/crafted) markers,
-    // keeping the bogus-marker immunity the provablyHead branch pins.
-    val diskFloor = floorOnDisk(fs(spark, dir), dir)
-    while (true) {
+    commitLoop(spark, conf, dir, CommitRetries) { latest =>
       // re-read on every attempt: a concurrent append between reads
       // must keep its files in the surviving manifest (the publish
       // retry discipline) — compaction only REPLACES its own group
       // members, whatever else the head now lists
-      val head = latestManifest(spark, dir).getOrElse(m)
+      val head = latest.getOrElse(m)
       // REWRITE CONFLICT: if any group member vanished from the head
       // (a concurrent copy-on-write DELETE/UPDATE/cluster replaced
       // it), the merged bytes hold that member's PRE-rewrite rows —
@@ -2084,37 +2011,19 @@ object GraftSink {
         if (rewriteRetries <= 0) throw new ConcurrentRewriteException(
           s"graftsink: compaction at $dir kept losing to concurrent " +
             "rewrites; re-run when row-level DML traffic quiets")
-        return compact(spark, dir, targetBytes, smallBytes,
-          rewriteRetries - 1)
-      }
-      // segment-aware: only segments holding a compacted member are
-      // rewritten; everything else carries by reference
-      val (refs, inline, _) = composeSegments(conf, dir, Some(head),
-        compacted, mergedEntries)
-      val filesAfter = head.files.size - compacted.size +
-        mergedEntries.size
-      val version = math.max(head.version + 1,
-        math.max(floor, claimFloor(diskFloor, head.version + 1)))
-      try {
-        writeManifest(conf, dir, version, head.schemaDdl, refs, inline,
-          None, None, None)
-        zombieFloor(spark, dir, version) match { // anti-recycling gate
-          case None =>
-            return CompactStats(groups.size, m.files.size, filesAfter)
-          case Some(fl) =>
-            attempt += 1
-            if (attempt > 20)
-              throw new ManifestCollisionException(version,
-                new java.io.IOException(
-                  s"claimed v$version below vacuum floor $fl"))
-            floor = math.max(floor, fl)
-        }
-      } catch { case e: ManifestCollisionException =>
-        attempt += 1; if (attempt > 20) throw e
-        floor = math.max(floor, collisionFloor(spark, dir, e))
+        Left(compact(spark, dir, targetBytes, smallBytes,
+          rewriteRetries - 1))
+      } else {
+        // segment-aware: only segments holding a compacted member are
+        // rewritten; everything else carries by reference
+        val (refs, inline, _) = composeSegments(conf, dir, Some(head),
+          compacted, mergedEntries)
+        val filesAfter = head.files.size - compacted.size +
+          mergedEntries.size
+        Right(Draft(head.schemaDdl, refs, inline, None, None, None,
+          _ => CompactStats(groups.size, m.files.size, filesAfter)))
       }
     }
-    CompactStats(0, 0, 0) // unreachable
   }
 
   /** Min of two recorded bounds of the same internal type. NaN lo =
@@ -2499,18 +2408,10 @@ object GraftSink {
     }
     val replaced = targetFiles.map(_.name).toSet
     maintenanceBarrier()
-    var attempt = 0
-    var floor = 0
-    // claims must start ABOVE any PLAUSIBLY-burned number: vacuum
-    // floors convict zombies post-link, but a RETRACTED HEAD's number
-    // (cloneSync's commit-time conviction) has nothing above it, so
-    // the provablyHead defense would let a re-mint stand — skipping
-    // burned names at claim time closes that recycle. Read once per
-    // op; claimFloor() ignores implausible (corrupt/crafted) markers,
-    // keeping the bogus-marker immunity the provablyHead branch pins.
-    val diskFloor = floorOnDisk(fs(spark, dir), dir)
-    while (true) {
-      val head = latestManifest(spark, dir).getOrElse(m)
+    val conf = new SerializableConfiguration(
+      spark.sparkContext.hadoopConfiguration)
+    commitLoop(spark, conf, dir, CommitRetries) { latest =>
+      val head = latest.getOrElse(m)
       // same rewrite-conflict gate as compact(): a replaced source
       // file gone from the head means a concurrent rewrite beat us —
       // our re-sorted copies hold its PRE-rewrite rows. Drop them and
@@ -2524,38 +2425,18 @@ object GraftSink {
         if (rewriteRetries <= 0) throw new ConcurrentRewriteException(
           s"graftsink: clustering at $dir kept losing to concurrent " +
             "rewrites; re-run when row-level DML traffic quiets")
-        return cluster(spark, dir, cols, targetBytes, zorder, zBits,
-          onlyNew, rewriteRetries - 1, incremental)
-      }
-      val conf = new SerializableConfiguration(
-        spark.sparkContext.hadoopConfiguration)
-      val (refs, inline, _) = composeSegments(conf, dir, Some(head),
-        replaced, moved)
-      val filesAfter = head.files.size - replaced.size + moved.size
-      val version = math.max(head.version + 1,
-        math.max(floor, claimFloor(diskFloor, head.version + 1)))
-      try {
-        writeManifest(conf, dir, version, head.schemaDdl, refs, inline,
-          None, None, None)
-        zombieFloor(spark, dir, version) match { // anti-recycling gate
-          case None =>
-            f.delete(new Path(s"$dir/_staging/cluster-$clusterId"), true)
-            return ClusterStats(m.files.size, filesAfter,
-              moved.map(_.rows).sum)
-          case Some(fl) =>
-            attempt += 1
-            if (attempt > 20)
-              throw new ManifestCollisionException(version,
-                new java.io.IOException(
-                  s"claimed v$version below vacuum floor $fl"))
-            floor = math.max(floor, fl)
-        }
-      } catch { case e: ManifestCollisionException =>
-        attempt += 1; if (attempt > 20) throw e
-        floor = math.max(floor, collisionFloor(spark, dir, e))
+        Left(cluster(spark, dir, cols, targetBytes, zorder, zBits,
+          onlyNew, rewriteRetries - 1, incremental))
+      } else {
+        val (refs, inline, _) = composeSegments(conf, dir, Some(head),
+          replaced, moved)
+        val filesAfter = head.files.size - replaced.size + moved.size
+        Right(Draft(head.schemaDdl, refs, inline, None, None, None, _ => {
+          f.delete(new Path(s"$dir/_staging/cluster-$clusterId"), true)
+          ClusterStats(m.files.size, filesAfter, moved.map(_.rows).sum)
+        }))
       }
     }
-    ClusterStats(0, 0, 0L) // unreachable
   }
 
   /** RESTORE — time travel made writable: publish a NEW version whose
@@ -2583,42 +2464,12 @@ object GraftSink {
         "— no complete manifest (vacuumed or never existed)"))
     val conf = new SerializableConfiguration(
       spark.sparkContext.hadoopConfiguration)
-    var attempt = 0
-    var floor = 0
-    // claims must start ABOVE any PLAUSIBLY-burned number: vacuum
-    // floors convict zombies post-link, but a RETRACTED HEAD's number
-    // (cloneSync's commit-time conviction) has nothing above it, so
-    // the provablyHead defense would let a re-mint stand — skipping
-    // burned names at claim time closes that recycle. Read once per
-    // op; claimFloor() ignores implausible (corrupt/crafted) markers,
-    // keeping the bogus-marker immunity the provablyHead branch pins.
-    val diskFloor = floorOnDisk(fs(spark, dir), dir)
-    while (true) {
-      val headNext = latestManifest(spark, dir)
-        .map(_.version + 1).getOrElse(0)
-      val next = math.max(headNext,
-        math.max(floor, claimFloor(diskFloor, headNext)))
-      try {
-        // restore is O(manifest list): the pinned version's segments
-        // carry by reference, nothing is re-listed file by file
-        writeManifest(conf, dir, next, m.schemaDdl, m.refs, m.inline,
-          None, None, None)
-        zombieFloor(spark, dir, next) match { // anti-recycling gate
-          case None => return next
-          case Some(fl) =>
-            attempt += 1
-            if (attempt > 20)
-              throw new ManifestCollisionException(next,
-                new java.io.IOException(
-                  s"claimed v$next below vacuum floor $fl"))
-            floor = math.max(floor, fl)
-        }
-      } catch { case e: ManifestCollisionException =>
-        attempt += 1; if (attempt > 20) throw e
-        floor = math.max(floor, collisionFloor(spark, dir, e))
-      }
+    // restore is O(manifest list): the pinned version's segments
+    // carry by reference, nothing is re-listed file by file
+    commitLoop(spark, conf, dir, CommitRetries) { _ =>
+      Right(Draft(m.schemaDdl, m.refs, m.inline, None, None, None,
+        identity))
     }
-    -1 // unreachable
   }
 
   /** The epoch-writer identity replication stamps on every manifest
@@ -2639,40 +2490,35 @@ object GraftSink {
 
   /** The epoch-writer identity [[promote]] stamps on the promotion
     * commit — the head is then provably NOT replication-owned, and
-    * the `_promoted` marker fences the old source's syncs off it.
+    * the [[Commit]] promote fence keeps the old source's syncs off it.
     */
   private val PromotedWriter = "graft-promoted"
 
-  private def promotedMarker(dir: String) = s"$dir/_promoted"
-
-  /** Whether `dir` is a PROMOTED former replica (the `_promoted`
-    * fence marker exists) — [[cloneSync]] refuses such targets.
+  /** Whether `dir` is a PROMOTED former replica (its [[Commit]]
+    * promote fence is up) — [[cloneSync]] refuses such targets.
     */
   def isPromoted(spark: SparkSession, dir: String): Boolean =
-    fs(spark, dir).exists(new Path(promotedMarker(dir)))
+    Commit.raised(fs(spark, dir), new Path(dir))
 
   /** FAILOVER — `CALL system.promote(table)`: make a replica a
     * first-class table after source loss. Clears replication's
     * ownership of the head (a promotion commit stamped
     * [[PromotedWriter]] — the divergence guard then reads the head as
-    * locally owned) and drops the `_promoted` fence marker, which
+    * locally owned) and raises the promote fence, which
     * makes every future [[cloneSync]] from the old source REFUSE
     * loudly instead of silently clobbering post-failover writes — the
     * resurrected-old-source hazard every DR story must close. Local
     * writers may take the head the moment promote returns.
     *
-    * FENCING CONTRACT: the marker lands BEFORE the promotion commit,
-    * and cloneSync checks it at entry, immediately before its head
-    * publish, and — the commit-time conviction — immediately AFTER
-    * its manifest link: a sync PAUSED between its last advisory check
-    * and its link for the whole promotion (the classic gap of
-    * marker-based protocols) finds the fence after linking, retracts
-    * its own head while it is provably still the head and
-    * replication-stamped, and fails naming the promotion — it can
-    * never silently ack (CloneSpec holds exactly this window open
-    * with the syncPublishBarrier seam). The promotion commit itself
-    * retries past any sync that links first (each retry stacks above;
-    * the straggler's NEXT attempt hits the fence).
+    * FENCING CONTRACT ([[Commit]]): the fence is raised BEFORE the
+    * promotion commit, and cloneSync checks it at entry, immediately
+    * before its head publish, and after its manifest link — the
+    * commit-time conviction retracts a straggler's head while it is
+    * still the head and replication-stamped (CloneSpec holds exactly
+    * this window open with the syncPublishBarrier seam). The
+    * promotion commit itself retries past any sync that links first
+    * (each retry stacks above; the straggler's NEXT attempt hits the
+    * fence).
     *
     * Re-replication of a promoted table is deliberately NOT a sync:
     * take a fresh [[cloneSnapshot]] to a NEW directory (clone refuses
@@ -2692,8 +2538,7 @@ object GraftSink {
       sys.error(s"graftsink: $dir head v${head.version} is not " +
         "replication-owned — only a replica can be promoted" +
         (if (isPromoted(spark, dir)) " (already promoted)" else ""))
-    val f = fs(spark, dir)
-    // the fence, exclusive-create: two racing promotes get one winner.
+    // the fence, exclusive publish: two racing promotes get one winner.
     // RE-RUNNABLE AFTER PARTIAL FAILURE: a marker that already exists
     // while the head is still replication-stamped (the entry check
     // above passed) is a promotion that fenced but never landed its
@@ -2704,16 +2549,9 @@ object GraftSink {
     // impossible to follow. Instead the re-run RESUMES the promotion
     // commit; a racing pair of promotes both resuming is idempotent
     // (two locally-owned stamps stack, both harmless).
-    val marker = new Path(promotedMarker(dir))
-    val created =
-      try {
-        val out = f.create(marker, false)
-        try out.write((s"promotedAtMs=${System.currentTimeMillis()}\n" +
-          s"fromVersion=${head.version}\n").getBytes("UTF-8"))
-        finally out.close()
-        true
-      } catch { case _: java.io.IOException => false }
-    if (!created)
+    if (!Commit.raise(fs(spark, dir), Commit.Sink, new Path(dir),
+        s"promotedAtMs=${System.currentTimeMillis()}\n" +
+          s"fromVersion=${head.version}\n"))
       System.err.println(s"graftsink: $dir is already fenced but its " +
         "head is still replication-owned — resuming the interrupted " +
         "promotion commit")
@@ -2868,12 +2706,10 @@ object GraftSink {
           "cloneSnapshot to a NEW directory, or pass force=true to " +
           "re-subjugate (discards the promoted head state)")
     if (force) {
-      if (isPromoted(spark, dst)) {
-        fs(spark, dst).delete(new Path(promotedMarker(dst)), false)
+      if (Commit.lower(fs(spark, dst), new Path(dst)))
         System.err.println(s"graftsink: force sync re-subjugates " +
           s"promoted table $dst — its post-promotion head state " +
           "leaves the head (history until vacuum)")
-      }
     } else fenceCheck()
     val m = manifestAt(spark, src, version).getOrElse(
       sys.error(s"graftsink: nothing to sync from $src" +
@@ -2927,49 +2763,27 @@ object GraftSink {
       truncate = true, epoch = Some(nextEpoch),
       epochWriter = Some(ReplicaWriter),
       committedAtMs = m.committedAtMs) // source stamp, verbatim
-    // COMMIT-TIME CONVICTION — the residual the two advisory checks
-    // leave open is a sync PAUSED between its last fence check and
-    // its manifest link while the whole promotion (and possibly a
-    // post-failover local write) completes. Re-check AFTER the link
-    // (the zombieFloor discipline): if the fence landed, this sync's
-    // head must not stand. Retract it when it is still provably the
-    // head (the same raw NAME-listing test zombie conviction uses —
-    // nothing can have built on it, resolution returns to the prior
-    // head); if something already stacked above, the version stays in
-    // history (deleting it would tear the chain) and the stacker
-    // carried this file set knowingly. Either way the sync FAILS
-    // loudly naming the promotion — it can never silently ack.
+    // COMMIT-TIME CONVICTION ([[Commit.convict]]): if the fence
+    // landed while this sync was paused past its last check, its head
+    // must not stand. It is retracted while it is still the head —
+    // the MAX listed name (the raw NAME-listing test zombie conviction
+    // uses) AND replication-stamped (publish's epoch dedupe can return
+    // an EXISTING head's number — never delete a promotion commit or a
+    // local write by mistake) — burning published + 1 first, so every
+    // commit loop claims above the vacated number. If something
+    // stacked above, the version stays in history. Either way the sync
+    // FAILS loudly naming the promotion — it can never silently ack.
     if (!force && isPromoted(spark, dst)) {
       val f = fs(spark, dst)
-      // retraction preconditions: our version is still the MAX listed
-      // name (nothing built on it) AND the manifest there is
-      // replication-stamped (publish's epoch dedupe can return an
-      // EXISTING head's number — never delete a promotion commit or a
-      // local write by mistake; a replication-stamped head under a
-      // fence must go regardless of which racing sync linked it)
-      val stillHead =
-        (try fsVersionsDesc(spark, dst).headOption.contains(published)
-        catch { case scala.util.control.NonFatal(_) => false }) &&
-          (try manifestAt(spark, dst, Some(published))
-            .exists(_.epochWriter.contains(ReplicaWriter))
-          catch { case scala.util.control.NonFatal(_) => false })
-      if (stillHead) {
-        // burn the vacated number BEFORE vacating it (the vacuum
-        // floor-marker discipline): deleting this manifest lets the
-        // next local commit at the promoted table re-mint `published`
-        // for different content, and a reader or version-keyed cache
-        // that resolved the retracted head in the race window would
-        // conflate the two. With the marker durable first, every
-        // commit loop claims above it (floors are folded into the
-        // initial claim), so the name stays dead.
-        try f.create(new Path(dst, floorMarkerName(published + 1)), false)
-          .close()
-        catch { case _: java.io.IOException => () } // raced: theirs is fine
-        f.delete(new Path(dst, manifestName(published)), false)
-      }
+      val retracted = Commit.convict(
+        () => fsVersionsDesc(spark, dst).headOption.contains(published) &&
+          manifestAt(spark, dst, Some(published))
+            .exists(_.epochWriter.contains(ReplicaWriter)),
+        () => Commit.burn(f, Commit.Sink, new Path(dst), published + 1L),
+        () => f.delete(new Path(dst, manifestName(published)), false))
       sys.error(s"graftsink: replica $dst was PROMOTED while this " +
         s"sync was in flight — the sync's head v$published was " +
-        (if (stillHead) "retracted" else
+        (if (retracted) "retracted" else
           "already built upon and stays in history") +
         "; the promoted table owns its head (fresh cloneSnapshot to " +
         "re-replicate, or force=true to re-subjugate)")
@@ -3240,7 +3054,7 @@ object GraftSink {
     // commit = a silently lost write). The floor marker must be
     // durable BEFORE any name is vacated so the committer's post-link
     // check can always convict the zombie (floor-marker contract at
-    // [[floorMarkerName]]).
+    // [[floorsOnDisk]]).
     val doomed = expired ++ torn
     // The floor convicts ZOMBIES — commits that land BELOW the live
     // head, where resolution (max complete version) never sees them.
@@ -3259,25 +3073,16 @@ object GraftSink {
     // only ever excludes torn-above-head names.)
     val liveHead = complete.headOption.getOrElse(-1)
     val floorable = doomed.filter(_ < liveHead)
+    val limit = liveHead + 2L // the claim-time plausibility limit
     if (floorable.nonEmpty) {
-      val newFloor = floorable.max + 1
-      if (newFloor > floorOnDisk(f, dir)) {
-        try f.create(new Path(dir, floorMarkerName(newFloor)), false)
-          .close()
-        catch { case _: java.io.IOException => () } // raced: theirs is fine
-      }
+      val newFloor = floorable.max + 1L
+      if (newFloor > Commit.floor(floorsOnDisk(spark, dir), limit))
+        Commit.burn(f, Commit.Sink, new Path(dir), newFloor)
     }
     doomed.foreach(v => f.delete(new Path(dir, manifestName(v)), false))
-    // retire superseded floor markers (keep the max; the value rides
-    // in the NAME, so stale lower markers are only listing noise)
-    val floors =
-      try f.listStatus(new Path(dir)).map(_.getPath.getName)
-        .filter(_.startsWith("_floor-v"))
-        .map(_.stripPrefix("_floor-v").toInt)
-      catch { case _: java.io.FileNotFoundException => Array.empty[Int] }
-    if (floors.nonEmpty)
-      floors.filter(_ < floors.max).foreach(v =>
-        f.delete(new Path(dir, floorMarkerName(v)), false))
+    // retire superseded floor markers (the value rides in the NAME, so
+    // stale lower markers are only listing noise)
+    Commit.sweep(f, Commit.Sink, new Path(dir), limit)
     // 2. then data files nothing surviving references — aged only: a
     // fresh unreferenced file may belong to a commit that renamed it
     // into data/ but hasn't published its manifest yet. The listing
@@ -3525,8 +3330,7 @@ object GraftSink {
   private def writeDeepVerifiedThrough(spark: SparkSession, dir: String,
       v: Int): Unit =
     Integrity.writeWatermark(fs(spark, dir), new Path(dir),
-      new Path(dir, "_staging/deep-verified-tmp-" +
-        java.util.UUID.randomUUID().toString.take(12)), "version", v)
+      Commit.Sink.staging(new Path(dir)), "version", v)
 
   private[sources] def checkSupported(schema: StructType): Unit =
     schema.fields.foreach { fld =>

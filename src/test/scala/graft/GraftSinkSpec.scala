@@ -342,6 +342,32 @@ class GraftSinkSpec extends SparkSpec {
     assert(GraftSink.latestVersion(spark, dir) === Some(1),
       "the genuine head claim below a bogus floor must survive")
     assert(spark.read.format("graftsink").load(dir).count() === 2)
+    def tableWith(markers: String*): String = {
+      val d = freshDir
+      Seq((1L, "a")).toDF("k", "s").write.format("graftsink")
+        .mode("append").save(d)
+      markers.foreach(m =>
+        fs.create(new org.apache.hadoop.fs.Path(d, m), false).close())
+      Seq((2L, "b")).toDF("k", "s").write.format("graftsink")
+        .mode("append").save(d)
+      d
+    }
+    // a marker name that does not parse — junk, or a number past the
+    // version range — is listing noise: the next append lands and
+    // vacuum runs
+    for (bogus <- Seq("_floor-vjunk", "_floor-v99999999999")) {
+      val d = tableWith(bogus)
+      assert(GraftSink.latestVersion(spark, d) === Some(1), bogus)
+      GraftSink.vacuum(spark, d, keepVersions = 1)
+      assert(spark.read.format("graftsink").load(d).count() === 2, bogus)
+    }
+    // the claim honors the max over the PLAUSIBLE markers: the mark a
+    // retracted v1 leaves (v2) still binds beside a bogus v999, so the
+    // burned v1 is never re-minted
+    val d = tableWith("_floor-v000999", "_floor-v000002")
+    assert(GraftSink.latestVersion(spark, d) === Some(2),
+      "a bogus marker must not hide a plausible one")
+    assert(spark.read.format("graftsink").load(d).count() === 2)
   }
 
   test("evolveSchema append: new columns land, old files read as null " +

@@ -477,6 +477,54 @@ class TransactionSpec extends SparkSpec {
         s"re-minted, got $next")
   }
 
+  // `file:` resolves to Hive's ProxyLocalFileSystem when hive-exec is
+  // on the classpath, and to Hadoop's LocalFileSystem otherwise; the
+  // latter's rename REPLACES an existing target. A local publish of a
+  // new table writes a different manifest; one rewriting the synced
+  // table writes the very bytes the sync was about to place.
+  for (impl <- Seq("org.apache.hadoop.fs.LocalFileSystem",
+      "org.apache.hadoop.fs.ProxyLocalFileSystem");
+      (local, refusal) <- Seq("b" -> "DIFFERENT tx manifest",
+        "a" -> "PROMOTED"))
+    test("a sync losing its commit to a local publish at a just-" +
+        "promoted root fails loudly and the local tx stands " +
+        s"($impl, local table $local)") {
+      val conf = spark.sparkContext.hadoopConfiguration
+      val keys = Seq("fs.file.impl", "fs.file.impl.disable.cache")
+      val saved = keys.map(k => k -> Option(conf.get(k)))
+      conf.set("fs.file.impl", impl)
+      conf.set("fs.file.impl.disable.cache", "true")
+      try {
+        assert(new Path("file:///").getFileSystem(conf).getClass.getName ==
+          impl)
+        val src = freshRoot()
+        val dst = freshRoot()
+        Transaction.publish(spark, src, Map("a" -> Seq((1, 0L)).toDF("k", "n")))
+        Transaction.syncTo(spark, src, dst)
+        Transaction.publish(spark, src, Map("a" -> Seq((1, 1L)).toDF("k", "n")))
+        // the whole promotion and a local publish (claiming tx 1) land
+        // inside the sync's window before its commit point
+        Transaction.syncBarrier = () => {
+          Transaction.promote(spark, dst)
+          assert(Transaction.publish(spark, dst,
+            Map(local -> Seq((7, 70L)).toDF("k", "n"))) == 1L)
+        }
+        val e = intercept[Exception] {
+          Transaction.syncTo(spark, src, dst)
+        }
+        assert(e.getMessage.contains(refusal), s"$e")
+        assert(Transaction.committedTxs(spark, dst) == Seq(0L, 1L))
+        assert(Transaction.read(spark, dst, local).as[(Int, Long)]
+          .collect().toSeq == Seq((7, 70L)))
+      } finally {
+        Transaction.syncBarrier = () => ()
+        saved.foreach {
+          case (k, Some(v)) => conf.set(k, v)
+          case (k, None) => conf.unset(k)
+        }
+      }
+    }
+
   // ---- tx-root fsck (round 13) --------------------------------------
 
   test("fsck walks committed members: healthy root deep-verifies; " +

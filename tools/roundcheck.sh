@@ -5,7 +5,10 @@
 #
 # Runs, in order: (1) the full ScalaTest suite, (1b) the pipeline demo
 # (graft.tools.PipelineDemo, the one main that drives the runner's CLI
-# options), (2) graft.Verify at
+# options), (1c) the commit specs (TransactionSpec, CloneSpec,
+# GraftSinkConflictSpec) again with `file:` on Hadoop's own
+# LocalFileSystem, whose rename replaces an existing target (the suite
+# otherwise runs on whatever hive-exec puts first), (2) graft.Verify at
 # sf0.01 (parquet dumps + oracle_sql.json + tolerance bounds), (3) the
 # DuckDB oracle compare (driver-side tooling; skipped with a note when
 # duckdb isn't installed), (3b) the PLANS.lock diff gate, (3c) the
@@ -15,8 +18,8 @@
 # ROUNDCHECK.json, so the repo's claims and the driver's artifacts
 # can't silently diverge (round 5's 243-vs-242, round 6's 74.8 s clean
 # vs 128.96 s contended). Exit code is nonzero when any hard gate
-# (tests, pipeline demo, verify run, oracle compare, perfbench
-# selftest) fails; a
+# (tests, pipeline demo, commit specs on LocalFileSystem, verify run,
+# oracle compare, perfbench selftest) fails; a
 # contended bench is ANNOTATED, not failed — the canary field says
 # whether the numbers are trustworthy.
 #
@@ -39,6 +42,12 @@ echo "[roundcheck] 1b/5 PipelineDemo"
 sbt -batch "runMain graft.tools.PipelineDemo $OUT/demo --select prices_usd --full-refresh" \
   >"$OUT/pipeline_demo.log" 2>&1
 DEMO_RC=$?
+
+echo "[roundcheck] 1c/5 commit specs on LocalFileSystem"
+sbt -batch 'set Test/javaOptions += "-Dspark.hadoop.fs.file.impl=org.apache.hadoop.fs.LocalFileSystem"' \
+  "testOnly graft.TransactionSpec graft.CloneSpec graft.GraftSinkConflictSpec" \
+  >"$OUT/commit_specs_localfs.log" 2>&1
+LOCALFS_RC=$?
 
 echo "[roundcheck] 2/5 graft.Verify $SF_VERIFY"
 sbt -batch "runMain graft.Verify $SF_VERIFY $OUT/verify" \
@@ -147,23 +156,27 @@ echo "[roundcheck] 5/5 perfbench selftest"
 python3 perfbench/run.py --selftest >"$OUT/perfbench_selftest.log" 2>&1
 PERFBENCH_RC=$?
 
-python3 - "$OUT" "$TEST_RC" "$VERIFY_RC" "$ORACLE_RC" "$BENCH_RC" "$PLANDIFF_RC" "$SPLANDIFF_RC" "$BENCHCOV_RC" "$PERFBENCH_RC" "$DEMO_RC" <<'EOF'
+python3 - "$OUT" "$TEST_RC" "$VERIFY_RC" "$ORACLE_RC" "$BENCH_RC" "$PLANDIFF_RC" "$SPLANDIFF_RC" "$BENCHCOV_RC" "$PERFBENCH_RC" "$DEMO_RC" "$LOCALFS_RC" <<'EOF'
 import json, re, sys
 out, test_rc, verify_rc, oracle_rc, bench_rc, plandiff_rc, splandiff_rc, \
-    benchcov_rc, perfbench_rc, demo_rc = (sys.argv[1], *map(int, sys.argv[2:11]))
+    benchcov_rc, perfbench_rc, demo_rc, localfs_rc = (
+        sys.argv[1], *map(int, sys.argv[2:12]))
 
 summary = {"gate": None}
 
-# sbt test: the scalatest epilogue
-txt = open(f"{out}/sbt_test.log", errors="replace").read()
-m = re.findall(r"Tests: succeeded (\d+), failed (\d+)", txt)
-summary["tests"] = {
-    "rc": test_rc,
-    "succeeded": int(m[-1][0]) if m else None,
-    "failed": int(m[-1][1]) if m else None,
-}
+# sbt test runs: the scalatest epilogue
+def scalatest(key, log, rc):
+    txt = open(f"{out}/{log}", errors="replace").read()
+    m = re.findall(r"Tests: succeeded (\d+), failed (\d+)", txt)
+    summary[key] = {
+        "rc": rc,
+        "succeeded": int(m[-1][0]) if m else None,
+        "failed": int(m[-1][1]) if m else None,
+    }
 
+scalatest("tests", "sbt_test.log", test_rc)
 summary["pipeline_demo"] = {"rc": demo_rc}
+scalatest("commit_specs_localfs", "commit_specs_localfs.log", localfs_rc)
 
 # verify + tolerance. A missing/unreadable tolerance file after a
 # clean verify run is a HARD failure, not a vacuous 0==0 pass — the
@@ -350,8 +363,9 @@ except Exception:
 hard_fail = (
     test_rc != 0 or verify_rc != 0 or oracle_rc > 0 or bench_rc != 0
     or plandiff_rc != 0 or splandiff_rc != 0 or benchcov_rc != 0
-    or perfbench_rc != 0 or demo_rc != 0
+    or perfbench_rc != 0 or demo_rc != 0 or localfs_rc != 0
     or (summary["tests"]["failed"] or 0) > 0
+    or (summary["commit_specs_localfs"]["failed"] or 0) > 0
     # a clean verify must have produced a NON-EMPTY tolerance set;
     # missing file and empty {} both mean no check actually ran
     or (verify_rc == 0 and summary["verify"]["tolerance_total"] == 0)

@@ -82,6 +82,7 @@ object ParquetIO {
       fs.delete(tmp, true)
       throw new java.io.IOException(s"rename $target -> $aside failed")
     }
+    graft.sources.Commit.placeBarrier(tmp, target)
     if (!fs.rename(tmp, target)) {
       if (hadTarget && !fs.rename(aside, target))
         throw new java.io.IOException(s"rename $tmp -> $target failed AND " +
@@ -381,6 +382,7 @@ object Ops {
           if (!fs.rename(dst, aside))
             throw new java.io.IOException(s"rename $dst -> $aside failed")
         }
+        graft.sources.Commit.placeBarrier(src, dst)
         if (!fs.rename(src, dst)) {
           if (had && !fs.rename(aside, dst)) {
             preserveStaging = true
@@ -458,6 +460,7 @@ object Ops {
           if (!fs.rename(d.getPath, aside))
             throw new java.io.IOException(
               s"rename ${d.getPath} -> $aside failed")
+          graft.sources.Commit.placeBarrier(src, d.getPath)
           if (!fs.rename(src, d.getPath)) {
             if (!fs.rename(aside, d.getPath)) {
               preserveStaging = true

@@ -186,6 +186,7 @@ object Transaction {
       // this member was written would hide it.
       if (fs.exists(dest)) fs.delete(dest, true)
       fs.mkdirs(dest.getParent)
+      Commit.placeBarrier(tmp, dest)
       if (!fs.rename(tmp, dest)) {
         fs.delete(tmp, true)
         throw new java.io.IOException(
@@ -501,6 +502,7 @@ object Transaction {
     needed.foreach { case (t, v) =>
       val dest = new Path(dstRoot, s"$t/t$v")
       fs.mkdirs(dest.getParent)
+      Commit.placeBarrier(new Path(stagingRoot, s"$t/t$v"), dest)
       if (!fs.rename(new Path(stagingRoot, s"$t/t$v"), dest) &&
           !fs.exists(dest)) {
         // a racing sync of the same/later tx placing the SAME
@@ -622,6 +624,7 @@ object Transaction {
     val tmp = Commit.stage(fs, Commit.Tx, dest,
       tx.toString.getBytes(StandardCharsets.UTF_8))
     fs.delete(dest, false) // re-tag: move the name
+    Commit.placeBarrier(tmp, dest)
     if (!fs.rename(tmp, dest)) {
       fs.delete(tmp, false)
       throw new java.io.IOException(s"tag: rename to $dest failed")

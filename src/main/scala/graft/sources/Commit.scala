@@ -57,6 +57,12 @@ private[graft] object Commit {
   final case class Layer(floorPrefix: String, floorName: Long => String,
       staging: Path => Path)
 
+  /** Test seam: runs right before a placement's move, with the staged
+    * path and its final name. A spec plants a racer at the final name
+    * HERE. No-op in production.
+    */
+  private[graft] var placeBarrier: (Path, Path) => Unit = (_, _) => ()
+
   private def uuid(n: Int) = java.util.UUID.randomUUID().toString.take(n)
 
   /** graftsink: `_floor-v%06d` in the table dir, staging under

@@ -1,9 +1,11 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 
 import graft.model.DerivedColumn
-import graft.operators.Ops
+import graft.operators.{Ops, ParquetIO}
+import graft.sources.Commit
 
 class OpsSpec extends SparkSpec {
   import spark.implicits._
@@ -116,6 +118,74 @@ class OpsSpec extends SparkSpec {
       .map(_.getName).filterNot(_ == "t")
     assert(leftovers.isEmpty,
       s"no staging/aside dirs may remain, got ${leftovers.toSeq}")
+  }
+
+  /** Run `body` with `plant` at [[Commit.placeBarrier]] (staged path
+    * and final name, right before each move of a swap).
+    */
+  private def planting[A](plant: (Path, Path) => Unit)(body: => A): A = {
+    Commit.placeBarrier = plant
+    try body finally Commit.placeBarrier = (_, _) => ()
+  }
+
+  private def siblings(base: String) = new java.io.File(base).listFiles()
+    .map(_.getName).filterNot(_ == "t").sorted.toSeq
+
+  test("overwriteSafe: a dir planted at the target between aside and " +
+      "place is never written into, and the original is restored once " +
+      "the name is free") {
+    val base = tmpDir("swap_plant")
+    val dir = base + "/t"
+    Ops.fullRefresh(Seq(1, 2).toDF("v"), dir)
+    // the racer plants before the staged copy's placement and is gone
+    // again before the restore
+    val e = intercept[java.io.IOException](planting { (src, dst) =>
+      if (src.getName.contains("__staging_"))
+        Seq(7).toDF("v").write.parquet(dst.toString)
+      else if (src.getName.contains("__replaced_"))
+        new Path(dst.toString).getFileSystem(
+          spark.sparkContext.hadoopConfiguration).delete(dst, true)
+    } {
+      ParquetIO.overwriteSafe(Seq(9).toDF("v"), dir)
+    })
+    assert(e.getMessage.contains("(original restored)"), s"$e")
+    assert(spark.read.parquet(dir).as[Int].collect().sorted.toSeq ==
+      Seq(1, 2))
+    assert(siblings(base).isEmpty, s"left behind: ${siblings(base)}")
+  }
+
+  test("overwriteSafe: a dir that stays planted at the target keeps " +
+      "both copies and names them") {
+    val base = tmpDir("swap_plant2")
+    val dir = base + "/t"
+    Ops.fullRefresh(Seq(1, 2).toDF("v"), dir)
+    val e = intercept[java.io.IOException](planting { (src, dst) =>
+      if (src.getName.contains("__staging_"))
+        Seq(7).toDF("v").write.parquet(dst.toString)
+    } {
+      ParquetIO.overwriteSafe(Seq(9).toDF("v"), dir)
+    })
+    val Seq(aside, staged) = siblings(base)
+    assert(aside.startsWith("t__replaced_") && staged.startsWith("t__staging_"))
+    assert(e.getMessage.contains("restore failed") &&
+      e.getMessage.contains(aside) && e.getMessage.contains(staged), s"$e")
+    def rows(p: String) = spark.read.parquet(s"$base/$p").as[Int]
+      .collect().sorted.toSeq
+    assert(rows(aside) == Seq(1, 2) && rows(staged) == Seq(9))
+    assert(rows("t") == Seq(7), "the plant is left as it is")
+  }
+
+  test("a flat overwriteSafe launches as many Spark jobs as a plain " +
+      "parquet write of the same frame") {
+    import org.apache.spark.graft.SparkJobs
+    val df = spark.range(0, 1000, 1, 2).selectExpr("id AS v")
+    val base = tmpDir("swap_jobs")
+    val (_, plain) = SparkJobs.count(spark.sparkContext)(
+      df.write.parquet(s"$base/plain"))
+    ParquetIO.overwriteSafe(df, s"$base/t")
+    val (_, safe) = SparkJobs.count(spark.sparkContext)(
+      ParquetIO.overwriteSafe(df, s"$base/t"))
+    assert(safe == plain, s"overwriteSafe ran $safe jobs, the write $plain")
   }
 
   test("deleteWhere removes matching rows, keeps NULL-predicate rows") {

@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 
 import graft.operators.Transaction
+import graft.sources.Commit
 
 /** Laws of the multi-table atomic publish: manifest-resolved reads,
   * carry-forward of unchanged tables, torn-publish invisibility, and
@@ -524,6 +525,106 @@ class TransactionSpec extends SparkSpec {
         }
       }
     }
+
+  // ---- placement: a racer at the final name -------------------------
+
+  /** Run `body` with `plant` at [[Commit.placeBarrier]], which gets
+    * each placement's staged path and final name right before the move.
+    */
+  private def planting[A](plant: (Path, Path) => Unit)(body: => A): A = {
+    Commit.placeBarrier = plant
+    try body finally Commit.placeBarrier = (_, _) => ()
+  }
+
+  private def localFs = new Path("file:///")
+    .getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** A non-empty member-like dir with rows of its own at `dest`. */
+  private def plantRows(dest: Path, n: Int): Unit =
+    Seq((1, n), (2, n)).toDF("k", "n").write.parquet(dest.toString)
+
+  test("publish drops a dir planted at its member's name right before " +
+      "placement and commits its own rows") {
+    val root = freshRoot()
+    Transaction.publish(spark, root, Map("a" -> Seq((1, 100)).toDF("k", "n")))
+    var planted = 0
+    val tx = planting { (_, dest) =>
+      if (dest.getName == "t1" && planted == 0) {
+        planted += 1
+        plantRows(dest, 999)
+      }
+    } {
+      Transaction.publish(spark, root, Map("a" -> Seq((1, 200)).toDF("k", "n")))
+    }
+    assert(planted == 1 && tx == 1L)
+    assert(Transaction.read(spark, root, "a").as[(Int, Int)]
+      .collect().toSeq == Seq((1, 200)))
+    assert(Transaction.fsck(spark, root, deep = true).deepVerified)
+  }
+
+  test("publish fails loudly, committing nothing, when a dir is planted " +
+      "at its member's name before every placement") {
+    val root = freshRoot()
+    Transaction.publish(spark, root, Map("a" -> Seq((1, 100)).toDF("k", "n")))
+    var planted = 0
+    val e = intercept[java.io.IOException](planting { (_, dest) =>
+      if (dest.getName == "t1" && !localFs.exists(dest)) {
+        planted += 1
+        plantRows(dest, 999)
+      }
+    } {
+      Transaction.publish(spark, root, Map("a" -> Seq((1, 200)).toDF("k", "n")))
+    })
+    assert(planted == 2, s"placed once more after the first refusal: $e")
+    assert(e.getMessage.contains("a/t1"), s"$e")
+    assert(Transaction.committedTxs(spark, root) == Seq(0L))
+    assert(Transaction.read(spark, root, "a").as[(Int, Int)]
+      .collect().toSeq == Seq((1, 100)))
+  }
+
+  test("syncTo refuses a dir with other rows planted at a member's name, " +
+      "naming the member, and accepts a byte copy of the source member") {
+    val src = freshRoot()
+    Transaction.publish(spark, src, Map("a" -> Seq((1, 10)).toDF("k", "n")))
+    val srcMember = new Path(src, "a/t0")
+    val dst = freshRoot()
+    val e = intercept[Exception](planting { (_, dest) =>
+      if (dest.getName == "t0") plantRows(dest, 99)
+    } {
+      Transaction.syncTo(spark, src, dst)
+    })
+    assert(e.getMessage.contains("a/t0") &&
+      e.getMessage.contains("diverges from the source"), s"$e")
+    assert(Transaction.committedTxs(spark, dst).isEmpty)
+    // what a racing sync of the same tx leaves at the name
+    val twin = freshRoot()
+    val fs = localFs
+    planting { (_, dest) =>
+      if (dest.getName == "t0") org.apache.hadoop.fs.FileUtil.copy(
+        fs, srcMember, fs, dest, false, fs.getConf)
+    } {
+      assert(Transaction.syncTo(spark, src, twin) == 1)
+    }
+    assert(Transaction.committedTxs(spark, twin) == Seq(0L))
+    assert(Transaction.read(spark, twin, "a").as[(Int, Int)]
+      .collect().toSeq == Seq((1, 10)))
+  }
+
+  test("a re-pointed ref stays resolvable throughout: a refTx racing the " +
+      "re-point reads the old tx") {
+    val root = freshRoot()
+    Transaction.publish(spark, root, Map("a" -> Seq(1).toDF("k")))
+    Transaction.publish(spark, root, Map("a" -> Seq(2).toDF("k")))
+    Transaction.tag(spark, root, "r", 0L)
+    var seen = Option.empty[Long]
+    planting { (_, dest) =>
+      if (dest.getName == "r") seen = Some(Transaction.refTx(spark, root, "r"))
+    } {
+      Transaction.tag(spark, root, "r", 1L)
+    }
+    assert(seen.contains(0L))
+    assert(Transaction.refTx(spark, root, "r") == 1L)
+  }
 
   // ---- tx-root fsck (round 13) --------------------------------------
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -11,9 +11,13 @@ import graft.model.DerivedColumn
   *
   * Spark cannot overwrite a path that feeds the plan being written
   * (self-referencing read→overwrite, as the merge-upsert does), so every
-  * in-place rewrite stages to a sibling temp dir and swaps via a
-  * filesystem rename. Single-runner semantics — matching the reference's
-  * strictly sequential job loop (`pull_raw/__main__.py:142`) — make the
+  * in-place rewrite stages to a sibling `__staging_*` dir and ends in
+  * one aside swap ([[swapIn]]): the original moves aside to
+  * `__replaced_*`, the staged copy takes its name through
+  * [[graft.sources.Commit.placeDir]] (never landing inside a dir that
+  * appeared there meanwhile), and only then is the original dropped.
+  * Single-runner semantics — matching the reference's strictly
+  * sequential job loop (`pull_raw/__main__.py:142`) — make the
   * non-transactional swap acceptable; on a real cluster the same code
   * works on HDFS/S3A (rename is cheap on HDFS, copy on S3 — a lakehouse
   * table format would replace this seam, not the operators above it).
@@ -52,7 +56,7 @@ object ParquetIO {
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val suffix = java.util.UUID.randomUUID().toString.take(8)
     val tmp = new Path(path + "__staging_" + suffix)
-    val parts = if (df.isEmpty) Nil else partitionCols
+    val parts = if (partitionCols.isEmpty || df.isEmpty) Nil else partitionCols
     val clustered =
       if (parts.isEmpty) df
       else df.repartition(parts.map(org.apache.spark.sql.functions.col): _*)
@@ -69,29 +73,51 @@ object ParquetIO {
         .partitionBy(parts: _*).parquet(tmp.toString)
       beforeSwap()
     } catch { case e: Throwable => fs.delete(tmp, true); throw e }
-    // Swap phase: the original is renamed ASIDE — never deleted — before
-    // the staged copy moves in, so no single failure leaves zero copies.
-    // The aside dir is dropped only once the new copy is in place; if
-    // the swap-in fails the original is renamed back and staging is
-    // cleaned (the rewrite is re-runnable). Only the double failure
-    // (swap-in AND restore) leaves artifacts, and then BOTH full copies
-    // survive at the paths named in the exception.
     val aside = new Path(path + "__replaced_" + suffix)
-    val hadTarget = fs.exists(target)
-    if (hadTarget && !fs.rename(target, aside)) {
-      fs.delete(tmp, true)
-      throw new java.io.IOException(s"rename $target -> $aside failed")
+    swapIn(fs, tmp, aside, "new data", Seq((tmp, target, aside)))
+  }
+
+  /** The aside swap every staged rewrite ends with. For each
+    * `(staged, dest, aside)` in order, skipping a `staged` the write
+    * did not produce: an existing `dest` moves to `aside` — never
+    * deleted before its replacement is in place, so no single failure
+    * leaves zero copies — then `staged` takes the name `dest`
+    * ([[graft.sources.Commit.placeDir]]), then the original is dropped.
+    * A refused or failed placement moves the original back and throws
+    * "(original restored)": the rewrite is re-runnable. Only the double
+    * failure (placement AND restore) keeps both copies, `staging`
+    * included, at the paths the exception names (`what` says what the
+    * staged copy holds). `staging` is dropped in every other case, and
+    * `asideRoot` once it is empty.
+    */
+  private[operators] def swapIn(fs: FileSystem, staging: Path,
+      asideRoot: Path, what: String, moves: Seq[(Path, Path, Path)]): Unit = {
+    def move(from: Path, to: Path) =
+      try graft.sources.Commit.placeDir(fs, from, to)
+      catch { case _: java.io.IOException => false }
+    var keepStaging = false
+    try moves.foreach { case (staged, dest, aside) =>
+      if (fs.exists(staged)) {
+        val had = fs.exists(dest)
+        if (had && !move(dest, aside))
+          throw new java.io.IOException(s"rename $dest -> $aside failed")
+        if (!move(staged, dest)) {
+          if (had && !move(aside, dest)) {
+            keepStaging = true
+            throw new java.io.IOException(s"rename $staged -> $dest failed " +
+              s"AND restore failed: original preserved at $aside, " +
+              s"$what at $staged")
+          }
+          throw new java.io.IOException(
+            s"rename $staged -> $dest failed (original restored)")
+        }
+        if (had) fs.delete(aside, true)
+      }
+    } finally {
+      if (!keepStaging) fs.delete(staging, true)
+      if (fs.exists(asideRoot) && fs.listStatus(asideRoot).isEmpty)
+        fs.delete(asideRoot, true)
     }
-    graft.sources.Commit.placeBarrier(tmp, target)
-    if (!fs.rename(tmp, target)) {
-      if (hadTarget && !fs.rename(aside, target))
-        throw new java.io.IOException(s"rename $tmp -> $target failed AND " +
-          s"restore failed: original preserved at $aside, new data at $tmp")
-      fs.delete(tmp, true)
-      throw new java.io.IOException(s"rename $tmp -> $target failed " +
-        "(original restored)")
-    }
-    if (hadTarget) fs.delete(aside, true)
   }
 
   /** Garbage-collect orphaned swap artifacts beside `path`. The staged
@@ -352,12 +378,10 @@ object Ops {
     * the swaps so that a partial failure always leaves a state from
     * which re-running the same merge converges.
     *
-    * Same no-zero-copies policy as [[ParquetIO.overwriteSafe]]: the
-    * original partition dir is renamed aside, never deleted, until its
-    * replacement is in place. A failed partial swap leaves every
-    * original intact (in place or restored); only the swap-in+restore
-    * double failure preserves the staging dir, with both copies' paths
-    * in the exception.
+    * The swap is [[ParquetIO.swapIn]]'s: a failed partial swap leaves
+    * every original intact (in place or restored); only the
+    * swap-in+restore double failure preserves the staging dir, with
+    * both copies' paths in the exception.
     */
   private def stagePartitionSwap(spark: SparkSession, targetPath: String,
       df: DataFrame, partitionCol: String, dirNames: Seq[String]): Unit = {
@@ -370,36 +394,8 @@ object Ops {
       .parquet(tmp.toString)
     catch { case e: Throwable => fs.delete(tmp, true); throw e }
     val asideRoot = new Path(targetPath + "__replaced_" + suffix)
-    var preserveStaging = false
-    try dirNames.foreach { dir =>
-      val src = new Path(tmp, dir)
-      val dst = new Path(root, dir)
-      if (fs.exists(src)) {
-        val aside = new Path(asideRoot, dir)
-        val had = fs.exists(dst)
-        if (had) {
-          fs.mkdirs(asideRoot)
-          if (!fs.rename(dst, aside))
-            throw new java.io.IOException(s"rename $dst -> $aside failed")
-        }
-        graft.sources.Commit.placeBarrier(src, dst)
-        if (!fs.rename(src, dst)) {
-          if (had && !fs.rename(aside, dst)) {
-            preserveStaging = true
-            throw new java.io.IOException(s"rename $src -> $dst failed " +
-              s"AND restore failed: original preserved at $aside, " +
-              s"merged data at $src")
-          }
-          throw new java.io.IOException(s"rename $src -> $dst failed " +
-            "(original restored)")
-        }
-        if (had) fs.delete(aside, true)
-      }
-    } finally {
-      if (!preserveStaging) fs.delete(tmp, true)
-      if (fs.exists(asideRoot) && fs.listStatus(asideRoot).isEmpty)
-        fs.delete(asideRoot, true)
-    }
+    ParquetIO.swapIn(fs, tmp, asideRoot, "merged data", dirNames.map(dir =>
+      (new Path(tmp, dir), new Path(root, dir), new Path(asideRoot, dir))))
   }
 
   /** Small-file compaction for a hive-partitioned target — the
@@ -437,13 +433,6 @@ object Ops {
     val inferWas = spark.conf.get(inferKey)
     val suffix = java.util.UUID.randomUUID().toString.take(8)
     val tmp = new Path(targetPath + "__staging_" + suffix)
-    // Aside-swap per directory (the overwriteSafe policy): originals are
-    // renamed aside — never deleted — until the compacted copy is in
-    // place, so no failure leaves a partition with zero copies. The
-    // aside root sits OUTSIDE the table root: a dir named
-    // "<col>=v__old" under the root would parse as a phantom partition.
-    val asideRoot = new Path(targetPath + "__replaced_" + suffix)
-    var preserveStaging = false
     try {
       spark.conf.set(inferKey, "false")
       val df = spark.read.option("basePath", targetPath)
@@ -451,37 +440,15 @@ object Ops {
       // one task per directory ⇒ one file per directory
       df.repartition(col(partitionCol)).write.partitionBy(partitionCol)
         .mode("overwrite").parquet(tmp.toString)
-      small.foreach { d =>
-        val name = d.getPath.getName
-        val src = new Path(tmp, name)
-        if (fs.exists(src)) {
-          val aside = new Path(asideRoot, name)
-          fs.mkdirs(asideRoot)
-          if (!fs.rename(d.getPath, aside))
-            throw new java.io.IOException(
-              s"rename ${d.getPath} -> $aside failed")
-          graft.sources.Commit.placeBarrier(src, d.getPath)
-          if (!fs.rename(src, d.getPath)) {
-            if (!fs.rename(aside, d.getPath)) {
-              preserveStaging = true
-              throw new java.io.IOException(s"rename $src -> ${d.getPath} " +
-                s"failed AND restore failed: original preserved at $aside, " +
-                s"compacted data at $src")
-            }
-            throw new java.io.IOException(
-              s"rename $src -> ${d.getPath} failed (original restored)")
-          }
-          fs.delete(aside, true)
-        }
-      }
-    } finally {
-      spark.conf.set(inferKey, inferWas)
-      // staged copies are recomputable whenever every original is in
-      // place or restored; only the double-failure path keeps them
-      if (!preserveStaging) fs.delete(tmp, true)
-      if (fs.exists(asideRoot) && fs.listStatus(asideRoot).isEmpty)
-        fs.delete(asideRoot, true)
-    }
+    } catch { case e: Throwable => fs.delete(tmp, true); throw e }
+    finally spark.conf.set(inferKey, inferWas)
+    // the aside root sits OUTSIDE the table root: a dir named
+    // "<col>=v__old" under the root would parse as a phantom partition
+    val asideRoot = new Path(targetPath + "__replaced_" + suffix)
+    ParquetIO.swapIn(fs, tmp, asideRoot, "compacted data", small.toSeq.map { d =>
+      val name = d.getPath.getName
+      (new Path(tmp, name), d.getPath, new Path(asideRoot, name))
+    })
     small.length
   }
 

@@ -25,14 +25,16 @@ import graft.sources.{Commit, GraftSink, Integrity}
   * plus the root's promote fence marker (see [[promote]]).
   *
   * The commit point is the manifest's exclusive publish
-  * ([[Commit.place]]): data dirs stage under `__staging_*` and rename
-  * into place FIRST (invisible to readers — readers resolve paths only
-  * through committed manifests), then the manifest itself stages and
-  * is placed in `_commits/` only if its id is free. A crash
-  * anywhere before it leaves orphan `t<txId>` dirs that no manifest
-  * references; the next publish at the same txId deletes and re-stages
-  * them (they are uncommitted by construction — their txId is absent
-  * from `_commits`).
+  * ([[Commit.place]]): data dirs stage under `__staging_*` and take
+  * their `t<txId>` names FIRST through [[Commit.placeDir]], which
+  * never lands inside a dir already there (invisible to readers —
+  * readers resolve paths only through committed manifests), then the
+  * manifest itself stages and is placed in `_commits/` only if its id
+  * is free. A crash anywhere before it leaves orphan `t<txId>` dirs
+  * that no manifest references. A publish whose placement meets one
+  * drops it and places once more (it is uncommitted by construction —
+  * its txId is absent from `_commits`); [[syncTo]] instead accepts
+  * only a dir holding the bytes it syncs.
   *
   * Unchanged tables are NOT rewritten: the new manifest carries the
   * previous table→version entries forward, so a 100-table warehouse
@@ -43,7 +45,7 @@ import graft.sources.{Commit, GraftSink, Integrity}
   * (or a CAS-capable store) under `_commits/`.
   *
   * CONTENT INTEGRITY: every version dir carries an [[Integrity]]
-  * sidecar, written into the staging dir BEFORE the rename, so the
+  * sidecar, written into the staging dir BEFORE its placement, so the
   * sidecar is atomic with the data it describes and immutable with
   * it. [[syncTo]] verifies
   * every byte it copies against the sidecar in-stream (the copy
@@ -79,22 +81,12 @@ object Transaction {
       .sorted
   }
 
-  private def readSmall(spark: SparkSession, p: Path): Array[Byte] = {
-    val fs = fsOf(spark, p)
-    val in = fs.open(p)
-    try {
-      val out = new java.io.ByteArrayOutputStream()
-      org.apache.hadoop.io.IOUtils.copyBytes(in, out, 4096, false)
-      out.toByteArray
-    } finally in.close()
-  }
-
   private def manifestBytes(spark: SparkSession, root: String,
       tx: Long): Array[Byte] = {
     val p = new Path(commitsDir(root), s"tx$tx.json")
     require(fsOf(spark, p).exists(p),
       s"transaction $tx not committed under $root")
-    readSmall(spark, p)
+    Integrity.readSmall(fsOf(spark, p), p)
   }
 
   private val manifestMemoMax = 4096
@@ -126,7 +118,7 @@ object Transaction {
     val key = (p.toString, st.getLen, st.getModificationTime)
     val got = manifestMemo.get(key)
     if (got != null) return got
-    val s = new String(readSmall(spark, p), StandardCharsets.UTF_8)
+    val s = new String(Integrity.readSmall(fs, p), StandardCharsets.UTF_8)
     val parsed = "\"([^\"]+)\"\\s*:\\s*(\\d+)".r.findAllMatchIn(s)
       .map(m => m.group(1) -> m.group(2).toLong).toMap
     if (manifestMemo.size >= manifestMemoMax) manifestMemo.clear()
@@ -149,7 +141,7 @@ object Transaction {
   /** Atomically publish `tables` as one transaction; any table NOT in
     * the map carries forward from the previous transaction. Returns
     * the committed txId. Every staged version dir is stamped with its
-    * [[Integrity]] sidecar before its rename, so replication and
+    * [[Integrity]] sidecar before its placement, so replication and
     * [[fsck]] can verify the member's content forever after.
     *
     * A table name is a directory under the root and a manifest key, so
@@ -178,20 +170,15 @@ object Transaction {
         df.write.mode("overwrite").parquet(tmp.toString)
         // the sidecar lands INSIDE the staged dir — atomic with the data
         Integrity.stamp(spark, tmp.toString)
+        // a dir already at t<txId> is uncommitted by construction (txId
+        // is not in _commits): a crashed publish's or a fenced sync's
+        // leftover. Dropped, and placed once more; a second refusal
+        // fails the publish.
+        if (!Commit.placeDir(fs, tmp, dest) &&
+            { fs.delete(dest, true); !Commit.placeDir(fs, tmp, dest) })
+          throw new java.io.IOException(s"publish: rename $tmp -> $dest " +
+            "failed (a dir took the name again)")
       } catch { case e: Throwable => fs.delete(tmp, true); throw e }
-      // leftover from a crashed publish (or a fenced sync) at this txId
-      // is uncommitted by construction (txId is not in _commits) — safe
-      // to drop. Dropped right before the rename: a dir renamed onto an
-      // existing one lands INSIDE it, so a leftover that appeared while
-      // this member was written would hide it.
-      if (fs.exists(dest)) fs.delete(dest, true)
-      fs.mkdirs(dest.getParent)
-      Commit.placeBarrier(tmp, dest)
-      if (!fs.rename(tmp, dest)) {
-        fs.delete(tmp, true)
-        throw new java.io.IOException(
-          s"publish: rename $tmp -> $dest failed")
-      }
     }
     // commit point: the manifest's exclusive publish
     val entries = prev ++ tables.keys.map(_ -> txId)
@@ -305,8 +292,8 @@ object Transaction {
     * transaction layer exists to prevent: a replica serving facts
     * from tx2 beside a summary from tx1. Here every member table's
     * pinned version dir copies FIRST (distributed, one task per file;
-    * dirs stage and rename whole, so a crash mid-copy never leaves a
-    * half dir that a retry would skip as present), and the
+    * dirs stage and are placed whole, so a crash mid-copy never leaves
+    * a half dir that a retry would skip as present), and the
     * transaction manifest publishes LAST as the single commit point —
     * a replica reader resolves only committed manifests, so it sees
     * all tables at tx N or all at the previous sync, never a blend.
@@ -331,7 +318,7 @@ object Transaction {
     * fence). The check is O(1) manifest reads however many tables.
     *
     * Incremental by construction: a version dir the replica already
-    * holds is a COMMITTED whole (rename-atomic), so it never
+    * holds is a COMMITTED whole (placed atomically), so it never
     * re-copies — syncing tx N after tx N−1 copies only the tables
     * tx N actually rewrote (carry-forward entries are already
     * there). Re-syncing an already-synced tx is a no-op. Returns the
@@ -416,18 +403,20 @@ object Transaction {
       val d = new Path(r, s"$t/t$v")
       Integrity.readSidecar(fsOf(spark, d), d)
     }
+    def diverges(t: String, v: Long) =
+      sidecar(srcRoot, t, v) != sidecar(dstRoot, t, v)
+    def refuseDivergent(dirs: Seq[(String, Long)]): Nothing = sys.error(
+      s"transaction: replica $dstRoot holds " +
+        dirs.map { case (t, v) => s"$t/t$v" }.mkString(", ") +
+        " with content that diverges from the source (local " +
+        "transactions at a promoted root?). Refusing to blend " +
+        "histories; force=true discards the divergent members, or " +
+        "re-replicate to a fresh directory")
     val divergentDirs = m.toSeq.sortBy(_._1).filter { case (t, v) =>
-      fs.exists(new Path(dstRoot, s"$t/t$v")) &&
-        sidecar(srcRoot, t, v) != sidecar(dstRoot, t, v)
+      fs.exists(new Path(dstRoot, s"$t/t$v")) && diverges(t, v)
     }
     if (divergentDirs.nonEmpty) {
-      if (!force) sys.error(
-        s"transaction: replica $dstRoot holds " +
-          divergentDirs.map { case (t, v) => s"$t/t$v" }.mkString(", ") +
-          " with content that diverges from the source (local " +
-          "transactions at a promoted root?). Refusing to blend " +
-          "histories; force=true discards the divergent members, or " +
-          "re-replicate to a fresh directory")
+      if (!force) refuseDivergent(divergentDirs)
       divergentDirs.foreach { case (t, v) =>
         fs.delete(new Path(dstRoot, s"$t/t$v"), true)
         System.err.println(s"transaction: force sync re-copies $t/t$v " +
@@ -442,8 +431,8 @@ object Transaction {
       spark.sparkContext.hadoopConfiguration)
     // (table, version) dirs the replica lacks (divergent ones were
     // just deleted under force) — each stages under a sync-scoped
-    // dir, files fan out cluster-wide, then ONE rename per dir makes
-    // it whole-or-absent
+    // dir, files fan out cluster-wide, then ONE placement per dir
+    // makes it whole-or-absent
     val needed = m.toSeq.sortBy(_._1).filter { case (t, v) =>
       !fs.exists(new Path(dstRoot, s"$t/t$v")) }
     if (needed.isEmpty && fs.exists(already)) {
@@ -492,29 +481,21 @@ object Transaction {
     }
     // fence AGAIN once the copy is done, before anything lands under
     // the replica's own names: shrinks the promote-races-an-in-flight-
-    // sync window from the whole copy duration to the renames, and a
+    // sync window from the whole copy duration to the placements, and a
     // sync fenced here leaves no member dir behind for a local publish
     // at the same id to meet
     if (!force && isPromoted(spark, dstRoot)) {
       fs.delete(stagingRoot, true)
       fenceCheck()
     }
-    needed.foreach { case (t, v) =>
-      val dest = new Path(dstRoot, s"$t/t$v")
-      fs.mkdirs(dest.getParent)
-      Commit.placeBarrier(new Path(stagingRoot, s"$t/t$v"), dest)
-      if (!fs.rename(new Path(stagingRoot, s"$t/t$v"), dest) &&
-          !fs.exists(dest)) {
-        // a racing sync of the same/later tx placing the SAME
-        // immutable (table, version) content loses the rename
-        // benignly — only a rename that leaves the dest ABSENT is
-        // a real failure
-        fs.delete(stagingRoot, true)
-        throw new java.io.IOException(
-          s"syncTo: rename of $t/t$v into $dstRoot failed")
-      }
-    }
-    fs.delete(stagingRoot, true)
+    // a refused placement is benign only when the dir at the name holds
+    // the synced bytes — what a racing sync of the same (table,
+    // version) leaves; anything else is another history's member
+    try needed.foreach { case (t, v) =>
+      if (!Commit.placeDir(fs, new Path(stagingRoot, s"$t/t$v"),
+          new Path(dstRoot, s"$t/t$v")) && diverges(t, v))
+        refuseDivergent(Seq(t -> v))
+    } finally fs.delete(stagingRoot, true)
     // commit point: the tx manifest lands LAST, through the same
     // exclusive publish as publish()
     val bytes = manifestBytes(spark, srcRoot, id)
@@ -581,7 +562,7 @@ object Transaction {
     * ref carries whenever the replica has that tx committed; a ref
     * pinning a tx the replica never synced is skipped (it cannot pin
     * what it does not hold). Re-points follow the source (tag() is
-    * an atomic rename); carry failures warn loudly naming the ref.
+    * an atomic replace); carry failures warn loudly naming the ref.
     */
   private def carryRefs(spark: SparkSession, srcRoot: String,
       dstRoot: String): Unit = {
@@ -611,7 +592,8 @@ object Transaction {
     * release a model trained on, the audited month-end, the state a
     * backfill should reproduce. A ref is one tiny file whose content
     * is the txId; re-tagging moves the name atomically (staged write +
-    * rename). Refs also act as GC roots for [[vacuum]].
+    * [[Commit.replace]]), so a reader — [[vacuum]] listing its GC roots
+    * among them — resolves the old tx or the new one, never none.
     */
   def tag(spark: SparkSession, root: String, name: String,
       tx: Long): Unit = {
@@ -623,12 +605,8 @@ object Transaction {
     val fs = fsOf(spark, dest)
     val tmp = Commit.stage(fs, Commit.Tx, dest,
       tx.toString.getBytes(StandardCharsets.UTF_8))
-    fs.delete(dest, false) // re-tag: move the name
-    Commit.placeBarrier(tmp, dest)
-    if (!fs.rename(tmp, dest)) {
-      fs.delete(tmp, false)
+    if (!Commit.replace(fs, tmp, dest))
       throw new java.io.IOException(s"tag: rename to $dest failed")
-    }
   }
 
   /** Resolve a ref name to its txId. */
@@ -636,12 +614,7 @@ object Transaction {
     val p = new Path(refsDir(root), name)
     val fs = fsOf(spark, p)
     require(fs.exists(p), s"no ref '$name' under $root")
-    val in = fs.open(p)
-    try {
-      val out = new java.io.ByteArrayOutputStream()
-      org.apache.hadoop.io.IOUtils.copyBytes(in, out, 4096, false)
-      new String(out.toByteArray, StandardCharsets.UTF_8).trim.toLong
-    } finally in.close()
+    new String(Integrity.readSmall(fs, p), StandardCharsets.UTF_8).trim.toLong
   }
 
   /** Read `table` as of the tagged transaction. */

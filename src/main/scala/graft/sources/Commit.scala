@@ -3,7 +3,7 @@ package graft.sources
 import java.nio.charset.StandardCharsets
 import java.nio.file.{FileAlreadyExistsException, Files, Paths, StandardCopyOption}
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
 
 /** The commit kernel shared by the two versioned layers with a commit
   * point of their own — graftsink ([[GraftSink]], one manifest per
@@ -13,18 +13,31 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * small file, the version-floor markers and the promote fence live
   * here once.
   *
-  * EXCLUSIVE PUBLISH ([[stage]] then [[place]]): the bytes are written
-  * whole to a staging file in the layer's staging spot, then placed
-  * at the final name only if that name does not exist — a hard link
-  * on `file:` (kernel EEXIST: exactly one winner, and the content is
-  * complete the instant the name exists) and a no-overwrite rename
-  * elsewhere. Neither `create(overwrite = false)` (exists-check then
-  * open on a local filesystem: two racers can both win) nor a local
-  * `rename` (Hadoop's `LocalFileSystem` replaces an existing target)
-  * is exclusive. A Hadoop `.crc` written beside the staging file
-  * follows it to the final name, so a checksummed filesystem keeps
-  * checking every later read. A crashed publisher leaves only a
-  * staging file for the layer's vacuum.
+  * PLACEMENT: everything staged takes its final name here. On `file:`
+  * no placement uses Hadoop's `rename`: `LocalFileSystem` replaces an
+  * existing target file and moves a directory INSIDE an existing one
+  * (its copy fallback), reporting success either way.
+  *  - A FILE ([[stage]] then [[place]]): the bytes are written whole
+  *    to a staging file in the layer's staging spot, then placed at
+  *    the final name only if that name does not exist — a hard link on
+  *    `file:` (kernel EEXIST: exactly one winner, and the content is
+  *    complete the instant the name exists) and a no-overwrite rename
+  *    elsewhere. `create(overwrite = false)` is not exclusive either
+  *    (exists-check then open on a local filesystem: two racers can
+  *    both win). A crashed publisher leaves only a staging file for
+  *    the layer's vacuum.
+  *  - A DIRECTORY ([[placeDir]]): takes its final name only if that
+  *    name holds nothing, and never lands inside an existing dir —
+  *    rename(2) on `file:` (refuses a non-empty target, replaces an
+  *    empty one), a no-overwrite `FileContext` rename elsewhere. The
+  *    caller decides what a refusal means.
+  *  - A REPLACEMENT ([[replace]]): a staged file takes a name that
+  *    may exist in one atomic step, so a reader sees the old bytes or
+  *    the new ones and never neither.
+  * A Hadoop `.crc` written beside a staged file follows it to the
+  * final name (a replacement drops the old one first), so a
+  * checksummed filesystem keeps checking every later read and never
+  * pairs new bytes with an old checksum.
   *
   * VERSION FLOORS: deleting a committed manifest vacates its id, and
   * the next claim computed from the remaining head would re-mint it
@@ -57,9 +70,9 @@ private[graft] object Commit {
   final case class Layer(floorPrefix: String, floorName: Long => String,
       staging: Path => Path)
 
-  /** Test seam: runs right before a placement's move, with the staged
-    * path and its final name. A spec plants a racer at the final name
-    * HERE. No-op in production.
+  /** Test seam: runs right before the move of a [[placeDir]] or a
+    * [[replace]], with the staged path and its final name. A spec
+    * plants a racer at the final name HERE. No-op in production.
     */
   private[graft] var placeBarrier: (Path, Path) => Unit = (_, _) => ()
 
@@ -90,26 +103,80 @@ private[graft] object Commit {
     tmp
   }
 
+  private def isLocal(fs: FileSystem) =
+    "file".equalsIgnoreCase(fs.getUri.getScheme)
+
+  private def local(fs: FileSystem, p: Path) =
+    Paths.get(fs.makeQualified(p).toUri.getPath)
+
+  /** The Hadoop checksum file beside `p`, on `file:`. */
+  private def crc(fs: FileSystem, p: Path) =
+    local(fs, new Path(p.getParent, s".${p.getName}.crc"))
+
+  /** Move `tmp`'s `.crc`, if any, to `dst`'s. */
+  private def carryCrc(fs: FileSystem, tmp: Path, dst: Path): Unit =
+    if (Files.exists(crc(fs, tmp)))
+      Files.move(crc(fs, tmp), crc(fs, dst), StandardCopyOption.REPLACE_EXISTING)
+
   /** Give staged `tmp` the name `dst` unless `dst` exists. True: this
     * call placed it; false: `dst` was already there. `tmp` is gone
     * either way.
     */
   def place(fs: FileSystem, tmp: Path, dst: Path): Boolean = {
     val won =
-      if ("file".equalsIgnoreCase(fs.getUri.getScheme)) {
-        def local(p: Path) = Paths.get(fs.makeQualified(p).toUri.getPath)
-        def crc(p: Path) = local(new Path(p.getParent, s".${p.getName}.crc"))
+      if (isLocal(fs))
         try {
-          Files.createLink(local(dst), local(tmp))
-          if (Files.exists(crc(tmp)))
-            Files.move(crc(tmp), crc(dst), StandardCopyOption.REPLACE_EXISTING)
+          Files.createLink(local(fs, dst), local(fs, tmp))
+          carryCrc(fs, tmp, dst)
           true
         } catch { case _: FileAlreadyExistsException => false }
-      } else
+      else
         try fs.rename(tmp, dst)
         catch { case _: java.io.IOException => false }
     fs.delete(tmp, false)
     won
+  }
+
+  /** One atomic move of `from` to `to`: rename(2) on `file:` (it
+    * replaces a file or an empty dir and refuses a non-empty dir), a
+    * `FileContext` rename that may or may not `overwrite` elsewhere.
+    */
+  private def move(fs: FileSystem, from: Path, to: Path,
+      overwrite: Boolean): Unit = {
+    placeBarrier(from, to)
+    if (isLocal(fs))
+      Files.move(local(fs, from), local(fs, to), StandardCopyOption.ATOMIC_MOVE)
+    else FileContext.getFileContext(fs.getUri, fs.getConf).rename(from, to,
+      if (overwrite) Options.Rename.OVERWRITE else Options.Rename.NONE)
+  }
+
+  /** Give staged directory `staged` the name `dest` only if that name
+    * holds nothing (on `file:` an empty dir there is replaced), never
+    * moving it INSIDE an existing dir; `dest`'s parent is created.
+    * True: placed. False: `dest` holds something, and `staged` stays
+    * where it is. Any other failure throws.
+    */
+  def placeDir(fs: FileSystem, staged: Path, dest: Path): Boolean = {
+    fs.mkdirs(dest.getParent)
+    try { move(fs, staged, dest, overwrite = false); true }
+    catch { case e: java.io.IOException =>
+      if (fs.exists(dest)) false else throw e }
+  }
+
+  /** Give staged file `tmp` the name `dst` in one atomic step, whether
+    * or not `dst` exists. True: `dst` holds `tmp`'s bytes; false: the
+    * move failed. `tmp` is gone either way.
+    */
+  def replace(fs: FileSystem, tmp: Path, dst: Path): Boolean = {
+    val moved =
+      try {
+        if (isLocal(fs)) Files.deleteIfExists(crc(fs, dst))
+        move(fs, tmp, dst, overwrite = true)
+        if (isLocal(fs)) carryCrc(fs, tmp, dst)
+        true
+      } catch { case _: java.io.IOException => false }
+    if (!moved) fs.delete(tmp, false)
+    moved
   }
 
   /** [[stage]] then [[place]]. */

@@ -208,11 +208,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       newIdent: Identifier): Unit = {
     val src = new Path(dirFor(oldIdent))
     if (!isTableDir(src)) throw new NoSuchTableException(oldIdent)
-    val dst = new Path(dirFor(newIdent))
-    if (fs.exists(dst)) throw new TableAlreadyExistsException(newIdent)
-    fs.mkdirs(dst.getParent)
-    if (!fs.rename(src, dst))
-      sys.error(s"graftsink: rename $src -> $dst failed")
+    if (!Commit.placeDir(fs, src, new Path(dirFor(newIdent))))
+      throw new TableAlreadyExistsException(newIdent)
   }
 
   // ---- stored procedures (maintenance surface) ----

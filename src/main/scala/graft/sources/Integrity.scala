@@ -115,21 +115,25 @@ private[graft] object Integrity {
       dir: Path): Option[Map[String, (Long, String)]] = {
     val p = new Path(dir, Sidecar)
     if (!fs.exists(p)) None
-    else Some(readSmall(fs, p).split("\n").iterator.filter(_.nonEmpty)
+    else Some(readText(fs, p).split("\n").iterator.filter(_.nonEmpty)
       .map { l =>
         val a = l.split("\t", -1)
         a(0) -> ((a(1).toLong, a(2)))
       }.toMap)
   }
 
-  private def readSmall(fs: FileSystem, p: Path): String = {
+  /** The whole content of small file `p`. */
+  def readSmall(fs: FileSystem, p: Path): Array[Byte] = {
     val in = fs.open(p)
     try {
       val o = new java.io.ByteArrayOutputStream()
       org.apache.hadoop.io.IOUtils.copyBytes(in, o, 4096, false)
-      new String(o.toByteArray, StandardCharsets.UTF_8)
+      o.toByteArray
     } finally in.close()
   }
+
+  private def readText(fs: FileSystem, p: Path): String =
+    new String(readSmall(fs, p), StandardCharsets.UTF_8)
 
   /** Executor-side VERIFIED byte copy for replication: streams src→dst
     * folding XXH64 over the same buffers, then re-hashes the LANDED
@@ -142,9 +146,10 @@ private[graft] object Integrity {
     * legacy, copied unverified. The staging name is UNIQUE PER ATTEMPT,
     * so a speculative or retried task never truncates another attempt's
     * in-progress bytes out from under its verification; losers are
-    * `.`-hidden for vacuum, and losing the final rename to a racing
-    * copy of the same immutable file is benign when the destination
-    * exists. `label` prefixes every error (`graftsink`, `transaction`).
+    * `.`-hidden for vacuum, and the final step replaces
+    * ([[Commit.replace]]): a racing copy of the same immutable file
+    * landing before or after is benign. `label` prefixes every error
+    * (`graftsink`, `transaction`).
     */
   def copyVerified(conf: Configuration, from: Path, to: Path,
       expect: String, label: String): Unit = {
@@ -182,12 +187,9 @@ private[graft] object Integrity {
           "corrupted the write; retry, and check the destination volume")
       }
     }
-    if (df.exists(to)) df.delete(to, false) // re-copy: overwrite
-    if (!df.rename(tmp, to)) {
-      df.delete(tmp, false)
-      if (!df.exists(to))
-        sys.error(s"$label: replication copy rename to $to failed")
-    }
+    // a re-copy replaces
+    if (!Commit.replace(df, tmp, to) && !df.exists(to))
+      sys.error(s"$label: replication copy rename to $to failed")
   }
 
   /** One file to check: its recorded size (−1 = unknown, skip the size
@@ -260,7 +262,7 @@ private[graft] object Integrity {
   def readWatermark(fs: FileSystem, dir: Path, key: String): Long = {
     val p = new Path(dir, DeepVerified)
     if (!fs.exists(p)) -1L
-    else try readSmall(fs, p).split("\n").collectFirst {
+    else try readText(fs, p).split("\n").collectFirst {
         case l if l.startsWith(s"$key=") =>
           l.stripPrefix(s"$key=").trim.toLong
       }.getOrElse(-1L)
@@ -268,8 +270,9 @@ private[graft] object Integrity {
   }
 
   /** Stamp `dir`'s watermark at `id`: written to `tmp` (the layer's
-    * staging spot), then renamed over the old stamp. A racing stamp
-    * winning the rename is fine.
+    * staging spot), then put in place of the old stamp in one step
+    * ([[Commit.replace]]), so a reader always finds a stamp. A racing
+    * stamp landing last is fine.
     */
   def writeWatermark(fs: FileSystem, dir: Path, tmp: Path, key: String,
       id: Long): Unit = {
@@ -278,8 +281,6 @@ private[graft] object Integrity {
     try out.write(s"$key=$id\natMs=${System.currentTimeMillis()}\n"
       .getBytes(StandardCharsets.UTF_8))
     finally out.close()
-    val dst = new Path(dir, DeepVerified)
-    fs.delete(dst, false)
-    if (!fs.rename(tmp, dst)) fs.delete(tmp, false)
+    Commit.replace(fs, tmp, new Path(dir, DeepVerified))
   }
 }

@@ -5,10 +5,12 @@
 #
 # Runs, in order: (1) the full ScalaTest suite, (1b) the pipeline demo
 # (graft.tools.PipelineDemo, the one main that drives the runner's CLI
-# options), (1c) the commit specs (TransactionSpec, CloneSpec,
-# GraftSinkConflictSpec) again with `file:` on Hadoop's own
-# LocalFileSystem, whose rename replaces an existing target (the suite
-# otherwise runs on whatever hive-exec puts first), (2) graft.Verify at
+# options), (1c) the commit and placement specs (TransactionSpec,
+# CloneSpec, GraftSinkConflictSpec, OpsSpec, PartitionedMergeSpec)
+# again with `file:` on Hadoop's own LocalFileSystem, whose rename
+# replaces an existing target file and moves a dir INSIDE an existing
+# one (the suite otherwise runs on whatever hive-exec puts first),
+# (2) graft.Verify at
 # sf0.01 (parquet dumps + oracle_sql.json + tolerance bounds), (3) the
 # DuckDB oracle compare (driver-side tooling; skipped with a note when
 # duckdb isn't installed), (3b) the PLANS.lock diff gate, (3c) the
@@ -43,9 +45,9 @@ sbt -batch "runMain graft.tools.PipelineDemo $OUT/demo --select prices_usd --ful
   >"$OUT/pipeline_demo.log" 2>&1
 DEMO_RC=$?
 
-echo "[roundcheck] 1c/5 commit specs on LocalFileSystem"
+echo "[roundcheck] 1c/5 commit and placement specs on LocalFileSystem"
 sbt -batch 'set Test/javaOptions += "-Dspark.hadoop.fs.file.impl=org.apache.hadoop.fs.LocalFileSystem"' \
-  "testOnly graft.TransactionSpec graft.CloneSpec graft.GraftSinkConflictSpec" \
+  "testOnly graft.TransactionSpec graft.CloneSpec graft.GraftSinkConflictSpec graft.OpsSpec graft.PartitionedMergeSpec" \
   >"$OUT/commit_specs_localfs.log" 2>&1
 LOCALFS_RC=$?
 

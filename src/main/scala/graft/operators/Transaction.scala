@@ -148,6 +148,15 @@ object Transaction {
     * a name that is empty, contains `/`, `"` or `\`, or starts with
     * `_` (the root's own `_commits`, `_refs`, fence marker and
     * `__staging*`) or `.` is refused before anything is staged.
+    *
+    * DRIVER-RESIDENT MEMBERS: a member whose optimized plan is a
+    * `LocalRelation` (the runner's `etl_job` rows, any frame built from
+    * a `Seq`) launches no Spark job — it is written on the calling
+    * thread as one parquet file by Spark's own parquet writer
+    * ([[GraftSqlInternal.writeLocalParquet]]), then stamped inline and
+    * placed like any other member, so the layout, sidecar and commit
+    * protocol are the same; only the `_SUCCESS` marker is absent. Every
+    * other member is a `df.write`.
     */
   def publish(spark: SparkSession, root: String,
       tables: Map[String, DataFrame]): Long = {
@@ -167,7 +176,9 @@ object Transaction {
       val dest = new Path(new Path(rootP, name), s"t$txId")
       val tmp = Commit.Tx.staging(rootP)
       try {
-        df.write.mode("overwrite").parquet(tmp.toString)
+        // a driver-resident member is one file written on this thread
+        if (!GraftSqlInternal.writeLocalParquet(df, tmp))
+          df.write.mode("overwrite").parquet(tmp.toString)
         // the sidecar lands INSIDE the staged dir — atomic with the data
         Integrity.stamp(spark, tmp.toString)
         // a dir already at t<txId> is uncommitted by construction (txId

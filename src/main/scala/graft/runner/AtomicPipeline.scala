@@ -1,5 +1,9 @@
 package graft.runner
 
+import java.sql.Timestamp
+import java.time.Instant
+import java.time.temporal.ChronoUnit
+
 import scala.util.{Failure, Success, Try}
 
 import org.apache.spark.sql.{DataFrame, Encoders, Observation, SparkSession}
@@ -62,22 +66,36 @@ case class JobResult(jobName: String, rows: Long, fullRefresh: Boolean,
   * carries unchanged tables forward by reference, so a 100-table
   * warehouse pays O(1) metadata per job commit.
   *
-  * Spark jobs: only the watermark max, the fetch, the writes and the
-  * stamp of a multi-file data dir launch any. Every
-  * [[Transaction.read]] (the `etl_job` state, the current table) takes
-  * its schema from a parquet footer on this thread; a full refresh
-  * never reads the current table; the committed row count is an
-  * `Observation` on the data write; and the one-partition `etl_job`
-  * write is stamped inline ([[graft.sources.Integrity.stamp]]).
+  * Spark jobs: only the watermark max, the fetch, the data write, the
+  * stamp of a multi-file data dir and a read of `etl_job` (once per
+  * [[run]], in [[activeJobs]], and on a version change) launch any.
+  * The object holds the `etl_job` rows with the member version
+  * (the manifest entry's txId) it last read or committed them as, and
+  * every state update is the reference's single-row UPDATE on those
+  * rows, in place and in seeded order, with one driver `Instant` per
+  * commit for its timestamps; before each update the latest manifest's
+  * `etl_job` entry is compared with the held version, and only a
+  * different one (another writer committed state) is re-read, with one
+  * collect — a concurrent edit is never overwritten. The rows publish
+  * as a driver-resident member ([[Transaction.publish]]): one parquet
+  * file written and stamped on this thread, so the running marker and
+  * the failure record launch no job at all. Every
+  * [[Transaction.read]] (the current table, a re-read) takes its
+  * schema from a parquet footer on this thread; a full refresh never
+  * reads the current table; and the committed row count is an
+  * `Observation` on the data write.
   */
 class AtomicPipeline(spark: SparkSession, source: Source, root: String) {
   import spark.implicits._
 
   val StateTable = "etl_job"
 
-  def seed(jobs: Seq[EtlJob]): Unit =
-    Transaction.publish(spark, root,
-      Map(StateTable -> jobs.toDS.toDF.coalesce(1)))
+  /** The `etl_job` rows as last read or committed here, with the member
+    * version they are; see [[rows]].
+    */
+  private var held: Option[(Long, Seq[EtlJob])] = None
+
+  def seed(jobs: Seq[EtlJob]): Unit = commit(Map.empty, jobs)
 
   /** Seed from a CSV shaped like the reference's
     * `etl_system/etl_job.csv` (S4): header names are lowercased
@@ -94,23 +112,56 @@ class AtomicPipeline(spark: SparkSession, source: Source, root: String) {
 
   def state: DataFrame = Transaction.read(spark, root, StateTable)
 
-  def activeJobs: Seq[EtlJob] =
-    state.filter($"active" === 1).as[EtlJob].collect().toSeq
-
-  /** The state relation with one job's row transformed — the
-    * reference's single-row `UPDATE ... WHERE job_name = %s`
-    * (`pull_raw/utils.py:80-85`), minus the write (the caller owns the
-    * commit). One partition, so the control table lands as one file
-    * and its stamp hashes inline.
+  /** The run's metadata scan (the reference's `WHERE active = 1`): one
+    * read of the committed `etl_job` whatever is held, so each run
+    * starts from the table as it is on disk; the run's jobs then update
+    * the rows it read.
     */
-  private def stateWith(jobName: String,
-      set: DataFrame => DataFrame): DataFrame = {
-    val cur = state
-    set(cur.filter($"job_name" === jobName))
-      .unionByName(cur.filter($"job_name" =!= jobName ||
-        $"job_name".isNull))
-      .coalesce(1)
+  def activeJobs: Seq[EtlJob] = {
+    held = None
+    rows.filter(_.active == 1)
   }
+
+  /** The committed `etl_job` rows: the held ones while the latest
+    * manifest's `etl_job` entry is still the version they were read or
+    * committed as, else that version read once (one Spark collect) and
+    * held.
+    */
+  private def rows: Seq[EtlJob] = {
+    val last = Transaction.committedTxs(spark, root).lastOption
+    val version = last.flatMap(Transaction.manifest(spark, root, _).get(StateTable))
+    held match {
+      case Some((v, rs)) if version.contains(v) => rs
+      case _ =>
+        val rs = Transaction.read(spark, root, StateTable, last)
+          .as[EtlJob].collect().toSeq
+        held = version.map(_ -> rs)
+        rs
+    }
+  }
+
+  /** `cur` with one job's row transformed in place — the reference's
+    * single-row `UPDATE ... WHERE job_name = %s`
+    * (`pull_raw/utils.py:80-85`), minus the write (the caller owns the
+    * commit). Rows with a null `job_name` are kept as they are.
+    */
+  private def stateWith(cur: Seq[EtlJob], jobName: String)(
+      set: EtlJob => EtlJob): Seq[EtlJob] =
+    cur.map(r => if (r.job_name == jobName) set(r) else r)
+
+  /** Publish `data` and `state` (the `etl_job` member) as one
+    * transaction, and hold `state` at the committed version.
+    */
+  private def commit(data: Map[String, DataFrame],
+      state: Seq[EtlJob]): Unit = {
+    val tx = Transaction.publish(spark, root,
+      data + (StateTable -> state.toDS().toDF()))
+    held = Some((tx, state))
+  }
+
+  /** One commit's `current_timestamp()`, at the precision Spark keeps. */
+  private def now(): Option[Timestamp] =
+    Some(Timestamp.from(Instant.now().truncatedTo(ChronoUnit.MICROS)))
 
   private def tableNames: Set[String] =
     Transaction.committedTxs(spark, root).lastOption
@@ -120,14 +171,18 @@ class AtomicPipeline(spark: SparkSession, source: Source, root: String) {
   def runJob(spec: TableSpec): JobResult = runJob(spec, RunOptions())
 
   def runJob(spec: TableSpec, opts: RunOptions): JobResult = {
+    val current = rows
+    // no control row: nowhere to record the run, so nothing runs and
+    // nothing commits
+    if (!current.exists(_.job_name == spec.jobName))
+      return JobResult(spec.jobName, 0L, fullRefresh = false,
+        Some(s"no $StateTable row for job '${spec.jobName}' under $root"))
     // running marker: its own commit — "started, not finished" must be
     // visible before the work, and is a consistent pair with old data
-    Transaction.publish(spark, root, Map(StateTable ->
-      stateWith(spec.jobName, _
-        .withColumn("status", lit(EtlJob.Running))
-        .withColumn("start_ts", current_timestamp())
-        .withColumn("error_message", lit(null).cast("string"))
-        .withColumn("last_updated_ts", current_timestamp()))))
+    val started = now()
+    commit(Map.empty, stateWith(current, spec.jobName)(_.copy(
+      status = Some(EtlJob.Running), start_ts = started,
+      error_message = None, last_updated_ts = started)))
     val attempt = Try {
       val table = spec.targetTable
       val forcedFull = opts.fullRefresh || spec.strategy == FullRefresh
@@ -152,34 +207,30 @@ class AtomicPipeline(spark: SparkSession, source: Source, root: String) {
         if (doFull) shaped
         else Ops.mergeUpsertDf(existing, shaped, spec.pKeys)
       // the committed row count rides the data write itself
-      val rows = new Observation()
-      val done = stateWith(spec.jobName, _
-        .withColumn("status", lit(EtlJob.Done))
-        .withColumn("end_ts", current_timestamp())
-        .withColumn("last_updated_ts", current_timestamp()))
+      val observed = new Observation()
+      val ended = now()
       // THE commit: data and job state flip in one manifest rename
-      Transaction.publish(spark, root, Map(
-        table -> merged.observe(rows, count(lit(1)).as("rows")),
-        StateTable -> done))
-      (rows, doFull)
+      commit(Map(table -> merged.observe(observed, count(lit(1)).as("rows"))),
+        stateWith(rows, spec.jobName)(_.copy(status = Some(EtlJob.Done),
+          end_ts = ended, last_updated_ts = ended)))
+      (observed, doFull)
     }
     attempt match {
-      case Success((rows, doFull)) =>
+      case Success((observed, doFull)) =>
         // no read follows the commit point: the count was observed on
         // the write that landed, so nothing after the commit can fail
         // and publish status=Failed over data that DID land (the
         // (failed, new-data) pair this class exists to make impossible)
-        JobResult(spec.jobName, rows.get("rows").asInstanceOf[Long],
+        JobResult(spec.jobName, observed.get("rows").asInstanceOf[Long],
           doFull, None)
       case Failure(e) =>
         // error isolation: the failure record commits alone — the data
         // never did, so (failed, old data) is the truthful pair
-        Transaction.publish(spark, root, Map(StateTable ->
-          stateWith(spec.jobName, _
-            .withColumn("status", lit(EtlJob.Failed))
-            .withColumn("end_ts", current_timestamp())
-            .withColumn("error_message", lit(e.toString.take(2000)))
-            .withColumn("last_updated_ts", current_timestamp()))))
+        val failed = now()
+        commit(Map.empty, stateWith(rows, spec.jobName)(_.copy(
+          status = Some(EtlJob.Failed), end_ts = failed,
+          error_message = Some(e.toString.take(2000)),
+          last_updated_ts = failed)))
         JobResult(spec.jobName, 0L, fullRefresh = false,
           Some(e.toString))
     }

@@ -881,4 +881,65 @@ class TransactionSpec extends SparkSpec {
     Transaction.vacuum(spark, root, keep = 1, graceMs = 0L)
     assert(Transaction.committedTxs(spark, root) == Seq(3L))
   }
+
+  // ---- driver-resident members ---------------------------------------
+
+  test("a driver-resident member (its optimized plan a LocalRelation) " +
+      "publishes with no Spark job as one payload file plus _checksums, " +
+      "reads back exactly as the same frame written by Spark, deep-" +
+      "verifies, and replicates verified") {
+    import java.sql.{Date, Timestamp}
+    import org.apache.spark.graft.SparkJobs
+    import org.apache.spark.sql.GraftSqlInternal
+    import graft.model.EtlJob
+    val ts = Timestamp.valueOf("2025-01-02 03:04:05.123456")
+    val frames = Seq(
+      "etl_job" -> Seq(
+        EtlJob("prices_usd", 5816212L, "bitcoin.price_usd", "date",
+          Some(EtlJob.Done), 1, Some(ts), Some(ts), None, Some(ts)),
+        EtlJob(null, 1L, "t", "k", None, 0, None, None, Some("x"), None))
+        .toDS.toDF,
+      "empty" -> Seq.empty[(Long, String)].toDF("k", "s"),
+      "mixed" -> Seq(
+        ("a", 1L, 2, 3.5, Some(ts), Some(Date.valueOf("2025-01-02"))),
+        (null, -7L, 0, -0.25, None, None))
+        .toDF("s", "l", "i", "d", "ts", "dt"))
+    val root = freshRoot()
+    val fs = fsOf(root)
+    def dirOf(t: String) = new Path(root, s"$t/t${Transaction.manifest(
+      spark, root, Transaction.committedTxs(spark, root).last)(t)}")
+    frames.foreach { case (name, df) =>
+      val (_, jobs) = SparkJobs.count(spark.sparkContext)(
+        Transaction.publish(spark, root, Map(name -> df)))
+      assert(jobs === 0, s"$name: the publish launched $jobs Spark jobs")
+      val visible = fs.listStatus(dirOf(name)).map(_.getPath.getName)
+        .filterNot(_.startsWith(".")).sorted.toSeq
+      assert(visible.size === 2 && visible.head === "_checksums" &&
+        visible(1).endsWith(".parquet"), s"$name: $visible")
+      Transaction.publish(spark, root,
+        Map(s"${name}_spark" -> df.repartition(1)))
+      def footer(t: String) = GraftSqlInternal.parquetFooterSchema(spark,
+        new Path(dirOf(t), graft.sources.Integrity.payload(fs, dirOf(t)).head))
+      assert(footer(name) === footer(s"${name}_spark"), s"$name: footer")
+      val got = Transaction.read(spark, root, name)
+      val want = Transaction.read(spark, root, s"${name}_spark")
+      assert(got.schema === want.schema, s"$name: schema differs")
+      val rows = got.collect().toSeq
+      assert(rows === want.collect().toSeq, s"$name: rows differ")
+      assert(rows === df.collect().toSeq, s"$name: rows differ from the frame")
+    }
+    val fsck = Transaction.fsck(spark, root, deep = true)
+    assert(fsck.clean && fsck.deepVerified, s"$fsck")
+    val dst = freshRoot()
+    assert(Transaction.syncTo(spark, root, dst) ===
+      Transaction.committedTxs(spark, root).size)
+    assert(Transaction.lastSyncUnverified === 0)
+    val replica = Transaction.fsck(spark, dst, deep = true,
+      sinceVerified = true)
+    assert(replica.deepVerified && replica.contentHashed === 0, s"$replica")
+    frames.foreach { case (name, df) =>
+      assert(Transaction.read(spark, dst, name).collect().toSeq ===
+        df.collect().toSeq, s"$name: replica rows differ")
+    }
+  }
 }

@@ -6,10 +6,13 @@
 # Runs, in order: (1) the full ScalaTest suite, (1b) the pipeline demo
 # (graft.tools.PipelineDemo, the one main that drives the runner's CLI
 # options), (1c) the commit and placement specs (TransactionSpec,
-# CloneSpec, GraftSinkConflictSpec, OpsSpec, PartitionedMergeSpec)
-# again with `file:` on Hadoop's own LocalFileSystem, whose rename
-# replaces an existing target file and moves a dir INSIDE an existing
-# one (the suite otherwise runs on whatever hive-exec puts first),
+# CloneSpec, GraftSinkConflictSpec, OpsSpec, PartitionedMergeSpec,
+# PipelineSpec) again with `file:` on Hadoop's own LocalFileSystem,
+# whose rename replaces an existing target file and moves a dir INSIDE
+# an existing one, and which keeps a `.crc` beside every file that the
+# driver-side writes of driver-resident members (the pipeline's
+# running marker and failure record) create through it directly (the
+# suite otherwise runs on whatever hive-exec puts first),
 # (2) graft.Verify at
 # sf0.01 (parquet dumps + oracle_sql.json + tolerance bounds), (3) the
 # DuckDB oracle compare (driver-side tooling; skipped with a note when
@@ -47,7 +50,7 @@ DEMO_RC=$?
 
 echo "[roundcheck] 1c/5 commit and placement specs on LocalFileSystem"
 sbt -batch 'set Test/javaOptions += "-Dspark.hadoop.fs.file.impl=org.apache.hadoop.fs.LocalFileSystem"' \
-  "testOnly graft.TransactionSpec graft.CloneSpec graft.GraftSinkConflictSpec graft.OpsSpec graft.PartitionedMergeSpec" \
+  "testOnly graft.TransactionSpec graft.CloneSpec graft.GraftSinkConflictSpec graft.OpsSpec graft.PartitionedMergeSpec graft.PipelineSpec" \
   >"$OUT/commit_specs_localfs.log" 2>&1
 LOCALFS_RC=$?
 

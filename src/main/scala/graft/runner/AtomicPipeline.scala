@@ -67,7 +67,8 @@ case class JobResult(jobName: String, rows: Long, fullRefresh: Boolean,
   * warehouse pays O(1) metadata per job commit.
   *
   * Spark jobs: only the watermark max, the fetch, the data write, the
-  * stamp of a multi-file data dir and a read of `etl_job` (once per
+  * stamp of a large data dir (more than a few small files, see
+  * [[graft.sources.Integrity.stamp]]) and a read of `etl_job` (once per
   * [[run]], in [[activeJobs]], and on a version change) launch any.
   * The object holds the `etl_job` rows with the member version
   * (the manifest entry's txId) it last read or committed them as, and

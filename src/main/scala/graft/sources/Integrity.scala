@@ -3,7 +3,7 @@ package graft.sources
 import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.util.SerializableConfiguration
 
@@ -60,8 +60,14 @@ private[graft] object Integrity {
 
   /** The payload file names of `dir`, sorted. */
   def payload(fs: FileSystem, dir: Path): Seq[String] =
-    fs.listStatus(dir).filter(_.isFile).map(_.getPath.getName)
-      .filterNot(n => n.startsWith("_") || n.startsWith(".")).sorted.toSeq
+    payloadFiles(fs, dir).map(_.getPath.getName)
+
+  /** The payload files of `dir`, sorted by name. */
+  private def payloadFiles(fs: FileSystem, dir: Path): Seq[FileStatus] =
+    fs.listStatus(dir).filter { f =>
+      val n = f.getPath.getName
+      f.isFile && !n.startsWith("_") && !n.startsWith(".")
+    }.sortBy(_.getPath.getName).toSeq
 
   /** Slice count for every per-file fan-out (stamp, check, verified
     * copy): one file per task up to twice the cluster width, so uneven
@@ -73,31 +79,42 @@ private[graft] object Integrity {
     math.min(n, math.max(64, spark.sparkContext.defaultParallelism * 2))
       .max(1)
 
-  /** Write `dir`'s sidecar: a payload of several files is hashed by one
-    * cluster-fanned job (one task per file); a payload of exactly one
-    * file is hashed on the calling thread — one slice either way, and
-    * the same [[hashFile]], so the bytes are identical and a one-file
-    * dir launches no job. A dir with no payload runs no job and gets
-    * `\n`. Overwrites an existing sidecar, so a replayed dir write
-    * re-stamps. A missing dir is left alone.
+  /** A payload of at most this many files and bytes is hashed on the
+    * calling thread: a few milliseconds of reads, where the fan-out job
+    * costs a job launch plus, in every task, a deserialized copy of
+    * the whole Hadoop `Configuration` (megabytes of garbage each).
+    */
+  private val InlineFiles = 16
+  private val InlineBytes = 4L << 20
+
+  /** Write `dir`'s sidecar: a large payload is hashed by one
+    * cluster-fanned job (one task per file); one file, or a few small
+    * ones ([[InlineFiles]], [[InlineBytes]]), are hashed on the calling
+    * thread — the same [[hashFile]] either way, so the bytes are
+    * identical and a small dir launches no job. A dir with no payload
+    * runs no job and gets `\n`. Overwrites an existing sidecar, so a
+    * replayed dir write re-stamps. A missing dir is left alone.
     */
   def stamp(spark: SparkSession, dir: String): Unit = {
     val p = new Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) return
-    val lines = payload(fs, p) match {
-      case Seq() => Seq.empty[String]
-      case Seq(one) => Seq(sidecarLine(fs, new Path(p, one)))
-      case names =>
+    val files = payloadFiles(fs, p)
+    val lines =
+      if (files.size <= 1 || (files.size <= InlineFiles &&
+          files.map(_.getLen).sum <= InlineBytes))
+        files.map(f => sidecarLine(fs, f.getPath))
+      else {
         val conf = new SerializableConfiguration(
           spark.sparkContext.hadoopConfiguration)
         spark.sparkContext
-          .parallelize(names.map(n => s"$dir/$n"), slices(spark, names.size))
+          .parallelize(files.map(_.getPath.toString),
+            slices(spark, files.size))
           .map { s =>
             val fp = new Path(s)
             sidecarLine(fp.getFileSystem(conf.value), fp)
           }.collect().toSeq.sorted
-    }
+      }
     val out = fs.create(new Path(p, Sidecar), true)
     try out.write((lines.mkString("\n") + "\n")
       .getBytes(StandardCharsets.UTF_8))

@@ -479,6 +479,27 @@ class FsckSpec extends SparkSpec {
     assert(jobs === 0, "a one-file dir is stamped without a Spark job")
     assert(new String(slurp(new Path(one, "_checksums")), "UTF-8") ==
       "b.parquet\t3\t44bc2cf5ad770999\n")
+    // a few small files are hashed on the calling thread too; past 16
+    // files the payload goes to the cluster-fanned job, and both write
+    // the same lines
+    def many(name: String, n: Int): (Path, Int) = {
+      val d = new Path(tmpDir(name))
+      (0 until n).foreach(i =>
+        put(new Path(d, f"p$i%02d.parquet"), "abc".getBytes("UTF-8")))
+      put(new Path(d, "_SUCCESS"), Array.emptyByteArray)
+      val (_, launched) = org.apache.spark.graft.SparkJobs.count(
+        spark.sparkContext)(graft.sources.Integrity.stamp(spark, d.toString))
+      (d, launched)
+    }
+    def lines(n: Int) =
+      (0 until n).map(i => f"p$i%02d.parquet\t3\t44bc2cf5ad770999\n").mkString
+    val (few, fewJobs) = many("graft_integrity_pin_few", 16)
+    assert(fewJobs === 0, "16 small files are stamped without a Spark job")
+    assert(new String(slurp(new Path(few, "_checksums")), "UTF-8") == lines(16))
+    val (fanned, fannedJobs) = many("graft_integrity_pin_fanned", 17)
+    assert(fannedJobs === 1, "17 files are stamped by one fan-out job")
+    assert(new String(slurp(new Path(fanned, "_checksums")), "UTF-8") ==
+      lines(17))
     val empty = new Path(tmpDir("graft_integrity_pin_empty"))
     put(new Path(empty, "_SUCCESS"), Array.emptyByteArray)
     graft.sources.Integrity.stamp(spark, empty.toString)

@@ -238,6 +238,11 @@ object Ops {
     * data+job-state pipeline publish, [[graft.runner.AtomicPipeline]])
     * can compose the merged relation into one cross-table transaction
     * instead of the path-overwrite below.
+    *
+    * The anti-join takes its keys from `updates` itself: the dedup
+    * keeps one row for every key, so the key set is the same, and the
+    * batch's dedup window (its sort and shuffle) runs once, on the
+    * union side only.
     */
   def mergeUpsertDf(target: Option[DataFrame], updates: DataFrame,
       keys: Seq[String],
@@ -246,7 +251,7 @@ object Ops {
     target match {
       case None => batch
       case Some(t) => t
-        .join(batch.select(keys.map(col): _*), keys, "left_anti")
+        .join(updates.select(keys.map(col): _*), keys, "left_anti")
         .unionByName(batch, allowMissingColumns = true)
     }
   }

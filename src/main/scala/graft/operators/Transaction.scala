@@ -70,16 +70,24 @@ object Transaction {
 
   private def commitsDir(root: String) = new Path(root, "_commits")
 
-  /** Committed transaction ids, ascending; empty before first publish. */
-  def committedTxs(spark: SparkSession, root: String): Seq[Long] = {
+  /** The file names in `_commits/`, one listing; none before the
+    * first publish.
+    */
+  private def commitNames(spark: SparkSession, root: String): Seq[String] = {
     val dir = commitsDir(root)
-    val fs = fsOf(spark, dir)
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).map(_.getPath.getName).toSeq
-      .collect { case n if n.startsWith("tx") && n.endsWith(".json") =>
-        n.stripPrefix("tx").stripSuffix(".json").toLong }
-      .sorted
+    try fsOf(spark, dir).listStatus(dir).toSeq.map(_.getPath.getName)
+    catch { case _: java.io.FileNotFoundException => Seq.empty }
   }
+
+  /** The committed ids among `_commits/` names, ascending. */
+  private def txIds(names: Seq[String]): Seq[Long] = names
+    .collect { case n if n.startsWith("tx") && n.endsWith(".json") =>
+      n.stripPrefix("tx").stripSuffix(".json").toLong }
+    .sorted
+
+  /** Committed transaction ids, ascending; empty before first publish. */
+  def committedTxs(spark: SparkSession, root: String): Seq[Long] =
+    txIds(commitNames(spark, root))
 
   private def manifestBytes(spark: SparkSession, root: String,
       tx: Long): Array[Byte] = {
@@ -126,18 +134,6 @@ object Transaction {
     parsed
   }
 
-  /** The highest burned txId ([[Commit]] version floors in
-    * `_commits/`): a marker names the highest id burned — only ever a
-    * retracted id at most `last + 1` — so [[publish]] claims
-    * `max(last, floor) + 1`.
-    */
-  private def floorOf(spark: SparkSession, root: String,
-      lastCommitted: Long): Long = {
-    val dir = commitsDir(root)
-    Commit.floor(Commit.floors(fsOf(spark, dir), Commit.Tx, dir),
-      lastCommitted + 1L)
-  }
-
   /** Atomically publish `tables` as one transaction; any table NOT in
     * the map carries forward from the previous transaction. Returns
     * the committed txId. Every staged version dir is stamped with its
@@ -164,9 +160,15 @@ object Transaction {
     tables.keys.foreach(n => require(n.nonEmpty &&
       !n.exists("/\"\\".contains(_)) && !n.startsWith("_") &&
       !n.startsWith("."), s"publish: bad table name '$n'"))
-    val committed = committedTxs(spark, root)
+    // one `_commits/` listing gives the committed ids and the floor:
+    // a floor marker names the highest burned id ([[Commit]] version
+    // floors) — only ever a retracted id at most `last + 1` — so the
+    // claim is `max(last, floor) + 1`
+    val names = commitNames(spark, root)
+    val committed = txIds(names)
     val last = committed.lastOption.getOrElse(-1L)
-    val txId = math.max(last, floorOf(spark, root, last)) + 1L
+    val txId = math.max(last,
+      Commit.floor(Commit.floors(Commit.Tx, names), last + 1L)) + 1L
     val prev = committed.lastOption
       .map(manifest(spark, root, _)).getOrElse(Map.empty[String, Long])
     val rootP = new Path(root)
@@ -223,9 +225,13 @@ object Transaction {
     */
   def read(spark: SparkSession, root: String, table: String,
       tx: Option[Long] = None): DataFrame = {
-    val committed = committedTxs(spark, root)
-    require(committed.nonEmpty, s"no committed transactions under $root")
-    val id = tx.getOrElse(committed.last)
+    // an explicit `tx` needs no listing: [[manifest]] refuses an id
+    // that is not committed
+    val id = tx.getOrElse {
+      val committed = committedTxs(spark, root)
+      require(committed.nonEmpty, s"no committed transactions under $root")
+      committed.last
+    }
     val m = manifest(spark, root, id)
     require(m.contains(table),
       s"table '$table' not in transaction $id (${m.keys.mkString(", ")})")

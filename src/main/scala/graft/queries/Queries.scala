@@ -59,6 +59,15 @@ object Tables {
       case _ => df
     }
 
+  private val FileImpl = "spark.hadoop.fs.file.impl"
+
+  /** The `file:` class a [[configure]]d session runs on: the one `jvm`
+    * (the JVM's system properties) names, else
+    * [[graft.sources.PosixLocalFileSystem]].
+    */
+  private[graft] def fileImpl(jvm: scala.collection.Map[String, String]): String =
+    jvm.getOrElse(FileImpl, classOf[graft.sources.PosixLocalFileSystem].getName)
+
   /** Session config every graft entry point uses. `nanosAsLong` is
     * kept for the TIMESTAMP(NANOS) variant of the `events` table
     * (Spark has no nanosecond timestamp type and otherwise refuses the
@@ -67,6 +76,9 @@ object Tables {
     */
   def configure(b: SparkSession.Builder): SparkSession.Builder = b
     .withExtensions(new graft.functions.GraftExtensions)
+    // `file:` without a `chmod` fork per created file, on the driver
+    // and in every task; a class the JVM names is kept
+    .config(FileImpl, fileImpl(sys.props))
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.adaptive.enabled", "true")
     // r15: spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold is

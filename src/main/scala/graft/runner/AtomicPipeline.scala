@@ -6,7 +6,10 @@ import java.time.temporal.ChronoUnit
 
 import scala.util.{Failure, Success, Try}
 
-import org.apache.spark.sql.{DataFrame, Encoders, Observation, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlInternal, Observation, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
 
 import graft.model.{EtlJob, FullRefresh, TableSpec}
@@ -80,16 +83,23 @@ case class JobResult(jobName: String, rows: Long, fullRefresh: Boolean,
   * collect — a concurrent edit is never overwritten. The rows publish
   * as a driver-resident member ([[Transaction.publish]]): one parquet
   * file written and stamped on this thread, so the running marker and
-  * the failure record launch no job at all. Every
+  * the failure record launch no job at all. Their `LocalRelation` is
+  * serialized by one `EtlJob` encoder held for the pipeline's
+  * lifetime, so no commit derives, binds or compiles it again. Every
   * [[Transaction.read]] (the current table, a re-read) takes its
   * schema from a parquet footer on this thread; a full refresh never
   * reads the current table; and the committed row count is an
   * `Observation` on the data write.
   */
 class AtomicPipeline(spark: SparkSession, source: Source, root: String) {
-  import spark.implicits._
 
   val StateTable = "etl_job"
+
+  /** The `etl_job` row encoder and its serializer (not thread-safe,
+    * like the rest of this object's state).
+    */
+  private val jobEncoder = ExpressionEncoder[EtlJob]()
+  private val toRow = jobEncoder.createSerializer()
 
   /** The `etl_job` rows as last read or committed here, with the member
     * version they are; see [[rows]].
@@ -107,8 +117,8 @@ class AtomicPipeline(spark: SparkSession, source: Source, root: String) {
     val raw = Ops.normalizeNames(
       spark.read.option("header", "true").csv(csvPath))
       .withColumn("last_updated_ts", current_timestamp())
-    seed(raw.select(Encoders.product[EtlJob].schema.map(f =>
-      col(f.name).cast(f.dataType)): _*).as[EtlJob].collect().toSeq)
+    seed(raw.select(jobEncoder.schema.map(f =>
+      col(f.name).cast(f.dataType)): _*).as(jobEncoder).collect().toSeq)
   }
 
   def state: DataFrame = Transaction.read(spark, root, StateTable)
@@ -135,7 +145,7 @@ class AtomicPipeline(spark: SparkSession, source: Source, root: String) {
       case Some((v, rs)) if version.contains(v) => rs
       case _ =>
         val rs = Transaction.read(spark, root, StateTable, last)
-          .as[EtlJob].collect().toSeq
+          .as(jobEncoder).collect().toSeq
         held = version.map(_ -> rs)
         rs
     }
@@ -155,8 +165,11 @@ class AtomicPipeline(spark: SparkSession, source: Source, root: String) {
     */
   private def commit(data: Map[String, DataFrame],
       state: Seq[EtlJob]): Unit = {
+    // the plan `state.toDS()` builds, serialized by the held encoder
+    val relation = LocalRelation(
+      DataTypeUtils.toAttributes(jobEncoder.schema), state.map(toRow(_).copy()))
     val tx = Transaction.publish(spark, root,
-      data + (StateTable -> state.toDS().toDF()))
+      data + (StateTable -> GraftSqlInternal.ofRows(spark, relation)))
     held = Some((tx, state))
   }
 

@@ -190,10 +190,15 @@ private[graft] object Commit {
     * skipped, and a missing dir has none.
     */
   def floors(fs: FileSystem, layer: Layer, dir: Path): Seq[Long] =
-    try fs.listStatus(dir).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith(layer.floorPrefix))
-      .flatMap(_.stripPrefix(layer.floorPrefix).toLongOption)
+    try floors(layer, fs.listStatus(dir).toSeq.map(_.getPath.getName))
     catch { case _: java.io.FileNotFoundException => Seq.empty }
+
+  /** The floor marker values among the file `names` of a listing that
+    * the caller already holds.
+    */
+  def floors(layer: Layer, names: Seq[String]): Seq[Long] =
+    names.filter(_.startsWith(layer.floorPrefix))
+      .flatMap(_.stripPrefix(layer.floorPrefix).toLongOption)
 
   /** The governing floor: the max of `floors` at or below `limit`;
     * −1 when none is.

@@ -99,6 +99,52 @@ class OpsSpec extends SparkSpec {
     assert(once == twice)
   }
 
+  test("mergeUpsertDf returns the rows of the batch-keyed anti-join and " +
+      "runs one row_number window over the batch") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.expressions.RowNumber
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.window.WindowExec
+    // the formulation before the single pass: the anti-join keys came
+    // from the deduped batch, a second window over it
+    def twoPass(t: DataFrame, u: DataFrame, keys: Seq[String]) = {
+      val b = Ops.dedupLatest(u, keys, "ts")
+      t.join(b.select(keys.map(col): _*), keys, "left_anti")
+        .unionByName(b, allowMissingColumns = true)
+    }
+    def rows(df: DataFrame) = df.collect().map(_.toSeq.map(String.valueOf))
+      .sortBy(_.mkString("|")).toSeq
+    val target = Seq[(Option[Int], String, String, Long)](
+      (Some(1), "a", "t1a", 0L), (Some(1), "b", "t1b", 0L),
+      (Some(2), "a", "t2a", 0L), (Some(3), "a", "t3a", 0L),
+      (None, "a", "tNa", 0L)).toDF("k", "j", "v", "ts")
+    val batches = Seq(
+      "duplicate keys" -> Seq((Some(1), "a", "x", 1L), (Some(1), "a", "y", 2L),
+        (Some(4), "a", "z", 1L)),
+      // an audit-stamped batch: the content hash picks the survivor
+      "equal-version duplicates" -> Seq((Some(2), "a", "p", 5L),
+        (Some(2), "a", "q", 5L), (Some(2), "b", "r", 5L)),
+      "null keys" -> Seq((None, "a", "n1", 1L), (None, "a", "n2", 1L),
+        (Some(3), "a", "u3", 1L)),
+      "empty" -> Seq.empty[(Option[Int], String, String, Long)])
+    val helper = new AdaptiveSparkPlanHelper {}
+    for ((name, batch) <- batches; keys <- Seq(Seq("k"), Seq("k", "j"))) {
+      val u = batch.toDF("k", "j", "v", "ts")
+      val merged = Ops.mergeUpsertDf(Some(target), u, keys, "ts")
+      val got = rows(merged)
+      assert(got == rows(twoPass(target, u, keys)), s"$name, keys $keys")
+      if (batch.nonEmpty)
+        assert(got.size < target.count() + batch.size, s"$name, keys $keys")
+      val windows = helper.collect(merged.queryExecution.executedPlan) {
+        case w: WindowExec
+            if w.windowExpression.exists(_.exists(_.isInstanceOf[RowNumber])) => w
+      }
+      // an empty batch folds the whole merge away
+      assert(windows.size == (if (batch.isEmpty) 0 else 1),
+        s"$name, keys $keys:\n" + merged.queryExecution.executedPlan)
+    }
+  }
+
   test("overwriteSafe: a failed write leaves the target intact and no " +
       "orphan staging/aside dirs") {
     val base = tmpDir("osf")

@@ -343,7 +343,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("Spark job budget of one runJob on the prices_usd fixture: a " +
-      "full refresh takes at most 5 jobs, an incremental job at most 10") {
+      "full refresh takes at most 2 jobs, an incremental job at most 6") {
     import org.apache.spark.graft.SparkJobs
     val base = tmpDir("jobs")
     val fixtures = s"$base/fixtures"
@@ -362,7 +362,8 @@ class PipelineSpec extends SparkSpec {
       """{"date": "2025-01-03", "price": 97000.0}"""))
     val (incr, incrJobs) = SparkJobs.count(sc)(pipe.runJob(spec))
     assert(incr.error.isEmpty && !incr.fullRefresh && incr.rows === 3L)
-    assert(incrJobs <= 8, s"incremental job took $incrJobs Spark jobs")
+    // the merge dedups the batch in one window: one shuffle of it
+    assert(incrJobs <= 6, s"incremental job took $incrJobs Spark jobs")
     val (full, fullJobs) = SparkJobs.count(sc)(
       pipe.runJob(spec, graft.runner.RunOptions(fullRefresh = true)))
     assert(full.error.isEmpty && full.fullRefresh && full.rows === 2L)

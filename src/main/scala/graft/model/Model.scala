@@ -38,14 +38,6 @@ object EtlJob {
   */
 case class DerivedColumn(name: String, sqlExpr: String)
 
-/** Load strategy for a table sync — reference
-  * `data_integration/pull_raw/__main__.py:152-169` dispatches on
-  * `sync_type` in {full_refresh, sync_incremental}.
-  */
-sealed trait LoadStrategy
-case object FullRefresh extends LoadStrategy
-case object Incremental extends LoadStrategy
-
 /** Declarative per-table sync spec: the reference's
   * `column_transform.yaml` + `etl_job.csv` joined into one config
   * object (reference: `etl_system/etl_job.csv:2-6`,
@@ -55,7 +47,9 @@ case object Incremental extends LoadStrategy
   *                (columns not listed are dropped — column pruning).
   * @param watermarkCol target-side column whose MAX drives the
   *                     incremental fetch parameter (reference
-  *                     `pull_raw/__main__.py:102`).
+  *                     `pull_raw/__main__.py:102`); None syncs by
+  *                     full refresh every run (the reference's
+  *                     `sync_type` full_refresh, `__main__.py:152-169`).
   * @param sourceSchema declared SOURCE-side schema (pre-rename column
   *                     names). When set, schema-aware sources skip
   *                     their O(payload) inference pre-pass — the
@@ -72,7 +66,6 @@ case class TableSpec(
     renames: Seq[(String, String)],
     derived: Seq[DerivedColumn] = Nil,
     watermarkCol: Option[String] = None,
-    strategy: LoadStrategy = Incremental,
     sourceSchema: Option[StructType] = None)
 
 /** The five-table Bitcoin warehouse the reference syncs

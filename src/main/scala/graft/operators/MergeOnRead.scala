@@ -67,24 +67,20 @@ object MergeOnRead {
     var unverified = 0
     val entries = dirs.flatMap { d =>
       val p = new Path(d)
-      val fs = fsOf(spark, p)
-      if (!fs.exists(p)) Seq.empty
-      else {
-        val names = Integrity.payload(fs, p)
-        val side = Integrity.readSidecar(fs, p)
-        val unlisted = names.filterNot(n => side.exists(_.contains(n)))
-        if (unlisted.nonEmpty) {
-          unverified += unlisted.size
+      Integrity.vouch(fsOf(spark, p), p).toSeq.flatMap { v =>
+        val unlisted = v.unlisted.size
+        if (unlisted > 0) {
+          unverified += unlisted
           Integrity.warnUnverified(s"merge-on-read $op: " +
-            s"${unlisted.size} file(s) of $d " +
-            (if (side.isEmpty) "(no checksum sidecar)"
+            s"$unlisted file(s) of $d " +
+            (if (v.side.isEmpty) "(no checksum sidecar)"
             else "outside its checksum sidecar") +
             " are UNVERIFIED (legacy write or crashed sidecar stamp); " +
             "re-write the batch to regain content integrity")
         }
         // the sidecar is the reference: a listed file that vanished
         // is damage
-        side.getOrElse(Map.empty).toSeq.sortBy(_._1).map {
+        v.side.getOrElse(Map.empty).toSeq.sortBy(_._1).map {
           case (n, (b, sum)) => Integrity.Entry(s"$d/$n", b, sum, deep)
         }
       }

@@ -2,7 +2,7 @@ package graft.operators
 
 import java.nio.charset.StandardCharsets
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, GraftSqlInternal, SparkSession}
 
 import graft.sources.{Commit, GraftSink, Integrity}
@@ -70,14 +70,16 @@ object Transaction {
 
   private def commitsDir(root: String) = new Path(root, "_commits")
 
-  /** The file names in `_commits/`, one listing; none before the
-    * first publish.
+  /** The entry names of `dir`, one listing; none when it does not
+    * exist (`_commits/` before the first publish, `_refs/` before the
+    * first [[tag]]).
     */
-  private def commitNames(spark: SparkSession, root: String): Seq[String] = {
-    val dir = commitsDir(root)
+  private def listNames(spark: SparkSession, dir: Path): Seq[String] =
     try fsOf(spark, dir).listStatus(dir).toSeq.map(_.getPath.getName)
     catch { case _: java.io.FileNotFoundException => Seq.empty }
-  }
+
+  private def commitNames(spark: SparkSession, root: String) =
+    listNames(spark, commitsDir(root))
 
   /** The committed ids among `_commits/` names, ascending. */
   private def txIds(names: Seq[String]): Seq[Long] = names
@@ -89,12 +91,22 @@ object Transaction {
   def committedTxs(spark: SparkSession, root: String): Seq[Long] =
     txIds(commitNames(spark, root))
 
+  private def manifestPath(root: String, tx: Long) =
+    new Path(commitsDir(root), s"tx$tx.json")
+
+  // the require() contract callers (and specs) rely on
+  private def notCommitted(root: String, tx: Long) =
+    new IllegalArgumentException(
+      s"requirement failed: transaction $tx not committed under $root")
+
+  /** The bytes of transaction `tx`'s manifest. */
   private def manifestBytes(spark: SparkSession, root: String,
       tx: Long): Array[Byte] = {
-    val p = new Path(commitsDir(root), s"tx$tx.json")
-    require(fsOf(spark, p).exists(p),
-      s"transaction $tx not committed under $root")
-    Integrity.readSmall(fsOf(spark, p), p)
+    val p = manifestPath(root, tx)
+    try Integrity.readSmall(fsOf(spark, p), p)
+    catch {
+      case _: java.io.FileNotFoundException => throw notCommitted(root, tx)
+    }
   }
 
   private val manifestMemoMax = 4096
@@ -114,19 +126,16 @@ object Transaction {
     */
   def manifest(spark: SparkSession, root: String,
       tx: Long): Map[String, Long] = {
-    val p = new Path(commitsDir(root), s"tx$tx.json")
-    val fs = fsOf(spark, p)
+    val p = manifestPath(root, tx)
     val st =
-      try fs.getFileStatus(p)
-      catch { case _: java.io.FileNotFoundException =>
-        // the require() contract callers (and specs) rely on
-        throw new IllegalArgumentException(
-          s"requirement failed: transaction $tx not committed under $root")
+      try fsOf(spark, p).getFileStatus(p)
+      catch {
+        case _: java.io.FileNotFoundException => throw notCommitted(root, tx)
       }
     val key = (p.toString, st.getLen, st.getModificationTime)
     val got = manifestMemo.get(key)
     if (got != null) return got
-    val s = new String(Integrity.readSmall(fs, p), StandardCharsets.UTF_8)
+    val s = new String(manifestBytes(spark, root, tx), StandardCharsets.UTF_8)
     val parsed = "\"([^\"]+)\"\\s*:\\s*(\\d+)".r.findAllMatchIn(s)
       .map(m => m.group(1) -> m.group(2).toLong).toMap
     if (manifestMemo.size >= manifestMemoMax) manifestMemo.clear()
@@ -198,7 +207,7 @@ object Transaction {
     val json = entries.toSeq.sortBy(_._1)
       .map { case (t, v) => s"${graft.Json.quote(t)}: $v" }
       .mkString("{", ", ", "}")
-    val mDest = new Path(commitsDir(root), s"tx$txId.json")
+    val mDest = manifestPath(root, txId)
     val mTmp = Commit.stage(fs, Commit.Tx, mDest,
       json.getBytes(StandardCharsets.UTF_8))
     commitBarrier()
@@ -382,13 +391,10 @@ object Transaction {
     // committed tx is absent from the source, or byte-different from
     // the source's same id, has taken local history.
     val srcSet = committed.toSet
-    val dstLastDivergent = committedTxs(spark, dstRoot).lastOption
-      .filter { last =>
-        !srcSet(last) || !java.util.Arrays.equals(
-          manifestBytes(spark, srcRoot, last),
-          manifestBytes(spark, dstRoot, last))
-      }
-    dstLastDivergent.foreach { last =>
+    def divergent(t: Long) = !srcSet(t) || !java.util.Arrays.equals(
+      manifestBytes(spark, srcRoot, t), manifestBytes(spark, dstRoot, t))
+    val dstCommitted = committedTxs(spark, dstRoot)
+    dstCommitted.lastOption.filter(divergent).foreach { last =>
       if (!force) sys.error(
         s"transaction: replica $dstRoot committed tx $last, which " +
           "does not match the source's history — local transactions " +
@@ -397,15 +403,10 @@ object Transaction {
           "commits, or re-replicate to a fresh directory")
       // force: drop every replica commit the source can't vouch for
       // (absent id, or byte-different manifest), loudly
-      committedTxs(spark, dstRoot).foreach { t =>
-        val same = srcSet(t) && java.util.Arrays.equals(
-          manifestBytes(spark, srcRoot, t),
-          manifestBytes(spark, dstRoot, t))
-        if (!same) {
-          fs.delete(new Path(commitsDir(dstRoot), s"tx$t.json"), false)
-          System.err.println(s"transaction: force sync discarded the " +
-            s"replica's divergent tx $t at $dstRoot")
-        }
+      dstCommitted.filter(divergent).foreach { t =>
+        fs.delete(manifestPath(dstRoot, t), false)
+        System.err.println(s"transaction: force sync discarded the " +
+          s"replica's divergent tx $t at $dstRoot")
       }
     }
     // MEMBER-CONTENT DIVERGENCE — the manifest guard above cannot see
@@ -416,10 +417,11 @@ object Transaction {
     // dir wearing a synced (table, version) name must hold the synced
     // bytes. Both-sides-legacy (no sidecars anywhere) trusts the name,
     // the pre-sidecar behavior.
-    def sidecar(r: String, t: String, v: Long) = {
+    def vouch(r: String, t: String, v: Long) = {
       val d = new Path(r, s"$t/t$v")
-      Integrity.readSidecar(fsOf(spark, d), d)
+      Integrity.vouch(fsOf(spark, d), d)
     }
+    def sidecar(r: String, t: String, v: Long) = vouch(r, t, v).flatMap(_.side)
     def diverges(t: String, v: Long) =
       sidecar(srcRoot, t, v) != sidecar(dstRoot, t, v)
     def refuseDivergent(dirs: Seq[(String, Long)]): Nothing = sys.error(
@@ -440,7 +442,7 @@ object Transaction {
           s"at $dstRoot — its content diverged from the source")
       }
     }
-    val already = new Path(commitsDir(dstRoot), s"tx$id.json")
+    val already = manifestPath(dstRoot, id)
     // the replica's newest committed tx BEFORE this sync — the
     // watermark-chain anchor for the verified-by-replication stamp
     val dstPrevLast = committedTxs(spark, dstRoot).lastOption
@@ -467,13 +469,10 @@ object Transaction {
       val files: Seq[(String, String, String)] = needed.flatMap {
         case (t, v) =>
           val from = new Path(srcRoot, s"$t/t$v")
-          val sfs = fsOf(spark, from)
-          val side = sidecar(srcRoot, t, v)
-          val names = sfs.listStatus(from).filter(_.isFile)
-            .map(_.getPath.getName).toSeq
-          val unverified = names.count(n =>
-            !n.startsWith("_") && !n.startsWith(".") &&
-              !side.exists(_.contains(n)))
+          val vouched = vouch(srcRoot, t, v).getOrElse(throw
+            new java.io.FileNotFoundException(s"File $from does not exist"))
+          val side = vouched.side
+          val unverified = vouched.unlisted.size
           if (unverified > 0) {
             syncUnverified += unverified
             lastSyncUnverified += unverified
@@ -483,7 +482,7 @@ object Transaction {
               s"— $unverified file(s) replicate UNVERIFIED; republish " +
               "or accept the weaker existence-only integrity")
           }
-          names.map { n =>
+          vouched.files.map { n =>
             (new Path(from, n).toString,
               new Path(stagingRoot, s"$t/t$v/$n").toString,
               side.flatMap(_.get(n)).map(_._2).getOrElse(""))
@@ -564,8 +563,8 @@ object Transaction {
     // pinned backfill below the replica's newest tx.
     if (!force && syncUnverified == 0 &&
         dstPrevLast.forall(_ <= id) &&
-        dstPrevLast.forall(p => deepVerifiedThrough(spark, dstRoot) == p))
-      writeDeepVerifiedThrough(spark, dstRoot, id)
+        dstPrevLast.forall(_ == Verified.read(fs, dstP)))
+      Verified.write(fs, dstP, id)
     carryRefs(spark, srcRoot, dstRoot)
     needed.size
   }
@@ -583,39 +582,46 @@ object Transaction {
     */
   private def carryRefs(spark: SparkSession, srcRoot: String,
       dstRoot: String): Unit = {
-    val srcRefDir = refsDir(srcRoot)
-    val sfs = fsOf(spark, srcRefDir)
-    if (!sfs.exists(srcRefDir)) return
-    val dstTxs = committedTxs(spark, dstRoot).toSet
-    sfs.listStatus(srcRefDir).map(_.getPath.getName)
-      .filterNot(_.startsWith("__")).foreach { name =>
-        try {
-          val tx = refTx(spark, srcRoot, name)
-          if (dstTxs(tx) &&
-              (try refTx(spark, dstRoot, name) != tx
-              catch { case _: IllegalArgumentException => true }))
-            tag(spark, dstRoot, name, tx)
-        } catch { case scala.util.control.NonFatal(e) =>
-          System.err.println(s"transaction: ref '$name' could not be " +
-            s"carried to $dstRoot (${e.getMessage}) — the replica is " +
-            "missing this GC root until a later sync re-carries it")
-        }
+    lazy val dstTxs = committedTxs(spark, dstRoot).toSet
+    refNames(spark, srcRoot).foreach { name =>
+      try {
+        val tx = refTx(spark, srcRoot, name)
+        if (dstTxs(tx) &&
+            (try refTx(spark, dstRoot, name) != tx
+            catch { case _: IllegalArgumentException => true }))
+          tag(spark, dstRoot, name, tx)
+      } catch { case scala.util.control.NonFatal(e) =>
+        System.err.println(s"transaction: ref '$name' could not be " +
+          s"carried to $dstRoot (${e.getMessage}) — the replica is " +
+          "missing this GC root until a later sync re-carries it")
       }
+    }
   }
 
   private def refsDir(root: String) = new Path(root, "_refs")
+
+  /** A ref is a file under `_refs`, so a name that is empty, contains
+    * `/`, or starts with `.` (`.` is `_refs` itself, `..` the root) or
+    * `__` (a staged tag) is no ref.
+    */
+  private def isRefName(n: String): Boolean = n.nonEmpty &&
+    !n.contains('/') && !n.startsWith(".") && !n.startsWith("__")
+
+  private def refNames(spark: SparkSession, root: String) =
+    listNames(spark, refsDir(root)).filter(isRefName)
 
   /** Pin a human name to a committed transaction (Iceberg "tag"): the
     * release a model trained on, the audited month-end, the state a
     * backfill should reproduce. A ref is one tiny file whose content
     * is the txId; re-tagging moves the name atomically (staged write +
     * [[Commit.replace]]), so a reader — [[vacuum]] listing its GC roots
-    * among them — resolves the old tx or the new one, never none.
+    * among them — resolves the old tx or the new one, never none. A
+    * name that is no ref name (see [[isRefName]]) is refused before
+    * anything is staged.
     */
   def tag(spark: SparkSession, root: String, name: String,
       tx: Long): Unit = {
-    require(name.nonEmpty && !name.contains('/') && !name.startsWith("__"),
-      s"bad ref name '$name'")
+    require(isRefName(name), s"bad ref name '$name'")
     require(committedTxs(spark, root).contains(tx),
       s"cannot tag uncommitted transaction $tx")
     val dest = new Path(refsDir(root), name)
@@ -649,7 +655,7 @@ object Transaction {
     * Also sweeps CRASHED-WRITER DEBRIS beyond `graceMs` (the same
     * aged-only contract the sink vacuum runs under — a YOUNG staging
     * dir may belong to a publish/sync in flight right now): stale
-    * `__staging*` dirs at the root and under `_commits/`, and
+    * `__staging*` entries at the root and under `_commits/`, and
     * superseded floor markers (the max governs; lower ones are
     * listing noise). Without this, every crashed publish leaks a
     * whole staged table copy forever — [[fsck]] counts them, vacuum
@@ -659,57 +665,62 @@ object Transaction {
       graceMs: Long = 3600000L): Seq[Long] = {
     require(keep >= 1, "vacuum: keep must be >= 1")
     val committed = committedTxs(spark, root)
-    val refDir = refsDir(root)
-    val fs = fsOf(spark, refDir)
+    val fs = fsOf(spark, new Path(root))
     val cutoff = System.currentTimeMillis() - graceMs
+    val walk = new RootWalk(fs, root)
     // stale staging + superseded floors sweep EVEN when no tx expires
-    def sweepStaging(dir: Path): Unit = {
-      if (!fs.exists(dir)) return
-      fs.listStatus(dir).foreach { st =>
-        if (st.getPath.getName.startsWith("__staging") &&
-            st.getModificationTime < cutoff)
-          fs.delete(st.getPath, true)
-      }
-    }
-    sweepStaging(new Path(root))
-    sweepStaging(commitsDir(root))
+    walk.staging.filter(_.getModificationTime < cutoff)
+      .foreach(st => fs.delete(st.getPath, true))
     Commit.sweep(fs, Commit.Tx, commitsDir(root),
       committed.lastOption.getOrElse(-1L) + 1L)
-    val pinned: Set[Long] =
-      if (!fs.exists(refDir)) Set.empty
-      else fs.listStatus(refDir).map(_.getPath.getName).toSeq
-        .filterNot(_.startsWith("__"))
-        .map(refTx(spark, root, _)).toSet
+    val pinned = refNames(spark, root).map(refTx(spark, root, _)).toSet
     val keptTxs = (committed.takeRight(keep).toSet ++ pinned).toSeq.sorted
     val dropTxs = committed.filterNot(keptTxs.contains)
     if (dropTxs.isEmpty) return Seq.empty
     // reachable (table, version) pairs under the kept manifests
     val live: Set[(String, Long)] = keptTxs
       .flatMap(tx => manifest(spark, root, tx).toSeq).toSet
-    dropTxs.foreach { tx =>
-      fs.delete(new Path(commitsDir(root), s"tx$tx.json"), false)
-    }
-    val rootP = new Path(root)
-    fs.listStatus(rootP).filter(s => s.isDirectory &&
-        !s.getPath.getName.startsWith("_") &&
-        !s.getPath.getName.startsWith("__")).foreach { t =>
-      val table = t.getPath.getName
-      fs.listStatus(t.getPath).filter(_.isDirectory).foreach { v =>
-        val name = v.getPath.getName
-        if (name.startsWith("t") && name.drop(1).forall(_.isDigit) &&
-            !live.contains((table, name.drop(1).toLong)))
-          fs.delete(v.getPath, true)
-      }
+    dropTxs.foreach(tx => fs.delete(manifestPath(root, tx), false))
+    walk.versions().foreach { case (member, dir) =>
+      if (!live(member)) fs.delete(dir, true)
     }
     dropTxs
+  }
+
+  /** One listing of `root` and of its `_commits/`: `staging` holds the
+    * `__staging*` debris crashed publishes and syncs leave in both, and
+    * [[versions]] lists the member version dirs under the root's table
+    * dirs, each as ((table, id), dir).
+    */
+  private final class RootWalk(fs: FileSystem, root: String) {
+    private def list(p: Path): Seq[FileStatus] =
+      try fs.listStatus(p).toSeq
+      catch { case _: java.io.FileNotFoundException => Seq.empty }
+    private val top = list(new Path(root))
+    val staging: Seq[FileStatus] = (top ++ list(commitsDir(root)))
+      .filter(_.getPath.getName.startsWith("__staging"))
+    def versions(): Seq[((String, Long), Path)] = top
+      .filter(t => t.isDirectory && !t.getPath.getName.startsWith("_"))
+      .flatMap { t =>
+        list(t.getPath).filter(_.isDirectory).flatMap { v =>
+          val n = v.getPath.getName
+          if (n.startsWith("t") && n.drop(1).forall(_.isDigit))
+            n.drop(1).toLongOption
+              .map(id => (t.getPath.getName, id) -> v.getPath)
+          else None
+        }
+      }
   }
 
   /** @param deep whether member CONTENT was re-hashed (vs existence +
     *             size only).
     * @param unverifiedMembers committed member version dirs with no
-    *             sidecar (legacy publishes) — DECLINED,
-    *             loudly, never silently passed: [[TxFsckReport.clean]]
-    *             can hold while [[TxFsckReport.deepVerified]] does not.
+    *             sidecar (legacy publishes), or with a payload file
+    *             their sidecar does not list ([[read]] reads every
+    *             payload file of the dir) — DECLINED, loudly, never
+    *             silently passed, watermark-covered or not:
+    *             [[TxFsckReport.clean]] can hold while
+    *             [[TxFsckReport.deepVerified]] does not.
     * @param orphanVersionDirs `t<id>` dirs no committed manifest
     *             references — NOT corruption (crashed-publish
     *             leftovers, vacuumed history); [[vacuum]] owns them.
@@ -773,15 +784,15 @@ object Transaction {
   def fsck(spark: SparkSession, root: String, deep: Boolean = false,
       sinceVerified: Boolean = false): TxFsckReport = {
     val committed = committedTxs(spark, root)
+    val rootP = new Path(root)
+    val fs = fsOf(spark, rootP)
     // incremental deep verification — the sink's `_deep_verified`
     // watermark chain, at the tx root: members first referenced by a
     // tx ≤ k were re-hashed by an earlier deepVerified pass and are
     // immutable, so a scheduled pass re-hashes only newer members
     // (O(new data) per cadence; the FULL drill catches rot landing in
     // already-verified bytes)
-    val watermark: Long =
-      if (deep && sinceVerified) deepVerifiedThrough(spark, root)
-      else -1L
+    val watermark = Verified.start(fs, rootP, deep, sinceVerified)
     val unreadable = Seq.newBuilder[Long]
     val members = scala.collection.mutable.LinkedHashMap
       .empty[(String, Long), Boolean] // -> covered by the watermark
@@ -792,44 +803,45 @@ object Transaction {
       }
       catch { case scala.util.control.NonFatal(_) => unreadable += tx }
     }
-    val fs = fsOf(spark, new Path(root))
     val conf = new org.apache.spark.util.SerializableConfiguration(
       spark.sparkContext.hadoopConfiguration)
     val rootStr = root
     // MEMBER METADATA PASS, cluster-fanned (one task per member dir:
-    // existence probe + one tiny sidecar read): the per-file checks
-    // below already fan out, and at decade scale (64 tables × deep
-    // history on a scheduled cadence) a driver-sequential sidecar
-    // walk is O(members) blocking round-trips for no reason.
+    // one listing + one tiny sidecar read): the per-file checks below
+    // already fan out, and at decade scale (64 tables × deep history
+    // on a scheduled cadence) a driver-sequential sidecar walk is
+    // O(members) blocking round-trips for no reason.
     val memberSeq = members.toSeq
-    // (member, covered by the watermark, dir exists, its sidecar)
-    val sides: Seq[(String, Boolean, Boolean,
-        Option[Map[String, (Long, String)]])] =
+    // (member, covered by the watermark, None when the dir is missing,
+    // else its sidecar and how many payload files that leaves out)
+    val sides: Seq[(String, Boolean,
+        Option[(Option[Map[String, (Long, String)]], Int)])] =
       if (memberSeq.isEmpty) Seq.empty
       else spark.sparkContext
         .parallelize(memberSeq, Integrity.slices(spark, memberSeq.size))
         .map { case ((t, v), covered) =>
           val dir = new Path(rootStr, s"$t/t$v")
-          val f = dir.getFileSystem(conf.value)
-          val exists = f.exists(dir)
-          (s"$t/t$v", covered, exists,
-            if (exists) Integrity.readSidecar(f, dir) else None)
+          (s"$t/t$v", covered, Integrity.vouch(dir.getFileSystem(conf.value),
+            dir).map(vouched => (vouched.side, vouched.unlisted.size)))
         }.collect().toSeq
     var unverifiedMembers = 0
-    // existence+size always, content re-hash when deep and uncovered
+    // existence+size always, content re-hash when deep and uncovered;
+    // a file the sidecar leaves out is unverified however the member
+    // is covered — that takes a listing, not a re-hash
     val entries = sides.flatMap {
-      case (_, _, false, _) => Nil
-      case (member, covered, _, None) =>
-        if (!covered) {
+      case (_, _, None) => Nil
+      case (member, covered, Some((side, unlisted))) =>
+        if (side.isEmpty || unlisted > 0) {
           unverifiedMembers += 1
           Integrity.warnUnverified(s"transaction: fsck cannot verify " +
-            s"$member under $root — no checksum sidecar (legacy " +
-            "publish); republish to regain content integrity")
+            s"$member under $root — " + (if (side.isEmpty)
+              "no checksum sidecar (legacy publish)"
+            else s"$unlisted file(s) outside its checksum sidecar") +
+            "; republish to regain content integrity")
         }
-        Nil
-      case (member, covered, _, Some(side)) =>
-        side.toSeq.sortBy(_._1).map { case (n, (b, sum)) =>
-          Integrity.Entry(s"$rootStr/$member/$n", b, sum, deep && !covered)
+        side.getOrElse(Map.empty).toSeq.sortBy(_._1).map {
+          case (n, (b, sum)) =>
+            Integrity.Entry(s"$rootStr/$member/$n", b, sum, deep && !covered)
         }
     }
     val (missingFiles, sizeMismatches, checksumMismatches) =
@@ -837,57 +849,23 @@ object Transaction {
         _.stripPrefix(s"$rootStr/"))
     // orphan member dirs (no committed manifest references them) and
     // stale staging leftovers — benign GC debris, tallied not flagged
-    var orphans = 0
-    var staging = 0
-    if (fs.exists(new Path(root))) {
-      fs.listStatus(new Path(root)).foreach { st =>
-        val n = st.getPath.getName
-        if (st.isDirectory && n.startsWith("__staging")) staging += 1
-        else if (st.isDirectory && !n.startsWith("_")) {
-          val it = fs.listStatusIterator(st.getPath)
-          while (it.hasNext) {
-            val v = it.next().getPath.getName
-            if (v.startsWith("t") && v.drop(1).forall(_.isDigit) &&
-                !members.contains((n, v.drop(1).toLong)))
-              orphans += 1
-          }
-        }
-      }
-    }
-    val cd = commitsDir(root)
-    if (fs.exists(cd)) {
-      val it = fs.listStatusIterator(cd)
-      while (it.hasNext)
-        if (it.next().getPath.getName.startsWith("__staging")) staging += 1
-    }
+    val walk = new RootWalk(fs, root)
     val report = TxFsckReport(committed.size, unreadable.result(),
-      members.size, sides.collect { case (m, _, false, _) => m },
+      members.size, sides.collect { case (m, _, None) => m },
       entries.size, missingFiles, sizeMismatches, checksumMismatches,
-      unverifiedMembers, orphans, staging, deep,
+      unverifiedMembers,
+      walk.versions().count { case (member, _) => !members.contains(member) },
+      walk.staging.size, deep,
       contentHashed = entries.count(_.hashContent),
       skippedVerified = if (deep) entries.count(!_.hashContent) else 0)
-    val advanced =
-      if (report.deepVerified && committed.nonEmpty &&
-          committed.last > watermark) {
-        writeDeepVerifiedThrough(spark, root, committed.last)
-        committed.last
-      } else math.max(watermark, deepVerifiedThrough(spark, root))
-    report.copy(verifiedThrough = advanced)
+    report.copy(verifiedThrough = Verified.leave(fs, rootP, watermark,
+      report.deepVerified, committed.lastOption))
   }
 
-  /** The persisted deep-verification watermark (`_deep_verified`,
+  /** The root's deep-verification chain (`_deep_verified`,
     * "deep-verified through tx k"): monotone, advanced only by
-    * [[fsck]] passes that end [[TxFsckReport.deepVerified]].
+    * [[fsck]] passes that end [[TxFsckReport.deepVerified]] and by
+    * [[syncTo]]'s verified-by-replication carry.
     */
-  private def deepVerifiedThrough(spark: SparkSession,
-      root: String): Long = {
-    val r = new Path(root)
-    Integrity.readWatermark(fsOf(spark, r), r, "tx")
-  }
-
-  private def writeDeepVerifiedThrough(spark: SparkSession,
-      root: String, tx: Long): Unit = {
-    val r = new Path(root)
-    Integrity.writeWatermark(fsOf(spark, r), r, Commit.Tx.staging(r), "tx", tx)
-  }
+  private val Verified = Integrity.Chain("tx", Commit.Tx)
 }

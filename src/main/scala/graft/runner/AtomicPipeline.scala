@@ -12,7 +12,7 @@ import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
 
-import graft.model.{EtlJob, FullRefresh, TableSpec}
+import graft.model.{EtlJob, TableSpec}
 import graft.operators.{Ops, Transaction}
 import graft.sources.Source
 
@@ -199,7 +199,7 @@ class AtomicPipeline(spark: SparkSession, source: Source, root: String) {
       error_message = None, last_updated_ts = started)))
     val attempt = Try {
       val table = spec.targetTable
-      val forcedFull = opts.fullRefresh || spec.strategy == FullRefresh
+      val forcedFull = opts.fullRefresh
       // a full refresh never looks at the current table
       val existing =
         if (!forcedFull && tableNames.contains(table))

@@ -3228,9 +3228,8 @@ object GraftSink {
     // Deliberate residual (the same one st_resume accepts for
     // ingest): bit rot landing in an already-verified file is invisible
     // to incremental passes and caught by the next FULL drill.
-    val watermark: Int =
-      if (deep && sinceVerified) deepVerifiedThrough(spark, dir)
-      else -1
+    val watermark =
+      Verified.start(f, new Path(dir), deep, sinceVerified).toInt
     val referenced = scala.collection.mutable.LinkedHashMap
       .empty[String, (Long, String)]
     val liveSegs = scala.collection.mutable.LinkedHashMap
@@ -3305,32 +3304,27 @@ object GraftSink {
     val report = FsckReport(complete.size, unreadable.result(),
       referenced.size, missing, mismatch, orphans, segOrphans, deep,
       badSum, unverified, hashed, skipped)
-    // a deepVerified pass ADVANCES the watermark to the newest
-    // complete version it walked (full passes establish it,
-    // incremental passes extend it); anything short of deepVerified —
-    // damage found, entries declined unverified — leaves it untouched
-    val advanced =
-      if (report.deepVerified && complete.nonEmpty &&
-          complete.head > watermark) {
-        writeDeepVerifiedThrough(spark, dir, complete.head)
-        complete.head
-      } else math.max(watermark, deepVerifiedThrough(spark, dir))
-    report.copy(verifiedThrough = advanced)
+    // the newest complete version walked: where a deepVerified pass
+    // leaves the watermark
+    report.copy(verifiedThrough = Verified.leave(f, new Path(dir),
+      watermark, report.deepVerified, complete.headOption.map(_.toLong))
+      .toInt)
   }
 
-  /** The persisted deep-verification watermark: `_deep_verified`
-    * holds the version through which a chain of deepVerified passes
-    * has re-hashed every referenced byte (−1 = never). Written
-    * staged + rename; monotone (only [[fsck]] advances it).
+  /** The table's deep-verification chain: `_deep_verified` holds the
+    * version through which a chain of deepVerified passes has
+    * re-hashed every referenced byte (−1 = never); monotone (only
+    * [[fsck]] and the replication carries advance it).
     */
+  private val Verified = Integrity.Chain("version", Commit.Sink)
+
   private[sources] def deepVerifiedThrough(spark: SparkSession,
       dir: String): Int =
-    Integrity.readWatermark(fs(spark, dir), new Path(dir), "version").toInt
+    Verified.read(fs(spark, dir), new Path(dir)).toInt
 
   private def writeDeepVerifiedThrough(spark: SparkSession, dir: String,
       v: Int): Unit =
-    Integrity.writeWatermark(fs(spark, dir), new Path(dir),
-      Commit.Sink.staging(new Path(dir)), "version", v)
+    Verified.write(fs(spark, dir), new Path(dir), v)
 
   private[sources] def checkSupported(schema: StructType): Unit =
     schema.fields.foreach { fld =>

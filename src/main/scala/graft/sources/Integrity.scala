@@ -10,9 +10,9 @@ import org.apache.spark.util.SerializableConfiguration
 /** The content-integrity kernel shared by the three versioned-table
   * layers — graftsink ([[GraftSink]]), `operators.Transaction` and
   * `operators.MergeOnRead`. Each layer keeps its own layout, reports
-  * and refusal texts; the hashing, the sidecar, the verified copy, the
-  * fan-out file check and the deep-verification watermark live here
-  * once.
+  * and refusal texts; the hashing, the sidecar and what it vouches
+  * for, the verified copy, the fan-out file check and the
+  * deep-verification chain live here once.
   *
   * CHECKSUM: XXH64 (seed 0, lz4-java — already on Spark's classpath)
   * over a file's full content, rendered as 16 lowercase hex chars.
@@ -26,18 +26,19 @@ import org.apache.spark.util.SerializableConfiguration
   * `name<TAB>bytes<TAB>xxh64`, sorted by name, each line ending in
   * `\n`; a dir with no payload holds `\n` alone. Payload = the dir's
   * plain files whose names start with neither `_` nor `.` (Hadoop
-  * bookkeeping and the sidecar itself are never listed). A payload dir
-  * without a sidecar is UNVERIFIED — counted and warned about via
+  * bookkeeping and the sidecar itself are never listed).
+  *
+  * VOUCH ([[vouch]]): a payload file its dir's sidecar does not list —
+  * every payload file of a dir without one — is UNVERIFIED, in every
+  * layer that keeps sidecars: their readers read every payload file of
+  * a dir, so such a file is counted and warned about via
   * [[warnUnverified]], never passed as verified.
   */
 private[graft] object Integrity {
 
   private val Sidecar = "_checksums"
 
-  /** The persisted deep-verification watermark file: `<key>=<id>` then
-    * `atMs=<stamp>`, one per line. The key is the layer's (`tx` at a
-    * Transaction root, `version` at a graftsink table).
-    */
+  /** The persisted deep-verification watermark file (see [[Chain]]). */
   private val DeepVerified = "_deep_verified"
 
   def newHash(): net.jpountz.xxhash.StreamingXXHash64 =
@@ -64,10 +65,11 @@ private[graft] object Integrity {
 
   /** The payload files of `dir`, sorted by name. */
   private def payloadFiles(fs: FileSystem, dir: Path): Seq[FileStatus] =
-    fs.listStatus(dir).filter { f =>
-      val n = f.getPath.getName
-      f.isFile && !n.startsWith("_") && !n.startsWith(".")
-    }.sortBy(_.getPath.getName).toSeq
+    fs.listStatus(dir).filter(f => f.isFile && isPayload(f.getPath.getName))
+      .sortBy(_.getPath.getName).toSeq
+
+  private def isPayload(name: String): Boolean =
+    !name.startsWith("_") && !name.startsWith(".")
 
   /** Slice count for every per-file fan-out (stamp, check, verified
     * copy): one file per task up to twice the cluster width, so uneven
@@ -124,20 +126,37 @@ private[graft] object Integrity {
   private def sidecarLine(fs: FileSystem, p: Path): String =
     s"${p.getName}\t${fs.getFileStatus(p).getLen}\t${hashFile(fs, p)}"
 
-  /** `dir`'s sidecar as file name → (bytes, xxh64), or None when the
-    * dir has none. Plain FileSystem IO: runs on the driver and inside
-    * executor tasks alike.
+  /** What one listing of a dir says about its content: `files` are its
+    * plain file names, sorted, bookkeeping included; `side` its sidecar
+    * as file name → (bytes, xxh64), None when it has none.
     */
-  def readSidecar(fs: FileSystem,
-      dir: Path): Option[Map[String, (Long, String)]] = {
-    val p = new Path(dir, Sidecar)
-    if (!fs.exists(p)) None
-    else Some(readText(fs, p).split("\n").iterator.filter(_.nonEmpty)
-      .map { l =>
+  final case class Vouch(files: Seq[String],
+      side: Option[Map[String, (Long, String)]]) {
+    /** The payload files the sidecar does not list: UNVERIFIED. */
+    def unlisted: Seq[String] =
+      files.filter(n => isPayload(n) && !side.exists(_.contains(n)))
+  }
+
+  /** `dir`'s [[Vouch]]: one listing, plus one read of the sidecar when
+    * the listing holds one; None when the dir does not exist. Plain
+    * FileSystem IO: runs on the driver and inside executor tasks alike.
+    */
+  def vouch(fs: FileSystem, dir: Path): Option[Vouch] = {
+    val listed =
+      try fs.listStatus(dir)
+      catch { case _: java.io.FileNotFoundException => return None }
+    val files = listed.filter(_.isFile).map(_.getPath.getName).sorted.toSeq
+    Some(Vouch(files,
+      if (files.contains(Sidecar)) Some(readSidecar(fs, dir)) else None))
+  }
+
+  private def readSidecar(fs: FileSystem,
+      dir: Path): Map[String, (Long, String)] =
+    readText(fs, new Path(dir, Sidecar)).split("\n").iterator
+      .filter(_.nonEmpty).map { l =>
         val a = l.split("\t", -1)
         a(0) -> ((a(1).toLong, a(2)))
-      }.toMap)
-  }
+      }.toMap
 
   /** The whole content of small file `p`. */
   def readSmall(fs: FileSystem, p: Path): Array[Byte] = {
@@ -273,31 +292,59 @@ private[graft] object Integrity {
     */
   def warnUnverified(text: String): Unit = System.err.println(text)
 
-  /** The watermark id under `key` in `dir`'s [[DeepVerified]] file;
-    * −1 when absent or unreadable.
+  /** One layer's deep-verification chain. Its [[DeepVerified]] file in
+    * the layer's dir holds `<key>=<id>` then `atMs=<stamp>`, one per
+    * line (`tx` at a Transaction root, `version` at a graftsink table):
+    * every payload byte first referenced by an id ≤ the watermark was
+    * re-hashed by a pass that ended deep-verified, and is immutable
+    * since. A stamp stages through `layer`'s staging spot.
     */
-  def readWatermark(fs: FileSystem, dir: Path, key: String): Long = {
-    val p = new Path(dir, DeepVerified)
-    if (!fs.exists(p)) -1L
-    else try readText(fs, p).split("\n").collectFirst {
-        case l if l.startsWith(s"$key=") =>
-          l.stripPrefix(s"$key=").trim.toLong
-      }.getOrElse(-1L)
-    catch { case scala.util.control.NonFatal(_) => -1L }
-  }
+  final case class Chain(key: String, layer: Commit.Layer) {
 
-  /** Stamp `dir`'s watermark at `id`: written to `tmp` (the layer's
-    * staging spot), then put in place of the old stamp in one step
-    * ([[Commit.replace]]), so a reader always finds a stamp. A racing
-    * stamp landing last is fine.
-    */
-  def writeWatermark(fs: FileSystem, dir: Path, tmp: Path, key: String,
-      id: Long): Unit = {
-    fs.mkdirs(tmp.getParent)
-    val out = fs.create(tmp, true)
-    try out.write(s"$key=$id\natMs=${System.currentTimeMillis()}\n"
-      .getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    Commit.replace(fs, tmp, new Path(dir, DeepVerified))
+    /** The stored watermark; −1 when absent or unreadable. */
+    def read(fs: FileSystem, dir: Path): Long = {
+      val p = new Path(dir, DeepVerified)
+      if (!fs.exists(p)) -1L
+      else try readText(fs, p).split("\n").collectFirst {
+          case l if l.startsWith(s"$key=") =>
+            l.stripPrefix(s"$key=").trim.toLong
+        }.getOrElse(-1L)
+      catch { case scala.util.control.NonFatal(_) => -1L }
+    }
+
+    /** Stamp the watermark at `id`: staged, then put in place of the
+      * old stamp in one step ([[Commit.replace]]), so a reader always
+      * finds a stamp. A racing stamp landing last is fine.
+      */
+    def write(fs: FileSystem, dir: Path, id: Long): Unit = {
+      val tmp = layer.staging(dir)
+      fs.mkdirs(tmp.getParent)
+      val out = fs.create(tmp, true)
+      try out.write(s"$key=$id\natMs=${System.currentTimeMillis()}\n"
+        .getBytes(StandardCharsets.UTF_8))
+      finally out.close()
+      Commit.replace(fs, tmp, new Path(dir, DeepVerified))
+    }
+
+    /** The watermark a pass starts from: the stored one for an
+      * incremental deep pass (`sinceVerified`), which skips re-hashing
+      * what it covers; −1 for any other pass, which covers nothing.
+      */
+    def start(fs: FileSystem, dir: Path, deep: Boolean,
+        sinceVerified: Boolean): Long =
+      if (deep && sinceVerified) read(fs, dir) else -1L
+
+    /** The watermark a pass leaves: a `deepVerified` pass stamps the
+      * newest id it walked when that is past `start` (full passes
+      * establish the chain, incremental ones extend it); anything short
+      * of that — damage found, bytes declined unverified — leaves the
+      * stored one, reported as the larger of it and `start`.
+      */
+    def leave(fs: FileSystem, dir: Path, start: Long,
+        deepVerified: Boolean, newest: Option[Long]): Long =
+      newest.filter(n => deepVerified && n > start) match {
+        case Some(n) => write(fs, dir, n); n
+        case None => math.max(start, read(fs, dir))
+      }
   }
 }

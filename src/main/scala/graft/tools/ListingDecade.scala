@@ -52,8 +52,8 @@ object ListingDecade {
     val counts =
       if (args.nonEmpty) args.toSeq.map(_.toInt)
       else Seq(100000, 1000000, 10000000)
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.queries.Tables.configure(SparkSession.builder()
+      .master("local[4]")).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val f = new Path("/tmp").getFileSystem(
       spark.sparkContext.hadoopConfiguration)

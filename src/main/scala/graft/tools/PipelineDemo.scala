@@ -32,12 +32,10 @@ object PipelineDemo {
       Files.createTempDirectory("graft_demo").toString)
     val opts = graft.runner.RunOptions.parse(
       args.dropWhile(!_.startsWith("--")).toSeq)
-    val spark = SparkSession.builder()
+    val spark = graft.queries.Tables.configure(SparkSession.builder()
       .master("local[4]")
       .appName("graft-pipeline-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+      .config("spark.sql.shuffle.partitions", "4"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

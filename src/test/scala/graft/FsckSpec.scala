@@ -524,5 +524,38 @@ class FsckSpec extends SparkSpec {
         s"${layer.name}: planted $kind damage reported as " +
           s"${layer.kinds(root)}")
     }
+
+    // UNLISTED PAYLOAD: a copy of the victim under a new payload name in
+    // the same dir. A Transaction member and a MergeOnRead dir are read
+    // whole, so no sidecar vouches for bytes the reader reads; graftsink
+    // reads only manifest-listed files, so the copy is an unreferenced
+    // file. Planted before any deep pass, so no watermark covers it.
+    val unlisted = Map("transaction member" -> Set("unverified"),
+      "merge-on-read tombstone dir" -> Set("unverified"),
+      "graftsink table" -> Set.empty[String])
+    val roots = layers.map { layer =>
+      val (root, victim) = layer.plant("unlisted")
+      put(new Path(victim.getParent, s"copy-${victim.getName}"), slurp(victim))
+      assert(layer.kinds(root) == unlisted(layer.name),
+        s"${layer.name}: an unlisted payload copy reported as " +
+          s"${layer.kinds(root)}")
+      layer.name -> root
+    }.toMap
+    val tx = graft.operators.Transaction
+    assert(tx.fsck(spark, roots("transaction member")).verifiedThrough == -1L,
+      "a member with unlisted bytes must not advance the watermark")
+    assert(GraftSink.fsck(spark, roots("graftsink table"))
+      .unreferencedDataFiles == 1)
+
+    // a watermark-covered member is held to the same listing: after a
+    // deep pass stamps tx 0, a copy planted in a/t0 declines the next
+    // incremental pass, and the chain stays at tx 0
+    val (covered, victim) = layers.head.plant("unlisted_covered")
+    assert(tx.fsck(spark, covered, deep = true).verifiedThrough == 0L)
+    put(new Path(victim.getParent, s"copy-${victim.getName}"), slurp(victim))
+    tx.publish(spark, covered, Map("b" -> Seq(1L).toDF("k")))
+    val incr = tx.fsck(spark, covered, deep = true, sinceVerified = true)
+    assert(incr.clean && incr.unverifiedMembers == 1 && !incr.deepVerified &&
+      incr.verifiedThrough == 0L, s"covered member with unlisted bytes: $incr")
   }
 }

@@ -158,6 +158,28 @@ class TransactionSpec extends SparkSpec {
     }
   }
 
+  test("tag refuses '.' and '..' before staging anything; the root's " +
+      "refs and vacuum keep working") {
+    val root = freshRoot()
+    Transaction.publish(spark, root, Map("a" -> Seq(1).toDF("k")))
+    Transaction.publish(spark, root, Map("a" -> Seq(2).toDF("k")))
+    // `.` resolves to `_refs` itself and `..` to the root
+    Seq(".", "..", ".hidden", "__x", "a/b", "").foreach { name =>
+      val e = intercept[IllegalArgumentException] {
+        Transaction.tag(spark, root, name, 0L)
+      }
+      assert(e.getMessage.contains(s"bad ref name '$name'"), e.getMessage)
+    }
+    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(!fs.isFile(new Path(root, "_refs")), "_refs must never become a file")
+    Transaction.tag(spark, root, "v1", 0L)
+    assert(Transaction.refTx(spark, root, "v1") == 0L)
+    assert(Transaction.vacuum(spark, root, keep = 1).isEmpty,
+      "tx0 is pinned, tx1 is the newest: nothing drops")
+    assert(Transaction.readRef(spark, root, "a", "v1").as[Int].collect()
+      .toSeq == Seq(1))
+  }
+
   test("streaming publish: EVERY committed tx pairs its summary with " +
       "exactly its deltas (cross-table atomicity under micro-batches)") {
     import org.apache.spark.sql.functions._

@@ -7,16 +7,19 @@
 # (graft.tools.PipelineDemo, the one main that drives the runner's CLI
 # options), (1c) the commit and placement specs (TransactionSpec,
 # CloneSpec, GraftSinkConflictSpec, OpsSpec, PartitionedMergeSpec,
-# PipelineSpec) and PosixLocalFileSystemSpec again with `file:` on
-# Hadoop's stock org.apache.hadoop.fs.LocalFileSystem (the JVM names
-# it, so Tables.configure keeps it; PosixLocalFileSystemSpec fails if
-# any other class resolves). Its rename replaces an existing target
-# file and moves a dir INSIDE an existing one, it keeps a `.crc` beside
-# every file that the driver-side writes of driver-resident members
-# (the pipeline's running marker and failure record) create through
-# it directly, and it forks a `chmod` per created file. Step 1 runs
-# on graft.sources.PosixLocalFileSystem, which Tables.configure
-# installs: the same class with in-process permissions.
+# PipelineSpec), the integrity specs (FsckSpec, MorDeleteSpec) and
+# PosixLocalFileSystemSpec again with `file:` on Hadoop's stock
+# org.apache.hadoop.fs.LocalFileSystem (the JVM names it, so
+# Tables.configure keeps it; PosixLocalFileSystemSpec fails if any
+# other class resolves). Its rename replaces an existing target file
+# and moves a dir INSIDE an existing one, it keeps a `.crc` beside
+# every file created through it directly (the driver-side writes of
+# driver-resident members — the pipeline's running marker and failure
+# record — the sidecar stamp, the vouch listings that must not count
+# those `.crc` files, and the `_deep_verified` replace), and it forks
+# a `chmod` per created file. Step 1 and the pipeline demo (1b) run on
+# graft.sources.PosixLocalFileSystem, which Tables.configure installs:
+# the same class with in-process permissions.
 # (2) graft.Verify at
 # sf0.01 (parquet dumps + oracle_sql.json + tolerance bounds), (3) the
 # DuckDB oracle compare (driver-side tooling; skipped with a note when
@@ -52,9 +55,9 @@ sbt -batch "runMain graft.tools.PipelineDemo $OUT/demo --select prices_usd --ful
   >"$OUT/pipeline_demo.log" 2>&1
 DEMO_RC=$?
 
-echo "[roundcheck] 1c/5 commit and placement specs on LocalFileSystem"
+echo "[roundcheck] 1c/5 commit and integrity specs on LocalFileSystem"
 sbt -batch 'set Test/javaOptions += "-Dspark.hadoop.fs.file.impl=org.apache.hadoop.fs.LocalFileSystem"' \
-  "testOnly graft.TransactionSpec graft.CloneSpec graft.GraftSinkConflictSpec graft.OpsSpec graft.PartitionedMergeSpec graft.PipelineSpec graft.PosixLocalFileSystemSpec" \
+  "testOnly graft.TransactionSpec graft.CloneSpec graft.GraftSinkConflictSpec graft.OpsSpec graft.PartitionedMergeSpec graft.PipelineSpec graft.FsckSpec graft.MorDeleteSpec graft.PosixLocalFileSystemSpec" \
   >"$OUT/commit_specs_localfs.log" 2>&1
 LOCALFS_RC=$?
 

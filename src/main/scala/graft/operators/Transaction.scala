@@ -52,8 +52,8 @@ import graft.sources.{Commit, GraftSink, Integrity}
   * already touches every byte — verification is free) and REFUSES to
   * propagate corruption; [[fsck]] re-walks committed members against
   * their sidecars, `deep = true` re-hashing content cluster-fanned —
-  * the same single-table guarantees graftsink's manifest checksums +
-  * `copyVerified` + `fsck(deep)` give, one layer up.
+  * the same single-table guarantees graftsink's manifest checksums,
+  * verified replication and `fsck(deep)` give, one layer up.
   */
 object Transaction {
 
@@ -143,6 +143,22 @@ object Transaction {
     parsed
   }
 
+  /** A member's name under its root, `<table>/t<version>`: the one
+    * place the layout names a version dir — its path ([[memberDir]])
+    * and every message that names it.
+    */
+  private def member(table: String, v: Long): String = s"$table/t$v"
+
+  private def memberDir(root: String, table: String, v: Long): Path =
+    new Path(s"$root/${member(table, v)}")
+
+  /** Each table's member dir at committed transaction `tx`: the dirs
+    * [[read]] reads.
+    */
+  def tableDirs(spark: SparkSession, root: String,
+      tx: Long): Map[String, Path] =
+    manifest(spark, root, tx).map { case (t, v) => t -> memberDir(root, t, v) }
+
   /** Atomically publish `tables` as one transaction; any table NOT in
     * the map carries forward from the previous transaction. Returns
     * the committed txId. Every staged version dir is stamped with its
@@ -184,7 +200,7 @@ object Transaction {
     val fs = fsOf(spark, rootP)
     // data first, invisible until the manifest commits
     tables.foreach { case (name, df) =>
-      val dest = new Path(new Path(rootP, name), s"t$txId")
+      val dest = memberDir(root, name, txId)
       val tmp = Commit.Tx.staging(rootP)
       try {
         // a driver-resident member is one file written on this thread
@@ -241,10 +257,10 @@ object Transaction {
       require(committed.nonEmpty, s"no committed transactions under $root")
       committed.last
     }
-    val m = manifest(spark, root, id)
-    require(m.contains(table),
-      s"table '$table' not in transaction $id (${m.keys.mkString(", ")})")
-    val dir = new Path(s"$root/$table/t${m(table)}")
+    val dirs = tableDirs(spark, root, id)
+    require(dirs.contains(table),
+      s"table '$table' not in transaction $id (${dirs.keys.mkString(", ")})")
+    val dir = dirs(table)
     val first =
       try Integrity.payload(fsOf(spark, dir), dir).headOption
       catch { case _: java.io.FileNotFoundException => None }
@@ -274,9 +290,10 @@ object Transaction {
     * [[GraftSink.promote]] closes per table, closed for the whole
     * root. Local [[publish]]es may take the root the moment promote
     * returns (txIds continue above the synced history). [[syncTo]]
-    * checks the fence at entry, before placing the member dirs it
-    * copied, and after its manifest publish (the commit-time
-    * conviction: the burned id is the retracted txId itself).
+    * checks the fence through [[Commit.sync]]: at entry, before
+    * placing the member dirs it copied, and after its manifest publish
+    * (the commit-time conviction: the burned id is the retracted txId
+    * itself).
     *
     * Re-replication of a promoted root is deliberately NOT a sync:
     * take fresh [[syncTo]]s to a NEW directory. `force = true` on
@@ -324,15 +341,15 @@ object Transaction {
     * a replica reader resolves only committed manifests, so it sees
     * all tables at tx N or all at the previous sync, never a blend.
     *
-    * VERIFIED BYTES: each copied data file folds XXH64 over the same
-    * buffers the copy streams and is checked against the source dir's
-    * sidecar ([[Integrity.copyVerified]]) — a mismatch FAILS the copy
-    * loudly
-    * (replication must never propagate silent source-side corruption;
-    * deep-fsck and restore the source object first). Legacy source
-    * dirs without a sidecar copy UNVERIFIED, counted in
-    * [[lastSyncUnverified]] and named on stderr — never silently
-    * passed as verified.
+    * The shared steps are the kernels': the promote fence around the
+    * copy and the commit, with its commit-time conviction, is
+    * [[Commit.sync]]'s; the verified copy, which refuses to propagate
+    * a byte that does not match the source dir's sidecar and counts
+    * files without one UNVERIFIED ([[lastSyncUnverified]]), is
+    * [[Integrity.replicate]]'s; the verified-by-replication watermark
+    * carry is [[Integrity.Chain.carry]]'s (declined on `force`,
+    * unverified files, or a pinned backfill below the replica's
+    * newest tx).
     *
     * DIVERGENCE GUARD: the replica's newest committed tx must be
     * byte-identical to the source's same-id manifest — anything else
@@ -342,6 +359,8 @@ object Transaction {
     * replica commits (manifests leave the commit set; their data dirs
     * stay for GC) and re-subjugates a promoted root (clears the
     * fence). The check is O(1) manifest reads however many tables.
+    * A replica member dir must also hold what the source's does: the
+    * same sidecar and the same payload files outside it.
     *
     * Incremental by construction: a version dir the replica already
     * holds is a COMMITTED whole (placed atomically), so it never
@@ -352,221 +371,154 @@ object Transaction {
     */
   def syncTo(spark: SparkSession, srcRoot: String, dstRoot: String,
       tx: Option[Long] = None, force: Boolean = false): Int = {
-    // call-local unverified tally: the watermark decision below must
-    // read THIS sync's count — the JVM-global seam exists for specs,
-    // and two concurrent syncs (even to different roots) interleaving
-    // its reset/increments must not leak verified stamps across calls
-    var syncUnverified = 0
     lastSyncUnverified = 0
-    // PROMOTION FENCE at entry (see [[promote]]): a promoted replica
-    // took local transactions — a sync from the resurrected old
-    // source would clobber them. Refuse, naming the state; force
-    // re-subjugates (clears the fence; the divergence guard below
-    // then discards the post-failover commits).
-    def fenceCheck(): Unit =
-      if (isPromoted(spark, dstRoot)) sys.error(
-        s"transaction: replica root $dstRoot was PROMOTED — it owns " +
-          "its transactions now, and a sync from the old source would " +
-          "clobber post-failover commits. Re-replicate with fresh " +
-          "syncTo calls to a NEW directory, or pass force=true to " +
-          "re-subjugate (discards the promoted root's local commits)")
-    if (force) {
-      if (Commit.lower(fsOf(spark, new Path(dstRoot)), new Path(dstRoot)))
-        System.err.println("transaction: force sync re-subjugates " +
-          s"promoted root $dstRoot — its post-failover commits leave " +
-          "the commit set (data dirs remain until vacuum)")
-    } else fenceCheck()
-    val committed = committedTxs(spark, srcRoot)
-    require(committed.nonEmpty, s"no committed transactions under $srcRoot")
-    val id = tx.getOrElse(committed.last)
-    require(committed.contains(id),
-      s"transaction $id not committed under $srcRoot")
-    val m = manifest(spark, srcRoot, id)
     val dstP = new Path(dstRoot)
     val fs = fsOf(spark, dstP)
-    fs.mkdirs(dstP)
-    // DIVERGENCE GUARD: O(1) — replicated manifests are byte-verbatim
-    // copies, and the only writer of anything else is a local publish,
-    // which always claims a NEW max id. So a replica whose newest
-    // committed tx is absent from the source, or byte-different from
-    // the source's same id, has taken local history.
-    val srcSet = committed.toSet
-    def divergent(t: Long) = !srcSet(t) || !java.util.Arrays.equals(
-      manifestBytes(spark, srcRoot, t), manifestBytes(spark, dstRoot, t))
-    val dstCommitted = committedTxs(spark, dstRoot)
-    dstCommitted.lastOption.filter(divergent).foreach { last =>
-      if (!force) sys.error(
-        s"transaction: replica $dstRoot committed tx $last, which " +
-          "does not match the source's history — local transactions " +
-          "landed there (a promoted root?). Refusing to interleave " +
-          "two histories; force=true discards the replica's divergent " +
-          "commits, or re-replicate to a fresh directory")
+    Commit.sync(fs, dstRoot, "transaction", force) { () =>
+      val committed = committedTxs(spark, srcRoot)
+      require(committed.nonEmpty, s"no committed transactions under $srcRoot")
+      val id = tx.getOrElse(committed.last)
+      require(committed.contains(id),
+        s"transaction $id not committed under $srcRoot")
+      val m = manifest(spark, srcRoot, id).toSeq.sortBy(_._1)
+      fs.mkdirs(dstP)
+      // DIVERGENCE GUARD: O(1) — replicated manifests are byte-verbatim
+      // copies, and the only writer of anything else is a local publish,
+      // which always claims a NEW max id. So a replica whose newest
+      // committed tx is absent from the source, or byte-different from
+      // the source's same id, has taken local history.
+      val srcSet = committed.toSet
+      def divergent(t: Long) = !srcSet(t) || !java.util.Arrays.equals(
+        manifestBytes(spark, srcRoot, t), manifestBytes(spark, dstRoot, t))
+      val dstListed = committedTxs(spark, dstRoot)
       // force: drop every replica commit the source can't vouch for
       // (absent id, or byte-different manifest), loudly
-      dstCommitted.filter(divergent).foreach { t =>
+      val discarded = dstListed.lastOption.filter(divergent).toSeq.flatMap {
+        last =>
+          if (!force) sys.error(
+            s"transaction: replica $dstRoot committed tx $last, which " +
+              "does not match the source's history — local transactions " +
+              "landed there (a promoted root?). Refusing to interleave " +
+              "two histories; force=true discards the replica's divergent " +
+              "commits, or re-replicate to a fresh directory")
+          dstListed.filter(divergent)
+      }
+      discarded.foreach { t =>
         fs.delete(manifestPath(dstRoot, t), false)
         System.err.println(s"transaction: force sync discarded the " +
           s"replica's divergent tx $t at $dstRoot")
       }
-    }
-    // MEMBER-CONTENT DIVERGENCE — the manifest guard above cannot see
-    // everything: a local publish at a just-promoted root claiming the
-    // same txId over the same table set writes a BYTE-IDENTICAL
-    // manifest that points at different data. The sidecars prove
-    // content identity in one tiny read per existing member dir: a dst
-    // dir wearing a synced (table, version) name must hold the synced
-    // bytes. Both-sides-legacy (no sidecars anywhere) trusts the name,
-    // the pre-sidecar behavior.
-    def vouch(r: String, t: String, v: Long) = {
-      val d = new Path(r, s"$t/t$v")
-      Integrity.vouch(fsOf(spark, d), d)
-    }
-    def sidecar(r: String, t: String, v: Long) = vouch(r, t, v).flatMap(_.side)
-    def diverges(t: String, v: Long) =
-      sidecar(srcRoot, t, v) != sidecar(dstRoot, t, v)
-    def refuseDivergent(dirs: Seq[(String, Long)]): Nothing = sys.error(
-      s"transaction: replica $dstRoot holds " +
-        dirs.map { case (t, v) => s"$t/t$v" }.mkString(", ") +
-        " with content that diverges from the source (local " +
-        "transactions at a promoted root?). Refusing to blend " +
-        "histories; force=true discards the divergent members, or " +
-        "re-replicate to a fresh directory")
-    val divergentDirs = m.toSeq.sortBy(_._1).filter { case (t, v) =>
-      fs.exists(new Path(dstRoot, s"$t/t$v")) && diverges(t, v)
-    }
-    if (divergentDirs.nonEmpty) {
-      if (!force) refuseDivergent(divergentDirs)
+      // the replica's committed txs before this sync — its newest is the
+      // watermark-chain anchor for the verified-by-replication stamp
+      val dstTxs = dstListed.filterNot(discarded.contains)
+      // MEMBER-CONTENT DIVERGENCE — the manifest guard above cannot see
+      // everything: a local publish at a just-promoted root claiming the
+      // same txId over the same table set writes a BYTE-IDENTICAL
+      // manifest that points at different data. One listing and one
+      // tiny sidecar read per existing member dir prove that a dst dir
+      // wearing a synced (table, version) name holds what a reader of
+      // the source's reads: the same sidecar and the same payload files
+      // outside it (none, unless both sides are legacy).
+      def vouch(r: String, t: String, v: Long) = {
+        val d = memberDir(r, t, v)
+        Integrity.vouch(fsOf(spark, d), d)
+      }
+      def content(r: String, t: String, v: Long) =
+        vouch(r, t, v).map(d => (d.side, d.unlisted))
+      def diverges(t: String, v: Long) =
+        content(srcRoot, t, v) != content(dstRoot, t, v)
+      def refuseDivergent(dirs: Seq[(String, Long)]): Nothing = sys.error(
+        s"transaction: replica $dstRoot holds " +
+          dirs.map { case (t, v) => member(t, v) }.mkString(", ") +
+          " with content that diverges from the source (local " +
+          "transactions at a promoted root?). Refusing to blend " +
+          "histories; force=true discards the divergent members, or " +
+          "re-replicate to a fresh directory")
+      val (present, absent) = m.partition { case (t, v) =>
+        fs.exists(memberDir(dstRoot, t, v)) }
+      val divergentDirs = present.filter { case (t, v) => diverges(t, v) }
+      if (divergentDirs.nonEmpty && !force) refuseDivergent(divergentDirs)
       divergentDirs.foreach { case (t, v) =>
-        fs.delete(new Path(dstRoot, s"$t/t$v"), true)
-        System.err.println(s"transaction: force sync re-copies $t/t$v " +
-          s"at $dstRoot — its content diverged from the source")
+        fs.delete(memberDir(dstRoot, t, v), true)
+        System.err.println(s"transaction: force sync re-copies " +
+          s"${member(t, v)} at $dstRoot — its content diverged from the source")
       }
-    }
-    val already = manifestPath(dstRoot, id)
-    // the replica's newest committed tx BEFORE this sync — the
-    // watermark-chain anchor for the verified-by-replication stamp
-    val dstPrevLast = committedTxs(spark, dstRoot).lastOption
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
-    // (table, version) dirs the replica lacks (divergent ones were
-    // just deleted under force) — each stages under a sync-scoped
-    // dir, files fan out cluster-wide, then ONE placement per dir
-    // makes it whole-or-absent
-    val needed = m.toSeq.sortBy(_._1).filter { case (t, v) =>
-      !fs.exists(new Path(dstRoot, s"$t/t$v")) }
-    if (needed.isEmpty && fs.exists(already)) {
-      // idempotent re-sync: data settled, manifest committed — but a
-      // ref re-point still carries
-      carryRefs(spark, srcRoot, dstRoot)
-      return 0
-    }
-    val stagingRoot = new Path(dstRoot,
-      "__staging_sync_" + java.util.UUID.randomUUID().toString.take(8))
-    if (needed.nonEmpty) {
-      // one job per file: (from, to, expected xxh64 or "" = legacy
-      // unverified). The sidecar itself and other bookkeeping files
-      // copy with no expectation — their integrity is re-derivable.
-      val files: Seq[(String, String, String)] = needed.flatMap {
-        case (t, v) =>
-          val from = new Path(srcRoot, s"$t/t$v")
-          val vouched = vouch(srcRoot, t, v).getOrElse(throw
-            new java.io.FileNotFoundException(s"File $from does not exist"))
-          val side = vouched.side
-          val unverified = vouched.unlisted.size
-          if (unverified > 0) {
-            syncUnverified += unverified
-            lastSyncUnverified += unverified
-            Integrity.warnUnverified(s"transaction: $t/t$v at $srcRoot has " +
-              s"no ${if (side.isEmpty) "checksum sidecar" else
-                s"checksums for $unverified file(s)"} (legacy publish) " +
-              s"— $unverified file(s) replicate UNVERIFIED; republish " +
-              "or accept the weaker existence-only integrity")
-          }
-          vouched.files.map { n =>
-            (new Path(from, n).toString,
-              new Path(stagingRoot, s"$t/t$v/$n").toString,
-              side.flatMap(_.get(n)).map(_._2).getOrElse(""))
-          }
+      // (table, version) dirs the replica lacks — each stages under a
+      // sync-scoped dir, files fan out cluster-wide, then ONE placement
+      // per dir makes it whole-or-absent
+      val needed = (absent ++ divergentDirs).sortBy(_._1)
+      if (needed.isEmpty && dstTxs.contains(id)) {
+        // idempotent re-sync: data settled, manifest committed — but a
+        // ref re-point still carries
+        carryRefs(spark, srcRoot, dstRoot, dstTxs.toSet)
+        None
+      } else {
+        val stagingRoot = new Path(dstRoot,
+          "__staging_sync_" + java.util.UUID.randomUUID().toString.take(8))
+        // (from, to, expected xxh64 or "" = none recorded) for every file
+        // of each needed dir; the sidecar itself and other bookkeeping
+        // files copy with no expectation — their integrity is
+        // re-derivable
+        val unverified = Integrity.replicate(spark, needed.flatMap {
+          case (t, v) =>
+            val from = memberDir(srcRoot, t, v)
+            val vouched = vouch(srcRoot, t, v).getOrElse(throw
+              new java.io.FileNotFoundException(s"File $from does not exist"))
+            vouched.files.map { n =>
+              (new Path(from, n).toString,
+                new Path(stagingRoot, s"${member(t, v)}/$n").toString,
+                vouched.side.flatMap(_.get(n)).map(_._2).getOrElse(""))
+            }
+        }, "transaction", dstRoot)
+        lastSyncUnverified = unverified
+        Some(Commit.Staged(abandon = () => fs.delete(stagingRoot, true),
+          commit = () => {
+            // a refused placement is benign only when the dir at the name
+            // holds the synced content — what a racing sync of the same
+            // (table, version) leaves; anything else is another history's
+            // member
+            try needed.foreach { case (t, v) =>
+              if (!Commit.placeDir(fs, new Path(stagingRoot, member(t, v)),
+                  memberDir(dstRoot, t, v)) && diverges(t, v))
+                refuseDivergent(Seq(t -> v))
+            } finally fs.delete(stagingRoot, true)
+            // commit point: the tx manifest lands LAST, through the same
+            // exclusive publish as publish()
+            val already = manifestPath(dstRoot, id)
+            val bytes = manifestBytes(spark, srcRoot, id)
+            val mTmp = Commit.stage(fs, Commit.Tx, already, bytes)
+            syncBarrier()
+            val placed = Commit.place(fs, mTmp, already)
+            // two syncs of the same tx write byte-identical manifests, so
+            // losing the commit rename to a racer is success — but ONLY
+            // when what landed is byte-identical: a local publish at a
+            // just-promoted root claiming the same id is different
+            // content, and acking it would blend histories
+            if (!placed && !(fs.exists(already) && java.util.Arrays.equals(
+                manifestBytes(spark, dstRoot, id), bytes)))
+              throw new java.io.IOException(
+                s"syncTo: commit rename to $already failed" +
+                  (if (fs.exists(already))
+                    " (a DIFFERENT tx manifest holds the id — promoted root?)"
+                  else ""))
+            // a convicted commit is retracted only when THIS sync placed
+            // it — one it lost to may be a post-failover local publish
+            // that forged the same bytes — and only while it is the
+            // newest tx (the burned floor is the id itself)
+            Commit.Landed(s"tx $id",
+              newest = () => placed &&
+                committedTxs(spark, dstRoot).lastOption.contains(id),
+              burn = () => Commit.burn(fs, Commit.Tx, commitsDir(dstRoot), id),
+              retract = () => fs.delete(already, false),
+              stands = () => {
+                Verified.carry(fs, dstP, !force && unverified == 0 &&
+                  dstTxs.lastOption.forall(_ <= id), dstTxs.lastOption, id)
+                carryRefs(spark, srcRoot, dstRoot, dstTxs.toSet + id)
+                needed.size
+              })
+          }))
       }
-      spark.sparkContext
-        .parallelize(files, Integrity.slices(spark, files.size))
-        .foreach { case (from, to, expect) =>
-          Integrity.copyVerified(conf.value, new Path(from), new Path(to),
-            expect, "transaction")
-        }
-    }
-    // fence AGAIN once the copy is done, before anything lands under
-    // the replica's own names: shrinks the promote-races-an-in-flight-
-    // sync window from the whole copy duration to the placements, and a
-    // sync fenced here leaves no member dir behind for a local publish
-    // at the same id to meet
-    if (!force && isPromoted(spark, dstRoot)) {
-      fs.delete(stagingRoot, true)
-      fenceCheck()
-    }
-    // a refused placement is benign only when the dir at the name holds
-    // the synced bytes — what a racing sync of the same (table,
-    // version) leaves; anything else is another history's member
-    try needed.foreach { case (t, v) =>
-      if (!Commit.placeDir(fs, new Path(stagingRoot, s"$t/t$v"),
-          new Path(dstRoot, s"$t/t$v")) && diverges(t, v))
-        refuseDivergent(Seq(t -> v))
-    } finally fs.delete(stagingRoot, true)
-    // commit point: the tx manifest lands LAST, through the same
-    // exclusive publish as publish()
-    val bytes = manifestBytes(spark, srcRoot, id)
-    val mTmp = Commit.stage(fs, Commit.Tx, already, bytes)
-    syncBarrier()
-    val placed = Commit.place(fs, mTmp, already)
-    if (!placed) {
-      // two syncs of the same tx write byte-identical manifests, so
-      // losing the commit rename to a racer is success — but ONLY
-      // when what landed is byte-identical: a local publish at a
-      // just-promoted root claiming the same id is different content,
-      // and acking it would blend histories
-      val landed = fs.exists(already) && java.util.Arrays.equals(
-        manifestBytes(spark, dstRoot, id), bytes)
-      if (!landed)
-        throw new java.io.IOException(
-          s"syncTo: commit rename to $already failed" +
-            (if (fs.exists(already))
-              " (a DIFFERENT tx manifest holds the id — promoted root?)"
-            else ""))
-    }
-    // COMMIT-TIME CONVICTION ([[Commit.convict]]): if the fence
-    // landed while this sync was paused past its last check, its
-    // commit must not stand — retracted while it is still the newest
-    // tx (the burned floor is the id itself), else it stays in
-    // history. Only a manifest THIS sync placed is retracted: one it
-    // lost to may be a post-failover local publish that forged the
-    // same bytes. Either way the sync FAILS loudly naming the
-    // promotion.
-    if (!force && isPromoted(spark, dstRoot)) {
-      val retracted = placed && Commit.convict(
-        () => committedTxs(spark, dstRoot).lastOption.contains(id),
-        () => Commit.burn(fs, Commit.Tx, commitsDir(dstRoot), id),
-        () => fs.delete(already, false))
-      sys.error(s"transaction: replica root $dstRoot was PROMOTED " +
-        s"while this sync was in flight — the sync's tx $id was " +
-        (if (retracted) "retracted"
-        else "already built upon and stays in history") +
-        "; the promoted root owns its transactions (replicate to a " +
-        "fresh directory, or force=true to re-subjugate)")
-    }
-    // VERIFIED-BY-REPLICATION watermark carry (the sink cloneSync
-    // contract at the tx root): the copied members were end-to-end
-    // verified in flight and everything already present was covered
-    // by the replica's existing watermark (== its pre-sync newest tx,
-    // by induction from the first sync), so the synced tx is
-    // proven-verified without a drill. Declines on a broken chain —
-    // force, legacy unverified files, a lagging watermark, or a
-    // pinned backfill below the replica's newest tx.
-    if (!force && syncUnverified == 0 &&
-        dstPrevLast.forall(_ <= id) &&
-        dstPrevLast.forall(_ == Verified.read(fs, dstP)))
-      Verified.write(fs, dstP, id)
-    carryRefs(spark, srcRoot, dstRoot)
-    needed.size
+    }.getOrElse(0)
   }
 
   /** Replicate source REFS (the vacuum-exempt GC roots) onto the
@@ -575,14 +527,14 @@ object Transaction {
     * source still pins, silently breaking "the corpus run X trained
     * on stays reproducible at the DR site". txIds ARE comparable
     * across the two roots (syncTo copies manifests verbatim), so a
-    * ref carries whenever the replica has that tx committed; a ref
-    * pinning a tx the replica never synced is skipped (it cannot pin
-    * what it does not hold). Re-points follow the source (tag() is
-    * an atomic replace); carry failures warn loudly naming the ref.
+    * ref carries whenever the replica has that tx committed
+    * (`dstTxs`); a ref pinning a tx the replica never synced is
+    * skipped (it cannot pin what it does not hold). Re-points follow
+    * the source (tag() is an atomic replace); carry failures warn
+    * loudly naming the ref.
     */
   private def carryRefs(spark: SparkSession, srcRoot: String,
-      dstRoot: String): Unit = {
-    lazy val dstTxs = committedTxs(spark, dstRoot).toSet
+      dstRoot: String, dstTxs: Set[Long]): Unit =
     refNames(spark, srcRoot).foreach { name =>
       try {
         val tx = refTx(spark, srcRoot, name)
@@ -596,7 +548,6 @@ object Transaction {
           "missing this GC root until a later sync re-carries it")
       }
     }
-  }
 
   private def refsDir(root: String) = new Path(root, "_refs")
 
@@ -820,8 +771,8 @@ object Transaction {
       else spark.sparkContext
         .parallelize(memberSeq, Integrity.slices(spark, memberSeq.size))
         .map { case ((t, v), covered) =>
-          val dir = new Path(rootStr, s"$t/t$v")
-          (s"$t/t$v", covered, Integrity.vouch(dir.getFileSystem(conf.value),
+          val dir = memberDir(rootStr, t, v)
+          (member(t, v), covered, Integrity.vouch(dir.getFileSystem(conf.value),
             dir).map(vouched => (vouched.side, vouched.unlisted.size)))
         }.collect().toSeq
     var unverifiedMembers = 0

@@ -9,9 +9,10 @@ import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
   * point of their own — graftsink ([[GraftSink]], one manifest per
   * table version) and `operators.Transaction` (one manifest per
   * multi-table transaction). Each layer keeps its own layout, its
-  * claim arithmetic and its refusal texts; the exclusive publish of a
-  * small file, the version-floor markers and the promote fence live
-  * here once.
+  * claim arithmetic and the refusal texts of its own guards; the
+  * exclusive publish of a small file, the version-floor markers, the
+  * promote fence, and a replica sync's three fence checks with their
+  * refusal texts ([[sync]]) live here once.
   *
   * PLACEMENT: everything staged takes its final name here. On `file:`
   * no placement uses Hadoop's `rename`: `LocalFileSystem` replaces an
@@ -54,12 +55,13 @@ import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
   * the table nor wedge a commit or a vacuum.
   *
   * PROMOTE FENCE: a marker at the root makes a replica's old source
-  * refuse to sync ([[raised]], [[raise]], [[lower]]). A sync checks it
-  * at entry and again once its copy is done, and re-checks it AFTER
-  * its commit point — the commit-time [[convict]]ion: a sync paused
-  * past its last check for the whole promotion finds the fence after
-  * committing and retracts its own commit while it is provably still
-  * the newest, burning the vacated id first.
+  * refuse to sync ([[raised]], [[raise]]). Every sync runs through
+  * [[sync]], which checks it at entry and again once the copy is done,
+  * and re-checks it AFTER the commit point — the commit-time
+  * [[convict]]ion: a sync paused past its last check for the whole
+  * promotion finds the fence after committing and retracts its own
+  * commit while it is provably still the newest, burning the vacated
+  * id first.
   */
 private[graft] object Commit {
 
@@ -242,7 +244,7 @@ private[graft] object Commit {
   /** Take the fence down (a force sync re-subjugating a promoted
     * replica); true when it was up.
     */
-  def lower(fs: FileSystem, root: Path): Boolean =
+  private def lower(fs: FileSystem, root: Path): Boolean =
     fs.delete(fenceMarker(root), false)
 
   /** The commit-time conviction of a commit that landed under a raised
@@ -253,10 +255,75 @@ private[graft] object Commit {
     * the commit was retracted; a failing `newest` reads as false, so
     * the commit stays in history.
     */
-  def convict(newest: () => Boolean, burn: () => Unit,
+  private def convict(newest: () => Boolean, burn: () => Unit,
       retract: () => Unit): Boolean = {
     def isNewest =
       try newest() catch { case scala.util.control.NonFatal(_) => false }
     isNewest && { burn(); isNewest && { retract(); true } }
+  }
+
+  // ---- replica sync -------------------------------------------------
+
+  /** What a layer's copy leaves for [[sync]]: `abandon` drops what it
+    * staged, `commit` runs the layer's commit point.
+    */
+  final case class Staged[C](abandon: () => Unit, commit: () => Landed[C])
+
+  /** How a layer's sync commit landed: `name` names it in a refusal
+    * (`tx 3`, `head v7`), `newest`, `burn` and `retract` are its
+    * [[convict]]ion, and `stands` runs once no fence convicts it (the
+    * chain and tag carries) and gives what the sync returns.
+    */
+  final case class Landed[C](name: String, newest: () => Boolean,
+      burn: () => Unit, retract: () => Unit, stands: () => C)
+
+  /** One replica sync's fence discipline, for graftsink's `cloneSync`
+    * and `Transaction.syncTo`: the layer's steps run between three
+    * checks of the fence at `replica`, and every refusal text starts
+    * with the layer's `label`.
+    *  1. At entry `force` lowers a raised fence and says so on stderr;
+    *     otherwise a raised fence refuses.
+    *  2. `copy` runs the layer's divergence guard and verified copy,
+    *     and returns what it [[Staged]] — or None when the replica
+    *     already holds the snapshot: nothing commits, and `sync`
+    *     returns None.
+    *  3. Just before the commit point a raised fence refuses again,
+    *     after the staged copy is abandoned: a promotion racing an
+    *     in-flight sync meets it here unless it lands during the
+    *     commit itself, and a sync refused here leaves nothing under
+    *     the replica's own names.
+    *  4. The layer commits.
+    *  5. After the commit point a raised fence convicts the commit and
+    *     refuses, naming whether it was retracted or stays in history.
+    * A force sync owns the replica, so it skips checks 3 and 5.
+    */
+  def sync[C](fs: FileSystem, replica: String, label: String,
+      force: Boolean)(copy: () => Option[Staged[C]]): Option[C] = {
+    val root = new Path(replica)
+    def refuse(): Nothing = sys.error(s"$label: replica $replica was " +
+      "PROMOTED — it owns its commits now, and a sync from the old " +
+      "source would clobber post-failover commits. Re-replicate to a " +
+      "NEW directory, or pass force=true to re-subjugate (discards the " +
+      "replica's commits since the promotion)")
+    if (force) {
+      if (lower(fs, root))
+        System.err.println(s"$label: force sync re-subjugates promoted " +
+          s"replica $replica — its post-failover commits are discarded " +
+          "(their data remains until vacuum)")
+    } else if (raised(fs, root)) refuse()
+    copy().map { staged =>
+      if (!force && raised(fs, root)) { staged.abandon(); refuse() }
+      val landed = staged.commit()
+      if (!force && raised(fs, root)) {
+        val retracted = convict(landed.newest, landed.burn, landed.retract)
+        sys.error(s"$label: replica $replica was PROMOTED while this " +
+          s"sync was in flight — the sync's ${landed.name} was " +
+          (if (retracted) "retracted"
+          else "already built upon and stays in history") +
+          "; the promoted replica owns its commits (re-replicate to a " +
+          "fresh directory, or force=true to re-subjugate)")
+      }
+      landed.stands()
+    }
   }
 }

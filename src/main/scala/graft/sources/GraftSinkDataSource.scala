@@ -2619,15 +2619,9 @@ object GraftSink {
     val conf = new SerializableConfiguration(
       spark.sparkContext.hadoopConfiguration)
     val files = m.files
-    if (files.nonEmpty) {
-      val jobs = files.map(f => (f.name, f.checksum))
-      spark.sparkContext
-        .parallelize(jobs, Integrity.slices(spark, jobs.size))
-        .foreach { case (name, sum) =>
-          Integrity.copyVerified(conf.value, new Path(s"$src/data/$name"),
-            new Path(s"$dst/data/$name"), sum, "graftsink")
-        }
-    }
+    Integrity.replicate(spark, files.map(f =>
+      (s"$src/data/${f.name}", s"$dst/data/${f.name}", f.checksum)),
+      "graftsink", dst)
     // the source's commit stamp carries VERBATIM: the replica's
     // time-travel history shows when the SOURCE committed, not when
     // the copy ran (legacy unstamped sources fall back to stamp-now)
@@ -2635,17 +2629,15 @@ object GraftSink {
       truncate = false, epoch = Some(1L),
       epochWriter = Some(ReplicaWriter),
       committedAtMs = m.committedAtMs)
-    // PROVEN-VERIFIED AT BIRTH: every data byte was end-to-end
-    // verified in flight ([[Integrity.copyVerified]] hashes what it reads AND
-    // what it lands), so the clone starts with the deep-verification
-    // watermark at its head — a DR replica owes no full drill for
-    // bytes replication already proved. Declined when any source
-    // entry lacks a checksum (nothing was proved for it). Segments
-    // composed at the destination carry write-time checksums, the
-    // same trust every local commit's records get; the FULL drill
-    // stays the independent read-back for both.
-    if (files.forall(_.checksum.nonEmpty))
-      writeDeepVerifiedThrough(spark, dst, born)
+    // PROVEN-VERIFIED AT BIRTH ([[Integrity.Chain.carry]] onto an empty
+    // replica): a DR replica owes no full drill for bytes replication
+    // already proved. Declined when any source entry lacks a checksum
+    // (nothing was proved for it). Segments composed at the
+    // destination carry write-time checksums, the same trust every
+    // local commit's records get; the FULL drill stays the independent
+    // read-back for both.
+    Verified.carry(fs(spark, dst), new Path(dst),
+      files.forall(_.checksum.nonEmpty), None, born)
     // tag carry at birth (same contract as cloneSync's, see there):
     // a source tag pinning exactly the cloned snapshot transfers, so
     // a clone taken AT a tagged corpus version is GC-protected on the
@@ -2690,117 +2682,86 @@ object GraftSink {
     * from the head, so the sync REFUSES with a loud error instead.
     * `force = true` proceeds and discards the local head state (it
     * remains in replica history until the replica's vacuum).
+    *
+    * The promote fence around the copy and the publish, with its
+    * commit-time conviction, is [[Commit.sync]]'s; the
+    * verified-by-replication watermark carry is
+    * [[Integrity.Chain.carry]]'s (declined on `force` or a
+    * checksum-less source entry).
     */
   def cloneSync(spark: SparkSession, src: String, dst: String,
       version: Option[Int] = None, syncTags: Boolean = true,
       force: Boolean = false): Int = {
-    // PROMOTION FENCE (see [[promote]]): a promoted replica took
-    // writes after failover — a sync from the resurrected old source
-    // would clobber them. Refuse, naming the state; force re-subjugates
-    // (discards the promoted head state, clears the fence).
-    def fenceCheck(): Unit =
-      if (isPromoted(spark, dst)) sys.error(
-        s"graftsink: replica $dst was PROMOTED — it owns its head " +
-          "now, and a sync from the old source would clobber " +
-          "post-failover writes. Re-replicate with a fresh " +
-          "cloneSnapshot to a NEW directory, or pass force=true to " +
-          "re-subjugate (discards the promoted head state)")
-    if (force) {
-      if (Commit.lower(fs(spark, dst), new Path(dst)))
-        System.err.println(s"graftsink: force sync re-subjugates " +
-          s"promoted table $dst — its post-promotion head state " +
-          "leaves the head (history until vacuum)")
-    } else fenceCheck()
-    val m = manifestAt(spark, src, version).getOrElse(
-      sys.error(s"graftsink: nothing to sync from $src" +
-        version.fold("")(v => s" v$v") + " — no complete manifest"))
-    val dstHead = latestManifest(spark, dst).getOrElse(
-      sys.error(s"graftsink: sync destination $dst is not a table — " +
-        "cloneSnapshot first"))
-    // DIVERGENCE GUARD (see [[ReplicaWriter]]): a head replication
-    // did not publish means local commits landed at the replica since
-    // the last sync — this truncate-publish would silently drop them
-    // from the head. Refuse loudly; `force` acknowledges the local
-    // state is disposable (it stays in replica history until vacuum).
-    if (!force && !dstHead.epochWriter.contains(ReplicaWriter))
-      sys.error(s"graftsink: replica $dst head v${dstHead.version} was " +
-        "not published by replication — local writes or replica-side " +
-        "maintenance would be silently clobbered by this sync. " +
-        "Re-point writers at the source (replication owns the replica " +
-        "head), or pass force=true to discard the local head state")
-    // name+size+stats is the classic replication identity rule; the
-    // recorded content checksum strengthens it — a same-name,
-    // same-size entry whose CONTENT hash changed re-copies
-    val have = dstHead.files
-      .map(f => (f.name, f.bytes, f.statsJson, f.checksum)).toSet
-    val conf = new SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
-    val delta = m.files.filterNot(f =>
-      have((f.name, f.bytes, f.statsJson, f.checksum)))
-    if (delta.nonEmpty) {
-      val jobs = delta.map(f => (f.name, f.checksum))
-      spark.sparkContext
-        .parallelize(jobs, Integrity.slices(spark, jobs.size))
-        .foreach { case (name, sum) =>
-          Integrity.copyVerified(conf.value, new Path(s"$src/data/$name"),
-            new Path(s"$dst/data/$name"), sum, "graftsink")
-        }
-    }
-    // strictly above the head's replication epoch (the publish-level
-    // dedupe skips any epoch <= the frontier — a same-value epoch
-    // would silently no-op this sync); version+1 floors the force
-    // path, where the head carries no replication epoch
-    val nextEpoch = math.max(dstHead.version.toLong,
-      if (dstHead.epochWriter.contains(ReplicaWriter))
-        dstHead.epoch.getOrElse(0L)
-      else 0L) + 1L
-    // fence AGAIN at the last step before taking the head: shrinks
-    // the promote-races-an-in-flight-sync window from the whole copy
-    // duration to the link itself (the [[promote]] fencing contract)
-    if (!force) fenceCheck()
-    syncPublishBarrier()
-    val published = publish(spark, conf, dst, m.schemaDdl, m.files,
-      truncate = true, epoch = Some(nextEpoch),
-      epochWriter = Some(ReplicaWriter),
-      committedAtMs = m.committedAtMs) // source stamp, verbatim
-    // COMMIT-TIME CONVICTION ([[Commit.convict]]): if the fence
-    // landed while this sync was paused past its last check, its head
-    // must not stand. It is retracted while it is still the head —
-    // the MAX listed name (the raw NAME-listing test zombie conviction
-    // uses) AND replication-stamped (publish's epoch dedupe can return
-    // an EXISTING head's number — never delete a promotion commit or a
-    // local write by mistake) — burning published + 1 first, so every
-    // commit loop claims above the vacated number. If something
-    // stacked above, the version stays in history. Either way the sync
-    // FAILS loudly naming the promotion — it can never silently ack.
-    if (!force && isPromoted(spark, dst)) {
-      val f = fs(spark, dst)
-      val retracted = Commit.convict(
-        () => fsVersionsDesc(spark, dst).headOption.contains(published) &&
-          manifestAt(spark, dst, Some(published))
+    val dstFs = fs(spark, dst)
+    Commit.sync(dstFs, dst, "graftsink", force) { () =>
+      val m = manifestAt(spark, src, version).getOrElse(
+        sys.error(s"graftsink: nothing to sync from $src" +
+          version.fold("")(v => s" v$v") + " — no complete manifest"))
+      val dstHead = latestManifest(spark, dst).getOrElse(
+        sys.error(s"graftsink: sync destination $dst is not a table — " +
+          "cloneSnapshot first"))
+      // DIVERGENCE GUARD (see [[ReplicaWriter]]): a head replication
+      // did not publish means local commits landed at the replica since
+      // the last sync — this truncate-publish would silently drop them
+      // from the head. Refuse loudly; `force` acknowledges the local
+      // state is disposable (it stays in replica history until vacuum).
+      if (!force && !dstHead.epochWriter.contains(ReplicaWriter))
+        sys.error(s"graftsink: replica $dst head v${dstHead.version} was " +
+          "not published by replication — local writes or replica-side " +
+          "maintenance would be silently clobbered by this sync. " +
+          "Re-point writers at the source (replication owns the replica " +
+          "head), or pass force=true to discard the local head state")
+      // name+size+stats is the classic replication identity rule; the
+      // recorded content checksum strengthens it — a same-name,
+      // same-size entry whose CONTENT hash changed re-copies
+      val have = dstHead.files
+        .map(f => (f.name, f.bytes, f.statsJson, f.checksum)).toSet
+      val delta = m.files.filterNot(f =>
+        have((f.name, f.bytes, f.statsJson, f.checksum)))
+      Integrity.replicate(spark, delta.map(f =>
+        (s"$src/data/${f.name}", s"$dst/data/${f.name}", f.checksum)),
+        "graftsink", dst)
+      Some(Commit.Staged(abandon = () => (), commit = () => {
+        // strictly above the head's replication epoch (the publish-level
+        // dedupe skips any epoch <= the frontier — a same-value epoch
+        // would silently no-op this sync); version+1 floors the force
+        // path, where the head carries no replication epoch
+        val nextEpoch = math.max(dstHead.version.toLong,
+          if (dstHead.epochWriter.contains(ReplicaWriter))
+            dstHead.epoch.getOrElse(0L)
+          else 0L) + 1L
+        syncPublishBarrier()
+        val published = publish(spark, new SerializableConfiguration(
+            spark.sparkContext.hadoopConfiguration), dst, m.schemaDdl,
+          m.files, truncate = true, epoch = Some(nextEpoch),
+          epochWriter = Some(ReplicaWriter),
+          committedAtMs = m.committedAtMs) // source stamp, verbatim
+        // a convicted head is retracted only while it is still the head
+        // — the MAX listed name (the raw NAME-listing test zombie
+        // conviction uses) AND replication-stamped (publish's epoch
+        // dedupe can return an EXISTING head's number — never delete a
+        // promotion commit or a local write by mistake) — burning
+        // published + 1 first, so every commit loop claims above the
+        // vacated number
+        Commit.Landed(s"head v$published",
+          newest = () => fsVersionsDesc(spark, dst).headOption
+            .contains(published) && manifestAt(spark, dst, Some(published))
             .exists(_.epochWriter.contains(ReplicaWriter)),
-        () => Commit.burn(f, Commit.Sink, new Path(dst), published + 1L),
-        () => f.delete(new Path(dst, manifestName(published)), false))
-      sys.error(s"graftsink: replica $dst was PROMOTED while this " +
-        s"sync was in flight — the sync's head v$published was " +
-        (if (retracted) "retracted" else
-          "already built upon and stays in history") +
-        "; the promoted table owns its head (fresh cloneSnapshot to " +
-        "re-replicate, or force=true to re-subjugate)")
-    }
-    // VERIFIED-BY-REPLICATION watermark carry: the delta was
-    // end-to-end verified in flight and everything carried was
-    // covered by the replica's existing watermark (== the pre-sync
-    // head by induction from the clone's birth stamp), so the synced
-    // head is proven-verified without a drill. The chain DECLINES —
-    // never guesses — when it is broken: a force sync, a checksum-less
-    // source entry, or a watermark that lagged the head (then a drill
-    // or an incremental fsck pass re-establishes it).
-    if (!force && m.files.forall(_.checksum.nonEmpty) &&
-        deepVerifiedThrough(spark, dst) == dstHead.version)
-      writeDeepVerifiedThrough(spark, dst, published)
-    if (syncTags) carryTags(spark, src, dst)
-    delta.size
+          burn = () => Commit.burn(dstFs, Commit.Sink, new Path(dst),
+            published + 1L),
+          retract = () => dstFs.delete(new Path(dst, manifestName(published)),
+            false),
+          stands = () => {
+            // the chain declines on a force sync or a checksum-less
+            // source entry
+            Verified.carry(dstFs, new Path(dst),
+              !force && m.files.forall(_.checksum.nonEmpty),
+              Some(dstHead.version.toLong), published)
+            if (syncTags) carryTags(spark, src, dst)
+            delta.size
+          })
+      }))
+    }.getOrElse(0)
   }
 
   /** Test seam: runs between cloneSync's final fence check and its
@@ -3317,14 +3278,6 @@ object GraftSink {
     * [[fsck]] and the replication carries advance it).
     */
   private val Verified = Integrity.Chain("version", Commit.Sink)
-
-  private[sources] def deepVerifiedThrough(spark: SparkSession,
-      dir: String): Int =
-    Verified.read(fs(spark, dir), new Path(dir)).toInt
-
-  private def writeDeepVerifiedThrough(spark: SparkSession, dir: String,
-      v: Int): Unit =
-    Verified.write(fs(spark, dir), new Path(dir), v)
 
   private[sources] def checkSupported(schema: StructType): Unit =
     schema.fields.foreach { fld =>

@@ -11,8 +11,10 @@ import org.apache.spark.util.SerializableConfiguration
   * layers — graftsink ([[GraftSink]]), `operators.Transaction` and
   * `operators.MergeOnRead`. Each layer keeps its own layout, reports
   * and refusal texts; the hashing, the sidecar and what it vouches
-  * for, the verified copy, the fan-out file check and the
-  * deep-verification chain live here once.
+  * for, the fan-out file check, the deep-verification chain and the
+  * two steps a replica sync shares — the verified copy fan-out
+  * ([[replicate]]) and the chain carry ([[Chain.carry]]) — live here
+  * once.
   *
   * CHECKSUM: XXH64 (seed 0, lz4-java — already on Spark's classpath)
   * over a file's full content, rendered as 16 lowercase hex chars.
@@ -187,7 +189,7 @@ private[graft] object Integrity {
     * landing before or after is benign. `label` prefixes every error
     * (`graftsink`, `transaction`).
     */
-  def copyVerified(conf: Configuration, from: Path, to: Path,
+  private def copyVerified(conf: Configuration, from: Path, to: Path,
       expect: String, label: String): Unit = {
     val sf = from.getFileSystem(conf)
     val df = to.getFileSystem(conf)
@@ -226,6 +228,38 @@ private[graft] object Integrity {
     // a re-copy replaces
     if (!Commit.replace(df, tmp, to) && !df.exists(to))
       sys.error(s"$label: replication copy rename to $to failed")
+  }
+
+  /** The verified copy of a replication: one task per (from, to,
+    * expected xxh64) triple (see [[slices]]), each through
+    * [[copyVerified]]; no job for no files. A payload file with no
+    * expected checksum ("", a legacy commit) copies UNVERIFIED: such
+    * files are counted and warned about once per call, naming `label`,
+    * the replica `dest` and the count. A bookkeeping file (`_` or `.`
+    * name: a sidecar, a `_SUCCESS`) copies with no expectation and is
+    * not counted — its integrity is re-derivable. Returns the
+    * unverified count.
+    */
+  def replicate(spark: SparkSession, files: Seq[(String, String, String)],
+      label: String, dest: String): Int = {
+    if (files.nonEmpty) {
+      val conf = new SerializableConfiguration(
+        spark.sparkContext.hadoopConfiguration)
+      spark.sparkContext.parallelize(files, slices(spark, files.size))
+        .foreach { case (from, to, expect) =>
+          copyVerified(conf.value, new Path(from), new Path(to), expect, label)
+        }
+    }
+    val unverified = files.collect {
+      case (from, _, "") if isPayload(new Path(from).getName) => from
+    }
+    if (unverified.nonEmpty)
+      warnUnverified(s"$label: ${unverified.size} file(s) replicated to " +
+        s"$dest UNVERIFIED — no checksum recorded at the source (legacy " +
+        "commit): " + unverified.take(3).mkString(", ") +
+        (if (unverified.size > 3) s" (+${unverified.size - 3} more)" else "") +
+        "; re-commit the source, or accept existence-only integrity")
+    unverified.size
   }
 
   /** One file to check: its recorded size (−1 = unknown, skip the size
@@ -325,6 +359,21 @@ private[graft] object Integrity {
       finally out.close()
       Commit.replace(fs, tmp, new Path(dir, DeepVerified))
     }
+
+    /** The verified-by-replication carry: a sync whose copied bytes
+      * were all verified in flight ([[replicate]] hashes what it reads
+      * AND what it lands) stamps `id`, the replica's new head, while
+      * the stored watermark equals `head`, the replica's head before
+      * the sync — everything the sync did not copy is then covered, by
+      * induction from the first sync or the clone's birth. An empty
+      * replica (`head` None) owes nothing. `verified` false is the
+      * layer's decline (force, unverified or checksum-less entries, a
+      * pinned backfill), and a lagging watermark declines too: a drill
+      * or an incremental fsck pass re-establishes the chain.
+      */
+    def carry(fs: FileSystem, dir: Path, verified: Boolean,
+        head: Option[Long], id: Long): Unit =
+      if (verified && head.forall(_ == read(fs, dir))) write(fs, dir, id)
 
     /** The watermark a pass starts from: the stored one for an
       * incremental deep pass (`sinceVerified`), which skips re-hashing

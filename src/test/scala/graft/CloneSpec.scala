@@ -502,6 +502,45 @@ class CloneSpec extends SparkSpec {
       s"a force sync must not extend the proven chain: $afterForce")
   }
 
+  test("a clone of a legacy checksum-less manifest warns that its files " +
+      "copy UNVERIFIED, reads the same rows, and is not stamped " +
+      "verified at birth") {
+    val src = freshDir("legacy_src")
+    val dst = freshDir("legacy_dst")
+    Seq((1L, "a"), (2L, "b")).toDF("k", "s").coalesce(1)
+      .write.format("graftsink").mode("append").save(src)
+    // a pre-checksum manifest: the head re-published with the trailing
+    // checksum field stripped from every file line
+    val fs = new Path(src)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val hv = GraftSink.latestManifest(spark, src).get.version
+    val in = fs.open(new Path(src, f"manifest-v$hv%06d"))
+    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+    finally in.close()
+    val lines = text.split("\n").toSeq.filter(_.nonEmpty)
+    val stripped = lines.map { l =>
+      if (l == lines.head || l.startsWith("#")) l
+      else l.split("\t", -1).dropRight(1).mkString("\t")
+    }
+    val out = fs.create(new Path(src, f"manifest-v${hv + 1}%06d"), false)
+    try out.write(stripped.mkString("\n").getBytes("UTF-8"))
+    finally out.close()
+    assert(GraftSink.latestManifest(spark, src).get.files
+      .forall(_.checksum.isEmpty))
+    val err = new java.io.ByteArrayOutputStream()
+    val saved = System.err
+    System.setErr(new java.io.PrintStream(err, true, "UTF-8"))
+    try assert(GraftSink.cloneSnapshot(spark, src, dst) == 1)
+    finally System.setErr(saved)
+    val warned = err.toString("UTF-8")
+    assert(warned.contains(s"graftsink: 1 file(s) replicated to $dst " +
+      "UNVERIFIED"), s"the unverified copy must be named: $warned")
+    assert(spark.read.format("graftsink").load(dst)
+      .select("k").as[Long].collect().sorted.toSeq == Seq(1L, 2L))
+    assert(GraftSink.fsck(spark, dst).verifiedThrough == -1,
+      "nothing was proved for a checksum-less entry")
+  }
+
   test("promote() is re-runnable after a partial failure: a fence " +
       "marker left by a crashed promotion (head still replication-" +
       "owned) RESUMES the commit instead of wedging the table") {

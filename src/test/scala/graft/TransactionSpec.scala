@@ -630,6 +630,43 @@ class TransactionSpec extends SparkSpec {
     assert(Transaction.committedTxs(spark, twin) == Seq(0L))
     assert(Transaction.read(spark, twin, "a").as[(Int, Int)]
       .collect().toSeq == Seq((1, 10)))
+    // a byte copy of the source member plus one more payload file holds
+    // the synced sidecar but not the synced rows
+    val other = new Path(freshRoot(), "rows")
+    plantRows(other, 99)
+    val extraFile = graft.sources.Integrity.payload(fs, other).head
+    def pad(member: Path): Unit = org.apache.hadoop.fs.FileUtil.copy(fs,
+      new Path(other, extraFile), fs, new Path(member, "part-extra.parquet"),
+      false, fs.getConf)
+    def refused(e: Exception): Unit = assert(e.getMessage.contains("a/t0") &&
+      e.getMessage.contains("diverges from the source"), s"$e")
+    def readsSource(dst: String): Unit = {
+      assert(Transaction.read(spark, dst, "a").as[(Int, Int)]
+        .collect().toSeq == Seq((1, 10)))
+      assert(Transaction.read(spark, dst, "b").as[(Int, Int)]
+        .collect().toSeq == Seq((2, 20)))
+    }
+    // (a) at the replica when a later sync carries the member forward
+    pad(new Path(twin, "a/t0"))
+    Transaction.publish(spark, src, Map("b" -> Seq((2, 20)).toDF("k", "n")))
+    refused(intercept[Exception](Transaction.syncTo(spark, src, twin)))
+    assert(Transaction.committedTxs(spark, twin) == Seq(0L))
+    assert(Transaction.syncTo(spark, src, twin, force = true) == 2)
+    readsSource(twin)
+    // (b) planted at the member's name right before placement
+    val padded = freshRoot()
+    refused(intercept[Exception](planting { (_, dest) =>
+      if (dest.getName == "t0") {
+        org.apache.hadoop.fs.FileUtil.copy(fs, srcMember, fs, dest, false,
+          fs.getConf)
+        pad(dest)
+      }
+    } {
+      Transaction.syncTo(spark, src, padded)
+    }))
+    assert(Transaction.committedTxs(spark, padded).isEmpty)
+    assert(Transaction.syncTo(spark, src, padded, force = true) == 2)
+    readsSource(padded)
   }
 
   test("a re-pointed ref stays resolvable throughout: a refTx racing the " +

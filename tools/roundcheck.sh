@@ -7,7 +7,9 @@
 # (graft.tools.PipelineDemo, the one main that drives the runner's CLI
 # options), (1c) the commit and placement specs (TransactionSpec,
 # CloneSpec, GraftSinkConflictSpec, OpsSpec, PartitionedMergeSpec,
-# PipelineSpec), the integrity specs (FsckSpec, MorDeleteSpec) and
+# PipelineSpec), the integrity specs (FsckSpec, MorDeleteSpec), the
+# failover soak (GraftSinkSoakSpec: promote racing both layers' syncs
+# through Commit.sync's one fence flow) and
 # PosixLocalFileSystemSpec again with `file:` on Hadoop's stock
 # org.apache.hadoop.fs.LocalFileSystem (the JVM names it, so
 # Tables.configure keeps it; PosixLocalFileSystemSpec fails if any
@@ -57,7 +59,7 @@ DEMO_RC=$?
 
 echo "[roundcheck] 1c/5 commit and integrity specs on LocalFileSystem"
 sbt -batch 'set Test/javaOptions += "-Dspark.hadoop.fs.file.impl=org.apache.hadoop.fs.LocalFileSystem"' \
-  "testOnly graft.TransactionSpec graft.CloneSpec graft.GraftSinkConflictSpec graft.OpsSpec graft.PartitionedMergeSpec graft.PipelineSpec graft.FsckSpec graft.MorDeleteSpec graft.PosixLocalFileSystemSpec" \
+  "testOnly graft.TransactionSpec graft.CloneSpec graft.GraftSinkConflictSpec graft.OpsSpec graft.PartitionedMergeSpec graft.PipelineSpec graft.FsckSpec graft.MorDeleteSpec graft.GraftSinkSoakSpec graft.PosixLocalFileSystemSpec" \
   >"$OUT/commit_specs_localfs.log" 2>&1
 LOCALFS_RC=$?
 

@@ -78,11 +78,7 @@ object MergeOnRead {
             " are UNVERIFIED (legacy write or crashed sidecar stamp); " +
             "re-write the batch to regain content integrity")
         }
-        // the sidecar is the reference: a listed file that vanished
-        // is damage
-        v.side.getOrElse(Map.empty).toSeq.sortBy(_._1).map {
-          case (n, (b, sum)) => Integrity.Entry(s"$d/$n", b, sum, deep)
-        }
+        v.entries(d, deep)
       }
     }
     (entries, unverified)
@@ -100,10 +96,9 @@ object MergeOnRead {
       op: String): Int = {
     val (entries, unverified) =
       sidecarEntries(spark, dirs, deep = true, op)
-    val bad = Integrity.check(spark, entries)
-    if (bad.nonEmpty) sys.error(s"merge-on-read $op: " +
-      s"${Integrity.describe(bad)} — refusing to fold (and re-bless) " +
-      "corrupt input; restore it from a replica or backup first")
+    Integrity.refuseDamaged(spark, entries, bad => s"merge-on-read $op: " +
+      s"$bad — refusing to fold (and re-bless) corrupt input; restore " +
+      "it from a replica or backup first")
     unverified
   }
 
@@ -148,9 +143,8 @@ object MergeOnRead {
       fs.exists(new Path(d))) ++
       children(deletesDir(root)) ++ children(updatesDir(root))
     val (entries, unverified) = sidecarEntries(spark, dirs, deep, "fsck")
-    val (missing, size, checksum) =
-      Integrity.byKind(Integrity.check(spark, entries), identity)
-    MorFsckReport(dirs.size, entries.size, missing, size, checksum,
+    val a = Integrity.audit(spark, entries, deep, identity, _ => "")
+    MorFsckReport(dirs.size, entries.size, a.missing, a.sizes, a.sums,
       unverified, deep)
   }
 
@@ -320,14 +314,26 @@ object MergeOnRead {
   def readCurrentSeq(spark: SparkSession, root: String,
       keyCol: String): DataFrame = {
     requireSingleMode(spark, root, seqMode = true)
+    seqView(spark, root, keyCol,
+      batches(spark, updatesDir(root), "u").toSeq,
+      batches(spark, deletesDir(root), "t").toSeq)
+  }
+
+  /** The sequence-aware view over the base and the given update and
+    * tombstone paths (globs or dirs; none reads as none): base rows at
+    * seq 0 ∪ the updates, left-joined to each key's max tombstone seq,
+    * keeping the rows no later tombstone masks.
+    */
+  private def seqView(spark: SparkSession, root: String, keyCol: String,
+      updates: Seq[String], tombstones: Seq[String]): DataFrame = {
     val base = spark.read.parquet(dataDir(root))
       .withColumn("__seq", lit(0L))
-    val all = batches(spark, updatesDir(root), "u").fold(base) { glob =>
-      base.unionByName(spark.read.parquet(glob)
-        .withColumn("__seq", col("__seq").cast("long")))
-    }
-    val view = batches(spark, deletesDir(root), "t").fold(all) { glob =>
-      val tomb = spark.read.parquet(glob)
+    val all = if (updates.isEmpty) base
+    else base.unionByName(spark.read.parquet(updates: _*)
+      .withColumn("__seq", col("__seq").cast("long")))
+    val view = if (tombstones.isEmpty) all
+    else {
+      val tomb = spark.read.parquet(tombstones: _*)
         .groupBy(keyCol).agg(max("__seq").as("__tseq"))
       all.join(tomb, Seq(keyCol), "left")
         .filter(col("__tseq").isNull || col("__seq") >= col("__tseq"))
@@ -377,23 +383,9 @@ object MergeOnRead {
     // dirs past the horizon are not folded — their replay overwrites
     // them, nothing to prove there)
     foldWithVerify(spark, dataDir(root) +:
-      (upIn ++ tIn).map(_._2.toString), "compactSeq", { () =>
-      val base = spark.read.parquet(dataDir(root))
-        .withColumn("__seq", lit(0L))
-      val all = if (upIn.isEmpty) base
-      else base.unionByName(
-        spark.read.parquet(upIn.map(_._2.toString): _*)
-          .withColumn("__seq", col("__seq").cast("long")))
-      val view = if (tIn.isEmpty) all
-      else {
-        val tomb = spark.read.parquet(tIn.map(_._2.toString): _*)
-          .groupBy(keyCol).agg(max("__seq").as("__tseq"))
-        all.join(tomb, Seq(keyCol), "left")
-          .filter(col("__tseq").isNull || col("__seq") >= col("__tseq"))
-          .drop("__tseq")
-      }
-      view.drop("__seq")
-    }, dataDir(root))
+      (upIn ++ tIn).map(_._2.toString), "compactSeq",
+      () => seqView(spark, root, keyCol, upIn.map(_._2.toString),
+        tIn.map(_._2.toString)), dataDir(root))
     // the folded base is the new integrity reference — stamp it before
     // the inputs drop (a crash between the two leaves BOTH the new
     // sidecar and the old dirs: re-running the fold is idempotent)

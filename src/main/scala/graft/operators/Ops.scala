@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.model.DerivedColumn
+import graft.sources.Commit
 
 /** Parquet write helpers.
   *
@@ -140,14 +141,12 @@ object ParquetIO {
     val target = new Path(path)
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val parent = target.getParent
-    if (parent == null || !fs.exists(parent)) return Nil
+    if (parent == null) return Nil
     val prefixes =
       Seq(target.getName + "__staging_", target.getName + "__replaced_")
-    val cutoff = System.currentTimeMillis() - olderThanMs
-    fs.listStatus(parent).toSeq
-      .filter(st => prefixes.exists(st.getPath.getName.startsWith))
-      .filter(_.getModificationTime < cutoff)
-      .map { st => fs.delete(st.getPath, true); st.getPath.toString }
+    Commit.sweepAged(fs, parent, System.currentTimeMillis() - olderThanMs,
+      recurse = true)(st => prefixes.exists(st.getPath.getName.startsWith))
+      .map(_.toString)
   }
 }
 

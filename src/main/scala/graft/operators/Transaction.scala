@@ -603,14 +603,17 @@ object Transaction {
     * safe: a version dir carried forward by a NEWER kept manifest
     * survives even when the transaction that wrote it is dropped.
     *
-    * Also sweeps CRASHED-WRITER DEBRIS beyond `graceMs` (the same
-    * aged-only contract the sink vacuum runs under — a YOUNG staging
-    * dir may belong to a publish/sync in flight right now): stale
-    * `__staging*` entries at the root and under `_commits/`, and
-    * superseded floor markers (the max governs; lower ones are
-    * listing noise). Without this, every crashed publish leaks a
-    * whole staged table copy forever — [[fsck]] counts them, vacuum
-    * owns them.
+    * A dir only dropped transactions reference goes at once. One that
+    * no committed manifest references at all is CRASHED-WRITER DEBRIS
+    * or a publish in flight — [[publish]] places its member dirs
+    * before its manifest — so, like the rest of the debris, it goes
+    * only once it is older than `graceMs` (the same aged-only contract
+    * the sink vacuum runs under, [[Commit.sweepAged]]). The rest of
+    * the debris sweeps even when no tx expires: stale `__staging*`
+    * entries at the root and under `_commits/`, and superseded floor
+    * markers (the max governs; lower ones are listing noise). Without
+    * this, every crashed publish leaks a whole staged table copy
+    * forever — [[fsck]] counts them, vacuum owns them.
     */
   def vacuum(spark: SparkSession, root: String, keep: Int,
       graceMs: Long = 3600000L): Seq[Long] = {
@@ -618,49 +621,48 @@ object Transaction {
     val committed = committedTxs(spark, root)
     val fs = fsOf(spark, new Path(root))
     val cutoff = System.currentTimeMillis() - graceMs
-    val walk = new RootWalk(fs, root)
     // stale staging + superseded floors sweep EVEN when no tx expires
-    walk.staging.filter(_.getModificationTime < cutoff)
-      .foreach(st => fs.delete(st.getPath, true))
+    stagingSpots(root).foreach(Commit.sweepAged(fs, _, cutoff,
+      recurse = true)(isStaging))
     Commit.sweep(fs, Commit.Tx, commitsDir(root),
       committed.lastOption.getOrElse(-1L) + 1L)
     val pinned = refNames(spark, root).map(refTx(spark, root, _)).toSet
     val keptTxs = (committed.takeRight(keep).toSet ++ pinned).toSeq.sorted
     val dropTxs = committed.filterNot(keptTxs.contains)
     if (dropTxs.isEmpty) return Seq.empty
-    // reachable (table, version) pairs under the kept manifests
-    val live: Set[(String, Long)] = keptTxs
-      .flatMap(tx => manifest(spark, root, tx).toSeq).toSet
+    def members(txs: Seq[Long]) = txs.flatMap(tx =>
+      manifest(spark, root, tx).map { case (t, v) => member(t, v) }).toSet
+    // reachable members under the kept manifests
+    val live = members(keptTxs)
+    val dropped = members(dropTxs) -- live
     dropTxs.foreach(tx => fs.delete(manifestPath(root, tx), false))
-    walk.versions().foreach { case (member, dir) =>
-      if (!live(member)) fs.delete(dir, true)
-    }
+    dropped.foreach(m => fs.delete(new Path(s"$root/$m"), true))
+    tablesUnder(fs, root).foreach(Commit.sweepAged(fs, _, cutoff,
+      recurse = true)(versionOf(_).exists(!live(_))))
     dropTxs
   }
 
-  /** One listing of `root` and of its `_commits/`: `staging` holds the
-    * `__staging*` debris crashed publishes and syncs leave in both, and
-    * [[versions]] lists the member version dirs under the root's table
-    * dirs, each as ((table, id), dir).
+  /** The spots crashed publishes and syncs leave `__staging*` debris
+    * in: the root and its `_commits/`.
     */
-  private final class RootWalk(fs: FileSystem, root: String) {
-    private def list(p: Path): Seq[FileStatus] =
-      try fs.listStatus(p).toSeq
-      catch { case _: java.io.FileNotFoundException => Seq.empty }
-    private val top = list(new Path(root))
-    val staging: Seq[FileStatus] = (top ++ list(commitsDir(root)))
-      .filter(_.getPath.getName.startsWith("__staging"))
-    def versions(): Seq[((String, Long), Path)] = top
+  private def stagingSpots(root: String) = Seq(new Path(root), commitsDir(root))
+
+  private def isStaging(st: FileStatus) =
+    st.getPath.getName.startsWith("__staging")
+
+  /** The table dirs under `root`: its dirs not named `_*`. */
+  private def tablesUnder(fs: FileSystem, root: String): Seq[Path] =
+    (try fs.listStatus(new Path(root)).toSeq
+    catch { case _: java.io.FileNotFoundException => Seq.empty })
       .filter(t => t.isDirectory && !t.getPath.getName.startsWith("_"))
-      .flatMap { t =>
-        list(t.getPath).filter(_.isDirectory).flatMap { v =>
-          val n = v.getPath.getName
-          if (n.startsWith("t") && n.drop(1).forall(_.isDigit))
-            n.drop(1).toLongOption
-              .map(id => (t.getPath.getName, id) -> v.getPath)
-          else None
-        }
-      }
+      .map(_.getPath)
+
+  /** The member a version dir `t<id>` under a table dir names. */
+  private def versionOf(st: FileStatus): Option[String] = {
+    val n = st.getPath.getName
+    if (st.isDirectory && n.startsWith("t") && n.drop(1).forall(_.isDigit))
+      n.drop(1).toLongOption.map(member(st.getPath.getParent.getName, _))
+    else None
   }
 
   /** @param deep whether member CONTENT was re-hashed (vs existence +
@@ -734,7 +736,6 @@ object Transaction {
     */
   def fsck(spark: SparkSession, root: String, deep: Boolean = false,
       sinceVerified: Boolean = false): TxFsckReport = {
-    val committed = committedTxs(spark, root)
     val rootP = new Path(root)
     val fs = fsOf(spark, rootP)
     // incremental deep verification — the sink's `_deep_verified`
@@ -742,75 +743,64 @@ object Transaction {
     // tx ≤ k were re-hashed by an earlier deepVerified pass and are
     // immutable, so a scheduled pass re-hashes only newer members
     // (O(new data) per cadence; the FULL drill catches rot landing in
-    // already-verified bytes)
-    val watermark = Verified.start(fs, rootP, deep, sinceVerified)
-    val unreadable = Seq.newBuilder[Long]
-    val members = scala.collection.mutable.LinkedHashMap
-      .empty[(String, Long), Boolean] // -> covered by the watermark
-    committed.foreach { tx =>
-      try manifest(spark, root, tx).foreach { kv =>
-        if (!members.contains(kv)) members(kv) = tx <= watermark
-        else if (tx <= watermark) members(kv) = true
+    // already-verified bytes). The walk yields each member once, as
+    // an entry named `<table>/t<version>` whose `hashContent` says
+    // whether its files re-hash.
+    val (report, through) = Verified.walk(fs, rootP, deep, sinceVerified,
+        committedTxs(spark, root), _ => false) { tx =>
+      Some(manifest(spark, root, tx).iterator.map { case (t, v) =>
+        Integrity.Entry(member(t, v), -1L, "", hashContent = false) })
+    } { h =>
+      val conf = new org.apache.spark.util.SerializableConfiguration(
+        spark.sparkContext.hadoopConfiguration)
+      val rootStr = root
+      // MEMBER METADATA PASS, cluster-fanned (one task per member dir:
+      // one listing + one tiny sidecar read): the per-file checks below
+      // already fan out, and at decade scale (64 tables × deep history
+      // on a scheduled cadence) a driver-sequential sidecar walk is
+      // O(members) blocking round-trips for no reason.
+      // (member, None when its dir is missing, else its vouch)
+      val sides =
+        if (h.refs.isEmpty) Seq.empty
+        else spark.sparkContext
+          .parallelize(h.refs, Integrity.slices(spark, h.refs.size))
+          .map { m =>
+            val dir = new Path(s"$rootStr/${m.path}")
+            m -> Integrity.vouch(dir.getFileSystem(conf.value), dir)
+          }.collect().toSeq
+      var unverifiedMembers = 0
+      // existence+size always, content re-hash when deep and uncovered;
+      // a file the sidecar leaves out is unverified however the member
+      // is covered — that takes a listing, not a re-hash
+      val entries = sides.flatMap { case (m, vouched) =>
+        vouched.toSeq.flatMap { v =>
+          val unlisted = v.unlisted.size
+          if (v.side.isEmpty || unlisted > 0) {
+            unverifiedMembers += 1
+            Integrity.warnUnverified(s"transaction: fsck cannot verify " +
+              s"${m.path} under $root — " + (if (v.side.isEmpty)
+                "no checksum sidecar (legacy publish)"
+              else s"$unlisted file(s) outside its checksum sidecar") +
+              "; republish to regain content integrity")
+          }
+          v.entries(s"$rootStr/${m.path}", m.hashContent)
+        }
       }
-      catch { case scala.util.control.NonFatal(_) => unreadable += tx }
+      val a = Integrity.audit(spark, entries, deep,
+        _.stripPrefix(s"$rootStr/"), _ => "")
+      // orphan member dirs (no committed manifest references them) and
+      // stale staging leftovers — benign GC debris, tallied not flagged
+      val walked = h.refs.map(_.path).toSet
+      val report = TxFsckReport(h.checked, h.unreadable, h.refs.size,
+        sides.collect { case (m, None) => m.path },
+        entries.size, a.missing, a.sizes, a.sums, unverifiedMembers,
+        tablesUnder(fs, root).map(Commit.tally(fs, _)(
+          versionOf(_).exists(!walked(_)))).sum,
+        stagingSpots(root).map(Commit.tally(fs, _)(isStaging)).sum, deep,
+        contentHashed = a.hashed, skippedVerified = a.skipped)
+      (report, report.deepVerified)
     }
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
-    val rootStr = root
-    // MEMBER METADATA PASS, cluster-fanned (one task per member dir:
-    // one listing + one tiny sidecar read): the per-file checks below
-    // already fan out, and at decade scale (64 tables × deep history
-    // on a scheduled cadence) a driver-sequential sidecar walk is
-    // O(members) blocking round-trips for no reason.
-    val memberSeq = members.toSeq
-    // (member, covered by the watermark, None when the dir is missing,
-    // else its sidecar and how many payload files that leaves out)
-    val sides: Seq[(String, Boolean,
-        Option[(Option[Map[String, (Long, String)]], Int)])] =
-      if (memberSeq.isEmpty) Seq.empty
-      else spark.sparkContext
-        .parallelize(memberSeq, Integrity.slices(spark, memberSeq.size))
-        .map { case ((t, v), covered) =>
-          val dir = memberDir(rootStr, t, v)
-          (member(t, v), covered, Integrity.vouch(dir.getFileSystem(conf.value),
-            dir).map(vouched => (vouched.side, vouched.unlisted.size)))
-        }.collect().toSeq
-    var unverifiedMembers = 0
-    // existence+size always, content re-hash when deep and uncovered;
-    // a file the sidecar leaves out is unverified however the member
-    // is covered — that takes a listing, not a re-hash
-    val entries = sides.flatMap {
-      case (_, _, None) => Nil
-      case (member, covered, Some((side, unlisted))) =>
-        if (side.isEmpty || unlisted > 0) {
-          unverifiedMembers += 1
-          Integrity.warnUnverified(s"transaction: fsck cannot verify " +
-            s"$member under $root — " + (if (side.isEmpty)
-              "no checksum sidecar (legacy publish)"
-            else s"$unlisted file(s) outside its checksum sidecar") +
-            "; republish to regain content integrity")
-        }
-        side.getOrElse(Map.empty).toSeq.sortBy(_._1).map {
-          case (n, (b, sum)) =>
-            Integrity.Entry(s"$rootStr/$member/$n", b, sum, deep && !covered)
-        }
-    }
-    val (missingFiles, sizeMismatches, checksumMismatches) =
-      Integrity.byKind(Integrity.check(spark, entries),
-        _.stripPrefix(s"$rootStr/"))
-    // orphan member dirs (no committed manifest references them) and
-    // stale staging leftovers — benign GC debris, tallied not flagged
-    val walk = new RootWalk(fs, root)
-    val report = TxFsckReport(committed.size, unreadable.result(),
-      members.size, sides.collect { case (m, _, None) => m },
-      entries.size, missingFiles, sizeMismatches, checksumMismatches,
-      unverifiedMembers,
-      walk.versions().count { case (member, _) => !members.contains(member) },
-      walk.staging.size, deep,
-      contentHashed = entries.count(_.hashContent),
-      skippedVerified = if (deep) entries.count(!_.hashContent) else 0)
-    report.copy(verifiedThrough = Verified.leave(fs, rootP, watermark,
-      report.deepVerified, committed.lastOption))
+    report.copy(verifiedThrough = through)
   }
 
   /** The root's deep-verification chain (`_deep_verified`,

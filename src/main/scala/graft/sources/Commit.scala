@@ -3,7 +3,7 @@ package graft.sources
 import java.nio.charset.StandardCharsets
 import java.nio.file.{FileAlreadyExistsException, Files, Paths, StandardCopyOption}
 
-import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
+import org.apache.hadoop.fs.{FileContext, FileStatus, FileSystem, Options, Path}
 
 /** The commit kernel shared by the two versioned layers with a commit
   * point of their own — graftsink ([[GraftSink]], one manifest per
@@ -62,6 +62,16 @@ import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
   * promotion finds the fence after committing and retracts its own
   * commit while it is provably still the newest, burning the vacated
   * id first.
+  *
+  * DEBRIS: what a crashed writer leaves under a layer's names — a
+  * staging file or dir, a placed dir no commit references yet, an
+  * aside-swap leftover — may equally belong to a writer in flight
+  * right now, so every vacuum removes it only once it is older than
+  * the caller's grace ([[sweepAged]]: graftsink's orphan data files,
+  * segments and staging; `Transaction`'s staging and orphan member
+  * dirs; `ParquetIO.gcStaged`'s swap artifacts). An fsck counts the
+  * same entries ([[tally]]). Both stream the listing, so the driver
+  * holds O(1) however many entries a flat dir has.
   */
 private[graft] object Commit {
 
@@ -224,6 +234,32 @@ private[graft] object Commit {
     all.filter(_ < keep).foreach(v =>
       fs.delete(new Path(dir, layer.floorName(v)), false))
   }
+
+  // ---- debris -------------------------------------------------------
+
+  /** Each entry of `dir`, from one streamed listing; none when it does
+    * not exist.
+    */
+  private def streamed(fs: FileSystem, dir: Path): Iterator[FileStatus] =
+    if (!fs.exists(dir)) Iterator.empty
+    else {
+      val it = fs.listStatusIterator(dir)
+      Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+    }
+
+  /** Delete each entry of `dir` last modified before `cutoff` that
+    * `doomed` picks (`recurse` into a dir), as the listing streams;
+    * returns the deleted paths.
+    */
+  def sweepAged(fs: FileSystem, dir: Path, cutoff: Long, recurse: Boolean)(
+      doomed: FileStatus => Boolean): Seq[Path] =
+    streamed(fs, dir)
+      .filter(st => st.getModificationTime < cutoff && doomed(st))
+      .map { st => fs.delete(st.getPath, recurse); st.getPath }.toSeq
+
+  /** How many entries of `dir` `counted` picks, streamed. */
+  def tally(fs: FileSystem, dir: Path)(counted: FileStatus => Boolean): Int =
+    streamed(fs, dir).count(counted)
 
   // ---- promote fence ------------------------------------------------
 

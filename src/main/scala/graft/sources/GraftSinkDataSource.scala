@@ -2225,12 +2225,12 @@ object GraftSink {
         "checksum-less legacy file(s) UNVERIFIED (pre-checksum " +
         "manifest) — their rows re-land under fresh checksums with no " +
         "content proof for the originals")
-    val bad = Integrity.check(spark, files.filter(_.checksum.nonEmpty)
+    Integrity.refuseDamaged(spark, files.filter(_.checksum.nonEmpty)
       .map(f => Integrity.Entry(s"$dir/data/${f.name}",
-        if (f.bytes > 0) f.bytes else -1L, f.checksum, hashContent = true)))
-    if (bad.nonEmpty) sys.error(s"graftsink: $op would retire " +
-      s"${Integrity.describe(bad)} — refusing to launder corruption " +
-      "into a fresh checksum; deep-fsck and restore the object first")
+        if (f.bytes > 0) f.bytes else -1L, f.checksum, hashContent = true)),
+      bad => s"graftsink: $op would retire $bad — refusing to launder " +
+        "corruption into a fresh checksum; deep-fsck and restore the " +
+        "object first")
   }
 
   final case class ClusterStats(filesBefore: Int, filesAfter: Int,
@@ -2658,7 +2658,10 @@ object GraftSink {
     * O(changed files) copy + O(manifest) publish however large the
     * table — the cross-region/DR pattern: an append syncs as its
     * delta, a compaction syncs as its merged outputs, an untouched
-    * source syncs as ZERO copies (idempotent, CloneSpec-gated). Files
+    * source syncs as ZERO copies and NO new replica version (the
+    * replication head already holds the head snapshot: same file
+    * identities, schema and source commit stamp; tags still carry;
+    * CloneSpec-gated). A pinned or `force` sync always publishes. Files
     * the source dropped leave the destination HEAD immediately and
     * stay on its disk only until the destination's own vacuum
     * collects them. The destination must already be a table (created
@@ -2714,14 +2717,26 @@ object GraftSink {
       // name+size+stats is the classic replication identity rule; the
       // recorded content checksum strengthens it — a same-name,
       // same-size entry whose CONTENT hash changed re-copies
-      val have = dstHead.files
-        .map(f => (f.name, f.bytes, f.statsJson, f.checksum)).toSet
+      def identities(mf: Manifest) =
+        mf.files.map(f => (f.name, f.bytes, f.statsJson, f.checksum))
+      val have = identities(dstHead).toSet
       val delta = m.files.filterNot(f =>
         have((f.name, f.bytes, f.statsJson, f.checksum)))
       Integrity.replicate(spark, delta.map(f =>
         (s"$src/data/${f.name}", s"$dst/data/${f.name}", f.checksum)),
         "graftsink", dst)
-      Some(Commit.Staged(abandon = () => (), commit = () => {
+      // IDLE: a replication head that already holds the head snapshot
+      // (same file identities, schema and source commit stamp) takes
+      // no new version and no re-stamp — a tag added since still
+      // carries. A pinned or forced sync always publishes.
+      if (version.isEmpty && !force &&
+          dstHead.epochWriter.contains(ReplicaWriter) &&
+          dstHead.schemaDdl == m.schemaDdl &&
+          dstHead.committedAtMs == m.committedAtMs &&
+          identities(m).toSet == have) {
+        if (syncTags) carryTags(spark, src, dst)
+        None
+      } else Some(Commit.Staged(abandon = () => (), commit = () => {
         // strictly above the head's replication epoch (the publish-level
         // dedupe skips any epoch <= the frontier — a same-value epoch
         // would silently no-op this sync); version+1 floors the force
@@ -3046,37 +3061,23 @@ object GraftSink {
     Commit.sweep(f, Commit.Sink, new Path(dir), limit)
     // 2. then data files nothing surviving references — aged only: a
     // fresh unreferenced file may belong to a commit that renamed it
-    // into data/ but hasn't published its manifest yet. The listing
-    // STREAMS (listStatusIterator) and deletes as it goes: driver
-    // memory stays O(1) however many files the flat dir holds — the
-    // 10^5-10^7 decade (tools.ListingDecade, SCALE.md) pins the wall
-    // cost as pure listing throughput, and GC work is O(orphans)
-    def sweepStreamed(root: Path, recurse: Boolean,
-        doomedHere: Path => Boolean): Int = {
-      if (!f.exists(root)) return 0
-      var n = 0
-      val it = f.listStatusIterator(root)
-      while (it.hasNext) {
-        val st = it.next()
-        if (st.getModificationTime < cutoff && doomedHere(st.getPath)) {
-          f.delete(st.getPath, recurse)
-          n += 1
-        }
-      }
-      n
-    }
-    val orphans = sweepStreamed(new Path(dir, "data"),
-      recurse = false, p => !keepFiles(p.getName))
+    // into data/ but hasn't published its manifest yet. The sweep
+    // STREAMS the listing and deletes as it goes: driver memory stays
+    // O(1) however many files the flat dir holds — the 10^5-10^7
+    // decade (tools.ListingDecade, SCALE.md) pins the wall cost as pure
+    // listing throughput, and GC work is O(orphans)
+    def sweep(sub: String, recurse: Boolean)(doomed: String => Boolean) =
+      Commit.sweepAged(f, new Path(dir, sub), cutoff, recurse)(st =>
+        doomed(st.getPath.getName)).size
+    val orphans = sweep("data", recurse = false)(n => !keepFiles(n))
     // 2b. unreferenced segment files, same aged-only discipline (a
     // fresh one may belong to a commit whose manifest hasn't landed).
     // A `.bloom` sidecar lives and dies with its segment: the suffix
     // strip keeps a LIVE segment's sidecar (it is never referenced by
     // name itself) and collects a dead segment's alongside it.
-    sweepStreamed(new Path(dir, "_segments"),
-      recurse = false, p => !keepSegs(p.getName.stripSuffix(".bloom")))
+    sweep("_segments", recurse = false)(n => !keepSegs(n.stripSuffix(".bloom")))
     // 3. stale staging dirs beyond the in-flight grace window
-    val staleStaging = sweepStreamed(new Path(dir, "_staging"),
-      recurse = true, _ => true)
+    val staleStaging = sweep("_staging", recurse = true)(_ => true)
     VacuumStats(expired, orphans, staleStaging)
   }
 
@@ -3156,7 +3157,7 @@ object GraftSink {
     * Scale: manifest resolution is the same O(versions) driver
     * metadata walk vacuum performs (manifest envelope decade-pinned
     * to 10^6-10^7 entries); the existence+size check fans out
-    * cluster-wide via [[Integrity.check]] — one `getFileStatus` per
+    * cluster-wide via [[Integrity.audit]] — one `getFileStatus` per
     * referenced file, only violations return to the driver, so the
     * collect is O(damage), not O(files). Read-only: fsck never
     * repairs (a missing referenced file has no safe automatic fix —
@@ -3174,8 +3175,8 @@ object GraftSink {
   def fsck(spark: SparkSession, dir: String, deep: Boolean = false,
       sinceVerified: Boolean = false): FsckReport = {
     val f = fs(spark, dir)
-    val complete = fsVersionsDesc(spark, dir)
-      .filter(v => manifestIsComplete(spark, dir, v))
+    val dataAt = s"$dir/data/"
+    val segAt = s"$dir/_segments/"
     // INCREMENTAL DEEP VERIFICATION (`sinceVerified`): a full deep
     // pass is a whole-table read — right for a DR drill, unaffordable
     // as cadence (SCALE.md prices it in fabric-hours at 100 TB). The
@@ -3189,87 +3190,57 @@ object GraftSink {
     // Deliberate residual (the same one st_resume accepts for
     // ingest): bit rot landing in an already-verified file is invisible
     // to incremental passes and caught by the next FULL drill.
-    val watermark =
-      Verified.start(f, new Path(dir), deep, sinceVerified).toInt
-    val referenced = scala.collection.mutable.LinkedHashMap
-      .empty[String, (Long, String)]
-    val liveSegs = scala.collection.mutable.LinkedHashMap
-      .empty[String, String] // name -> recorded checksum ("" legacy)
-    val coveredFiles = scala.collection.mutable.Set.empty[String]
-    val coveredSegs = scala.collection.mutable.Set.empty[String]
-    val unreadable = Seq.newBuilder[Int]
-    complete.foreach { v =>
-      // complete-then-vanished (a racing vacuum expired it between
-      // the two reads) counts as unreadable only if it is still
-      // listed; a clean expiry is not damage — re-running fsck on a
-      // quiesced table is the operator's disambiguation
-      try manifestAt(spark, dir, Some(v)).foreach { m =>
-        // a checksummed ref wins over a legacy "" ref to the SAME
-        // immutable segment (older manifests may predate recording)
-        m.refs.foreach { r =>
-          if (r.checksum.nonEmpty || !liveSegs.contains(r.name))
-            liveSegs(r.name) = r.checksum
-          if (v <= watermark) coveredSegs += r.name
-        }
-        m.files.foreach { mf =>
-          if (!referenced.contains(mf.name))
-            referenced(mf.name) = (mf.bytes, mf.checksum)
-          if (v <= watermark) coveredFiles += mf.name
-        }
-      } catch { case scala.util.control.NonFatal(_) => unreadable += v }
+    // Each listed version's manifest is read once: one that does not
+    // resolve is no complete version (a torn or vacuumed one is not
+    // damage); one whose segment list then fails to read is unreadable.
+    // The newest record of a data file stands; a checksummed ref wins
+    // over a legacy "" ref to the SAME immutable segment (older
+    // manifests may predate recording).
+    val (report, through) = Verified.walk(f, new Path(dir), deep,
+        sinceVerified, fsVersionsDesc(spark, dir).map(_.toLong),
+        _.startsWith(segAt)) { v =>
+      (try manifestAt(spark, dir, Some(v.toInt))
+      catch { case _: Throwable => None }).map { m =>
+        m.refs.iterator.map(r =>
+          Integrity.Entry(segAt + r.name, -1L, r.checksum,
+            hashContent = false)) ++
+          m.files.iterator.map(mf => Integrity.Entry(dataAt + mf.name,
+            if (mf.bytes > 0) mf.bytes else -1L, mf.checksum,
+            hashContent = false))
+      }
+    } { h =>
+      // one cluster-fanned pass over DATA files and (deep only)
+      // SEGMENT files: existence + size always; content re-hash when
+      // deep, a checksum is recorded, and the verification watermark
+      // does not already cover the entry. Segment refs carry no file
+      // size (their `bytes` sums member DATA bytes), so segments get
+      // existence + content only — and a corrupt segment is worse than
+      // a corrupt data file: its stats drive file skipping, so the
+      // damage is silently wrong ANSWERS, not a read error.
+      val (segs, data) = h.refs.partition(_.path.startsWith(segAt))
+      val entries = if (deep) data ++ segs else data
+      // unverified = checksum-less entries IN THE WORK LIST: a
+      // watermark-covered entry was verified (a pass that declined
+      // anything never wrote the watermark), never silently passed
+      val a = Integrity.audit(spark, entries, deep, new Path(_).getName,
+        p => if (p.startsWith(segAt)) "segment " else "")
+      // orphan tallies stream the listing ([[Commit.tally]]): at the
+      // 10^6-10^7-entry decade scale the probe's driver footprint stays
+      // O(damage), matching the violations collect
+      def unreferenced(sub: String, of: Seq[Integrity.Entry],
+          name: String => String) = {
+        val live = of.map(_.path.stripPrefix(s"$dir/$sub/")).toSet
+        Commit.tally(f, new Path(dir, sub))(st =>
+          !live(name(st.getPath.getName)))
+      }
+      val report = FsckReport(h.checked, h.unreadable.map(_.toInt),
+        data.size, a.missing, a.sizes,
+        unreferenced("data", data, identity),
+        unreferenced("_segments", segs, _.stripSuffix(".bloom")), deep,
+        a.sums, a.declined, a.hashed, a.skipped)
+      (report, report.deepVerified)
     }
-    // one cluster-fanned pass over DATA files and (deep only)
-    // SEGMENT files: existence + size always; content re-hash when
-    // deep, a checksum is recorded, and the verification watermark
-    // does not already cover the entry. Segment refs carry no file
-    // size (their `bytes` sums member DATA bytes), so segments get
-    // existence + content only — and a corrupt segment is worse than
-    // a corrupt data file: its stats drive file skipping, so the
-    // damage is silently wrong ANSWERS, not a read error.
-    val entries: Seq[Integrity.Entry] =
-      referenced.toSeq.map { case (n, (b, sum)) =>
-        Integrity.Entry(s"$dir/data/$n", if (b > 0) b else -1L, sum,
-          deep && !coveredFiles(n)) } ++
-        (if (deep) liveSegs.toSeq.map { case (n, sum) =>
-          Integrity.Entry(s"$dir/_segments/$n", -1L, sum, !coveredSegs(n))
-        } else Seq.empty)
-    val bad = Integrity.check(spark, entries).map(d =>
-      if (d.path.startsWith(s"$dir/_segments/"))
-        d.copy(detail = s"segment ${d.detail}")
-      else d)
-    val (missing, mismatch, badSum) =
-      Integrity.byKind(bad, new Path(_).getName)
-    // unverified = checksum-less entries IN THE WORK LIST: a
-    // watermark-covered entry was verified (a pass that declined
-    // anything never wrote the watermark), never silently passed
-    val unverified =
-      if (deep) entries.count(e => e.hashContent && e.sum.isEmpty) else 0
-    val hashed = entries.count(e => e.hashContent && e.sum.nonEmpty)
-    val skipped = if (deep) entries.count(!_.hashContent) else 0
-    // orphan tallies STREAM the listing (listStatusIterator): the
-    // driver holds one counter, never an O(table files) FileStatus
-    // array — at the 10^6-10^7-entry decade scale the probe's driver
-    // footprint stays O(damage), matching the violations collect
-    def countStreamed(root: Path, orphan: String => Boolean): Int = {
-      if (!f.exists(root)) return 0
-      var n = 0
-      val it = f.listStatusIterator(root)
-      while (it.hasNext)
-        if (orphan(it.next().getPath.getName)) n += 1
-      n
-    }
-    val orphans = countStreamed(new Path(dir, "data"),
-      n => !referenced.contains(n))
-    val segOrphans = countStreamed(new Path(dir, "_segments"),
-      n => !liveSegs.contains(n.stripSuffix(".bloom")))
-    val report = FsckReport(complete.size, unreadable.result(),
-      referenced.size, missing, mismatch, orphans, segOrphans, deep,
-      badSum, unverified, hashed, skipped)
-    // the newest complete version walked: where a deepVerified pass
-    // leaves the watermark
-    report.copy(verifiedThrough = Verified.leave(f, new Path(dir),
-      watermark, report.deepVerified, complete.headOption.map(_.toLong))
-      .toInt)
+    report.copy(verifiedThrough = through.toInt)
   }
 
   /** The table's deep-verification chain: `_deep_verified` holds the

@@ -9,12 +9,20 @@ import org.apache.spark.util.SerializableConfiguration
 
 /** The content-integrity kernel shared by the three versioned-table
   * layers — graftsink ([[GraftSink]]), `operators.Transaction` and
-  * `operators.MergeOnRead`. Each layer keeps its own layout, reports
-  * and refusal texts; the hashing, the sidecar and what it vouches
-  * for, the fan-out file check, the deep-verification chain and the
-  * two steps a replica sync shares — the verified copy fan-out
-  * ([[replicate]]) and the chain carry ([[Chain.carry]]) — live here
-  * once.
+  * `operators.MergeOnRead`. Each layer keeps its own layout, its
+  * listing, its reports and its texts; these live here once:
+  *  - the hashing, the sidecar and what it vouches for ([[vouch]]);
+  *  - the fsck audit ([[audit]]: the fan-out file check, the damage
+  *    split by kind, the hashed/skipped/declined tally) and the
+  *    verify-before-rewrite refusal built on the same check
+  *    ([[refuseDamaged]]);
+  *  - the deep-verification chain ([[Chain]]) with the one walk of a
+  *    layer's committed history an fsck pass runs ([[Chain.walk]]:
+  *    start the watermark, mark what it covers, record what does not
+  *    read, leave the watermark);
+  *  - the two steps a replica sync shares: the verified copy fan-out
+  *    ([[replicate]]) and the chain carry ([[Chain.carry]]).
+  * The aged debris sweep and the streamed tally are [[Commit]]'s.
   *
   * CHECKSUM: XXH64 (seed 0, lz4-java — already on Spark's classpath)
   * over a file's full content, rendered as 16 lowercase hex chars.
@@ -137,6 +145,14 @@ private[graft] object Integrity {
     /** The payload files the sidecar does not list: UNVERIFIED. */
     def unlisted: Seq[String] =
       files.filter(n => isPayload(n) && !side.exists(_.contains(n)))
+
+    /** The sidecar-listed files, by name, as [[check]] entries of the
+      * dir at `dir`: a listed file that vanished is damage.
+      */
+    def entries(dir: String, hashContent: Boolean): Seq[Entry] =
+      side.getOrElse(Map.empty).toSeq.sortBy(_._1).map {
+        case (n, (b, sum)) => Entry(s"$dir/$n", b, sum, hashContent)
+      }
   }
 
   /** `dir`'s [[Vouch]]: one listing, plus one read of the sidecar when
@@ -274,13 +290,13 @@ private[graft] object Integrity {
     */
   final case class Damage(path: String, kind: String, detail: String)
 
-  /** The fan-out file check behind every fsck and verify-before-rewrite:
+  /** The fan-out file check behind [[audit]] and [[refuseDamaged]]:
     * one task per file (see [[slices]]) tests existence, then the
     * recorded size, then — when `hashContent` and a checksum is
     * recorded — the content hash. Only damage returns to the driver,
     * so the collect is O(damage), not O(files). No job for no entries.
     */
-  def check(spark: SparkSession, entries: Seq[Entry]): Seq[Damage] =
+  private def check(spark: SparkSession, entries: Seq[Entry]): Seq[Damage] =
     if (entries.isEmpty) Seq.empty
     else {
       val conf = new SerializableConfiguration(
@@ -305,26 +321,59 @@ private[graft] object Integrity {
         }.collect().toSeq
     }
 
-  /** Damage split by kind for a report: the missing files' names, then
-    * `name (detail)` for size and for checksum mismatches.
+  /** What one [[audit]] found: the missing files' names, then
+    * `name (detail)` for size and for checksum mismatches, and the work
+    * list's tally — entries whose content was re-hashed, and on a deep
+    * pass the entries a watermark covers (`skipped`) and those declined
+    * for want of a recorded checksum (`declined`).
     */
-  def byKind(damage: Seq[Damage], name: String => String)
-      : (Seq[String], Seq[String], Seq[String]) = {
+  final case class Audit(missing: Seq[String], sizes: Seq[String],
+      sums: Seq[String], hashed: Int, skipped: Int, declined: Int)
+
+  /** THE FSCK AUDIT every layer's report is built from: [[check]] the
+    * entries, then split the damage by kind. `name` renders a damaged
+    * path in the report, and `what` names what kind of file it is in
+    * front of its detail ("" for a payload file).
+    */
+  def audit(spark: SparkSession, entries: Seq[Entry], deep: Boolean,
+      name: String => String, what: String => String): Audit = {
+    val damage = check(spark, entries)
     def of(kind: String) = damage.filter(_.kind == kind)
-    (of("missing").map(d => name(d.path)),
-      of("size").map(d => s"${name(d.path)} (${d.detail})"),
-      of("checksum").map(d => s"${name(d.path)} (${d.detail})"))
+    def shown(d: Damage) = s"${name(d.path)} (${what(d.path)}${d.detail})"
+    Audit(of("missing").map(d => name(d.path)), of("size").map(shown),
+      of("checksum").map(shown),
+      entries.count(e => e.hashContent && e.sum.nonEmpty),
+      if (deep) entries.count(!_.hashContent) else 0,
+      if (deep) entries.count(e => e.hashContent && e.sum.isEmpty) else 0)
   }
 
-  /** Damage as one line for a refusal: the first three, then a count. */
-  def describe(damage: Seq[Damage]): String =
-    damage.take(3).map(d => s"${d.path} (${d.detail})").mkString("; ") +
-      (if (damage.size > 3) s" (+${damage.size - 3} more)" else "")
+  /** VERIFY BEFORE REWRITE, for a rewrite that re-lands bytes under a
+    * fresh checksum (graftsink's cluster, `MergeOnRead`'s folds):
+    * [[check]] the entries and, on any damage, refuse with the layer's
+    * `refusal` of the first three damaged paths with their details and
+    * a count of the rest.
+    */
+  def refuseDamaged(spark: SparkSession, entries: Seq[Entry],
+      refusal: String => String): Unit = {
+    val bad = check(spark, entries)
+    if (bad.nonEmpty) sys.error(refusal(
+      bad.take(3).map(d => s"${d.path} (${d.detail})").mkString("; ") +
+        (if (bad.size > 3) s" (+${bad.size - 3} more)" else "")))
+  }
 
   /** Every warning about content copied, folded, rewritten or checked
     * without a recorded checksum goes through here.
     */
   def warnUnverified(text: String): Unit = System.err.println(text)
+
+  /** What [[Chain.walk]] found in a layer's committed history: each
+    * referenced path once, as an [[Entry]] whose `hashContent` says
+    * whether a deep pass re-hashes it (no id at or below the starting
+    * watermark refers to it); how many ids were checked; and the ids
+    * whose references failed to read.
+    */
+  final case class History(refs: Seq[Entry], checked: Int,
+      unreadable: Seq[Long])
 
   /** One layer's deep-verification chain. Its [[DeepVerified]] file in
     * the layer's dir holds `<key>=<id>` then `atMs=<stamp>`, one per
@@ -379,7 +428,7 @@ private[graft] object Integrity {
       * incremental deep pass (`sinceVerified`), which skips re-hashing
       * what it covers; −1 for any other pass, which covers nothing.
       */
-    def start(fs: FileSystem, dir: Path, deep: Boolean,
+    private def start(fs: FileSystem, dir: Path, deep: Boolean,
         sinceVerified: Boolean): Long =
       if (deep && sinceVerified) read(fs, dir) else -1L
 
@@ -389,11 +438,49 @@ private[graft] object Integrity {
       * of that — damage found, bytes declined unverified — leaves the
       * stored one, reported as the larger of it and `start`.
       */
-    def leave(fs: FileSystem, dir: Path, start: Long,
+    private def leave(fs: FileSystem, dir: Path, start: Long,
         deepVerified: Boolean, newest: Option[Long]): Long =
       newest.filter(n => deepVerified && n > start) match {
         case Some(n) => write(fs, dir, n); n
         case None => math.max(start, read(fs, dir))
       }
+
+    /** THE COMMITTED-HISTORY WALK of an fsck pass: start from the
+      * watermark ([[start]]), read each of `ids` in the layer's order
+      * through `refs`, hand the [[History]] to `report` — which builds
+      * the layer's report and says whether the pass ended
+      * deep-verified — and [[leave]] the watermark at the newest id
+      * checked. Returns the report and the watermark left.
+      *
+      * `refs` gives None for an id that is no committed one (skipped,
+      * not checked); a throw, at the call or mid-iteration, marks the
+      * id unreadable, and what it yielded before the throw stands. The
+      * first record of a path stands, except on the paths `sumWins`
+      * picks: there a record with a checksum replaces a checksum-less
+      * one (a reference to an immutable file, recorded again once
+      * checksums were).
+      */
+    def walk[R](fs: FileSystem, dir: Path, deep: Boolean,
+        sinceVerified: Boolean, ids: Seq[Long], sumWins: String => Boolean)(
+        refs: Long => Option[Iterator[Entry]])(
+        report: History => (R, Boolean)): (R, Long) = {
+      val from = start(fs, dir, deep, sinceVerified)
+      val found = scala.collection.mutable.LinkedHashMap.empty[String, Entry]
+      val covered = scala.collection.mutable.Set.empty[String]
+      val unreadable = Seq.newBuilder[Long]
+      val checked = ids.filter { id =>
+        try refs(id).map(_.foreach { e =>
+          if (found.get(e.path).forall(f =>
+              sumWins(e.path) && f.sum.isEmpty && e.sum.nonEmpty))
+            found(e.path) = e
+          if (id <= from) covered += e.path
+        }).isDefined
+        catch { case scala.util.control.NonFatal(_) => unreadable += id; true }
+      }
+      val (r, deepVerified) = report(History(found.values.map(e =>
+        e.copy(hashContent = deep && !covered(e.path))).toSeq,
+        checked.size, unreadable.result()))
+      (r, leave(fs, dir, from, deepVerified, checked.maxOption))
+    }
   }
 }

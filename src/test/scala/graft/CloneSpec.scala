@@ -119,8 +119,11 @@ class CloneSpec extends SparkSpec {
     Seq((1L, "a"), (2L, "b")).toDF("k", "s").coalesce(1)
       .write.format("graftsink").mode("append").save(src)
     GraftSink.cloneSnapshot(spark, src, dst)
-    // idempotent: nothing changed, nothing copies
+    // idempotent: nothing changed, nothing copies, no new replica head
+    val born = GraftSink.latestVersion(spark, dst)
     assert(GraftSink.cloneSync(spark, src, dst) == 0)
+    assert(GraftSink.latestVersion(spark, dst) == born,
+      "an idle sync must not publish a new replica head")
     // two appends -> exactly two files sync
     Seq((3L, "c")).toDF("k", "s").coalesce(1)
       .write.format("graftsink").mode("append").save(src)
@@ -142,8 +145,15 @@ class CloneSpec extends SparkSpec {
       == GraftSink.latestManifest(spark, src).get.files
       .map(f => (f.name, f.bytes, f.statsJson)).toSet,
       "destination head must equal the source snapshot entry-for-entry")
-    // and again idempotent
+    // and again idempotent: no new head, yet a source tag added while
+    // the data is idle still carries, pinning the unchanged head
+    val head = GraftSink.latestVersion(spark, dst)
+    GraftSink.tag(spark, src, "idle")
     assert(GraftSink.cloneSync(spark, src, dst) == 0)
+    assert(GraftSink.latestVersion(spark, dst) == head,
+      "an idle sync must not publish a new replica head")
+    assert(GraftSink.tags(spark, dst).get("idle") == head,
+      "a tag added while the source is idle must carry")
     // schema evolution rides the sync: ADD COLUMN at the source is a
     // zero-copy manifest publish, and the next sync carries the
     // evolved DDL without copying any data file

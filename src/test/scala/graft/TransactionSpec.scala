@@ -113,6 +113,38 @@ class TransactionSpec extends SparkSpec {
       Map("a" -> Seq((1, 4)).toDF("k", "n"))) == 4L)
   }
 
+  test("vacuum racing a publish keeps the member dir the publish just " +
+      "placed; an aged crashed-publish orphan still goes") {
+    val root = freshRoot()
+    val fs = new Path(root).getFileSystem(
+      spark.sparkContext.hadoopConfiguration)
+    Transaction.publish(spark, root, Map("a" -> Seq(0).toDF("k")))
+    Transaction.publish(spark, root, Map("a" -> Seq(1).toDF("k")))
+    // the vacuum runs after tx2 placed a/t2 and before its manifest
+    // lands: a/t2 is referenced by no committed manifest yet
+    Transaction.commitBarrier =
+      () => { Transaction.vacuum(spark, root, keep = 1); () }
+    val tx =
+      try Transaction.publish(spark, root, Map("a" -> Seq(1, 2).toDF("k")))
+      finally Transaction.commitBarrier = () => ()
+    assert(tx == 2L)
+    assert(Transaction.read(spark, root, "a").as[Int].collect()
+      .sorted.toSeq == Seq(1, 2))
+    val report = Transaction.fsck(spark, root, deep = true)
+    assert(report.clean && report.deepVerified, report.toString)
+    // a crashed publish's member dir, older than any grace: an orphan
+    // the next vacuum removes with the member of the dropped tx1
+    val orphan = new Path(root, "a/t9")
+    Seq(9).toDF("k").write.parquet(orphan.toString)
+    fs.setTimes(orphan, System.currentTimeMillis() - 60000L, -1L)
+    assert(Transaction.fsck(spark, root).orphanVersionDirs == 1)
+    assert(Transaction.vacuum(spark, root, keep = 1, graceMs = 0L) ==
+      Seq(1L))
+    assert(fs.listStatus(new Path(root, "a")).map(_.getPath.getName)
+      .toSet == Set("t2"))
+    assert(Transaction.fsck(spark, root, deep = true).deepVerified)
+  }
+
   test("publish refuses a table name the root or its manifest cannot " +
       "hold, before anything is staged") {
     val root = freshRoot()

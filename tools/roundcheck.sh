@@ -9,8 +9,12 @@
 # CloneSpec, GraftSinkConflictSpec, OpsSpec, PartitionedMergeSpec,
 # PipelineSpec), the integrity specs (FsckSpec, MorDeleteSpec), the
 # failover soak (GraftSinkSoakSpec: promote racing both layers' syncs
-# through Commit.sync's one fence flow) and
-# PosixLocalFileSystemSpec again with `file:` on Hadoop's stock
+# through Commit.sync's one fence flow),
+# PosixLocalFileSystemSpec, and then — a second testOnly in the same
+# sbt run — graftsink's vacuum cases (GraftSinkSpec and
+# GraftCatalogSpec, `-z vacuum`: the streamed aged sweep,
+# Commit.sweepAged, that every layer's vacuum shares) again with
+# `file:` on Hadoop's stock
 # org.apache.hadoop.fs.LocalFileSystem (the JVM names it, so
 # Tables.configure keeps it; PosixLocalFileSystemSpec fails if any
 # other class resolves). Its rename replaces an existing target file
@@ -60,6 +64,7 @@ DEMO_RC=$?
 echo "[roundcheck] 1c/5 commit and integrity specs on LocalFileSystem"
 sbt -batch 'set Test/javaOptions += "-Dspark.hadoop.fs.file.impl=org.apache.hadoop.fs.LocalFileSystem"' \
   "testOnly graft.TransactionSpec graft.CloneSpec graft.GraftSinkConflictSpec graft.OpsSpec graft.PartitionedMergeSpec graft.PipelineSpec graft.FsckSpec graft.MorDeleteSpec graft.GraftSinkSoakSpec graft.PosixLocalFileSystemSpec" \
+  "testOnly graft.GraftSinkSpec graft.GraftCatalogSpec -- -z vacuum" \
   >"$OUT/commit_specs_localfs.log" 2>&1
 LOCALFS_RC=$?
 
@@ -179,13 +184,14 @@ out, test_rc, verify_rc, oracle_rc, bench_rc, plandiff_rc, splandiff_rc, \
 summary = {"gate": None}
 
 # sbt test runs: the scalatest epilogue
+# (summed over every testOnly the step's sbt run made)
 def scalatest(key, log, rc):
     txt = open(f"{out}/{log}", errors="replace").read()
     m = re.findall(r"Tests: succeeded (\d+), failed (\d+)", txt)
     summary[key] = {
         "rc": rc,
-        "succeeded": int(m[-1][0]) if m else None,
-        "failed": int(m[-1][1]) if m else None,
+        "succeeded": sum(int(s) for s, _ in m) if m else None,
+        "failed": sum(int(f) for _, f in m) if m else None,
     }
 
 scalatest("tests", "sbt_test.log", test_rc)
